@@ -17,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -202,8 +203,11 @@ def _bench_session(sf_dir: str, cpus: int) -> dict[str, float]:
     """One SparkSession's worth of benchmarks (session is created+stopped
     here so scaling runs get clean parallelism)."""
     from loongcollector_spark import flagship
+    from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
     from loongcollector_spark.session import get_spark
+    from loongcollector_spark.synth import ROUTE_RULES
 
+    sinks = [r["sink"] for r in ROUTE_RULES]
     spark = get_spark(
         f"loongcollector-bench-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
@@ -235,10 +239,15 @@ def _bench_session(sf_dir: str, cpus: int) -> dict[str, float]:
         runs=1,
         noise_key="pipeline_e2e_jvm",
     )
-    # full routed fan-out materialization (write-side cost, incl. the
-    # explicit pre-write repartition)
+    # full routed fan-out materialization: the deployment job's one-pass
+    # resumable parquet write of every sink (incl. the explicit pre-write
+    # repartition and the commit) into a fresh directory
+    def _routed_write():
+        with tempfile.TemporaryDirectory() as d:
+            resumable_write(flagship.routed_from(spark, seq), sinks, d, Manifest(f"{d}/_manifest"))
+
     queries["routed_materialize"] = _timeit(
-        lambda: _noop(flagship.routed_from(spark, seq)),
+        _routed_write,
         warm=0,
         runs=1,
         noise_key="routed_materialize",

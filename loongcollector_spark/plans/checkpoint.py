@@ -1,21 +1,15 @@
-"""Checkpoint/resume: partition-level done-markers + idempotent per-unit
-overwrite, so a killed run replays only unfinished units (north rule:
-"resumable from checkpoint with per-partition lineage").
+"""Checkpoint/resume: one dynamic-overwrite commit for every unfinished unit,
+then one done-marker per unit, so a killed run replays only the units without
+a marker (north rule: "resumable from checkpoint with per-partition lineage").
 
 Reference analog: exactly-once range checkpoints for file→SLS
-(core/file_server/checkpoint/RangeCheckpoint.h:27; group checkpoint ptr
-PipelineEventGroup.h:132-134) and the Go leveldb checkpoint manager
-(pluginmanager/checkpoint_manager.go:40-114). Spark-first shape: the unit of
-resume is a *logical partition* (e.g. a sink, a source shard, a date bucket)
-— each unit's output goes to its own directory with dynamic-overwrite
-semantics, and a driver-side manifest records completion. Re-running is
-idempotent: completed units are skipped, partially-written units are
-overwritten whole.
-
-At 100 TB the manifest is tiny (one marker per unit, thousands of units) and
-units map to Iceberg partition replace commits (`replaceWhere`); here the
-parquet-directory implementation keeps the exact same semantics.
-"""
+(core/file_server/checkpoint/RangeCheckpoint.h:27) and the Go leveldb
+checkpoint manager (pluginmanager/checkpoint_manager.go:40-114). Spark-first
+shape: the unit of resume is a partition value (e.g. a sink) of one
+``partitionBy("unit")`` parquet commit under dynamic partition overwrite (the
+Iceberg ``overwritePartitions`` analogue), which replaces the partitions it
+writes whole and never touches the others (completed units, ``_manifest/``).
+Each marker stores its unit's counts, observed by that same action."""
 
 from __future__ import annotations
 
@@ -23,9 +17,12 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Callable, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
+
+from ..routing import SINK_COL
 
 
 @dataclass
@@ -38,13 +35,8 @@ class Manifest:
         return os.path.join(self.path, f"{unit}.done.json")
 
     def done_units(self) -> set[str]:
-        if not os.path.isdir(self.path):
-            return set()
-        return {
-            f[: -len(".done.json")]
-            for f in os.listdir(self.path)
-            if f.endswith(".done.json")
-        }
+        names = os.listdir(self.path) if os.path.isdir(self.path) else []
+        return {f[: -len(".done.json")] for f in names if f.endswith(".done.json")}
 
     def mark_done(self, unit: str, meta: dict | None = None) -> None:
         os.makedirs(self.path, exist_ok=True)
@@ -53,61 +45,68 @@ class Manifest:
             json.dump({"unit": unit, "ts": time.time(), **(meta or {})}, f)
         os.replace(tmp, self._marker(unit))  # atomic publish
 
-    def reset(self) -> None:
-        if os.path.isdir(self.path):
-            for f in os.listdir(self.path):
-                os.remove(os.path.join(self.path, f))
+    def counts(self, units: Sequence[str]) -> dict[str, dict]:
+        """Each unit's counts, as its marker stored them."""
+        out = {}
+        for u in units:
+            with open(self._marker(u)) as f:
+                out[u] = json.load(f)["counts"]
+        return out
 
 
 def resumable_write(
-    df_for_unit: Callable[[str], DataFrame],
+    df: DataFrame,
     units: Sequence[str],
     out_dir: str,
     manifest: Manifest,
+    unit_col: str = SINK_COL,
     fail_after: int | None = None,
 ) -> list[str]:
-    """Write each unit's DataFrame to ``out_dir/unit=<u>/`` unless its marker
-    exists; mark done after a successful write. Returns the units written this
-    run. ``fail_after`` injects a crash after N writes (tests).
+    """Write the rows of every unit of ``units`` without a marker to
+    ``out_dir/unit=<u>/`` in ONE Spark action, then publish a marker per unit
+    holding that action's counts: ``events``, plus ``tokens_total`` (sum of
+    ``n_tok``) when ``df`` has it. Returns the units written: ``[]``, with no
+    Spark job, when all are done. A unit cut off before its marker is
+    rewritten whole on resume; a done unit's files are never touched. A unit
+    with no rows gets ``events: 0``, and this run writes no ``unit=<u>/``
+    directory for it. ``fail_after`` crashes after N markers (tests).
 
-    Idempotency: mode=overwrite per unit directory — a unit that crashed
-    mid-write is rewritten whole on resume; completed units are never
-    touched (their files keep their mtimes)."""
+    The counters sit above ``df``'s pre-write exchange, in the write's result
+    stage: Spark applies its accumulators once per partition, so task
+    retries cannot double-count."""
     done = manifest.done_units()
-    written = []
-    for u in units:
-        if u in done:
-            continue
-        if fail_after is not None and len(written) >= fail_after:
-            raise RuntimeError(f"injected failure after {fail_after} units")
+    pending = [u for u in units if u not in done]
+    if not pending:
+        return []
+    os.makedirs(manifest.path, exist_ok=True)
+    measures = {"events": F.lit(1)}
+    if "n_tok" in df.columns:
+        measures["tokens_total"] = F.col("n_tok")
+    aggs = [
+        F.coalesce(F.sum(F.when(F.col(unit_col) == u, m)), F.lit(0)).alias(f"{k}_{i}")
+        for i, u in enumerate(pending)
+        for k, m in measures.items()
+    ]
+    obs = Observation()
+    todo = df.filter(F.col(unit_col).isin(pending)).observe(obs, *aggs)
+    (
+        todo.withColumnRenamed(unit_col, "unit")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("unit")
+        .parquet(out_dir)
+    )
+    got = obs.get
+    for i, u in enumerate(pending):
+        if fail_after is not None and i >= fail_after:
+            raise RuntimeError(f"injected failure after {fail_after} markers")
         path = os.path.join(out_dir, f"unit={u}")
-        df_for_unit(u).write.mode("overwrite").parquet(path)
-        manifest.mark_done(u, {"path": path})
-        written.append(u)
-    return written
+        counts = {k: got[f"{k}_{i}"] for k in measures}
+        manifest.mark_done(u, {"path": path, "counts": counts})
+    return pending
 
 
 def read_all_units(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the union of all unit directories (basePath keeps the unit
     partition column out of the data)."""
     return spark.read.option("basePath", out_dir).parquet(f"{out_dir}/unit=*")
-
-
-def resumable_sink_write(
-    routed: DataFrame,
-    sinks: Sequence[str],
-    out_dir: str,
-    manifest: Manifest,
-    sink_col: str = "sink",
-    fail_after: int | None = None,
-) -> list[str]:
-    """The flagship use: per-sink resumable fan-out write. The routed frame is
-    filtered per sink (disjoint writes); localCheckpoint/cache upstream of the
-    router avoids recomputing the parse stage per sink when the plan is hot."""
-    return resumable_write(
-        lambda s: routed.filter(routed[sink_col] == s).drop(sink_col),
-        sinks,
-        out_dir,
-        manifest,
-        fail_after=fail_after,
-    )

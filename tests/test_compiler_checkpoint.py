@@ -6,12 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from loongcollector_spark.operators.base import FIELDS, fget, to_events
-from loongcollector_spark.plans.checkpoint import (
-    Manifest,
-    read_all_units,
-    resumable_sink_write,
-    resumable_write,
-)
+from loongcollector_spark.plans.checkpoint import Manifest, read_all_units, resumable_write
 from loongcollector_spark.plans.compiler import compile_pipeline
 
 NGINX_LIKE_CONFIG = {
@@ -76,12 +71,9 @@ def test_resumable_write_resumes_after_crash(spark, tmp_path):
     manifest = Manifest(str(tmp_path / "manifest"))
     data = spark.range(30).withColumn("u", (F.col("id") % 3).cast("string"))
 
-    def df_for(u):
-        return data.filter(F.col("u") == u).drop("u")
-
     units = ["0", "1", "2"]
     with pytest.raises(RuntimeError, match="injected failure"):
-        resumable_write(df_for, units, out_dir, manifest, fail_after=1)
+        resumable_write(data, units, out_dir, manifest, unit_col="u", fail_after=1)
     assert manifest.done_units() == {"0"}
 
     # record mtime of the completed unit — resume must not rewrite it
@@ -90,7 +82,7 @@ def test_resumable_write_resumes_after_crash(spark, tmp_path):
     ][0]
     mtime0 = os.path.getmtime(f"{out_dir}/unit=0/{done_file}")
 
-    written = resumable_write(df_for, units, out_dir, manifest)
+    written = resumable_write(data, units, out_dir, manifest, unit_col="u")
     assert written == ["1", "2"]
     assert manifest.done_units() == {"0", "1", "2"}
     assert os.path.getmtime(f"{out_dir}/unit=0/{done_file}") == mtime0
@@ -101,23 +93,41 @@ def test_resumable_write_resumes_after_crash(spark, tmp_path):
 
 
 def test_resumable_write_noop_when_all_done(spark, tmp_path):
+    """A resume with every unit marked done starts no Spark job; the markers
+    still hold the counts of the run that wrote them."""
     out_dir = str(tmp_path / "out")
     manifest = Manifest(str(tmp_path / "manifest"))
     data = spark.range(4).withColumn("u", F.lit("a"))
-    resumable_write(lambda u: data, ["a"], out_dir, manifest)
-    assert resumable_write(lambda u: data, ["a"], out_dir, manifest) == []
+    resumable_write(data, ["a"], out_dir, manifest, unit_col="u")
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-all-done", "resume with every unit done")
+    try:
+        assert resumable_write(data, ["a"], out_dir, manifest, unit_col="u") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("resume-all-done") == []
+    assert manifest.counts(["a"]) == {"a": {"events": 4}}
 
 
 def test_resumable_sink_write(spark, tmp_path):
+    """Every marker holds its sink's counts from the one write; a sink that
+    routes no rows gets ``events: 0`` and no ``unit=<s>/`` directory."""
     routed = spark.createDataFrame(
-        [(1, "sink_a"), (2, "sink_a"), (3, "sink_b")], ["id", "sink"]
+        [(1, "sink_a", 3), (2, "sink_a", 4), (3, "sink_b", 5)], ["id", "sink", "n_tok"]
     )
     manifest = Manifest(str(tmp_path / "m"))
     out_dir = str(tmp_path / "o")
-    w = resumable_sink_write(routed, ["sink_a", "sink_b"], out_dir, manifest)
-    assert w == ["sink_a", "sink_b"]
+    sinks = ["sink_a", "sink_b", "sink_empty"]
+    w = resumable_write(routed, sinks, out_dir, manifest)
+    assert w == sinks
     a = spark.read.parquet(f"{out_dir}/unit=sink_a")
     assert sorted(r["id"] for r in a.collect()) == [1, 2]
+    assert manifest.counts(sinks) == {
+        "sink_a": {"events": 2, "tokens_total": 7},
+        "sink_b": {"events": 1, "tokens_total": 5},
+        "sink_empty": {"events": 0, "tokens_total": 0},
+    }
+    assert not os.path.exists(f"{out_dir}/unit=sink_empty")
 
 
 # --- metrics -----------------------------------------------------------------

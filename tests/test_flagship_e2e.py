@@ -1,13 +1,18 @@
 """Flagship end-to-end behaviors: per-sink resumable writes, routed-row
 equality across paths, skew salting, Arrow/JVM parity, Arrow desensitize."""
 
+import importlib.util
+import os
+from collections import Counter
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
 from loongcollector_spark import flagship
 from loongcollector_spark.operators.base import FIELDS, to_events
 from loongcollector_spark.operators.transforms import Desensitize, DesensitizeArrow
-from loongcollector_spark.plans.checkpoint import Manifest, resumable_sink_write
+from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
 from loongcollector_spark.synth import sequences_df
 
 
@@ -31,7 +36,7 @@ def test_flagship_sink_writes_match_routed_rows(spark, sf_dir, tmp_path):
     manifest = Manifest(str(tmp_path / "m"))
     out = str(tmp_path / "sinks")
     sinks = ["sink_a", "sink_b", "sink_default"]
-    written = resumable_sink_write(routed, sinks, out, manifest)
+    written = resumable_write(routed, sinks, out, manifest)
     assert written == sinks
     # read back every sink dir and compare to the routed row set
     back = []
@@ -51,15 +56,87 @@ def test_flagship_sink_write_resume_after_crash(spark, sf_dir, tmp_path):
     out = str(tmp_path / "sinks")
     sinks = ["sink_a", "sink_b", "sink_default"]
     with pytest.raises(RuntimeError):
-        resumable_sink_write(routed, sinks, out, manifest, fail_after=1)
+        resumable_write(routed, sinks, out, manifest, fail_after=1)
     assert manifest.done_units() == {"sink_a"}
     # resume: only the two unfinished sinks are written
-    written = resumable_sink_write(routed, sinks, out, manifest)
+    written = resumable_write(routed, sinks, out, manifest)
     assert written == ["sink_b", "sink_default"]
     total = sum(
         spark.read.parquet(f"{out}/unit={s}").count() for s in sinks
     )
     assert total == 1900
+
+
+SINKS = ["sink_a", "sink_b", "sink_default"]
+
+
+def _submit_job():
+    path = Path(__file__).resolve().parents[1] / "tools" / "submit_job.py"
+    spec = importlib.util.spec_from_file_location("submit_job", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _doc_ids(spark, out):
+    """Per-sink doc_id multisets of a job's output directory."""
+    return {
+        s: Counter(r["doc_id"] for r in spark.read.parquet(f"{out}/unit={s}").collect())
+        for s in SINKS
+    }
+
+
+@pytest.fixture(scope="module")
+def clean_job(spark, sf_dir, tmp_path_factory):
+    """One clean tools/submit_job.py run over the fixture: (out dir, result)."""
+    out = str(tmp_path_factory.mktemp("clean_job"))
+    return out, _submit_job().run(spark, sf_dir, out)
+
+
+def test_submit_job_aggregates_from_markers_equal_pipeline_aggregates(spark, sf_dir, clean_job):
+    """The aggregates the job reports come from its markers (counters of the
+    one write); they equal the separate aggregate action sink by sink."""
+    out, result = clean_job
+    assert result["written_sinks"] == SINKS
+    assert result["observed"] == result["aggregates"]
+    expect = {
+        r["sink"]: {"events": r["events"], "tokens_total": r["tokens_total"]}
+        for r in flagship.pipeline_aggregates(spark, sf_dir).collect()
+    }
+    assert result["aggregates"] == expect
+    assert Manifest(f"{out}/_manifest").counts(SINKS) == expect
+
+
+def test_submit_job_resume_all_done_runs_no_spark_job(spark, sf_dir, clean_job):
+    out, clean = clean_job
+    sc = spark.sparkContext
+    sc.setJobGroup("submit-job-all-done", "resume with every sink committed")
+    try:
+        result = _submit_job().run(spark, sf_dir, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("submit-job-all-done") == []
+    assert result["written_sinks"] == [] and result["skipped_sinks"] == SINKS
+    assert result["observed"] is None
+    assert result["aggregates"] == clean["aggregates"]
+
+
+def test_sink_write_crash_before_markers_then_resume(spark, sf_dir, tmp_path, clean_job):
+    """Crash after the commit but before any marker: the resume rewrites
+    every sink, and dynamic overwrite replaces (not appends to) the committed
+    partitions, leaving ``_manifest/`` in place."""
+    routed = flagship.routed(spark, sf_dir)
+    out = str(tmp_path / "sinks")
+    manifest = Manifest(f"{out}/_manifest")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resumable_write(routed, SINKS, out, manifest, fail_after=0)
+    assert manifest.done_units() == set() and os.path.isdir(manifest.path)
+    assert all(os.path.isdir(f"{out}/unit={s}") for s in SINKS)
+    assert resumable_write(routed, SINKS, out, manifest) == SINKS
+    assert sorted(os.listdir(manifest.path)) == [f"{s}.done.json" for s in SINKS]
+    got, clean = _doc_ids(spark, out), _doc_ids(spark, clean_job[0])
+    assert got == clean
+    assert all(n == 1 for ids in got.values() for n in ids.values())
 
 
 def test_salting_spreads_hot_source(spark, sf_dir):

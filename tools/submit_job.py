@@ -9,16 +9,45 @@ Usage (local sandbox — swap --master for yarn/k8s on a real cluster):
         tools/submit_job.py \
         --sf-dir /root/testdata/sf0.001 --out /tmp/lc_out
 
-The job: read the pre-tokenized sequences → parse→enrich→route → resumable
-per-sink parquet writes (checkpoint manifest under <out>/_manifest) → print
-per-sink aggregates as one JSON line. Re-running with the same --out resumes:
-completed sinks are skipped.
+The job: read the pre-tokenized sequences → parse→enrich→route → ONE
+partitioned parquet write of every sink without a done-marker (checkpoint
+manifest under <out>/_manifest) → print per-sink aggregates as one JSON line.
+The write is the job's only Spark action: the aggregates are the counts each
+sink's marker stored from that action, so scan→decode→parse→route runs once
+whatever the number of sinks. Re-running with the same --out resumes:
+completed sinks are skipped, and a resume with every sink done runs no Spark
+job at all.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+
+
+def run(spark, sf_dir: str, out: str, salt_buckets: int = 0) -> dict:
+    """The job's result: the sinks written and skipped this run, every
+    sink's aggregates from its marker, and ``observed``, the counters of the
+    sinks this run wrote (``None`` when it wrote nothing)."""
+    from loongcollector_spark import flagship
+    from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
+    from loongcollector_spark.synth import ROUTE_RULES
+
+    sinks = [r["sink"] for r in ROUTE_RULES]
+    manifest = Manifest(f"{out}/_manifest")
+    written = []
+    # building the plan reads parquet footers, itself a Spark job: skip it
+    # when every sink is already committed
+    if not manifest.done_units() >= set(sinks):
+        routed = flagship.routed(spark, sf_dir, salt_buckets=salt_buckets)
+        written = resumable_write(routed, sinks, out, manifest)
+    aggs = manifest.counts(sinks)
+    return {
+        "written_sinks": written,
+        "skipped_sinks": [s for s in sinks if s not in written],
+        "aggregates": aggs,
+        "observed": {s: aggs[s] for s in written} or None,
+    }
 
 
 def main() -> None:
@@ -33,34 +62,10 @@ def main() -> None:
     spark = SparkSession.builder.appName("loongcollector-spark-job").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from loongcollector_spark import flagship
-    from loongcollector_spark.metrics import observed
-    from loongcollector_spark.plans.checkpoint import Manifest, resumable_sink_write
     from loongcollector_spark.session import configure_existing
-    from loongcollector_spark.synth import ROUTE_RULES
 
     configure_existing(spark)
-
-    routed = flagship.routed(spark, args.sf_dir, salt_buckets=args.salt_buckets)
-    routed, obs = observed(routed, "routed")
-    sinks = [r["sink"] for r in ROUTE_RULES]
-    manifest = Manifest(f"{args.out}/_manifest")
-    written = resumable_sink_write(routed, sinks, args.out, manifest)
-
-    aggs = {
-        r["sink"]: {"events": r["events"], "tokens_total": r["tokens_total"]}
-        for r in flagship.pipeline_aggregates(spark, args.sf_dir).collect()
-    }
-    print(
-        json.dumps(
-            {
-                "written_sinks": written,
-                "skipped_sinks": [s for s in sinks if s not in written],
-                "aggregates": aggs,
-                "observed": dict(obs.get) if written else None,
-            }
-        )
-    )
+    print(json.dumps(run(spark, args.sf_dir, args.out, args.salt_buckets)))
     spark.stop()
 
 
