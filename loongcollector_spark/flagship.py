@@ -1,19 +1,20 @@
 """The flagship end-to-end job (SURVEY.md §7 minimum slice):
 
 read sequences (doc_id, tokens, n_tok, source)
-  → decode tokens→content (JVM codegen path or Arrow path)
-  → per-source parse (nginx regex / app-json / tab-delimited), with
-    keep/discard-unmatch semantics
+  → one Arrow decode tokens→content over every row (tokens.decode_tokens_arrow)
+  → one CASE on ``source`` over the existing parsers (nginx regex / app-json /
+    tab-delimited), discard-unmatch semantics; any other source is discarded
   → broadcast-join source lookup (team_tag, env, route_key)
   → router fan-out (tag conditions, multi-match copy) via explode
   → explicit repartition((source, route_key)) [+salt]
   → per-sink aggregates (events, tokens_total) + per-source drop counts
 
-Scale notes: the three per-source branches are disjoint filters over the same
-scan — on a source-partitioned 100 TB table each branch prunes to its own
-partitions (one logical full scan total); the only wide operations are the
-pre-write repartition and the tiny sink-key aggregation; the lookup join is
-broadcast (no shuffle).
+Scale notes: one scan and one decode stage serve all three formats. The
+single scan costs no partition pruning: on a source-partitioned table a
+per-source branch would read only its own partitions, and the one scan reads
+those same partitions once. The only wide operations are the pre-write
+repartition and the tiny sink-key aggregation; the lookup join is broadcast
+(no shuffle).
 """
 
 from __future__ import annotations
@@ -22,13 +23,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .aggregate import partition_for_sinks, sink_aggregates, with_lineage
-from .operators.base import to_events
+from .operators.base import FIELDS, to_events
 from .operators.common import ParserOptions
 from .operators.enrich import BroadcastLookup
 from .operators.parse import DelimiterParser, JsonParser, RegexParser
 from .routing import RouteCondition, Router
 from .synth import ROUTE_RULES, sequences_df, source_lookup_df
-from .tokens import decode_tokens, decode_tokens_arrow
+from .tokens import decode_tokens_arrow
 
 # nginx access-log regex — the reference's own example pipeline
 # (example_config/data_pipelines/nginx-regex.yaml)
@@ -51,12 +52,12 @@ NGINX_KEYS = [
 ]
 CSV_KEYS = ["uid", "time", "cmethod", "value"]
 
-
-def decoded_sequences(spark: SparkSession, sf_dir: str, arrow: bool = True) -> DataFrame:
-    seq = sequences_df(spark, sf_dir)
-    if arrow:
-        return decode_tokens_arrow(seq, "tokens", "content")
-    return seq.withColumn("content", decode_tokens("tokens"))
+# the flagship's formats: source -> the parser of its lines
+PARSERS = {
+    "nginx": RegexParser(NGINX_REGEX, NGINX_KEYS),
+    "app-json": JsonParser(),
+    "csvlog": DelimiterParser("\t", CSV_KEYS),
+}
 
 
 def replicated_sequences(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
@@ -75,134 +76,28 @@ def replicated_sequences(spark: SparkSession, sf_dir: str, factor: int) -> DataF
     )
 
 
-def parsed_events_from(
-    seq: DataFrame, keep_unmatch: bool = False, arrow: bool = True
-) -> DataFrame:
-    """Per-source parse of a sequences frame; returns the unified event frame
-    (doc_id, source, n_tok, fields).
-
-    The source filter is applied BEFORE the decode stage: Catalyst pushes it
-    to the scan on the JVM path, and on the Arrow path it must sit below
-    mapInPandas explicitly (filters don't push through a Python stage) — so
-    the three branches decode disjoint subsets (one logical full decode
-    total, not three)."""
-    opts = ParserOptions(keep_fail=keep_unmatch, coping_raw_log=keep_unmatch)
-
-    def branch(source: str) -> DataFrame:
-        sub = seq.filter(F.col("source") == source)
-        if arrow:
-            # drop the token arrays INSIDE the python stage: a .drop after it
-            # would ship the dominant payload Python→JVM just to discard it
-            sub = decode_tokens_arrow(sub, "tokens", "content", drop_tokens=True)
-        else:
-            sub = sub.withColumn("content", decode_tokens("tokens")).drop("tokens")
-        return to_events(sub)
-
-    nginx = RegexParser(NGINX_REGEX, NGINX_KEYS, opts).apply(branch("nginx"))
-    appjson = JsonParser(opts).apply(branch("app-json"))
-    csvlog = DelimiterParser("\t", CSV_KEYS, opts).apply(branch("csvlog"))
-    return nginx.unionByName(appjson).unionByName(csvlog)
+def parsed_events_from(seq: DataFrame) -> DataFrame:
+    """Parse a sequences frame into the unified event frame (doc_id, source,
+    n_tok, fields): one Arrow decode, then one projection that dispatches on
+    ``source`` to the parser for that format. Rows of any other source fail
+    the parse and are discarded."""
+    # drop the token arrays INSIDE the python stage: a .drop after it would
+    # ship the dominant payload Python→JVM just to discard it
+    ev = to_events(decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True))
+    src = F.element_at(F.col(FIELDS), F.lit("content"))
+    success = new_map = None
+    for source, parser in PARSERS.items():
+        ok, parsed = parser.parse(src)
+        hit = F.col("source") == source
+        success = F.when(hit, ok) if success is None else success.when(hit, ok)
+        new_map = F.when(hit, parsed) if new_map is None else new_map.when(hit, parsed)
+    return ParserOptions().finalize(ev, success.otherwise(False), new_map, src)
 
 
-def parsed_events(
-    spark: SparkSession, sf_dir: str, keep_unmatch: bool = False, arrow: bool = True
-) -> DataFrame:
-    return parsed_events_from(sequences_df(spark, sf_dir), keep_unmatch, arrow)
-
-
-def fused_parsed_events(
-    seq: DataFrame, keep_unmatch: bool = False, arrow: bool = True
-) -> DataFrame:
-    """Single-pass variant of parsed_events_from: ONE decode stage over all
-    sources and per-source parse fused into one CASE-dispatched projection —
-    no union, one scan, one Python stage. Identical semantics/row-set to the
-    branched version (asserted in tests); preferred when the input is not
-    source-partitioned (the branched version wins when per-source partition
-    pruning applies)."""
-    import re as _re
-
-    from .operators.common import flet, parsed_map
-    from .tokens import decode_tokens, decode_tokens_arrow
-
-    if arrow:
-        dec = decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True)
-    else:
-        dec = seq.withColumn("content", decode_tokens("tokens")).drop("tokens")
-    ev = to_events(dec)
-    opts = ParserOptions(keep_fail=keep_unmatch, coping_raw_log=keep_unmatch)
-    src = F.element_at(F.col("fields"), F.lit("content"))
-
-    # nginx regex (single-matcher-pass trick + let-binding, same as
-    # RegexParser: unbound element_at refs would re-run the regex per key)
-    rx = f"^(?:{NGINX_REGEX})$"
-    sep = "\x01"
-    repl = sep.join(f"${i + 1}" for i in range(len(NGINX_KEYS)))
-    arr_n = F.split(F.regexp_replace(src, rx, repl), sep, -1)
-    map_nginx = flet(
-        arr_n,
-        lambda a: parsed_map(
-            {k: F.element_at(a, i + 1) for i, k in enumerate(NGINX_KEYS)}
-        ),
-    )
-    ok_nginx = src.rlike(rx)
-
-    # app-json one-level parse
-    m_json = F.from_json(src, "map<string,string>")
-    map_json = flet(
-        m_json,
-        lambda mm: F.transform_values(
-            F.coalesce(mm, F.expr("map()")), lambda k, v: F.coalesce(v, F.lit(""))
-        ),
-    )
-    ok_json = m_json.isNotNull()
-
-    # csvlog tab-delimited (incl. DelimiterParser's default EXTEND overflow:
-    # extras land in 0-based __column{idx}__ keys, same as the branched path)
-    arr_c = F.split(src, _re.escape("\t"), -1)
-    nc = len(CSV_KEYS)
-
-    def _map_csv(a):
-        sz = F.size(a)
-        m = parsed_map({k: F.element_at(a, i + 1) for i, k in enumerate(CSV_KEYS)})
-        ext = parsed_map(
-            {
-                f"__column{nc + i}__": F.when(sz >= nc + i + 1, F.element_at(a, nc + i + 1))
-                for i in range(8)
-            }
-        )
-        return F.map_concat(m, F.map_filter(ext, lambda k, v: v.isNotNull()))
-
-    map_csv = flet(arr_c, _map_csv)
-    ok_csv = F.size(arr_c) >= nc
-
-    s = F.col("source")
-    success = src.isNotNull() & (
-        F.when(s == "nginx", ok_nginx)
-        .when(s == "app-json", ok_json)
-        .otherwise(ok_csv)
-    )
-    new_map = (
-        F.when(s == "nginx", map_nginx)
-        .when(s == "app-json", map_json)
-        .otherwise(map_csv)
-    )
-    return opts.finalize(ev, success, new_map, src)
-
-
-def enriched_from(
-    spark: SparkSession, seq: DataFrame, fused: bool = False, **kw
-) -> DataFrame:
-    """``fused=True`` parses via the single-scan CASE-dispatched stage (the
-    100 TB shape when the input is NOT source-partitioned: one scan + one
-    decode instead of three disjoint-filter branches)."""
-    parse = fused_parsed_events if fused else parsed_events_from
-    ev = parse(seq, **kw)
+def enriched_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
+    ev = parsed_events_from(seq)
     lookup = source_lookup_df(spark)
     return BroadcastLookup(lookup, on="source").apply(ev)
-
-
-def enriched(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-    return enriched_from(spark, sequences_df(spark, sf_dir), **kw)
 
 
 def routed_from(
@@ -210,7 +105,6 @@ def routed_from(
     seq: DataFrame,
     salt_buckets: int = 0,
     partition: bool = True,
-    **kw,
 ) -> DataFrame:
     """Fan-out: sink_a ⟵ env=prod, sink_b ⟵ team_tag=team-b, sink_default ⟵ all
     (multi-match copy semantics, Router.cpp:60-80).
@@ -220,7 +114,7 @@ def routed_from(
     per-sink files. Aggregation-only consumers pass ``partition=False``: the
     per-sink fold partial-aggregates map-side, so forcing a full-row shuffle
     first would only move the whole fields payload for nothing."""
-    df = enriched_from(spark, seq, **kw)
+    df = enriched_from(spark, seq)
     rules = [
         RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES
     ]
@@ -232,25 +126,25 @@ def routed_from(
     return with_lineage(out)
 
 
-def routed(spark: SparkSession, sf_dir: str, salt_buckets: int = 0, **kw) -> DataFrame:
-    return routed_from(spark, sequences_df(spark, sf_dir), salt_buckets, **kw)
+def routed(spark: SparkSession, sf_dir: str, salt_buckets: int = 0) -> DataFrame:
+    return routed_from(spark, sequences_df(spark, sf_dir), salt_buckets)
 
 
-def pipeline_aggregates_from(spark: SparkSession, seq: DataFrame, **kw) -> DataFrame:
-    r = routed_from(spark, seq, partition=False, **kw)
+def pipeline_aggregates_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
+    r = routed_from(spark, seq, partition=False)
     return sink_aggregates(r).select(
         "sink", "events", F.col("tokens_total").cast("long").alias("tokens_total")
     )
 
 
-def pipeline_aggregates(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
+def pipeline_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Headline result: per-sink (events, tokens_total)."""
-    return pipeline_aggregates_from(spark, sequences_df(spark, sf_dir), **kw)
+    return pipeline_aggregates_from(spark, sequences_df(spark, sf_dir))
 
 
-def routed_rows(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
+def routed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Routed-row-set equality surface: one row per (sink, doc)."""
-    r = routed(spark, sf_dir, **kw)
+    r = routed(spark, sf_dir)
     return r.select("sink", "doc_id", "source", "route_key", "env", "team_tag")
 
 
@@ -259,7 +153,7 @@ def drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = sequences_df(spark, sf_dir)
     inputs = seq.groupBy("source").agg(F.count(F.lit(1)).alias("input_events"))
     parsed = (
-        parsed_events(spark, sf_dir, keep_unmatch=False)
+        parsed_events_from(seq)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("parsed_events"))
     )

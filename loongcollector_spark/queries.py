@@ -41,14 +41,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagship.pipeline_aggregates(spark, sf_dir)
 
 
-def q_pipeline_e2e_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-scan CASE-dispatched parse variant — same result set as
-    pipeline_e2e (same oracle), different physical shape (1 scan + 1 decode
-    stage; the preferred plan when the input is not source-partitioned)."""
-    configure_existing(spark)
-    return flagship.pipeline_aggregates(spark, sf_dir, fused=True)
-
-
 def q_routed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_existing(spark)
     return flagship.routed_rows(spark, sf_dir)
@@ -1519,7 +1511,6 @@ ORDER BY sink"""
 
 QUERIES = {
     "pipeline_e2e": q_pipeline_e2e,
-    "pipeline_e2e_fused": q_pipeline_e2e_fused,
     "prom_relabel": q_prom_relabel,
     "prom_text_parse": q_prom_text_parse,
     "otel_trace": q_otel_trace,
@@ -1570,7 +1561,6 @@ QUERIES = {
 
 ORACLES = {
     "pipeline_e2e": oracles.oracle_pipeline_aggregates(),
-    "pipeline_e2e_fused": oracles.oracle_pipeline_aggregates(),
     "prom_relabel": oracle_prom_relabel(),
     "prom_text_parse": oracle_prom_text_parse(),
     "otel_trace": oracle_otel_trace(),

@@ -6,11 +6,12 @@ synthetic lines), exactly reversible, so the per-row invariant "token-array
 equality" reduces to string equality after decode→process→re-encode.
 
 Two decode paths:
-- **JVM path** (default, Catalyst/codegen, no Python): ``transform + char +
-  concat_ws``. Used in oracle-checked queries so DuckDB can reproduce it.
-- **Arrow path**: numpy-vectorized decode inside ``mapInPandas`` — the
-  performance path for the fused decode+parse stage (north_star: "vectorized
-  pandas/Arrow UDF stage ... no per-row Python").
+- **Arrow path** (``decode_tokens_arrow``): numpy-vectorized decode inside
+  ``mapInPandas`` — the flagship's decode, one stage for every source
+  (north_star: "vectorized pandas/Arrow UDF stage ... no per-row Python").
+- **JVM path** (``decode_tokens``, Catalyst/codegen, no Python): ``transform
+  + char + concat_ws`` — the oracle decode of the oracle-checked queries in
+  queries.py, a plain expression DuckDB can reproduce.
 """
 
 from __future__ import annotations

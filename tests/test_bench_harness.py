@@ -116,6 +116,25 @@ def test_compact_carries_scaling_error_and_skip_verbatim():
     assert len(json.dumps(err)) <= 2048
 
 
+def test_final_line_fits_2kb_with_multi_kb_scaling_error():
+    # a Py4J error carries a multi-KB Java trace; the final line must still
+    # fit the driver's 2 KB tail capture and parse, keeping the contract
+    import json
+
+    trace = "\n\tat org.apache.spark.Foo.bar(Foo.scala:1)" * 200
+    full = {
+        "metric": "pipeline_e2e_sec", "value": 2.5, "unit": "sec",
+        "queries": {f"query_number_{i}": 1.0 for i in range(60)},
+        "scaling": {"error": f"Py4JJavaError: worker died{trace}"},
+    }
+    assert len(json.dumps(bench._compact(full))) > 4096
+    line = bench._final_line(bench._compact(full))
+    assert len(line.encode()) <= 2048
+    d = json.loads(line)
+    assert (d["metric"], d["value"], d["unit"]) == ("pipeline_e2e_sec", 2.5, "sec")
+    assert d["full_record"] == "bench_full.json"
+
+
 def test_tree_cpu_sampler_keeps_vanished_subtree(monkeypatch):
     """The window ledger's positive-delta integrator: CPU of a descendant
     that dies without cutime propagation (scaling-worker JVMs) must stay

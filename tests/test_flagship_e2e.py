@@ -1,34 +1,69 @@
-"""Flagship end-to-end behaviors: per-sink resumable writes, routed-row
-equality across paths, skew salting, Arrow/JVM parity, Arrow desensitize."""
+"""Flagship end-to-end behaviors: the one parse path against the per-source
+parser operators, per-sink resumable writes, skew salting, Arrow
+desensitize."""
 
 import importlib.util
 import os
 from collections import Counter
+from functools import reduce
 from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
 
 from loongcollector_spark import flagship
 from loongcollector_spark.operators.base import FIELDS, to_events
 from loongcollector_spark.operators.transforms import Desensitize, DesensitizeArrow
 from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
 from loongcollector_spark.synth import sequences_df
+from loongcollector_spark.tokens import decode_tokens
+
+
+def _per_source_reference(seq):
+    """The flagship parse built the long way: per source, a JVM decode and
+    that format's parser ``apply``, unioned; other sources are dropped."""
+    ev = to_events(seq.withColumn("content", decode_tokens("tokens")).drop("tokens"))
+    parts = [p.apply(ev.filter(F.col("source") == s)) for s, p in flagship.PARSERS.items()]
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _keyed(df):
+    return sorted(
+        (r["doc_id"], r["source"], r["n_tok"], tuple(sorted(r[FIELDS].items())))
+        for r in df.collect()
+    )
 
 
 def test_arrow_and_jvm_paths_identical(spark, sf_dir):
-    a = flagship.routed_rows(spark, sf_dir, arrow=True).collect()
-    b = flagship.routed_rows(spark, sf_dir, arrow=False).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_fused_equals_branched(spark, sf_dir):
-    seq = sequences_df(spark, sf_dir)
-    a = flagship.parsed_events_from(seq).select("doc_id", "source", FIELDS).collect()
-    b = flagship.fused_parsed_events(seq).select("doc_id", "source", FIELDS).collect()
-    ka = sorted((r["doc_id"], r["source"], tuple(sorted(r[FIELDS].items()))) for r in a)
-    kb = sorted((r["doc_id"], r["source"], tuple(sorted(r[FIELDS].items()))) for r in b)
-    assert ka == kb
+    """The flagship parse (one Arrow decode, CASE over the parsers' parse())
+    equals the per-source parser operators over the JVM decode: on the
+    fixture, on a csvlog row with EXTEND overflow columns, and on a row of an
+    unknown source with four tab fields, which both must discard."""
+    lines = [
+        ("over", "u1\t10\tGET\t42\textra1\textra2", "csvlog"),
+        ("unknown", "u2\t11\tPUT\t7", "syslog"),
+    ]
+    extra = spark.createDataFrame(
+        [(d, [ord(c) for c in line], len(line), s) for d, line, s in lines],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    seq = sequences_df(spark, sf_dir).unionByName(extra)
+    got = _keyed(flagship.parsed_events_from(seq))
+    assert got == _keyed(_per_source_reference(seq))
+    by_doc = {d: dict(f) for d, _, _, f in got}
+    assert by_doc["over"]["__column4__"] == "extra1"
+    assert by_doc["over"]["__column5__"] == "extra2"
+    assert "unknown" not in by_doc
+    # the unknown-source row reaches no sink; the csvlog row reaches two
+    aggs = flagship.pipeline_aggregates_from(spark, seq).collect()
+    assert {r["sink"]: r["events"] for r in aggs} == {
+        "sink_a": 851, "sink_b": 100, "sink_default": 951,
+    }
+    fixture = flagship.pipeline_aggregates(spark, sf_dir).collect()
+    assert {r["sink"]: r["events"] for r in fixture} == {
+        "sink_a": 850, "sink_b": 100, "sink_default": 950,
+    }
 
 
 def test_flagship_sink_writes_match_routed_rows(spark, sf_dir, tmp_path):
@@ -208,34 +243,3 @@ def test_dict_map_csv_rejects_conflicts(tmp_path):
     p.write_text("a,1\na,2\n")
     with pytest.raises(ValueError, match="hash crash"):
         read_dict_csv(str(p))
-
-
-def test_fused_csvlog_overflow_matches_branched(spark):
-    """A csvlog line with MORE than len(CSV_KEYS) tab-separated fields gets
-    the same __column{i}__ EXTEND overflow keys on the fused path as on the
-    branched DelimiterParser path."""
-    seq = spark.createDataFrame(
-        [("d1", [ord(c) for c in "u1\t10\tGET\t42\textra1\textra2"], 6, "csvlog")],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    )
-    a = flagship.parsed_events_from(seq, arrow=False).collect()
-    b = flagship.fused_parsed_events(seq, arrow=False).collect()
-    fa, fb = dict(a[0][FIELDS]), dict(b[0][FIELDS])
-    assert fa == fb
-    assert fa["__column4__"] == "extra1" and fa["__column5__"] == "extra2"
-
-
-def test_fused_full_pipeline_matches_branched(spark, sf_dir):
-    """pipeline_aggregates with fused=True (single-scan CASE-dispatch parse)
-    must produce the exact branched-path aggregates."""
-    a = sorted(
-        flagship.pipeline_aggregates(spark, sf_dir).collect(), key=lambda r: r["sink"]
-    )
-    b = sorted(
-        flagship.pipeline_aggregates(spark, sf_dir, fused=True).collect(),
-        key=lambda r: r["sink"],
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert {r["sink"]: r["events"] for r in a} == {
-        "sink_a": 850, "sink_b": 100, "sink_default": 950,
-    }

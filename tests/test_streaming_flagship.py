@@ -1,13 +1,9 @@
 """Streaming flagship: the full parse→enrich→route pipeline over a
 file-source stream, foreachBatch micro-batches, equals the batch result."""
 
-import pyspark.sql.functions as F
-
 from loongcollector_spark import flagship
-from loongcollector_spark.operators.enrich import BroadcastLookup
-from loongcollector_spark.routing import RouteCondition, Router
 from loongcollector_spark.streaming.pipeline import read_stream, run_available_now
-from loongcollector_spark.synth import ROUTE_RULES, sequences_df, source_lookup_df
+from loongcollector_spark.synth import sequences_df
 
 
 def test_streaming_pipeline_matches_batch(spark, sf_dir, tmp_path):
@@ -22,16 +18,10 @@ def test_streaming_pipeline_matches_batch(spark, sf_dir, tmp_path):
         for r in flagship.routed_rows(spark, sf_dir).collect()
     )
 
-    lookup = source_lookup_df(spark)
-    rules = [
-        RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES
-    ]
     got = []
 
     def process(bdf, epoch_id):
-        ev = flagship.parsed_events_from(bdf)
-        ev = BroadcastLookup(lookup, on="source").apply(ev)
-        routed = Router(rules).apply(ev)
+        routed = flagship.routed_from(spark, bdf, partition=False)
         got.extend((r["sink"], r["doc_id"]) for r in routed.select("sink", "doc_id").collect())
 
     stream = read_stream(spark, inp, schema, max_files_per_trigger=2)

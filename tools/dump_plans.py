@@ -32,18 +32,11 @@ def main() -> None:
         (
             "pipeline_e2e — parse→enrich→route→aggregate",
             flagship.pipeline_aggregates(spark, SF),
-            "ONE scan per source branch with the source filter at/below the "
-            "Python decode stage; BroadcastHashJoin for the lookup (never "
+            "Exactly ONE parquet scan and ONE Python decode stage (MapInPandas) "
+            "for all three formats; per-source parse is one CASE-dispatched "
+            "projection; BroadcastHashJoin for the lookup (never "
             "SortMergeJoin); explode fan-out (no N-scan recompute); partial "
             "HashAggregate pairs around a single tiny sink-key Exchange.",
-        ),
-        (
-            "pipeline_e2e_fused — single-scan CASE-dispatch variant",
-            flagship.pipeline_aggregates(spark, SF, fused=True),
-            "Exactly ONE parquet scan and ONE Python decode stage for all "
-            "three formats (the 100 TB shape when the input is not "
-            "source-partitioned); per-source parse is a CASE-dispatched "
-            "projection, everything else identical to pipeline_e2e.",
         ),
         (
             "dedup_minhash — shingle→minhash→LSH(capped)→Jaccard",
