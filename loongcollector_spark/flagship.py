@@ -1,9 +1,11 @@
 """The flagship end-to-end job (SURVEY.md §7 minimum slice):
 
 read sequences (doc_id, tokens, n_tok, source)
-  → one Arrow decode tokens→content over every row (tokens.decode_tokens_arrow)
+  → one Arrow decode tokens→content over the rows of the three formats
+    (tokens.decode_tokens_arrow)
   → one CASE on ``source`` over the existing parsers (nginx regex / app-json /
-    tab-delimited), discard-unmatch semantics; any other source is discarded
+    tab-delimited), discard-unmatch semantics; any other source is filtered
+    out before the decode
   → broadcast-join source lookup (team_tag, env, route_key)
   → router fan-out (tag conditions, multi-match copy) via explode
   → explicit repartition((source, route_key)) [+salt]
@@ -79,8 +81,11 @@ def replicated_sequences(spark: SparkSession, sf_dir: str, factor: int) -> DataF
 def parsed_events_from(seq: DataFrame) -> DataFrame:
     """Parse a sequences frame into the unified event frame (doc_id, source,
     n_tok, fields): one Arrow decode, then one projection that dispatches on
-    ``source`` to the parser for that format. Rows of any other source fail
-    the parse and are discarded."""
+    ``source`` to the parser for that format. Rows of any other source are
+    discarded before the decode."""
+    # filter before the python stage (a filter does not push through it), so
+    # rows no parser takes are neither shuffled nor decoded
+    seq = seq.filter(F.col("source").isin(list(PARSERS)))
     # drop the token arrays INSIDE the python stage: a .drop after it would
     # ship the dominant payload Python→JVM just to discard it
     ev = to_events(decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True))

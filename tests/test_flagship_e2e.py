@@ -1,6 +1,6 @@
 """Flagship end-to-end behaviors: the one parse path against the per-source
-parser operators, per-sink resumable writes, skew salting, Arrow
-desensitize."""
+(branched) parser operators and the JVM decode, per-sink resumable writes,
+skew salting, Arrow desensitize."""
 
 import importlib.util
 import os
@@ -13,17 +13,24 @@ import pytest
 from pyspark.sql import DataFrame
 
 from loongcollector_spark import flagship
+from loongcollector_spark.aggregate import sink_aggregates
 from loongcollector_spark.operators.base import FIELDS, to_events
+from loongcollector_spark.operators.enrich import BroadcastLookup
 from loongcollector_spark.operators.transforms import Desensitize, DesensitizeArrow
 from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
-from loongcollector_spark.synth import sequences_df
-from loongcollector_spark.tokens import decode_tokens
+from loongcollector_spark.routing import RouteCondition, Router
+from loongcollector_spark.synth import ROUTE_RULES, sequences_df, source_lookup_df
+from loongcollector_spark.tokens import decode_tokens, decode_tokens_arrow
 
 
-def _per_source_reference(seq):
-    """The flagship parse built the long way: per source, a JVM decode and
+def _per_source_reference(seq, arrow=False):
+    """The flagship parse built the branched way: per source, a decode and
     that format's parser ``apply``, unioned; other sources are dropped."""
-    ev = to_events(seq.withColumn("content", decode_tokens("tokens")).drop("tokens"))
+    if arrow:
+        decoded = decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True)
+    else:
+        decoded = seq.withColumn("content", decode_tokens("tokens")).drop("tokens")
+    ev = to_events(decoded)
     parts = [p.apply(ev.filter(F.col("source") == s)) for s, p in flagship.PARSERS.items()]
     return reduce(DataFrame.unionByName, parts)
 
@@ -35,33 +42,72 @@ def _keyed(df):
     )
 
 
-def test_arrow_and_jvm_paths_identical(spark, sf_dir):
-    """The flagship parse (one Arrow decode, CASE over the parsers' parse())
-    equals the per-source parser operators over the JVM decode: on the
-    fixture, on a csvlog row with EXTEND overflow columns, and on a row of an
-    unknown source with four tab fields, which both must discard."""
-    lines = [
-        ("over", "u1\t10\tGET\t42\textra1\textra2", "csvlog"),
-        ("unknown", "u2\t11\tPUT\t7", "syslog"),
-    ]
-    extra = spark.createDataFrame(
+def _seq_of(spark, lines):
+    """A sequences frame of (doc_id, line, source) triples."""
+    return spark.createDataFrame(
         [(d, [ord(c) for c in line], len(line), s) for d, line, s in lines],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    seq = sequences_df(spark, sf_dir).unionByName(extra)
+
+
+def _sink_events(aggs):
+    return {r["sink"]: r["events"] for r in aggs.collect()}
+
+
+def test_arrow_and_jvm_paths_identical(spark, sf_dir):
+    """The flagship parse (one Arrow decode, CASE over the parsers' parse())
+    equals the per-source parser operators over the JVM decode, on the
+    fixture plus a row of an unknown source with four tab fields, which both
+    must discard and which reaches no sink."""
+    unknown = _seq_of(spark, [("unknown", "u2\t11\tPUT\t7", "syslog")])
+    seq = sequences_df(spark, sf_dir).unionByName(unknown)
     got = _keyed(flagship.parsed_events_from(seq))
     assert got == _keyed(_per_source_reference(seq))
-    by_doc = {d: dict(f) for d, _, _, f in got}
-    assert by_doc["over"]["__column4__"] == "extra1"
-    assert by_doc["over"]["__column5__"] == "extra2"
-    assert "unknown" not in by_doc
-    # the unknown-source row reaches no sink; the csvlog row reaches two
-    aggs = flagship.pipeline_aggregates_from(spark, seq).collect()
-    assert {r["sink"]: r["events"] for r in aggs} == {
-        "sink_a": 851, "sink_b": 100, "sink_default": 951,
+    assert "unknown" not in {d for d, _, _, _ in got}
+    assert _sink_events(flagship.pipeline_aggregates_from(spark, seq)) == {
+        "sink_a": 850, "sink_b": 100, "sink_default": 950,
     }
-    fixture = flagship.pipeline_aggregates(spark, sf_dir).collect()
-    assert {r["sink"]: r["events"] for r in fixture} == {
+
+
+def test_fused_equals_branched(spark, sf_dir):
+    """The fused CASE dispatch over one Arrow decode equals the branched
+    parse (one filtered branch per source, same Arrow decode, each parser's
+    apply) row for row on the fixture."""
+    seq = sequences_df(spark, sf_dir)
+    got = _keyed(flagship.parsed_events_from(seq))
+    assert len(got) > 0
+    assert got == _keyed(_per_source_reference(seq, arrow=True))
+
+
+def test_fused_csvlog_overflow_matches_branched(spark):
+    """A csvlog line with MORE than len(CSV_KEYS) tab-separated fields gets
+    the same __column{i}__ EXTEND overflow keys on the flagship parse as on
+    the branched DelimiterParser path."""
+    seq = _seq_of(spark, [("d1", "u1\t10\tGET\t42\textra1\textra2", "csvlog")])
+    a = flagship.parsed_events_from(seq).collect()
+    b = _per_source_reference(seq).collect()
+    fa, fb = dict(a[0][FIELDS]), dict(b[0][FIELDS])
+    assert fa == fb
+    assert fa["__column4__"] == "extra1" and fa["__column5__"] == "extra2"
+
+
+def test_fused_full_pipeline_matches_branched(spark, sf_dir):
+    """pipeline_aggregates (single-scan CASE-dispatch parse) equals the same
+    lookup, routing and per-sink fold over the branched parse, and keeps the
+    pinned fixture counts."""
+    seq = sequences_df(spark, sf_dir)
+    rules = [
+        RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES
+    ]
+    enriched = BroadcastLookup(source_lookup_df(spark), on="source").apply(
+        _per_source_reference(seq)
+    )
+    branched = sink_aggregates(Router(rules).apply(enriched)).select(
+        "sink", "events", F.col("tokens_total").cast("long").alias("tokens_total")
+    )
+    a = flagship.pipeline_aggregates(spark, sf_dir).collect()
+    assert [tuple(r) for r in a] == [tuple(r) for r in branched.collect()]
+    assert {r["sink"]: r["events"] for r in a} == {
         "sink_a": 850, "sink_b": 100, "sink_default": 950,
     }
 

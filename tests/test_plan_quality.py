@@ -1,7 +1,7 @@
 """Physical-plan quality gates — the 100 TB design invariants asserted on
 the actual Catalyst output, so a regression that silently de-optimizes the
-plan (lost broadcast, surprise cartesian, missing partial agg, a second
-scan of the input) fails CI rather than surfacing as a cluster incident."""
+plan (lost broadcast, surprise cartesian, missing partial agg, unpushed
+source filter, a second scan of the input) fails CI rather than surfacing as a cluster incident."""
 
 import re
 
@@ -220,14 +220,30 @@ def test_decode_repartition_only_on_narrow_scans(spark, sf_dir, tmp_path):
     assert "RoundRobinPartitioning" in plan or "REPARTITION_BY_NUM" in plan
 
 
-def test_flagship_pipeline_has_single_scan(spark, sf_dir):
-    """The flagship reads the sequences ONCE and decodes them in ONE Python
-    stage for all three formats; the lookup join stays broadcast."""
+def test_fused_pipeline_has_single_scan(spark, sf_dir):
+    """The flagship is the fused, not-source-partitioned 100 TB shape: it
+    reads the sequences ONCE and decodes them in ONE Python stage for all
+    three formats; the lookup join stays broadcast."""
     plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))
     tree = plan.split("\n\n")[0]
     assert tree.count("Scan parquet") == 1, tree
     assert tree.count("MapInPandas") == 1
     assert "BroadcastHashJoin" in tree and "SortMergeJoin" not in tree
+
+
+def test_source_filter_below_python_stage(spark, sf_dir):
+    """The filter to the parsed sources must sit BELOW MapInPandas (filters
+    don't push through a Python stage on their own), so rows no parser takes
+    are never decoded."""
+    plan = _plan(flagship.parsed_events_from(sequences_df(spark, sf_dir)))
+    tree, details = plan.split("\n\n", 1)
+    lines = tree.splitlines()
+    py = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    below = [line for line in lines[py + 1 :] if "Filter" in line]
+    assert below, tree
+    node = re.search(r"Filter \((\d+)\)", below[0]).group(1)
+    cond = details.split(f"({node}) Filter", 1)[1].split("\n\n", 1)[0]
+    assert "IN (nginx,app-json,csvlog)" in cond, cond
 
 
 def test_gopher_repetition_builds_grams_once(spark, sf_dir):

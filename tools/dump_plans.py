@@ -33,7 +33,8 @@ def main() -> None:
             "pipeline_e2e — parse→enrich→route→aggregate",
             flagship.pipeline_aggregates(spark, SF),
             "Exactly ONE parquet scan and ONE Python decode stage (MapInPandas) "
-            "for all three formats; per-source parse is one CASE-dispatched "
+            "for all three formats; the filter to the parsed sources sits "
+            "below it; per-source parse is one CASE-dispatched "
             "projection; BroadcastHashJoin for the lookup (never "
             "SortMergeJoin); explode fan-out (no N-scan recompute); partial "
             "HashAggregate pairs around a single tiny sink-key Exchange.",
