@@ -59,7 +59,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .pb import PBError, read_varint
+from .pb import PBError, _fields, _len_field, _varint_field, read_varint
 from .pprof_profile import MASK64, detect_profile_kind, fmt_position_and_name, marshal_labels
 from .xxh import xxh64
 
@@ -123,12 +123,6 @@ def merge_jvm_generated_classes(sym: str) -> str:
     return sym
 
 
-def _fields(buf: bytes):
-    from .pb import _fields as f
-
-    return f(buf)
-
-
 def decode_labels_snapshot(payload: bytes) -> dict:
     """jfr_labels.proto: LabelsSnapshot{map<int64,Context> contexts=1,
     map<int64,string> strings=2}, Context{map<int64,int64> labels=1}."""
@@ -164,8 +158,6 @@ def decode_labels_snapshot(payload: bytes) -> dict:
 
 def encode_labels_snapshot(contexts: dict, strings: dict) -> bytes:
     """Fixture/parity encoder for LabelsSnapshot."""
-    from .pb import _len_field, _varint_field
-
     out = b""
     for ck, labels in contexts.items():
         body = b""

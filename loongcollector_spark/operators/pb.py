@@ -35,12 +35,6 @@ operator: one linear decode pass, partition-parallel, no shuffle — at 100 TB
 the parallelism is the payload partition count. The matching encoder feeds
 fixtures and roundtrip tests; unit goldens pin BOTH directions against
 hand-assembled wire bytes so encode/decode cannot drift together.
-
-Scale tier: where the ``spark-protobuf`` external module is on the cluster
-classpath, jvm_decode.py swaps this Python codec for a codegen'd JVM
-``from_protobuf`` over a from-scratch generated FileDescriptorSet
-(``parse_sls_log_group_auto`` — the ~100× decode lever); this module stays
-the universal fallback and the parity/golden tier.
 """
 
 from __future__ import annotations

@@ -82,7 +82,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .pb import PBError, read_varint
+from .pb import PBError, _fields, _len_field, _varint_field, read_varint
 from .xxh import xxh64
 
 MASK64 = (1 << 64) - 1
@@ -173,12 +173,6 @@ def _ints(wt: int, v: object) -> list[int]:
 
 def _signed(x: int) -> int:
     return x - (1 << 64) if x >= (1 << 63) else x
-
-
-def _fields(buf: bytes):
-    from .pb import _fields as f
-
-    return f(buf)
 
 
 def _value_type(buf: bytes) -> tuple[int, int]:
@@ -594,15 +588,11 @@ class PprofBuilder:
         return self._strings[v]
 
     def sample_type(self, typ: str, unit: str) -> None:
-        from .pb import _len_field, _varint_field
-
         self._sample_types.append(
             _len_field(1, _varint_field(1, self.s(typ)) + _varint_field(2, self.s(unit)))
         )
 
     def function(self, name: str, filename: str) -> int:
-        from .pb import _len_field, _varint_field
-
         fid = len(self._functions) + 1
         self._functions.append(
             _len_field(
@@ -615,8 +605,6 @@ class PprofBuilder:
         return fid
 
     def location(self, fn_ids: list[int]) -> int:
-        from .pb import _len_field, _varint_field
-
         lid = len(self._locations) + 1
         body = _varint_field(1, lid)
         for fid in fn_ids:
@@ -627,8 +615,6 @@ class PprofBuilder:
     def sample(
         self, loc_ids: list[int], values: list[int], labels: list[tuple[str, str]] = ()
     ) -> None:
-        from .pb import _len_field, _varint_field
-
         body = b""
         for lid in loc_ids:
             body += _varint_field(1, lid)
@@ -648,8 +634,6 @@ class PprofBuilder:
         period_type: tuple[str, str] | None = None,
         gzipped: bool = False,
     ) -> bytes:
-        from .pb import _len_field, _varint_field
-
         tail = b""
         if time_nanos:
             tail += _varint_field(9, time_nanos)

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .gofmt import fmt_go_g  # exact strconv.FormatFloat(v,'g',-1,64)
-from .pb import PBError, _fields, read_varint, write_varint
+from .pb import PBError, _fields, _len_field, read_varint, write_varint
 
 STALE_NAN_BITS = 0x7FF0000000000002
 
@@ -186,10 +186,6 @@ def decode_write_request(payload: bytes) -> list[dict]:
 
 def encode_write_request(series: list[dict]) -> bytes:
     """Fixture encoder for the same message shape."""
-
-    def _len_field(fno: int, payload: bytes) -> bytes:
-        return write_varint((fno << 3) | 2) + write_varint(len(payload)) + payload
-
     out = bytearray()
     for s in series:
         ts_buf = bytearray()

@@ -627,8 +627,8 @@ def compile_decoder(cfg: Mapping[str, Any]):
       ``raw``): the canonical event frame (``fields['content']`` carries the
       request body text);
     - binary protocols (``sls``, ``prometheus``): a binary ``payload``
-      column (``PayloadCol``/``Passthrough`` options); ``sls`` takes the JVM
-      from_protobuf tier when spark-protobuf is on the classpath;
+      column (``PayloadCol``/``Passthrough`` options), decoded by the Python
+      wire codecs (``ParseSlsLogGroup``, ``PromRemoteWriteDecoder``);
     - OTLP (``otlp_logv1``/``otlp_metricv1``/``otlp_tracev1``): hex-encoded
       wire bytes in ``fields['content']`` (OtelPbToJson), chained into the
       shared OTLP parsers.
@@ -667,11 +667,11 @@ def compile_decoder(cfg: Mapping[str, Any]):
 
         return PyroscopeGroupsDecoder().apply
     if fmt == "sls":
-        from ..operators.jvm_decode import parse_sls_log_group_auto
+        from ..operators.pb import ParseSlsLogGroup
 
-        return lambda df: parse_sls_log_group_auto(
-            df, cfg.get("PayloadCol", "payload"), list(cfg.get("Passthrough", []))
-        )
+        return ParseSlsLogGroup(
+            cfg.get("PayloadCol", "payload"), list(cfg.get("Passthrough", []))
+        ).apply
     if fmt == "prometheus":
         from ..operators.prom_rw import PromRemoteWriteDecoder
 

@@ -1907,12 +1907,11 @@ def _otel_pb_payload_udf(signal: str):
 
 def q_otel_pb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """processor_otel_trace Format=protobuf (processor_otel_trace.go:31):
-    OTLP TracesData WIRE bytes → the tier-auto wire decode (JVM
-    from_protobuf when spark-protobuf is on the classpath, the Python codec
-    otherwise — operators/jvm_otlp.py) → the same OtelTraceParser and
-    oracle as the Format=json query."""
-    from .operators.jvm_otlp import otel_pb_to_json_auto
+    OTLP TracesData WIRE bytes → the Python wire decode (operators/otlp_pb.py
+    OtelPbToJson) → the same OtelTraceParser and oracle as the Format=json
+    query."""
     from .operators.otel import OtelTraceParser
+    from .operators.otlp_pb import OtelPbToJson
 
     ev = _events_raw(spark, sf_dir)
     build = _otel_pb_payload_udf("trace")
@@ -1922,7 +1921,7 @@ def q_otel_pb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
             build("doc_id", "event_id", "event_type", "user_id").alias("content"),
         )
     )
-    out = OtelTraceParser().apply(otel_pb_to_json_auto(df, "trace"))
+    out = OtelTraceParser().apply(OtelPbToJson("trace").apply(df))
     return out.select(
         "doc_id",
         *[fget(k).alias(k.replace(".", "_")) for k in [
@@ -1934,10 +1933,10 @@ def q_otel_pb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_otel_pb_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """processor_otel_metric Format=protobuf: MetricsData wire bytes through
-    the tier-auto wire decode (jvm_otlp.py), then the Format=json parser +
+    the Python wire decode (otlp_pb.py), then the Format=json parser +
     oracle."""
-    from .operators.jvm_otlp import otel_pb_to_json_auto
     from .operators.otel import OtelMetricParser
+    from .operators.otlp_pb import OtelPbToJson
 
     ev = _events_raw(spark, sf_dir)
     build = _otel_pb_payload_udf("metric")
@@ -1947,7 +1946,7 @@ def q_otel_pb_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
             build("doc_id", "event_id", "event_type", "user_id").alias("content"),
         )
     )
-    out = OtelMetricParser().apply(otel_pb_to_json_auto(df, "metric"))
+    out = OtelMetricParser().apply(OtelPbToJson("metric").apply(df))
     return out.select(
         "doc_id",
         fget("__name__").alias("name"),
@@ -2463,7 +2462,7 @@ FROM events"""
 
 def q_otel_pb_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same fixture over the LogsData WIRE bytes (logs.proto) through
-    the tier-auto wire decode (jvm_otlp.py) — the Format=protobuf path; shares oracle_otel_log."""
+    the Python wire decode (otlp_pb.py) — the Format=protobuf path; shares oracle_otel_log."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -2492,9 +2491,9 @@ def q_otel_pb_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = to_events(
         ev.select("doc_id", build("doc_id", "event_id", "event_type", "user_id").alias("content"))
     )
-    from .operators.jvm_otlp import otel_pb_to_json_auto
+    from .operators.otlp_pb import OtelPbToJson
 
-    return _otel_log_cols(OtelLogParser().apply(otel_pb_to_json_auto(df, "log")))
+    return _otel_log_cols(OtelLogParser().apply(OtelPbToJson("log").apply(df)))
 
 
 QUERIES["otel_log"] = q_otel_log
@@ -2638,8 +2637,7 @@ def q_sls_group_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
-    from .operators.jvm_decode import parse_sls_log_group_auto
-    from .operators.pb import encode_sls_log, encode_sls_log_group
+    from .operators.pb import ParseSlsLogGroup, encode_sls_log, encode_sls_log_group
 
     ev = _events_raw(spark, sf_dir).withColumn(
         "req_no", (F.col("event_id") % 16).cast("int")
@@ -2666,9 +2664,7 @@ def q_sls_group_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.DataFrame({"req_no": [req], "payload": [payload]})
 
     reqs = ev.groupBy("req_no").applyInPandas(packer, schema=out_schema)
-    # auto tier: JVM from_protobuf where the spark-protobuf module is on the
-    # classpath (real clusters), the pure-Python codec otherwise (sandbox)
-    out = parse_sls_log_group_auto(reqs, "payload", ["req_no"])
+    out = ParseSlsLogGroup("payload", ["req_no"]).apply(reqs)
     return out.select(
         F.col("req_no").cast("int").alias("req_no"),
         "time",
@@ -3088,7 +3084,7 @@ def q_flusher_otlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributes minus content/level, tag overlay, and ts·1e9."""
     from .operators.convert import otlp_logs_sink_frames
     from .operators.otel import OtelLogParser
-    from .operators.jvm_otlp import otel_pb_to_json_auto
+    from .operators.otlp_pb import OtelPbToJson
 
     ev = _events_raw(spark, sf_dir)
     eid = F.col("event_id")
@@ -3129,7 +3125,7 @@ def q_flusher_otlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec_in = to_events(
         enc.select("sink", F.lower(F.hex("payload")).alias("content"))
     )
-    out = OtelLogParser().apply(otel_pb_to_json_auto(dec_in, "log"))
+    out = OtelLogParser().apply(OtelPbToJson("log").apply(dec_in))
     return out.select(
         "sink",
         fget("time_unix_nano").alias("time_unix_nano"),
@@ -3613,7 +3609,7 @@ def q_flusher_otlp_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     through otlp_pb.decode_metrics + OtelMetricParser."""
     from .operators.convert import otlp_metrics_sink_frames
     from .operators.otel import OtelMetricParser
-    from .operators.jvm_otlp import otel_pb_to_json_auto
+    from .operators.otlp_pb import OtelPbToJson
 
     ev = _events_raw(spark, sf_dir)
     eid = F.col("event_id")
@@ -3638,7 +3634,7 @@ def q_flusher_otlp_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="event_id",
     )
     dec_in = to_events(enc.select("sink", F.lower(F.hex("payload")).alias("content")))
-    out = OtelMetricParser().apply(otel_pb_to_json_auto(dec_in, "metric"))
+    out = OtelMetricParser().apply(OtelPbToJson("metric").apply(dec_in))
     return out.select(
         "sink",
         fget("__name__").alias("name"),
@@ -3746,7 +3742,7 @@ def q_flusher_otlp_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     OtelTraceParser."""
     from .operators.convert import otlp_traces_sink_frames
     from .operators.otel import OtelTraceParser
-    from .operators.jvm_otlp import otel_pb_to_json_auto
+    from .operators.otlp_pb import OtelPbToJson
 
     ev = _events_raw(spark, sf_dir)
     eid = F.col("event_id")
@@ -3786,7 +3782,7 @@ def q_flusher_otlp_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="event_id",
     )
     dec_in = to_events(enc.select("sink", F.lower(F.hex("payload")).alias("content")))
-    out = OtelTraceParser().apply(otel_pb_to_json_auto(dec_in, "trace"))
+    out = OtelTraceParser().apply(OtelPbToJson("trace").apply(dec_in))
     keys = ["host", "service", "traceID", "spanID", "parentSpanID", "kind",
             "name", "start", "end", "duration", "attribute", "statusCode",
             "statusMessage", "resource"]

@@ -2,9 +2,13 @@
 the compact final-line builder — the driver-artifact defensibility machinery
 (VERDICT r4 item 1) must not regress."""
 
+import multiprocessing
 import time
 
+import pytest
+
 import bench
+import loongcollector_spark.session as session
 
 
 def _fake_counters(monkeypatch, busy_windows):
@@ -155,3 +159,30 @@ def test_tree_cpu_sampler_keeps_vanished_subtree(monkeypatch):
     for _ in range(4):
         s._sample()
     assert s.total() == 10.0 + 50.0 + 0.0 + 0.0 + 5.0 + 0.0
+
+
+def test_scaling_bench_terminates_probe_pools_on_error(monkeypatch):
+    """A failure after the probe pools exist must not leak their workers
+    (each holds a 256 MB buffer) into the query suite that follows."""
+    pools = []
+
+    class FakePool:
+        def __init__(self, processes):
+            self.terminated = False
+            pools.append(self)
+
+        def map(self, fn, items):
+            return [0] * len(items)
+
+        def terminate(self):
+            self.terminated = True
+
+    def broken_get_spark(*a, **kw):
+        raise RuntimeError("session start failed")
+
+    monkeypatch.setattr(multiprocessing, "Pool", FakePool)
+    monkeypatch.setattr(session, "get_spark", broken_get_spark)
+    with pytest.raises(RuntimeError, match="session start failed"):
+        bench._scaling_bench("unused-sf-dir", cpus=8, n_rows=10)
+    assert len(pools) == 2
+    assert all(p.terminated for p in pools)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import struct
 
+from loongcollector_spark.operators.otel import OtelTraceParser
 from loongcollector_spark.operators.otlp_pb import (
     OtelPbToJson,
     decode_metrics,
@@ -171,6 +172,9 @@ class TestSparkFrontEnd:
         out = OtelPbToJson("trace").apply(df).collect()
         assert [r.doc_id for r in out] == ["a"]
         assert '"spanId":"0202020202020202"' in out[0].fields["content"]
+        # the decoded JSON feeds the Format=json trace parser unchanged
+        spans = OtelTraceParser().apply(OtelPbToJson("trace").apply(df)).collect()
+        assert [(r.doc_id, r.fields["spanID"]) for r in spans] == [("a", "02" * 8)]
 
     def test_base64_encoding_mode(self, spark):
         import base64
