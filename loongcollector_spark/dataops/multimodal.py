@@ -86,18 +86,6 @@ def extract_media_features(df: DataFrame, media_col: str = "media") -> DataFrame
     return df.mapInPandas(mapper, schema=schema)
 
 
-def decode_image(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """Real image decode — requires PIL, which is not in this container."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "image decode requires pillow; use extract_media_features (stub) "
-            "in this environment"
-        ) from e
-    raise NotImplementedError("real decoder wiring is environment-specific")
-
-
 # --- REAL decoders (pure stdlib/numpy — no external codecs needed) ----------
 #
 # PPM (P6) and WAV (PCM) are fully decodable with bytes + the stdlib `wave`

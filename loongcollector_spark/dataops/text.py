@@ -697,22 +697,6 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return df.select(F.col(id_col), fp.alias("fingerprint"))
 
 
-def ngrams_all(words_col: Column, n: int) -> Column:
-    """ALL positional word n-grams (duplicates kept — unlike ``shingles``,
-    which is distinct). Empty array when < n words. Let-bound: one split per
-    row regardless of gram count."""
-
-    def build(w: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(0)))
-        grams = F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", *[F.element_at(w, i + j) for j in range(n)]),
-        )
-        return F.when(F.size(w) >= n, grams).otherwise(F.array().cast("array<string>"))
-
-    return _let(words_col, build)
-
-
 def max_multiplicity(arr: Column) -> Column:
     """Highest multiplicity of any element: longest equal-run on the sorted
     array, via one fold — O(k log k) per row, JVM-side, NO shuffle (the

@@ -15,6 +15,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """min(16g, 40% of MemTotal) in whole GiB, at least 1g. 8g showed
+    GC-driven CPU/row inflation at 32 threads (scaling bench cpu ratio
+    1.39 → 1.16 at 16g), so a large host gets 16g; on a 16 GB machine a 16g
+    heap let the JVM die under memory pressure (at semdedup_hot), so it gets
+    6g there."""
+    with open(meminfo) as fh:
+        kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1, min(16, int(0.4 * kib / 2**20)))}g"
+
+
 def get_spark(
     app_name: str = "loongcollector-spark",
     master: str | None = None,
@@ -38,9 +49,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         # local-mode JVM heap (set at FIRST JVM launch; later sessions in the
-        # same process inherit it). 8g showed GC-driven CPU/row inflation at
-        # 32 threads (scaling bench cpu ratio 1.39 → 1.16 at 16g).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # same process inherit it); see default_driver_memory
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

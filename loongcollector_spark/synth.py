@@ -73,10 +73,6 @@ def line_sql(dialect: str = "spark") -> str:
     return _LINE.format(**d)
 
 
-def source_sql() -> str:
-    return _SOURCE
-
-
 def sequences_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-side sequences table: (doc_id, tokens, n_tok, source).
 

@@ -2,22 +2,23 @@
 
 One worker process = one parallelism level (launched under `taskset -c <mask>`
 so the whole tree — driver python, JVM, pyspark daemon + workers — inherits the
-CPU mask). The orchestrator (bench.py `_scaling_bench`) keeps TWO workers alive
-simultaneously (local[N] and local[4N]) and alternates timed runs between them,
-so each scaling pass compares low/high throughput measured seconds apart under
-the SAME external host load — the round-2 block structure (all low runs, then
-all high runs, minutes apart) let a co-tenant burst during one block corrupt
-the ratio.
+CPU mask). The orchestrator (bench.py `_scaling_bench`) keeps one worker per
+level alive simultaneously (local[N], local[4N] and the full width) and
+alternates timed runs between them, so each scaling pass compares throughput
+measured seconds apart under the SAME external host load — the round-2 block
+structure (all low runs, then all high runs, minutes apart) let a co-tenant
+burst during one block corrupt the ratio.
 
 Protocol (line-oriented, stdin → stdout):
     parent → worker:  "run\n"   one timed e2e run        "quit\n"  shutdown
-    worker → parent:  "READY\n" after session-up + one warm run, then one JSON
-                      line per run:
-        {"wall": s, "cpu": s, "ext_cpu": s}
-    `cpu`     = this worker tree's CPU-seconds over the run window
-    `ext_cpu` = host-wide busy CPU-seconds (from /proc/stat) minus `cpu`:
-                everything else on the box during the window — the per-pass
-                external-load evidence the headline pass is selected against.
+    worker → parent:  "READY\n" after session-up + the untimed warm runs, then
+                      one JSON line per run:
+        {"wall": s, "cpu": s}
+    `cpu` = this worker tree's CPU-seconds over the run, read by an in-process
+            perfbench.proctree.TreeSampler (it keeps the CPU of pyspark
+            workers the SIGCHLD-ignoring daemon never reaps into a cutime).
+The parent reads host busy/steal around each run for the external-load
+evidence.
 """
 
 from __future__ import annotations
@@ -30,54 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _tree_cpu_s() -> float:
-    """CPU seconds (user+sys) of this process tree (see bench._tree_cpu_s)."""
-    me = os.getpid()
-    procs: dict[int, tuple[int, int]] = {}
-    for p in os.listdir("/proc"):
-        if not p.isdigit():
-            continue
-        try:
-            with open(f"/proc/{p}/stat") as fh:
-                parts = fh.read().rsplit(")", 1)[1].split()
-        except (OSError, IndexError):
-            continue
-        # utime+stime of the process itself PLUS cutime+cstime (CPU of its
-        # already-REAPED children — pyspark workers recycle mid-run; counting
-        # only live procs undercounted a 16-core run by ~2x when the daemon
-        # reaped its workers between the before/after snapshots)
-        procs[int(p)] = (
-            int(parts[1]),
-            int(parts[11]) + int(parts[12]) + int(parts[13]) + int(parts[14]),
-        )
-    children: dict[int, list[int]] = {}
-    for pid, (ppid, _) in procs.items():
-        children.setdefault(ppid, []).append(pid)
-    seen: set[int] = set()
-    stack = [me]
-    while stack:
-        x = stack.pop()
-        if x in seen:
-            continue
-        seen.add(x)
-        stack.extend(children.get(x, []))
-    clk = os.sysconf("SC_CLK_TCK")
-    return sum(procs[p][1] for p in seen if p in procs) / clk
-
-
-def _host_cpu_s() -> tuple[float, float]:
-    """(busy, steal) host-wide CPU-seconds since boot. `busy` = all non-idle
-    jiffies (user+nice+sys+irq+softirq+steal); `steal` = hypervisor steal —
-    cycles the physical host's co-tenants took from this guest, the
-    otherwise-invisible external load on this sandbox (measured: ~2.3 cores
-    stolen at 32-wide load even with zero guest-visible co-tenant activity)."""
-    with open("/proc/stat") as fh:
-        v = [int(x) for x in fh.readline().split()[1:]]
-    clk = os.sysconf("SC_CLK_TCK")
-    idle = v[3] + v[4]
-    steal = v[7] if len(v) > 7 else 0
-    return (sum(v) - idle) / clk, steal / clk
+from perfbench.proctree import TreeSampler  # noqa: E402
 
 
 def main() -> None:
@@ -119,42 +73,30 @@ def main() -> None:
             pass
     print("READY", flush=True)
 
-    for line in sys.stdin:
-        cmd = line.strip()
-        if cmd == "quit":
-            break
-        if cmd != "run":
-            continue
-        # rebuild the DataFrame each run: AQE reuses materialized stages when
-        # re-collecting the same DataFrame object
-        df = spark.read.parquet(args.cache)
-        h0, st0 = _host_cpu_s()
-        c0 = _tree_cpu_s()
-        t0 = time.perf_counter()
-        flagship.pipeline_aggregates_from(spark, df).collect()
-        wall = time.perf_counter() - t0
-        cpu = _tree_cpu_s() - c0
-        h1, st1 = _host_cpu_s()
-        ext = max(0.0, (h1 - h0) - cpu)
-        # Untimed major GC between runs: heap garbage accumulated by run N
-        # otherwise forces a concurrent GC INSIDE run N+1's timed window
-        # (observed: one low run at 2.6x the CPU-seconds of its siblings
-        # with zero external load) — drain it outside the measurement.
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        print(
-            json.dumps(
-                {
-                    "wall": round(wall, 3),
-                    "cpu": round(cpu, 2),
-                    "ext_cpu": round(ext, 2),
-                    "steal_cpu": round(st1 - st0, 2),
-                }
-            ),
-            flush=True,
-        )
+    with TreeSampler(os.getpid()) as tree:
+        for line in sys.stdin:
+            cmd = line.strip()
+            if cmd == "quit":
+                break
+            if cmd != "run":
+                continue
+            # rebuild the DataFrame each run: AQE reuses materialized stages
+            # when re-collecting the same DataFrame object
+            df = spark.read.parquet(args.cache)
+            c0 = tree.cpu_s()
+            t0 = time.perf_counter()
+            flagship.pipeline_aggregates_from(spark, df).collect()
+            wall = time.perf_counter() - t0
+            cpu = tree.cpu_s() - c0
+            # Untimed major GC between runs: heap garbage accumulated by run N
+            # otherwise forces a concurrent GC INSIDE run N+1's timed window
+            # (observed: one low run at 2.6x the CPU-seconds of its siblings
+            # with zero external load) — drain it outside the measurement.
+            try:
+                spark.sparkContext._jvm.System.gc()
+            except Exception:
+                pass
+            print(json.dumps({"wall": round(wall, 3), "cpu": round(cpu, 2)}), flush=True)
 
     spark.stop()
 
