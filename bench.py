@@ -147,8 +147,8 @@ def _bench_session(sf_dir: str, cpus: int) -> dict[str, float]:
         runs=3,
     )
     # full routed fan-out materialization: the deployment job's one-pass
-    # resumable parquet write of every sink (incl. the explicit pre-write
-    # repartition and the commit) into a fresh directory
+    # resumable parquet write of every sink (incl. the write's rebalance by
+    # sink and the commit) into a fresh directory
     def _routed_write():
         with tempfile.TemporaryDirectory() as d:
             resumable_write(flagship.routed_from(spark, seq), sinks, d, Manifest(f"{d}/_manifest"))

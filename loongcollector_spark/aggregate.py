@@ -54,27 +54,6 @@ def context_ordered(df: DataFrame, part_cols: Sequence[str], order_col: str) -> 
     return with_lineage(out)
 
 
-def partition_for_sinks(
-    df: DataFrame,
-    keys: Sequence[str] = (SINK_COL,),
-    num_partitions: int | None = None,
-    salt_buckets: int = 0,
-) -> DataFrame:
-    """Explicit pre-write repartitioning by (sink/source/route) keys —
-    aggregator_shardhash semantics (plugins/aggregator/shardhash:65-128 md5
-    bucketing ≙ Spark HashPartitioning). ``salt_buckets`` > 0 adds a salt
-    column derived deterministically from doc_id to spread a hot key
-    (the reference isolates hot pipelines via multi-tenant queues instead;
-    salting is our scale-path equivalent)."""
-    cols = [F.col(k) for k in keys]
-    if salt_buckets > 0:
-        salt = (F.crc32(F.col("doc_id").cast("string")) % salt_buckets).alias("__salt__")
-        df = df.withColumn("__salt__", salt)
-        cols = cols + [F.col("__salt__")]
-    out = df.repartition(num_partitions, *cols) if num_partitions else df.repartition(*cols)
-    return out.drop("__salt__") if salt_buckets > 0 else out
-
-
 def sink_aggregates(
     routed: DataFrame,
     n_tok_col: str = "n_tok",

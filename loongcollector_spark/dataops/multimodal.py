@@ -3,9 +3,9 @@ with typed metadata, processed by Arrow-batched ``mapInPandas`` stages.
 
 Two tiers:
 - **REAL decode** for formats needing no external codecs: P6 PPM images and
-  PCM WAV audio (pure bytes/numpy + stdlib ``wave``) — decode,
-  feature-extract, nearest-neighbor resize, and audio frame-sampling are
-  fully implemented and oracle-checked (multimodal_decode).
+  PCM WAV audio (pure bytes/numpy + stdlib ``wave``) — decode and
+  feature-extract are fully implemented and oracle-checked
+  (multimodal_decode).
 - **Stub** for compressed formats (JPEG/PNG/MP3 — PIL/librosa/ffmpeg are not
   in this container): ``extract_media_features`` computes deterministic
   byte-level pseudo-features; ``decode_media_features`` degrades unknown
@@ -89,9 +89,9 @@ def extract_media_features(df: DataFrame, media_col: str = "media") -> DataFrame
 # --- REAL decoders (pure stdlib/numpy — no external codecs needed) ----------
 #
 # PPM (P6) and WAV (PCM) are fully decodable with bytes + the stdlib `wave`
-# module, so for these two formats the decode / feature-extract / resize /
-# frame-sample path is REAL end-to-end; only compressed formats (JPEG/PNG/
-# MP3/...) remain behind the stub above.
+# module, so for these two formats the decode / feature-extract path is REAL
+# end-to-end; only compressed formats (JPEG/PNG/MP3/...) remain behind the
+# stub above.
 
 PPM_MAGIC = b"P6"
 WAV_MAGIC = b"RIFF"
@@ -150,35 +150,6 @@ def decode_wav(payload: bytes):
         n = w.getnframes()
         raw = w.readframes(n)
     return rate, np.frombuffer(raw, dtype=np.int16)
-
-
-def resize_image_ppm(payload: bytes, new_w: int, new_h: int) -> bytes:
-    """Nearest-neighbor resize of a P6 PPM (numpy index sampling) → new PPM
-    bytes. The 100 TB shape: pure per-row CPU, no shuffle."""
-    import numpy as np
-
-    w, h, pix = decode_ppm(payload)
-    ys = (np.arange(new_h) * h // new_h).clip(0, h - 1)
-    xs = (np.arange(new_w) * w // new_w).clip(0, w - 1)
-    out = pix[ys][:, xs]
-    header = f"P6\n{new_w} {new_h}\n255\n".encode()
-    return header + out.tobytes()
-
-
-def frame_sample_wav(payload: bytes, every: int) -> bytes:
-    """Keep every ``every``-th sample (audio frame-sampling analog)."""
-    import io
-    import wave
-
-    rate, samples = decode_wav(payload)
-    out = samples[::every]
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(max(rate // every, 1))
-        w.writeframes(out.tobytes())
-    return buf.getvalue()
 
 
 def attach_real_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

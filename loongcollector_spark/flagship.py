@@ -8,15 +8,17 @@ read sequences (doc_id, tokens, n_tok, source)
     out before the decode
   → broadcast-join source lookup (team_tag, env, route_key)
   → router fan-out (tag conditions, multi-match copy) via explode
-  → explicit repartition((source, route_key)) [+salt]
-  → per-sink aggregates (events, tokens_total) + per-source drop counts
+  → per-sink aggregates (events, tokens_total) + per-source drop counts, or
+    the resumable per-sink write (plans/checkpoint.resumable_write)
 
 Scale notes: one scan and one decode stage serve all three formats. The
 single scan costs no partition pruning: on a source-partitioned table a
 per-source branch would read only its own partitions, and the one scan reads
-those same partitions once. The only wide operations are the pre-write
-repartition and the tiny sink-key aggregation; the lookup join is broadcast
-(no shuffle).
+those same partitions once. The routed frame has no exchange of its own: the
+aggregates fold map-side into one tiny sink-key shuffle, and the write
+rebalances by sink, the key it partitions its output by, with AQE sizing and
+splitting the partitions of a hot sink. The lookup join is broadcast (no
+shuffle).
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .aggregate import partition_for_sinks, sink_aggregates, with_lineage
+from .aggregate import sink_aggregates
 from .operators.base import FIELDS, to_events
 from .operators.common import ParserOptions
 from .operators.enrich import BroadcastLookup
@@ -105,39 +107,21 @@ def enriched_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
     return BroadcastLookup(lookup, on="source").apply(ev)
 
 
-def routed_from(
-    spark: SparkSession,
-    seq: DataFrame,
-    salt_buckets: int = 0,
-    partition: bool = True,
-) -> DataFrame:
+def routed_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
     """Fan-out: sink_a ⟵ env=prod, sink_b ⟵ team_tag=team-b, sink_default ⟵ all
-    (multi-match copy semantics, Router.cpp:60-80).
-
-    ``partition=True`` applies the explicit pre-WRITE repartition by
-    (source, route_key) [+salt] — needed when the routed rows are written to
-    per-sink files. Aggregation-only consumers pass ``partition=False``: the
-    per-sink fold partial-aggregates map-side, so forcing a full-row shuffle
-    first would only move the whole fields payload for nothing."""
-    df = enriched_from(spark, seq)
+    (multi-match copy semantics, Router.cpp:60-80)."""
     rules = [
         RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES
     ]
-    out = Router(rules).apply(df)
-    if partition:
-        out = partition_for_sinks(
-            out, keys=("source", "route_key"), salt_buckets=salt_buckets
-        )
-    return with_lineage(out)
+    return Router(rules).apply(enriched_from(spark, seq))
 
 
-def routed(spark: SparkSession, sf_dir: str, salt_buckets: int = 0) -> DataFrame:
-    return routed_from(spark, sequences_df(spark, sf_dir), salt_buckets)
+def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return routed_from(spark, sequences_df(spark, sf_dir))
 
 
 def pipeline_aggregates_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
-    r = routed_from(spark, seq, partition=False)
-    return sink_aggregates(r).select(
+    return sink_aggregates(routed_from(spark, seq)).select(
         "sink", "events", F.col("tokens_total").cast("long").alias("tokens_total")
     )
 

@@ -5,11 +5,15 @@ a marker (north rule: "resumable from checkpoint with per-partition lineage").
 Reference analog: exactly-once range checkpoints for file→SLS
 (core/file_server/checkpoint/RangeCheckpoint.h:27) and the Go leveldb
 checkpoint manager (pluginmanager/checkpoint_manager.go:40-114). Spark-first
-shape: the unit of resume is a partition value (e.g. a sink) of one
+shape: the unit of resume is a sink, a partition value of one
 ``partitionBy("unit")`` parquet commit under dynamic partition overwrite (the
 Iceberg ``overwritePartitions`` analogue), which replaces the partitions it
 writes whole and never touches the others (completed units, ``_manifest/``).
-Each marker stores its unit's counts, observed by that same action."""
+The write owns its layout: one AQE rebalance on the sink column, which
+coalesces small partitions and splits oversized ones, so a hot sink is
+written by several tasks and a cold one does not get a task of its own. Each
+written row carries the lineage of the write partition that produced it, and
+each marker stores its unit's counts, observed by that same action."""
 
 from __future__ import annotations
 
@@ -22,6 +26,7 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
+from ..aggregate import with_lineage
 from ..routing import SINK_COL
 
 
@@ -55,24 +60,21 @@ class Manifest:
 
 
 def resumable_write(
-    df: DataFrame,
-    units: Sequence[str],
-    out_dir: str,
-    manifest: Manifest,
-    unit_col: str = SINK_COL,
-    fail_after: int | None = None,
+    df: DataFrame, units: Sequence[str], out_dir: str, manifest: Manifest
 ) -> list[str]:
-    """Write the rows of every unit of ``units`` without a marker to
-    ``out_dir/unit=<u>/`` in ONE Spark action, then publish a marker per unit
-    holding that action's counts: ``events``, plus ``tokens_total`` (sum of
-    ``n_tok``) when ``df`` has it. Returns the units written: ``[]``, with no
-    Spark job, when all are done. A unit cut off before its marker is
-    rewritten whole on resume; a done unit's files are never touched. A unit
-    with no rows gets ``events: 0``, and this run writes no ``unit=<u>/``
-    directory for it. ``fail_after`` crashes after N markers (tests).
+    """Write the rows of every sink of ``units`` without a marker to
+    ``out_dir/unit=<sink>/`` in ONE Spark action, then publish a marker per
+    sink holding that action's counts: ``events``, plus ``tokens_total`` (sum
+    of ``n_tok``) when ``df`` has it. Returns the sinks written: ``[]``, with
+    no Spark job, when all are done. A sink cut off before its marker is
+    rewritten whole on resume; a done sink's files are never touched. A sink
+    with no rows gets ``events: 0``, and this run writes no ``unit=<sink>/``
+    directory for it.
 
-    The counters sit above ``df``'s pre-write exchange, in the write's result
-    stage: Spark applies its accumulators once per partition, so task
+    The pending rows are rebalanced by sink (AQE sizes the write partitions)
+    and then stamped with ``__pack_id__``, so it names the write partition of
+    each row. The counters sit above that exchange, in the write's result
+    stage: Spark applies their accumulators once per partition, so task
     retries cannot double-count."""
     done = manifest.done_units()
     pending = [u for u in units if u not in done]
@@ -83,14 +85,16 @@ def resumable_write(
     if "n_tok" in df.columns:
         measures["tokens_total"] = F.col("n_tok")
     aggs = [
-        F.coalesce(F.sum(F.when(F.col(unit_col) == u, m)), F.lit(0)).alias(f"{k}_{i}")
+        F.coalesce(F.sum(F.when(F.col(SINK_COL) == u, m)), F.lit(0)).alias(f"{k}_{i}")
         for i, u in enumerate(pending)
         for k, m in measures.items()
     ]
     obs = Observation()
-    todo = df.filter(F.col(unit_col).isin(pending)).observe(obs, *aggs)
+    todo = df.filter(F.col(SINK_COL).isin(pending)).hint("rebalance", SINK_COL)
     (
-        todo.withColumnRenamed(unit_col, "unit")
+        with_lineage(todo)
+        .observe(obs, *aggs)
+        .withColumnRenamed(SINK_COL, "unit")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("unit")
@@ -98,8 +102,6 @@ def resumable_write(
     )
     got = obs.get
     for i, u in enumerate(pending):
-        if fail_after is not None and i >= fail_after:
-            raise RuntimeError(f"injected failure after {fail_after} markers")
         path = os.path.join(out_dir, f"unit={u}")
         counts = {k: got[f"{k}_{i}"] for k in measures}
         manifest.mark_done(u, {"path": path, "counts": counts})

@@ -10,8 +10,8 @@ Spark-first implementation: ONE pass — build an array of matching sink names
 and ``explode`` it. A row matching k sinks becomes k rows distinguished by the
 ``sink`` column. This avoids the N-filtered-scans pattern (which would
 recompute the parse stage N times or require caching) and turns fan-out into a
-single narrow transformation; the per-sink write is then one shuffle
-partitioned by sink (see aggregate.partition_for_sinks).
+single narrow transformation; the per-sink write is then one rebalance
+by sink (see plans/checkpoint.resumable_write).
 """
 
 from __future__ import annotations

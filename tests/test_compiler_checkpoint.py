@@ -66,14 +66,14 @@ def test_compiled_matches_handwritten(spark):
 # --- checkpoint/resume -------------------------------------------------------
 
 
-def test_resumable_write_resumes_after_crash(spark, tmp_path):
+def test_resumable_write_resumes_after_crash(spark, tmp_path, crash_after_markers):
     out_dir = str(tmp_path / "out")
     manifest = Manifest(str(tmp_path / "manifest"))
-    data = spark.range(30).withColumn("u", (F.col("id") % 3).cast("string"))
+    data = spark.range(30).withColumn("sink", (F.col("id") % 3).cast("string"))
 
     units = ["0", "1", "2"]
-    with pytest.raises(RuntimeError, match="injected failure"):
-        resumable_write(data, units, out_dir, manifest, unit_col="u", fail_after=1)
+    with crash_after_markers(manifest, 1), pytest.raises(RuntimeError, match="injected failure"):
+        resumable_write(data, units, out_dir, manifest)
     assert manifest.done_units() == {"0"}
 
     # record mtime of the completed unit — resume must not rewrite it
@@ -82,7 +82,7 @@ def test_resumable_write_resumes_after_crash(spark, tmp_path):
     ][0]
     mtime0 = os.path.getmtime(f"{out_dir}/unit=0/{done_file}")
 
-    written = resumable_write(data, units, out_dir, manifest, unit_col="u")
+    written = resumable_write(data, units, out_dir, manifest)
     assert written == ["1", "2"]
     assert manifest.done_units() == {"0", "1", "2"}
     assert os.path.getmtime(f"{out_dir}/unit=0/{done_file}") == mtime0
@@ -97,12 +97,12 @@ def test_resumable_write_noop_when_all_done(spark, tmp_path):
     still hold the counts of the run that wrote them."""
     out_dir = str(tmp_path / "out")
     manifest = Manifest(str(tmp_path / "manifest"))
-    data = spark.range(4).withColumn("u", F.lit("a"))
-    resumable_write(data, ["a"], out_dir, manifest, unit_col="u")
+    data = spark.range(4).withColumn("sink", F.lit("a"))
+    resumable_write(data, ["a"], out_dir, manifest)
     sc = spark.sparkContext
     sc.setJobGroup("resume-all-done", "resume with every unit done")
     try:
-        assert resumable_write(data, ["a"], out_dir, manifest, unit_col="u") == []
+        assert resumable_write(data, ["a"], out_dir, manifest) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("resume-all-done") == []

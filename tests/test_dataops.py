@@ -242,25 +242,19 @@ def test_pack_token_bins_shard_invariant(spark):
 
 
 def test_multimodal_real_decode_roundtrips(spark):
-    """PPM/WAV are REAL decoders (pure stdlib/numpy): resize and
-    frame-sample roundtrip through encode→transform→decode."""
+    """PPM/WAV are REAL decoders (pure stdlib/numpy): encode→decode
+    roundtrips the pixels and samples."""
     from loongcollector_spark.dataops import multimodal as mm
 
     ppm = mm.make_ppm(16, 8, 10, 20, 30)
     w, h, pix = mm.decode_ppm(ppm)
     assert (w, h) == (16, 8) and pix.shape == (8, 16, 3)
     assert (pix[0, 0] == [10, 20, 30]).all()
-    small = mm.resize_image_ppm(ppm, 4, 2)
-    w2, h2, pix2 = mm.decode_ppm(small)
-    assert (w2, h2) == (4, 2) and (pix2[1, 3] == [10, 20, 30]).all()
 
     wav = mm.make_wav(8000, 64, 250)
     rate, samples = mm.decode_wav(wav)
     assert rate == 8000 and len(samples) == 64
     assert samples[0] == 250 and samples[1] == -250
-    half = mm.frame_sample_wav(wav, 2)
-    rate2, s2 = mm.decode_wav(half)
-    assert rate2 == 4000 and len(s2) == 32 and (s2 == 250).all()
 
 
 def test_multimodal_decode_features_distributed(spark):

@@ -1,6 +1,6 @@
 """Flagship end-to-end behaviors: the one parse path against the per-source
 (branched) parser operators and the JVM decode, per-sink resumable writes,
-skew salting, Arrow desensitize."""
+the write's rebalance splitting a hot sink, Arrow desensitize."""
 
 import importlib.util
 import os
@@ -8,6 +8,7 @@ from collections import Counter
 from functools import reduce
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import DataFrame
@@ -131,13 +132,13 @@ def test_flagship_sink_writes_match_routed_rows(spark, sf_dir, tmp_path):
     assert counts == {"sink_a": 850, "sink_b": 100, "sink_default": 950}
 
 
-def test_flagship_sink_write_resume_after_crash(spark, sf_dir, tmp_path):
+def test_flagship_sink_write_resume_after_crash(spark, sf_dir, tmp_path, crash_after_markers):
     routed = flagship.routed(spark, sf_dir).select("sink", "doc_id")
     manifest = Manifest(str(tmp_path / "m"))
     out = str(tmp_path / "sinks")
     sinks = ["sink_a", "sink_b", "sink_default"]
-    with pytest.raises(RuntimeError):
-        resumable_write(routed, sinks, out, manifest, fail_after=1)
+    with crash_after_markers(manifest, 1), pytest.raises(RuntimeError):
+        resumable_write(routed, sinks, out, manifest)
     assert manifest.done_units() == {"sink_a"}
     # resume: only the two unfinished sinks are written
     written = resumable_write(routed, sinks, out, manifest)
@@ -202,15 +203,17 @@ def test_submit_job_resume_all_done_runs_no_spark_job(spark, sf_dir, clean_job):
     assert result["aggregates"] == clean["aggregates"]
 
 
-def test_sink_write_crash_before_markers_then_resume(spark, sf_dir, tmp_path, clean_job):
+def test_sink_write_crash_before_markers_then_resume(
+    spark, sf_dir, tmp_path, clean_job, crash_after_markers
+):
     """Crash after the commit but before any marker: the resume rewrites
     every sink, and dynamic overwrite replaces (not appends to) the committed
     partitions, leaving ``_manifest/`` in place."""
     routed = flagship.routed(spark, sf_dir)
     out = str(tmp_path / "sinks")
     manifest = Manifest(f"{out}/_manifest")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        resumable_write(routed, SINKS, out, manifest, fail_after=0)
+    with crash_after_markers(manifest, 0), pytest.raises(RuntimeError, match="injected failure"):
+        resumable_write(routed, SINKS, out, manifest)
     assert manifest.done_units() == set() and os.path.isdir(manifest.path)
     assert all(os.path.isdir(f"{out}/unit={s}") for s in SINKS)
     assert resumable_write(routed, SINKS, out, manifest) == SINKS
@@ -220,25 +223,27 @@ def test_sink_write_crash_before_markers_then_resume(spark, sf_dir, tmp_path, cl
     assert all(n == 1 for ids in got.values() for n in ids.values())
 
 
-def test_salting_spreads_hot_source(spark, sf_dir):
-    from loongcollector_spark.aggregate import partition_for_sinks
-
-    # nginx is the deliberate 80% hot source; partitioning by source alone
-    # puts 80% of rows in one partition — salting must spread it
-    seq = sequences_df(spark, sf_dir)
-    plain = partition_for_sinks(seq, keys=("source",), num_partitions=8)
-    salted = partition_for_sinks(seq, keys=("source",), num_partitions=8, salt_buckets=8)
-
-    def sizes(df):
-        return [
-            r["c"]
-            for r in df.groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        ]
-    total = seq.count()
-    assert max(sizes(plain)) >= total * 0.8  # hot partition exists unsalted
-    assert max(sizes(salted)) < total * 0.4  # salting broke the hot key
+def test_write_rebalance_splits_hot_sink(spark, sf_dir, tmp_path, clean_job):
+    """The write rebalances by sink: with a 64 KB advisory partition size, AQE
+    splits the hot sink_default over several files and no file holds the bulk
+    of the routed rows; each sink's rows are those of the default-size job."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "64KB")
+    try:
+        out = str(tmp_path / "sinks")
+        _submit_job().run(spark, sf_dir, out)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    files = {s: list(Path(out, f"unit={s}").glob("*.parquet")) for s in SINKS}
+    assert len(files["sink_default"]) >= 2
+    rows = [pq.read_metadata(f).num_rows for fs in files.values() for f in fs]
+    assert sum(rows) == 1900
+    assert max(rows) <= 0.45 * 1900
+    assert _doc_ids(spark, out) == _doc_ids(spark, clean_job[0])
 
 
 def test_desensitize_arrow_md5_all_occurrences(spark):

@@ -40,9 +40,34 @@ def test_aggregate_path_has_no_prewrite_shuffle(spark, sf_dir):
     assert "REPARTITION_BY_COL" not in plan
 
 
-def test_routed_write_path_has_explicit_repartition(spark, sf_dir):
-    plan = _plan(flagship.routed(spark, sf_dir))
-    assert "hashpartitioning(source" in plan or "REPARTITION_BY_COL" in plan
+def _write_plan(spark, out_dir: str) -> str:
+    """The physical plan of the last SQL execution that wrote ``out_dir``,
+    from the status store (kept with the UI off)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+    return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p and out_dir in p][-1]
+
+
+def test_write_rebalances_by_sink_and_stamps_lineage(spark, sf_dir, tmp_path):
+    """The routed frame has no exchange of its own; the deployment write has
+    exactly one above the broadcast join, the AQE rebalance on ``sink``, and
+    every written row carries a distinct ``__pack_id__``."""
+    from loongcollector_spark.aggregate import PACK_ID_COL
+    from loongcollector_spark.plans.checkpoint import Manifest, read_all_units, resumable_write
+
+    routed = flagship.routed(spark, sf_dir)
+    assert "REPARTITION_BY_COL" not in _plan(routed)
+    out = str(tmp_path / "sinks")
+    sinks = ["sink_a", "sink_b", "sink_default"]
+    assert resumable_write(routed, sinks, out, Manifest(f"{out}/_manifest")) == sinks
+    plan = _write_plan(spark, out)
+    tree = plan.split("== Initial Plan ==")[1].split("BroadcastHashJoin")[0]
+    assert tree.count("Exchange") == 1
+    assert re.search(r"hashpartitioning\(sink#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL", plan)
+    assert "hashpartitioning(source" not in plan
+    ids = [r[PACK_ID_COL] for r in read_all_units(spark, out).select(PACK_ID_COL).collect()]
+    assert len(ids) == 1900 and None not in ids
+    assert len(set(ids)) == len(ids)
 
 
 def test_scan_prunes_columns(spark, sf_dir):

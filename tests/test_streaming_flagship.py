@@ -21,7 +21,7 @@ def test_streaming_pipeline_matches_batch(spark, sf_dir, tmp_path):
     got = []
 
     def process(bdf, epoch_id):
-        routed = flagship.routed_from(spark, bdf, partition=False)
+        routed = flagship.routed_from(spark, bdf)
         got.extend((r["sink"], r["doc_id"]) for r in routed.select("sink", "doc_id").collect())
 
     stream = read_stream(spark, inp, schema, max_files_per_trigger=2)

@@ -10,8 +10,9 @@ Usage (local sandbox — swap --master for yarn/k8s on a real cluster):
         --sf-dir /root/testdata/sf0.001 --out /tmp/lc_out
 
 The job: read the pre-tokenized sequences → parse→enrich→route → ONE
-partitioned parquet write of every sink without a done-marker (checkpoint
-manifest under <out>/_manifest) → print per-sink aggregates as one JSON line.
+partitioned parquet write, rebalanced by sink, of every sink without a
+done-marker (checkpoint manifest under <out>/_manifest) → print per-sink
+aggregates as one JSON line.
 The write is the job's only Spark action: the aggregates are the counts each
 sink's marker stored from that action, so scan→decode→parse→route runs once
 whatever the number of sinks. Re-running with the same --out resumes:
@@ -25,7 +26,7 @@ import argparse
 import json
 
 
-def run(spark, sf_dir: str, out: str, salt_buckets: int = 0) -> dict:
+def run(spark, sf_dir: str, out: str) -> dict:
     """The job's result: the sinks written and skipped this run, every
     sink's aggregates from its marker, and ``observed``, the counters of the
     sinks this run wrote (``None`` when it wrote nothing)."""
@@ -39,8 +40,7 @@ def run(spark, sf_dir: str, out: str, salt_buckets: int = 0) -> dict:
     # building the plan reads parquet footers, itself a Spark job: skip it
     # when every sink is already committed
     if not manifest.done_units() >= set(sinks):
-        routed = flagship.routed(spark, sf_dir, salt_buckets=salt_buckets)
-        written = resumable_write(routed, sinks, out, manifest)
+        written = resumable_write(flagship.routed(spark, sf_dir), sinks, out, manifest)
     aggs = manifest.counts(sinks)
     return {
         "written_sinks": written,
@@ -54,7 +54,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--salt-buckets", type=int, default=0)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -65,7 +64,7 @@ def main() -> None:
     from loongcollector_spark.session import configure_existing
 
     configure_existing(spark)
-    print(json.dumps(run(spark, args.sf_dir, args.out, args.salt_buckets)))
+    print(json.dumps(run(spark, args.sf_dir, args.out)))
     spark.stop()
 
 
