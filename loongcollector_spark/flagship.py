@@ -2,7 +2,8 @@
 
 read sequences (doc_id, tokens, n_tok, source)
   → one Arrow decode tokens→content over the rows of the three formats
-    (tokens.decode_tokens_arrow)
+    (tokens.decode_tokens_arrow: a mapInArrow over the token list buffers,
+    the job's only Python stage, no pandas and no per-row Python)
   → one CASE on ``source`` over the existing parsers (nginx regex / app-json /
     tab-delimited), discard-unmatch semantics; any other source is filtered
     out before the decode

@@ -1,24 +1,28 @@
 """Token codec for the pre-tokenized sequences table (BASELINE.json input_hint:
 ``(doc_id string, tokens array<int>, n_tok int, source string)``).
 
-Vocabulary: identity codepoint encoding — ``tokens[i] = ord(line[i])`` (ASCII
-synthetic lines), exactly reversible, so the per-row invariant "token-array
-equality" reduces to string equality after decode→process→re-encode.
+Vocabulary: identity codepoint encoding — ``tokens[i] = ord(line[i])``,
+exactly reversible for every Unicode scalar value, so the per-row invariant
+"token-array equality" reduces to string equality after
+decode→process→re-encode.
 
-Two decode paths:
-- **Arrow path** (``decode_tokens_arrow``): numpy-vectorized decode inside
-  ``mapInPandas`` — the flagship's decode, one stage for every source
-  (north_star: "vectorized pandas/Arrow UDF stage ... no per-row Python").
-- **JVM path** (``decode_tokens``, Catalyst/codegen, no Python): ``transform
-  + char + concat_ws`` — the oracle decode of the oracle-checked queries in
-  queries.py, a plain expression DuckDB can reproduce.
+Two decode paths, equal on every input (a null token array decodes to ``''``,
+a null token is skipped):
+- **Arrow path** (``decode_tokens_arrow``): ``mapInArrow`` over the list
+  buffers, whole-batch Arrow/numpy work (north_star: "vectorized
+  pandas/Arrow UDF stage ... no per-row Python") — the flagship's decode.
+- **JVM path** (``decode_tokens``, Catalyst/codegen, no Python): 8 hex digits
+  per code point, ``unhex``, ``decode(.., 'UTF-32')`` — exact for all code
+  points; the oracle decode of the oracle-checked queries in queries.py.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -33,43 +37,44 @@ def encode_line(col) -> Column:
 
 
 def decode_tokens(col) -> Column:
-    """array<int> codepoints -> line string (JVM-side, whole-stage codegen)."""
+    """array<int> codepoints -> line string (JVM-side, whole-stage codegen).
+
+    The leading big-endian BOM fixes the byte order, so a U+FEFF token is
+    kept as text rather than read as a BOM."""
     c = col if isinstance(col, Column) else F.col(col)
-    return F.concat_ws("", F.transform(c, lambda t: F.char(t)))
+    hexed = F.array_join(F.transform(c, lambda t: F.lpad(F.hex(t), 8, "0")), "")
+    utf32 = F.unhex(F.concat(F.lit("0000FEFF"), hexed))
+    return F.coalesce(F.decode(utf32, "UTF-32"), F.lit(""))
 
 
-def _decode_np(tokens) -> str:
-    # tokens is a numpy array of int32/int64 codepoints (ASCII subset)
-    import numpy as np
-
-    arr = np.asarray(tokens, dtype=np.uint32)
-    if arr.size == 0:
-        return ""
-    if (arr < 128).all():
-        return arr.astype(np.uint8).tobytes().decode("ascii")
-    return "".join(map(chr, arr.tolist()))
-
-
-def _decode_batch(token_lists) -> list[str]:
-    """Whole-batch decode: concatenate every row's codepoints into ONE buffer,
-    one ndarray→bytes conversion, then slice per row by offsets. The only
-    per-row Python is the bytes slice + decode (no per-token work)."""
-    import numpy as np
-
-    if len(token_lists) == 0:
-        return []
-    lens = np.fromiter((len(t) for t in token_lists), dtype=np.int64, count=len(token_lists))
-    if lens.sum() == 0:
-        return [""] * len(token_lists)
-    flat = np.concatenate([np.asarray(t, dtype=np.uint32) for t in token_lists])
-    if (flat < 128).all():
-        buf = flat.astype(np.uint8).tobytes()
-        offs = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        return [
-            buf[offs[i] : offs[i + 1]].decode("ascii") for i in range(len(lens))
-        ]
-    return [_decode_np(t) for t in token_lists]
+def decode_list_array(tokens: pa.Array) -> pa.StringArray:
+    """``list<int>`` of code points -> one string per row, no loop over rows.
+    An all-ASCII batch reuses the list offsets as string offsets over one
+    ``uint8`` cast of the values; any other takes one UTF-32→UTF-8 transcode.
+    Offsets are rebuilt from the lengths, so a sliced array works."""
+    lens = pc.fill_null(pc.list_value_length(tokens), 0).to_numpy()
+    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    values = pc.list_flatten(tokens)
+    if values.null_count:
+        kept = np.zeros(len(values) + 1, dtype=np.int64)
+        np.cumsum(values.is_valid().to_numpy(zero_copy_only=False), out=kept[1:])
+        offsets = kept[offsets]
+        values = values.drop_null()
+    v = values.to_numpy()
+    if not len(v) or (v.min() >= 0 and v.max() < 0x80):
+        data = v.astype(np.uint8)
+    else:
+        data = np.frombuffer(
+            v.astype("<u4").tobytes().decode("utf-32-le").encode("utf-8"), np.uint8
+        )
+        width = 1 + (v >= 0x80) + (v >= 0x800) + (v >= 0x10000)
+        byte_offsets = np.zeros(len(v) + 1, dtype=np.int64)
+        np.cumsum(width, out=byte_offsets[1:])
+        offsets = byte_offsets[offsets]
+    return pa.StringArray.from_buffers(
+        len(lens), pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)
+    )
 
 
 def decode_tokens_arrow(
@@ -80,8 +85,8 @@ def decode_tokens_arrow(
 ) -> DataFrame:
     """Arrow-batched decode: adds ``out_col`` string column from ``tokens_col``.
 
-    One Python worker pass over Arrow batches; whole-batch numpy decode (one
-    buffer concat + per-row slice — no per-token Python).
+    One ``mapInArrow`` pass; each batch is decoded by ``decode_list_array``
+    and every other column passes through as the batch's own Arrow array.
 
     ``drop_tokens=True`` excludes the token array from the OUTPUT schema —
     a ``.drop`` after the stage cannot be pushed into it, so without this the
@@ -89,24 +94,16 @@ def decode_tokens_arrow(
     discard them one projection later.
 
     NOTE: filters on other columns (e.g. ``source``) cannot be pushed through
-    mapInPandas by Catalyst — apply them BEFORE calling this."""
+    mapInArrow by Catalyst — apply them BEFORE calling this."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    fields = list(df.columns)
-    out_names = [c for c in fields if not (drop_tokens and c == tokens_col)]
-    out_fields = [
-        f for f in df.schema.fields if not (drop_tokens and f.name == tokens_col)
-    ]
-    if out_col not in fields:
-        out_fields.append(StructField(out_col, StringType()))
-        emit = [*out_names, out_col]
-    else:
-        emit = out_names
-    schema = StructType(out_fields)
+    keep = [f for f in df.schema.fields if not (drop_tokens and f.name == tokens_col)]
+    schema = StructType([*keep, StructField(out_col, StringType())])
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = _decode_batch(pdf[tokens_col].values)
-            yield pdf[emit]
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            content = decode_list_array(batch.column(tokens_col))
+            cols = [batch.column(f.name) for f in keep]
+            yield pa.RecordBatch.from_arrays([*cols, content], names=schema.names)
 
-    return df.mapInPandas(mapper, schema=schema)
+    return df.mapInArrow(mapper, schema=schema)

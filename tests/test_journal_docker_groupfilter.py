@@ -3,6 +3,7 @@ journal field conversion — semantics hand-derived from the Go sources
 (no reference tests exist for these plugins)."""
 
 import pyspark.sql.functions as F
+from test_plan_quality import python_nodes
 
 from loongcollector_spark.operators.base import FIELDS, fget
 from loongcollector_spark.operators.filters import GroupInfoFilter
@@ -120,4 +121,4 @@ def test_group_info_filter_is_pushdown_filter(spark):
         .toString()
     )
     assert "Exchange" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)

@@ -11,6 +11,16 @@ from loongcollector_spark import flagship
 from loongcollector_spark.synth import sequences_df
 
 
+# plan-node names of a Python stage (the set perfbench/eventlog.PYTHON_NODES reads)
+PYTHON_NODES = ("MapInPandas", "MapInArrow", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def python_nodes(plan: str) -> list[str]:
+    """Every Python-stage node name in a plan's text, in order (a formatted
+    plan names each node twice: in its tree and in its details)."""
+    return re.findall(r"\b(?:%s)\b" % "|".join(PYTHON_NODES), plan)
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -126,7 +136,7 @@ def test_prom_relabel_chain_is_narrow(spark):
     plan = _plan(proc.apply(df))
     assert "Exchange" not in plan
     assert "Join" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_geoip_join_is_broadcast(spark):
@@ -168,7 +178,7 @@ def test_otel_metric_rows_are_single_pass(spark):
     df = to_events(spark.createDataFrame([(1, "{}")], ["i", "content"]))
     plan = _plan(OtelMetricParser().apply(df))
     assert "Exchange" not in plan
-    assert "MapInPandas" not in plan
+    assert not python_nodes(plan)
 
 
 def _tree_lines(plan: str):
@@ -252,18 +262,19 @@ def test_fused_pipeline_has_single_scan(spark, sf_dir):
     plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))
     tree = plan.split("\n\n")[0]
     assert tree.count("Scan parquet") == 1, tree
-    assert tree.count("MapInPandas") == 1
+    assert python_nodes(tree) == ["MapInArrow"], tree
     assert "BroadcastHashJoin" in tree and "SortMergeJoin" not in tree
 
 
 def test_source_filter_below_python_stage(spark, sf_dir):
-    """The filter to the parsed sources must sit BELOW MapInPandas (filters
-    don't push through a Python stage on their own), so rows no parser takes
-    are never decoded."""
+    """The filter to the parsed sources must sit BELOW the one Python stage,
+    MapInArrow (filters don't push through a Python stage on their own), so
+    rows no parser takes are never decoded."""
     plan = _plan(flagship.parsed_events_from(sequences_df(spark, sf_dir)))
     tree, details = plan.split("\n\n", 1)
+    assert python_nodes(tree) == ["MapInArrow"], tree
     lines = tree.splitlines()
-    py = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    py = next(i for i, line in enumerate(lines) if python_nodes(line))
     below = [line for line in lines[py + 1 :] if "Filter" in line]
     assert below, tree
     node = re.search(r"Filter \((\d+)\)", below[0]).group(1)
@@ -311,7 +322,7 @@ def test_syslog_parse_is_narrow(spark, sf_dir):
     plan = _plan(q_parse_syslog(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Join" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_influx_decode_single_generate(spark, sf_dir):
@@ -321,7 +332,7 @@ def test_influx_decode_single_generate(spark, sf_dir):
 
     plan = _plan(q_influx_decode(spark, sf_dir))
     assert "Exchange" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
     assert plan.count("Generate") <= 2  # one explode node (+header mention)
 
 
@@ -331,7 +342,7 @@ def test_statsd_decode_is_narrow(spark, sf_dir):
     plan = _plan(q_statsd_decode(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Join" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_pyroscope_decode_is_narrow(spark, sf_dir):
@@ -343,7 +354,7 @@ def test_pyroscope_decode_is_narrow(spark, sf_dir):
     plan = _plan(q_pyroscope_decode(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Join" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
     assert plan.count("Generate") <= 2  # one explode node (+header mention)
 
 
@@ -399,7 +410,7 @@ def test_skywalking_segment_plan(spark, sf_dir):
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
     tree = plan.split("\n\n")[0]
     assert sum("Generate" in ln for ln in tree.splitlines()) == 1
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_canal_and_meter_plans_narrow(spark, sf_dir):
@@ -413,7 +424,7 @@ def test_canal_and_meter_plans_narrow(spark, sf_dir):
         assert sum("Generate" in ln for ln in tree.splitlines()) == 1, q
         assert "Exchange" not in tree, q
         assert "Join" not in tree, q
-        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, q
+        assert not python_nodes(plan), q
 
 
 def test_k8smeta_plans_narrow(spark, sf_dir):
@@ -431,7 +442,7 @@ def test_k8smeta_plans_narrow(spark, sf_dir):
         tree = plan.split("\n\n")[0]
         assert "Exchange" not in tree, q
         assert "Join" not in tree, q
-        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, q
+        assert not python_nodes(plan), q
     # workload entities: single-pass CASE projection, no Generate at all
     wplan = _plan(q_k8s_workload_entities(spark, sf_dir)).split("\n\n")[0]
     assert "Generate" not in wplan
@@ -448,7 +459,7 @@ def test_skywalking_v2_plan(spark, sf_dir):
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     tree = plan.split("\n\n")[0]
     assert sum("Generate" in ln for ln in tree.splitlines()) == 1
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_hostmeta_plan_is_pure_scan(spark, sf_dir):
@@ -467,7 +478,7 @@ def test_hostmeta_plan_is_pure_scan(spark, sf_dir):
     tree = plan.split("\n\n")[0]
     assert "Exchange" not in tree and "Join" not in tree
     assert "Generate" not in tree
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_line_dedup_plan(spark, sf_dir):
@@ -480,7 +491,7 @@ def test_line_dedup_plan(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_semdedup_pairwise_is_cell_scoped(spark, sf_dir):
@@ -490,7 +501,7 @@ def test_semdedup_pairwise_is_cell_scoped(spark, sf_dir):
 
     plan = _plan(q_semdedup(spark, sf_dir))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)
 
 
 def test_r4b_decoder_plans_narrow(spark, sf_dir):
@@ -511,14 +522,15 @@ def test_r4b_decoder_plans_narrow(spark, sf_dir):
         plan = _plan(q(spark, sf_dir))
         assert "Exchange" not in plan
         assert "Join" not in plan
-        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+        assert not python_nodes(plan)
 
-    for q in (q_pprof_profile, q_jfr_profile):
+    # one decode pass (tree node + its detail header = 2 mentions); the pprof
+    # fixture builds its payloads in one pandas UDF (ArrowEvalPython)
+    for q, fixture in ((q_pprof_profile, ["ArrowEvalPython"] * 2), (q_jfr_profile, [])):
         plan = _plan(q(spark, sf_dir))
         assert "Exchange" not in plan
         assert "Join" not in plan
-        # one decode pass (tree node + its detail header = 2 mentions)
-        assert plan.count("MapInPandas") <= 2
+        assert sorted(python_nodes(plan)) == sorted(["MapInPandas"] * 2 + fixture)
 
     plan = _plan(q_flusher_es_bulk(spark, sf_dir))
     # one shuffle node (tree + detail header = 2 mentions), partial-agg pair
@@ -556,7 +568,7 @@ def test_r4c_host_collector_plans(spark, sf_dir):
         plan = _plan(q(spark, sf_dir))
         assert "Exchange" not in plan
         assert "Join" not in plan
-        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+        assert not python_nodes(plan)
 
 
 def test_ivf_probe_is_broadcast_cell_join(spark):
@@ -591,4 +603,4 @@ def test_journal_conversion_is_narrow(spark):
         JournalEntryLogs(parse_priority=True, parse_syslog_facility=True).apply(df)
     )
     assert "Exchange" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not python_nodes(plan)

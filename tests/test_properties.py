@@ -4,30 +4,42 @@ SparkSession needed, so these run in milliseconds."""
 import hashlib
 import re
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from loongcollector_spark.dataops.similarity import hyperplanes
 from loongcollector_spark.operators.parse import expand_grok
-from loongcollector_spark.tokens import _decode_batch, _decode_np
+from loongcollector_spark.tokens import decode_list_array
 
 ascii_text = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=200
 )
+unicode_text = st.text(alphabet=st.characters(exclude_categories=("Cs",)), max_size=50)
+# a whole batch of ASCII lines takes the offsets-reuse path, any other the UTF-8 path
+token_lists = st.one_of(st.lists(ascii_text, max_size=30), st.lists(unicode_text, max_size=30)).map(
+    lambda lines: [[ord(c) for c in line] for line in lines]
+)
 
 
-@given(st.lists(ascii_text, max_size=30))
-@settings(max_examples=200)
-def test_decode_batch_matches_per_row(lines):
-    token_lists = [[ord(c) for c in line] for line in lines]
-    assert _decode_batch(token_lists) == [_decode_np(t) for t in token_lists]
+def _per_row(tokens) -> list[str]:
+    return ["".join(map(chr, t)) for t in tokens]
 
 
-@given(st.text(alphabet=st.characters(min_codepoint=1, max_codepoint=0x10FFFF,
-                                      exclude_categories=("Cs",)), max_size=50))
-@settings(max_examples=100)
-def test_decode_np_roundtrips_any_unicode(s):
-    assert _decode_np([ord(c) for c in s]) == s
+@given(token_lists)
+@settings(max_examples=200, deadline=None)
+def test_decode_batch_matches_per_row(tokens):
+    arr = pa.array(tokens, pa.list_(pa.int32()))
+    assert decode_list_array(arr).to_pylist() == _per_row(tokens)
+
+
+@given(token_lists, st.data())
+@settings(max_examples=200, deadline=None)
+def test_decode_batch_matches_per_row_on_slices(tokens, data):
+    offset = data.draw(st.integers(0, len(tokens)))
+    length = data.draw(st.integers(0, len(tokens) - offset))
+    arr = pa.array(tokens, pa.list_(pa.int32())).slice(offset, length)
+    assert decode_list_array(arr).to_pylist() == _per_row(tokens[offset : offset + length])
 
 
 @given(st.integers(1, 16), st.integers(1, 8))

@@ -32,8 +32,8 @@ def main() -> None:
         (
             "pipeline_e2e — parse→enrich→route→aggregate",
             flagship.pipeline_aggregates(spark, SF),
-            "Exactly ONE parquet scan and ONE Python decode stage (MapInPandas) "
-            "for all three formats; the filter to the parsed sources sits "
+            "Exactly ONE parquet scan and ONE Python node, the Arrow decode "
+            "(MapInArrow), for all three formats; the filter to the parsed sources sits "
             "below it; per-source parse is one CASE-dispatched "
             "projection; BroadcastHashJoin for the lookup (never "
             "SortMergeJoin); explode fan-out (no N-scan recompute); partial "
