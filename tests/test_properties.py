@@ -42,6 +42,15 @@ def test_decode_batch_matches_per_row_on_slices(tokens, data):
     assert decode_list_array(arr).to_pylist() == _per_row(tokens[offset : offset + length])
 
 
+@given(st.text(alphabet=st.characters(min_codepoint=1, max_codepoint=0x10FFFF,
+                                      exclude_categories=("Cs",)), max_size=50))
+@settings(max_examples=100, deadline=None)
+def test_decode_np_roundtrips_any_unicode(s):
+    # one line on its own: the batch kernel round-trips every non-surrogate code point
+    arr = pa.array([[ord(c) for c in s]], pa.list_(pa.int32()))
+    assert decode_list_array(arr).to_pylist() == [s]
+
+
 @given(st.integers(1, 16), st.integers(1, 8))
 @settings(max_examples=50)
 def test_hyperplanes_shape_and_determinism(dim, n):
