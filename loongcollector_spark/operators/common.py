@@ -124,6 +124,14 @@ def flet(col: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
+def full_match(rx: str) -> str:
+    """``rx`` anchored to the whole string for java.util.regex. The end anchor
+    is ``\\z``: Java's ``$`` also matches before a final line terminator, so
+    ``^(?:\\w+)$`` would accept ``"abc\\n"`` (boost::regex_match does not).
+    The group wrapper leaves capture indices unchanged."""
+    return f"^(?:{rx})\\z"
+
+
 def parsed_map(pairs: Mapping[str, Column]) -> Column:
     args: list[Column] = []
     for k, v in pairs.items():

@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from .base import FIELDS, Operator, fget
+from .common import full_match
 
 
 @dataclass
@@ -26,10 +27,10 @@ class FilterRegex(Operator):
         cond = F.lit(True)
         for key, rx in self.include.items():
             v = fget(key)
-            cond = cond & v.isNotNull() & v.rlike(f"^(?:{rx})$")
+            cond = cond & v.isNotNull() & v.rlike(full_match(rx))
         for key, rx in self.exclude.items():
             v = fget(key)
-            cond = cond & ~(v.isNotNull() & v.rlike(f"^(?:{rx})$"))
+            cond = cond & ~(v.isNotNull() & v.rlike(full_match(rx)))
         return cond
 
     def apply(self, df: DataFrame) -> DataFrame:
@@ -49,9 +50,9 @@ class FilterKeyRegex(Operator):
         keys = F.map_keys(F.col(FIELDS))
         cond = F.lit(True)
         for rx in self.include:
-            cond = cond & F.exists(keys, lambda k: k.rlike(f"^(?:{rx})$"))
+            cond = cond & F.exists(keys, lambda k: k.rlike(full_match(rx)))
         for rx in self.exclude:
-            cond = cond & ~F.exists(keys, lambda k: k.rlike(f"^(?:{rx})$"))
+            cond = cond & ~F.exists(keys, lambda k: k.rlike(full_match(rx)))
         return df.filter(cond)
 
 
@@ -80,7 +81,7 @@ def compile_condition(node: dict) -> Column:
         raise ValueError(f"unknown operator {op}")
     key, rx = node["key"], node["exp"]
     v = fget(key)
-    return v.isNotNull() & v.rlike(f"^(?:{rx})$")
+    return v.isNotNull() & v.rlike(full_match(rx))
 
 
 @dataclass
@@ -97,7 +98,7 @@ class FilterNative(Operator):
         cond = F.lit(True)
         for key, rx in (self.include or {}).items():
             v = fget(key)
-            cond = cond & v.isNotNull() & v.rlike(f"^(?:{rx})$")
+            cond = cond & v.isNotNull() & v.rlike(full_match(rx))
         return df.filter(cond)
 
 

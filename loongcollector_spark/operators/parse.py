@@ -26,7 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator
-from .common import ParserOptions, flet, parsed_map
+from .common import ParserOptions, flet, full_match, parsed_map
 from .grok_patterns import DEFAULT_PATTERNS, load_pattern_dir
 
 
@@ -67,7 +67,7 @@ class RegexParser(Operator):
         if self.regex == "(.*)" and len(self.keys) == 1:
             # whole-line fast path: constant-fold to a rename
             return src.isNotNull(), parsed_map({self.keys[0]: src})
-        rx = f"^(?:{self.regex})$" if self.full_match else self.regex
+        rx = full_match(self.regex) if self.full_match else self.regex
         success = src.isNotNull() & src.rlike(rx)
         # the single-matcher-pass trick rewrites the WHOLE string through the
         # anchored pattern — valid only in full-match mode (a partial match
@@ -99,7 +99,17 @@ class OverflowTreatment:
 
 @dataclass
 class DelimiterParser(Operator):
-    """Split by multi-char separator; quote-aware single-char path via from_csv.
+    """Split by a (multi-char) separator. With ``quote`` and a single-char
+    separator, fields follow the reference's strict quote FSM
+    (ProcessorParseDelimiterNative.cpp:254-319): a field is either fully
+    quoted (a doubled quote escapes one; the closing quote must be followed
+    by the separator or end-of-line) or holds no quote char at all; any other
+    quote placement fails the parse (TestProcessDoubleQuote golden).
+
+    The FSM's language is regular, so it runs as java.util.regex: one
+    full-match test for success and one ``regexp_extract_all`` for the
+    fields. The field pattern uses possessive quantifiers, so a long quoted
+    field cannot overflow the matcher's stack.
 
     AllowingShortenedFields / OverflowedFieldsTreatment per
     ProcessorParseDelimiterNative.cpp:206-364."""
@@ -110,49 +120,48 @@ class DelimiterParser(Operator):
     allow_shortened: bool = False
     overflow: str = OverflowTreatment.EXTEND
     quote: str | None = None
-    max_overflow_cols: int = 8  # static bound for EXTEND key generation
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
         return self.options.finalize(df, *self.parse(src), src)
 
+    def _fields(self, src: Column) -> tuple[Column, Column]:
+        """(well-formed, field array) of the source value ``src``."""
+        sep = re.escape(self.separator)
+        if not (self.quote and len(self.separator) == 1):
+            return src.isNotNull(), F.split(src, sep, -1)
+        q, qq = re.escape(self.quote), self.quote * 2
+        fld = f"{q}(?:[^{q}]++|{q}{q})*+{q}|[^{q}{sep}]*+"
+        well_formed = src.rlike(full_match(f"(?:{fld})(?:{sep}(?:{fld}))*+"))
+        # prepending the separator makes every field exactly one match,
+        # including an empty first or last field
+        raw = F.regexp_extract_all(
+            F.concat(F.lit(self.separator), src), F.lit(f"{sep}({fld})"), 1
+        )
+        unquoted = F.transform(
+            raw,
+            lambda x: F.when(
+                x.startswith(self.quote),
+                F.replace(x.substr(F.lit(2), F.length(x) - 2), F.lit(qq), F.lit(self.quote)),
+            ).otherwise(x),
+        )
+        return well_formed, unquoted
+
     def parse(self, src: Column) -> tuple[Column, Column]:
         """(success, parsed map) of the split of the source value ``src``."""
         n = len(self.keys)
-        quote_path = bool(self.quote) and len(self.separator) == 1
-        if quote_path:
-            schema = ", ".join(f"`_c{i}` string" for i in range(n + self.max_overflow_cols))
-            arr_struct = F.from_csv(
-                src,
-                F.lit(schema),
-                # escape = quote → doubled-quote escaping (the strict FSM's
-                # rule, ProcessorParseDelimiterNative.cpp:268-275)
-                {"sep": self.separator, "quote": self.quote, "escape": self.quote},
-            )
-            arr = F.array(
-                *[arr_struct.getField(f"_c{i}") for i in range(n + self.max_overflow_cols)]
-            )
-            arr = F.filter(arr, lambda x, i: x.isNotNull() | (i < F.lit(n)))
-
-            # the first n slots are padded with nulls for short rows — the
-            # PARSED column count is the non-null count (contiguous prefix),
-            # otherwise success would hold for any input
-            def _size(a: Column) -> Column:
-                return F.size(F.filter(a, lambda x: x.isNotNull()))
-
-        else:
-            arr = F.split(src, re.escape(self.separator), -1)
-            _size = F.size
-        size = _size(arr)
-        success = src.isNotNull() & (
+        well_formed, arr = self._fields(src)
+        size = F.size(arr)
+        success = well_formed & (
             (size >= n) if not self.allow_shortened else (size >= F.lit(1))
         )
 
         def build_map(a: Column) -> Column:
             """Whole parsed-map construction over the LET-BOUND array `a`
-            (element_at/size references on the raw split/from_csv expression
-            would each re-inline it — one decode per key per row)."""
-            sz = _size(a)
+            (element_at/size references on the raw split expression would
+            each re-inline it — one split per key per row)."""
+            sz = F.size(a)
+            rest = F.slice(a, n + 1, F.greatest(sz - n, F.lit(0)))
             pairs: dict[str, Column] = {}
             for i, k in enumerate(self.keys):
                 v = F.element_at(a, i + 1)
@@ -163,12 +172,7 @@ class DelimiterParser(Operator):
                 # KEEP: the raw remainder — INCLUDING its leading separator —
                 # lands in __column{n}__ (TestExtend 'not Extend' golden:
                 # '123@@456@@1@@2@@3' keys a,b,c → __column3__ = '@@2@@3')
-                tail = F.concat(
-                    F.lit(self.separator),
-                    F.array_join(
-                        F.slice(a, n + 1, F.greatest(sz - n, F.lit(0))), self.separator
-                    ),
-                )
+                tail = F.concat(F.lit(self.separator), F.array_join(rest, self.separator))
                 pairs[f"__column{n}__"] = F.when(sz > n, tail)
             if self.overflow == OverflowTreatment.DISCARD:
                 # ExtractingPartialFields: keys named "_" are skipped
@@ -179,139 +183,44 @@ class DelimiterParser(Operator):
                 # drop NULL-valued entries (short rows / absent KEEP tail)
                 new_map = F.map_filter(new_map, lambda k, v: v.isNotNull())
             if self.overflow == OverflowTreatment.EXTEND:
-                extend_pairs = {
-                    f"__column{n + i}__": F.when(sz >= n + i + 1, F.element_at(a, n + i + 1))
-                    for i in range(self.max_overflow_cols)
-                }
-                ext = F.map_filter(parsed_map(extend_pairs), lambda k, v: v.isNotNull())
+                # every column past the keys → __column{i}__ (0-based i)
+                ext = F.map_from_arrays(
+                    F.transform(
+                        rest,
+                        lambda x, i: F.concat(
+                            F.lit("__column"), (i + n).cast("string"), F.lit("__")
+                        ),
+                    ),
+                    rest,
+                )
                 new_map = F.map_concat(new_map, ext)
             return new_map
 
         return success, flet(arr, build_map)
 
 
-def _split_quoted_strict(line: str, sep: str, quote: str):
-    """The reference's strict quoted-field FSM (single-char separator path,
-    ProcessorParseDelimiterNative.cpp:254-319): a field is either fully
-    quoted (doubled quote escapes; the closing quote must be followed by the
-    separator or end-of-line) or contains NO quote char at all. Any other
-    quote placement fails the whole parse (returns None) — pinned by
-    TestProcessDoubleQuote's mixed pass/fail golden."""
-    if quote not in line:
-        # vectorized common case: a quote-free line is a plain split (the FSM
-        # below walks it to the same answer char-by-char in Python)
-        return line.split(sep)
-    fields = []
-    i, n = 0, len(line)
-    while True:
-        if i < n and line[i] == quote:
-            i += 1
-            buf = []
-            while True:
-                if i >= n:
-                    return None  # unterminated quote
-                c = line[i]
-                if c == quote:
-                    if i + 1 < n and line[i + 1] == quote:
-                        buf.append(quote)
-                        i += 2
-                    else:
-                        i += 1
-                        break
-                else:
-                    buf.append(c)
-                    i += 1
-            if i < n:
-                if line.startswith(sep, i):
-                    fields.append("".join(buf))
-                    i += len(sep)
-                    continue
-                return None  # garbage after closing quote
-            fields.append("".join(buf))
-            return fields
-        j = line.find(sep, i)
-        seg = line[i:] if j < 0 else line[i:j]
-        if quote in seg:
-            return None  # stray quote in unquoted field
-        fields.append(seg)
-        if j < 0:
-            return fields
-        i = j + len(sep)
-
-
-@dataclass
-class DelimiterParserArrow(Operator):
-    """Byte-exact quoted delimiter parse — the strict FSM the native parser
-    uses for single-char separators with Quote
-    (ProcessorParseDelimiterNative.cpp:254-319). The JVM DelimiterParser's
-    from_csv path is lenient about malformed quoting; this Arrow path fails
-    exactly where the reference fails (TestProcessDoubleQuote golden).
-    CommonParserOptions semantics included."""
-
-    separator: str
-    keys: Sequence[str]
-    options: ParserOptions = field(default_factory=ParserOptions)
-    quote: str = "'"
-    allow_shortened: bool = False
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        from .common import RAW_LOG_KEY
-
-        opts = self.options
-        sep, quote, keys = self.separator, self.quote, list(self.keys)
-        allow_short = self.allow_shortened
-        src_key, renamed = opts.source_key, opts.renamed
-        keep_fail, keep_succeed = opts.keep_fail, opts.keep_succeed
-        coping = opts.coping_raw_log
-        schema = df.schema
-
-        def rewrite(d: dict):
-            s = d.get(src_key) if d is not None else None
-            if s is None:
-                return d
-            base = {k: v for k, v in d.items() if k != src_key}
-            cols = _split_quoted_strict(s, sep, quote)
-            ok = cols is not None and (len(cols) >= len(keys) or allow_short)
-            if ok:
-                parsed = {}
-                for i, k in enumerate(keys):
-                    if i < len(cols):
-                        parsed[k] = cols[i]
-                    elif not allow_short:
-                        parsed[k] = ""
-                for i in range(len(keys), len(cols)):
-                    parsed[f"__column{i}__"] = cols[i]
-                out = {**parsed, **base}
-                if keep_succeed:
-                    out.setdefault(renamed, s)
-                return out
-            if keep_fail:
-                out = dict(base)
-                if coping:
-                    out.setdefault(RAW_LOG_KEY, s)
-                out.setdefault(renamed, s)
-                return out
-            return base if base else None
-
-        def mapper(batches):
-            for pdf in batches:
-                newf = [rewrite(x) for x in pdf[FIELDS]]
-                mask = [x is not None for x in newf]
-                pdf[FIELDS] = newf
-                yield pdf[mask]
-
-        return df.mapInPandas(mapper, schema=schema)
-
-
 @dataclass
 class JsonParser(Operator):
     """One-level JSON-object parse; every member stringified exactly like
-    RapidjsonValueToString (ProcessorParseJsonNative.cpp:379-403): scalar →
-    decimal/true/false text, null → "", object/array → compact JSON text.
-    Spark's from_json to map<string,string> matches this except null (NULL →
-    coalesce "")."""
+    RapidjsonValueToString (ProcessorParseJsonNative.cpp:379-403): string →
+    its text, int → decimal digits, double → C++ std::to_string (SIX fixed
+    decimals: 3.14159 → "3.141590"), bool → true/false, null → "",
+    object/array → compact JSON text.
+
+    ``from_json`` to map<string,string> gives all of these (nested text and
+    key order kept) except two: null (NULL → coalesce "") and doubles, which
+    Jackson renders as Java text (3.14159, 100000.0). A value whose text looks
+    like a float is re-rendered with ``%.6f`` when a variant parse of the
+    same object types it as a number, not a string; the variant map is parsed
+    only on rows holding such a value. Known divergences of Java's ``%.6f``
+    from C's (COVERAGE.md): half-way digits round on the shortest decimal
+    (5e-7 → 0.000001, C: 0.000000) and huge values pad the shortest digits
+    with zeros instead of printing the exact binary expansion."""
 
     options: ParserOptions = field(default_factory=ParserOptions)
+
+    # Jackson's text of a JSON double (ints never carry '.' or an exponent)
+    _FLOAT_TEXT = r"^-?\d+(?:\.\d+(?:[eE][+-]?\d+)?|[eE][+-]?\d+)\z"
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
@@ -322,86 +231,24 @@ class JsonParser(Operator):
         m = F.from_json(src, "map<string,string>")
         # non-object JSON (arrays/scalars) and malformed input both yield NULL
         success = src.isNotNull() & m.isNotNull()
+
+        def render(mm: Column) -> Column:
+            floaty = F.exists(F.map_values(mm), lambda v: v.rlike(self._FLOAT_TEXT))
+            typed = F.when(floaty, F.from_json(src, "map<string,variant>"))
+            return flet(
+                typed,
+                lambda vm: F.transform_values(
+                    mm,
+                    lambda k, v: F.when(
+                        v.rlike(self._FLOAT_TEXT)
+                        & F.schema_of_variant(F.element_at(vm, k)).rlike("^(DECIMAL|DOUBLE)"),
+                        F.format_string("%.6f", v.cast("double")),
+                    ).otherwise(F.coalesce(v, F.lit(""))),
+                ),
+            )
+
         # let-bound: one from_json for the value map (success costs a second)
-        new_map = flet(
-            m,
-            lambda mm: F.transform_values(
-                F.coalesce(mm, F.expr("map()")), lambda k, v: F.coalesce(v, F.lit(""))
-            ),
-        )
-        return success, new_map
-
-
-@dataclass
-class JsonParserArrow(Operator):
-    """Exact-stringification JSON parse — full RapidjsonValueToString parity
-    (ProcessorParseJsonNative.cpp:379-403): doubles format like C++
-    std::to_string (SIX fixed decimals: 3.14159 → "3.141590"), ints plain,
-    bool → "true"/"false", null → "", nested → compact JSON. The JVM
-    ``JsonParser`` (from_json to map<string,string>) matches everything
-    EXCEPT the double formatting (Jackson emits canonical "3.14159") — use
-    this Arrow path when byte-exact double parity matters."""
-
-    options: ParserOptions = field(default_factory=ParserOptions)
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        import json
-
-        from .base import FIELDS as _FIELDS
-
-        opts = self.options
-        src_key = opts.source_key
-        schema = df.schema
-
-        def stringify(v) -> str:
-            if v is None:
-                return ""
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            if isinstance(v, float):
-                return f"{v:.6f}"  # C++ std::to_string(double)
-            if isinstance(v, (dict, list)):
-                return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
-            return str(v)
-
-        keep_fail = opts.keep_fail
-        keep_succeed = opts.keep_succeed
-        renamed = opts.renamed
-        raw_key = "__raw_log__"
-        coping = opts.coping_raw_log
-
-        def rewrite(d: dict):
-            s = d.get(src_key) if d is not None else None
-            if s is None:
-                return d
-            base = {k: v for k, v in d.items() if k != src_key}
-            try:
-                obj = json.loads(s)
-                ok = isinstance(obj, dict)
-            except ValueError:
-                ok = False
-            if ok:
-                parsed = {k: stringify(v) for k, v in obj.items()}
-                out = {**parsed, **base}  # existing keys never overwritten
-                if keep_succeed:
-                    out.setdefault(renamed, s)
-                return out
-            if keep_fail:
-                out = dict(base)
-                if coping:
-                    out.setdefault(raw_key, s)
-                out.setdefault(renamed, s)
-                return out
-            return base if base else None  # ShouldEraseEvent
-
-        def mapper(batches):
-            for pdf in batches:
-                newf = [rewrite(d) for d in pdf[_FIELDS]]
-                mask = [f is not None for f in newf]
-                pdf[_FIELDS] = newf
-                yield pdf[mask]
-
-        return df.mapInPandas(mapper, schema=schema)
+        return success, flet(F.coalesce(m, F.expr("map()")), render)
 
 
 _STRPTIME_FRACTION = "[SSSSSSSSS][SSSSSSSS][SSSSSSS][SSSSSS][SSSSS][SSSS][SSS][SS][S]"
@@ -588,7 +435,7 @@ class GrokParser(Operator):
         new_map = F.expr("map()")
         sep = "\x01"
         for rx, groups in reversed(expanded):
-            jrx = f"^(?:{rx})$"
+            jrx = full_match(rx)
             ok = src.isNotNull() & src.rlike(jrx)
             # single matcher pass per pattern (same trick as RegexParser):
             # emit all semantic groups joined by \x01, then split
@@ -672,7 +519,7 @@ class ApsaraParser(Operator):
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
-        rx = f"^(?:{self._RX})$"
+        rx = full_match(self._RX)
         ts_str = F.regexp_extract(src, rx, 1)
         # try_: an in-grammar but invalid date (month 13, Feb 30) fails the
         # line like the reference's strptime error, not the job
@@ -763,7 +610,7 @@ class CsvParser(Operator):
         lead = r"[ \t]*" if self.trim_leading_space else ""
         quoted_rx = f"{q}[^{q}]*(?:{q}{q}[^{q}]*)*{q}"
         fld = f"(?:{lead}{quoted_rx}|[^{q}{s}]*)"
-        success = src.isNotNull() & src.rlike(f"^{fld}(?:{s}{fld})*$")
+        success = src.isNotNull() & src.rlike(full_match(f"{fld}(?:{s}{fld})*"))
 
         # true decoded field count = 1 + separators outside quoted fields
         # (empty input still decodes to one empty field, processor_csv.go:81-85)
@@ -928,7 +775,7 @@ class ContainerLogParser(Operator):
             # '... stdout P' (no trailing space) parses as content "P"
             # (ProcessorParseContainerLogNativeUnittest TestContainerdLog).
             # A line without the space after stream fails.
-            rx_basic = f"^(?:{self._RX_NOFLAG})$"
+            rx_basic = full_match(self._RX_NOFLAG)
             success = src.isNotNull() & src.rlike(rx_basic)
             # single matcher pass (time, stream, rest), let-bound; the flag
             # variant is recovered from `rest` ("P content"/"F content")

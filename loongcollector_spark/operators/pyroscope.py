@@ -44,7 +44,7 @@ Semantics kept (file:line cites into the reference):
   public algorithm, seed 42 instead of Go's 0 (the builtin pins its seed), so
   IDs are stable-but-not-byte-equal. ``exact_stack_id=True`` switches to an
   Arrow-batched Python xxh64(seed=0) — byte-equal to the Go agent, Python in
-  the row path (parity tier, same policy as plans/compiler.ArrowParity).
+  the row path (a parity tier: Spark's builtin cannot take seed 0).
 
 Documented divergences (all malformed-input, "fail the line, never the job"):
 - Go int64 multiply overflow wraps silently; here the line is dropped
@@ -377,7 +377,7 @@ class PyroscopeGroupsDecoder(Operator):
 def _xxh64_go_udf(col: Column) -> Column:
     """Arrow-batched parity tier: canonical xxHash64 seed 0 (= cespare/xxhash,
     raw/profile.go:95) of the UTF-8 stacktrace bytes, hex lowercase. Python in
-    the row path — parity/golden use only (same policy as ArrowParity)."""
+    the row path — parity/golden use only."""
     import pandas as pd  # noqa: F811 — re-import for the executor pickle
     from pyspark.sql.functions import pandas_udf
 

@@ -34,7 +34,7 @@ from typing import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from .common import flet
+from .common import flet, full_match
 
 EXPORTED_PREFIX = "exported_"  # prometheus::EXPORTED_PREFIX
 
@@ -95,7 +95,7 @@ class RelabelConfig:
         )
 
     def _full(self) -> str:
-        return f"^(?:{self.regex})$"
+        return full_match(self.regex)
 
     def _first_only_replace(self, val: Column, template: str) -> Column:
         """boost::regex_replace(val, rx, template, format_first_only):

@@ -4,6 +4,7 @@ over the ``fields`` map. All run JVM-side under whole-stage codegen.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Mapping, Sequence
 
@@ -11,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator, fget, fhas, fremove
-from .common import parsed_map
+from .common import flet, parsed_map
 
 
 @dataclass
@@ -151,8 +152,15 @@ class StringReplace(Operator):
 class Desensitize(Operator):
     """processor_desensitize_native (core/plugin/processor/ProcessorDesensitizeNative.cpp:28-255):
     regex = "(" + prefix_pattern + ")" + content_pattern; CONST replaces the
-    matched content with ``$1<replacing_string>``; MD5 replaces it with the MD5
-    hex of the matched content. ``replacing_all`` toggles global replace."""
+    matched content with ``$1<replacing_string>``; MD5 replaces it with the
+    UPPERCASE MD5 hex of the matched content (sdk/Common.cpp ToMd5 golden:
+    TestCastSensWordMD5 expects 91F6CFCF...). ``replacing_all`` masks every
+    match, otherwise only the first.
+
+    regexp_replace cannot call md5 per match, so the text is rebuilt from its
+    pieces: the unmatched stretches (``split``), each full match and its
+    prefix group (``regexp_extract_all``), one masked match after each
+    stretch."""
 
     source_key: str
     method: str = "const"  # 'const' | 'md5'
@@ -162,107 +170,43 @@ class Desensitize(Operator):
     replacing_all: bool = True
 
     def apply(self, df: DataFrame) -> DataFrame:
+        if self.method not in ("const", "md5"):
+            raise ValueError(f"unknown method {self.method}")
         src = fget(self.source_key)
         rx = f"({self.prefix_pattern})(?:{self.content_pattern})"
-        if self.method == "const":
-            repl = "$1" + self.replacing_string.replace("\\", "\\\\").replace("$", "\\$")
-            out = F.regexp_replace(src, rx, repl)
-            if not self.replacing_all:
-                # first occurrence only: splice around the first full match
-                full = F.regexp_extract(src, rx, 0)
-                pre = F.regexp_extract(src, rx, 1)
-                start = F.instr(src, full)
-                out = F.when(full == "", src).otherwise(
-                    F.concat(
-                        src.substr(F.lit(1), start - 1),
-                        pre,
-                        F.lit(self.replacing_string),
-                        src.substr(start + F.length(full), F.length(src)),
-                    )
-                )
-        elif self.method == "md5":
-            # regexp_replace can't call md5 per match → splice the first match
-            # (ProcessorDesensitizeNative.cpp:232 replaces the matched span with
-            # the MD5 hex of the matched content — UPPERCASE, sdk/Common.cpp
-            # ToMd5 golden: TestCastSensWordMD5 expects 91F6CFCF...)
-            full = F.regexp_extract(src, rx, 0)
-            pre = F.regexp_extract(src, rx, 1)
-            content = full.substr(F.length(pre) + 1, F.length(full))
-            start = F.instr(src, full)
-            out = F.when(full == "", src).otherwise(
-                F.concat(
-                    src.substr(F.lit(1), start - 1),
-                    pre,
-                    F.upper(F.md5(content)),
-                    src.substr(start + F.length(full), F.length(src)),
-                )
-            )
-        else:
-            raise ValueError(f"unknown method {self.method}")
+
+        def mask(full: Column, pre: Column) -> Column:
+            if self.method == "md5":
+                content = full.substr(F.length(pre) + 1, F.length(full))
+                return F.concat(pre, F.upper(F.md5(content)))
+            return F.concat(pre, F.lit(self.replacing_string))
+
+        def rebuild(b: Column) -> Column:
+            fulls, pres = b.getField("full"), b.getField("pre")
+
+            def piece(p: Column, i: Column) -> Column:
+                full, pre = F.get(fulls, i), F.get(pres, i)
+                masked = mask(full, pre)
+                if not self.replacing_all:
+                    masked = F.when(i == 0, masked).otherwise(full)
+                # the last stretch has no match after it (get → NULL)
+                return F.concat(p, F.coalesce(masked, F.lit("")))
+
+            return F.array_join(F.transform(b.getField("pieces"), piece), "")
+
+        # let-bound: the match arrays are read once per stretch
+        bound = F.struct(
+            F.split(src, rx, -1).alias("pieces"),
+            F.regexp_extract_all(src, F.lit(rx), 0).alias("full"),
+            F.regexp_extract_all(src, F.lit(rx), 1).alias("pre"),
+        )
         merged = F.map_concat(
             F.col(FIELDS),
-            F.when(src.isNotNull(), F.create_map(F.lit(self.source_key), out)).otherwise(
-                F.expr("map()")
-            ),
+            F.when(
+                src.isNotNull(), F.create_map(F.lit(self.source_key), flet(bound, rebuild))
+            ).otherwise(F.expr("map()")),
         )
         return df.withColumn(FIELDS, merged)
-
-
-@dataclass
-class DesensitizeArrow(Operator):
-    """Arrow-batched desensitize — the general path for MD5 masking of EVERY
-    occurrence (ProcessorDesensitizeNative.cpp:202-232 with ReplacingAll),
-    which a single Column expression can't do (regexp_replace can't call md5
-    per match). One mapInPandas pass; the regex is compiled once per executor
-    (module-level cache ≙ the reference's per-thread compiled regex,
-    ProcessorParseRegexNative.cpp:64-67)."""
-
-    source_key: str
-    method: str = "md5"  # 'const' | 'md5'
-    content_pattern: str = ""
-    prefix_pattern: str = ""
-    replacing_string: str = "********"
-    replacing_all: bool = True
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        import re as _re
-
-        src_key = self.source_key
-        rx = f"({self.prefix_pattern})(?:{self.content_pattern})"
-        method = self.method
-        const = self.replacing_string
-        count = 0 if self.replacing_all else 1
-        schema = df.schema
-
-        def mapper(batches):
-            import hashlib
-
-            pat = _re.compile(rx)
-
-            def repl(m: "_re.Match") -> str:
-                pre = m.group(1)
-                content = m.group(0)[len(pre):]
-                if method == "md5":
-                    # reference emits UPPERCASE md5 hex (TestCastSensWordMD5)
-                    return pre + hashlib.md5(content.encode()).hexdigest().upper()
-                return pre + const
-
-            for pdf in batches:
-                # rebuild the dict only for rows the regex actually touches
-                # (pat.search is a cheap pre-screen; most rows miss)
-                pdf[FIELDS] = [
-                    (
-                        {**d, src_key: pat.sub(repl, d[src_key], count=count)}
-                        if d is not None
-                        and d.get(src_key) is not None
-                        and pat.search(d[src_key])
-                        else d
-                    )
-                    for d in pdf[FIELDS]
-                ]
-                yield pdf
-
-        return df.mapInPandas(mapper, schema=schema)
 
 
 @dataclass
@@ -342,21 +286,52 @@ class KeyValueSplitter(Operator):
     """processor_split_key_value
     (plugins/processor/split/keyvalue/key_value_splitter.go:26-212): split
     fields[source_key] into pairs by ``delimiter``, each pair at the FIRST
-    ``separator``; pairs without a separator get ``no_separator_key_prefix``."""
+    ``separator``; pairs without a separator get ``no_separator_key_prefix``.
+
+    With ``quote`` (key_value_splitter.go:95-180), a quoted stretch may hold
+    the delimiter and a doubled quote escapes one; an unclosed quote runs to
+    the end of the line. Pairs are the ``regexp_extract_all`` matches of that
+    grammar; each is unquoted before its split at the separator."""
 
     source_key: str = "content"
     delimiter: str = "\t"
     separator: str = ":"
+    quote: str | None = None
     keep_source: bool = False
     empty_key_prefix: str = "empty_key_"
     no_separator_key_prefix: str = "no_separator_key_"
     discard_when_separator_not_found: bool = False
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        import re as _re
+    def _pairs(self, src: Column) -> Column:
+        d = re.escape(self.delimiter)
+        if not self.quote:
+            return F.split(src, d, -1)
+        q = re.escape(self.quote)
+        plain = f"[^{q}{d}]++" if len(self.delimiter) == 1 else f"(?:(?!{d})[^{q}])++"
+        # for where pairs end, an escaped quote inside quotes acts like a
+        # close and a reopen, so a quoted stretch is simply quote to quote;
+        # prepending the delimiter makes every pair exactly one match,
+        # including an empty first or last pair
+        pairs = F.regexp_extract_all(
+            F.concat(F.lit(self.delimiter), src),
+            F.lit(f"{d}((?:{plain}|{q}[^{q}]*+{q}?)*+)"),
+            1,
+        )
+        # unquoting does tell them apart: strip each quoted stretch's outer
+        # quotes, then every doubled quote left is an escape (unquoted
+        # stretches hold no quote char)
+        return F.transform(
+            pairs,
+            lambda p: F.replace(
+                F.regexp_replace(p, f"{q}((?:[^{q}]++|{q}{q})*+){q}?", "$1"),
+                F.lit(self.quote * 2),
+                F.lit(self.quote),
+            ),
+        )
 
+    def apply(self, df: DataFrame) -> DataFrame:
         src = fget(self.source_key)
-        pairs = F.split(src, _re.escape(self.delimiter), -1)
+        pairs = self._pairs(src)
         sep = self.separator
 
         def kv(p: Column) -> Column:
@@ -365,8 +340,6 @@ class KeyValueSplitter(Operator):
             # value = everything after the FIRST separator occurrence
             val = F.when(pos > 0, p.substr(pos + len(sep), F.length(p))).otherwise(p)
             return F.struct(key.alias("k"), val.alias("v"), (pos > 0).alias("had_sep"))
-
-        from .common import flet
 
         def build(structs: Column) -> Column:
             # anomaly keys use 0-based OCCURRENCE counters, not pair positions
@@ -414,90 +387,6 @@ class KeyValueSplitter(Operator):
         new_map = F.when(src.isNotNull(), new_map).otherwise(F.expr("map()"))
         base = F.col(FIELDS) if self.keep_source else fremove([self.source_key])
         return df.withColumn(FIELDS, F.map_concat(base, new_map))
-
-
-@dataclass
-class KeyValueSplitterArrow(Operator):
-    """Quote-aware key/value splitter — the reference's Quote option
-    (key_value_splitter.go:95-180: values wrapped in the quote char may
-    contain the delimiter; doubled quotes escape). Quote-aware tokenization
-    isn't expressible as a split(), so this is the Arrow path: one
-    mapInPandas pass with a compiled scanner per executor. Same anomaly
-    prefixes as the expression-based KeyValueSplitter."""
-
-    source_key: str = "content"
-    delimiter: str = "\t"
-    separator: str = ":"
-    quote: str = '"'
-    keep_source: bool = False
-    empty_key_prefix: str = "empty_key_"
-    no_separator_key_prefix: str = "no_separator_key_"
-    discard_when_separator_not_found: bool = False
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        src_key, delim, sep, q = self.source_key, self.delimiter, self.separator, self.quote
-        keep = self.keep_source
-        ek, nk = self.empty_key_prefix, self.no_separator_key_prefix
-        discard = self.discard_when_separator_not_found
-        schema = df.schema
-
-        def split_quoted(s: str) -> list[str]:
-            """Split on delim outside quotes; doubled quote escapes."""
-            if q not in s:
-                # vectorized common case: no quote char → plain C-level split
-                return s.split(delim)
-            parts, buf, i, in_q = [], [], 0, False
-            while i < len(s):
-                c = s[i]
-                if in_q:
-                    if c == q:
-                        if i + 1 < len(s) and s[i + 1] == q:
-                            buf.append(q)
-                            i += 1
-                        else:
-                            in_q = False
-                    else:
-                        buf.append(c)
-                elif c == q:
-                    in_q = True
-                elif s.startswith(delim, i):
-                    parts.append("".join(buf))
-                    buf = []
-                    i += len(delim) - 1
-                else:
-                    buf.append(c)
-                i += 1
-            parts.append("".join(buf))
-            return parts
-
-        def rewrite(d: dict) -> dict:
-            s = d.get(src_key)
-            if s is None:
-                return d
-            out = dict(d) if keep else {k: v for k, v in d.items() if k != src_key}
-            # 0-based occurrence counters (key_value_splitter.go:99-100)
-            empty_i = nosep_i = 0
-            for pair in split_quoted(s):
-                p = pair.find(sep)
-                if p < 0:
-                    if discard:
-                        continue
-                    out[f"{nk}{nosep_i}"] = pair
-                    nosep_i += 1
-                    continue
-                key, val = pair[:p], pair[p + len(sep):]
-                if key == "":
-                    key = f"{ek}{empty_i}"
-                    empty_i += 1
-                out[key] = val
-            return out
-
-        def mapper(batches):
-            for pdf in batches:
-                pdf[FIELDS] = [rewrite(d) if d is not None else d for d in pdf[FIELDS]]
-                yield pdf
-
-        return df.mapInPandas(mapper, schema=schema)
 
 
 @dataclass

@@ -135,6 +135,7 @@ PROCESSOR_REGISTRY: dict[str, Callable[[Mapping[str, Any]], Operator]] = {
         source_key=c.get("SourceKey", "content"),
         delimiter=c.get("Delimiter", "\t"),
         separator=c.get("Separator", ":"),
+        quote=c.get("Quote"),
         keep_source=c.get("KeepSource", False),
     ),
     # cardinality (§2.2)
@@ -246,61 +247,6 @@ def _parse_from_pb(c):
     )
 
 
-# byte-exact Arrow parity variants, selected with "ArrowParity": true on the
-# processor config. These run per-row Python inside mapInPandas — correct to
-# the reference's bytes where Column expressions can't be (strict quote FSM,
-# C++ %.6f doubles, per-match md5), but NOT a 100 TB hot-path choice.
-def _arrow_delimiter(c):
-    from ..operators.parse import DelimiterParserArrow
-
-    return DelimiterParserArrow(
-        c["Separator"],
-        c["Keys"],
-        _parser_options(c),
-        quote=c.get("Quote", "'"),
-        allow_shortened=c.get("AllowingShortenedFields", False),
-    )
-
-
-def _arrow_json(c):
-    from ..operators.parse import JsonParserArrow
-
-    return JsonParserArrow(_parser_options(c))
-
-
-def _arrow_desensitize(c):
-    from ..operators.transforms import DesensitizeArrow
-
-    return DesensitizeArrow(
-        c["SourceKey"],
-        method=c.get("Method", "md5"),
-        content_pattern=c.get("ReplacedContentPattern", ""),
-        prefix_pattern=c.get("ContentPatternBeforeReplacedString", ""),
-        replacing_string=c.get("ReplacingString", "********"),
-        replacing_all=c.get("ReplacingAll", True),
-    )
-
-
-def _arrow_kv(c):
-    from ..operators.transforms import KeyValueSplitterArrow
-
-    return KeyValueSplitterArrow(
-        source_key=c.get("SourceKey", "content"),
-        delimiter=c.get("Delimiter", "\t"),
-        separator=c.get("Separator", ":"),
-        quote=c.get("Quote", '"'),
-        keep_source=c.get("KeepSource", False),
-    )
-
-
-ARROW_PARITY_REGISTRY: Mapping[str, Callable[[Mapping[str, Any]], Operator]] = {
-    "processor_parse_delimiter_native": _arrow_delimiter,
-    "processor_parse_json_native": _arrow_json,
-    "processor_desensitize_native": _arrow_desensitize,
-    "processor_split_key_value": _arrow_kv,
-}
-
-
 def _rate_limit(c):
     from ..operators.filters import RateLimit
 
@@ -399,25 +345,10 @@ def _gotime(c):
 
 def compile_processors(configs: list[Mapping[str, Any]]) -> Chain:
     """Processor line → operator Chain (unknown Type is a config error, like
-    PluginRegistry::CreateProcessor failing). ``"ArrowParity": true`` selects
-    the byte-exact Arrow variant — with a warning, since that is a per-row
-    Python stage (the JVM expression path is the hot-path default)."""
-    import warnings
-
+    PluginRegistry::CreateProcessor failing)."""
     ops = []
     for cfg in configs:
         t = cfg["Type"]
-        if cfg.get("ArrowParity"):
-            if t not in ARROW_PARITY_REGISTRY:
-                raise KeyError(f"no Arrow parity variant for processor type: {t}")
-            warnings.warn(
-                f"pipeline selects Arrow parity op for {t}: per-row Python in "
-                "mapInPandas — byte-exact to the reference but 10-100x slower "
-                "than the JVM expression path; avoid on large-scale hot paths",
-                stacklevel=2,
-            )
-            ops.append(ARROW_PARITY_REGISTRY[t](cfg))
-            continue
         if t not in PROCESSOR_REGISTRY:
             raise KeyError(f"unknown processor type: {t}")
         ops.append(PROCESSOR_REGISTRY[t](cfg))

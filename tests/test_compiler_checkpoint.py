@@ -4,6 +4,7 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
+from test_plan_quality import python_nodes
 
 from loongcollector_spark.operators.base import FIELDS, fget, to_events
 from loongcollector_spark.plans.checkpoint import Manifest, read_all_units, resumable_write
@@ -226,15 +227,14 @@ def test_context_ordered_preserves_order(spark):
         assert offsets == sorted(offsets), key
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_arrow_parity_selection_warns_and_works(spark):
-    """'ArrowParity': true selects the byte-exact Arrow variant with a
-    perf warning (VERDICT r1 item 7)."""
+    """A config still carrying the retired 'ArrowParity' key compiles to the
+    one JVM path: no warning, no Python stage, the strict quote FSM's rows."""
     import warnings
-
-    import pyspark.sql.functions as F
-
-    from loongcollector_spark.operators.base import FIELDS, to_events
-    from loongcollector_spark.plans.compiler import compile_pipeline
 
     cfg = {
         "processors": [
@@ -250,16 +250,84 @@ def test_arrow_parity_selection_warns_and_works(spark):
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         pipe = compile_pipeline(cfg)
-        assert any("Arrow parity" in str(x.message) for x in w)
+    assert not w
     df = to_events(
         spark.createDataFrame(
             [(1, "x,'y, z'"), (2, "bad'quote,q")], ["i", "content"]
         )
     )
-    rows = {r["i"]: dict(r[FIELDS]) for r in pipe.apply(df).collect()}
+    out = pipe.apply(df)
+    assert not python_nodes(_executed_plan(out))
+    rows = {r["i"]: dict(r[FIELDS]) for r in out.collect()}
     assert rows[1] == {"a": "x", "b": "y, z"}
     # strict-quote FSM failure drops the row (keep_fail default false)
     assert 2 not in rows
+
+
+def test_compiled_reference_processors_golden(spark):
+    """The four processors whose goldens need quote grammars, C++ double
+    text or per-match md5 compile from config to one JVM plan that gives the
+    reference rows."""
+    import hashlib
+
+    cfg = {
+        "processors": [
+            {
+                "Type": "processor_parse_delimiter_native",
+                "SourceKey": "csv",
+                "Separator": ",",
+                "Quote": "'",
+                "Keys": ["time", "method", "url", "request_time"],
+                "KeepingSourceWhenParseFail": True,
+                "RenamedSourceKey": "rawLog",
+            },
+            {"Type": "processor_parse_json_native", "SourceKey": "json"},
+            {
+                "Type": "processor_desensitize_native",
+                "SourceKey": "pw",
+                "Method": "md5",
+                "ContentPatternBeforeReplacedString": "pwd=",
+                "ReplacedContentPattern": "[^,]+",
+                "ReplacingAll": True,
+            },
+            {
+                "Type": "processor_split_key_value",
+                "SourceKey": "kv",
+                "Delimiter": "\t",
+                "Separator": ":",
+                "Quote": '"',
+            },
+        ]
+    }
+    good = "2013-10-31 21:03:49,POST,'PutData?Category=YunOs''AccountOpLog',0.024"
+    bad = "2013-10-31 21:03:49,POST,'PutData?Category=Yun'Os'AccountOpLog',0.024"
+    ev = spark.createDataFrame(
+        [
+            (0, {"csv": good, "json": '{"pi":3.14159}', "pw": "pwd=aaa,pwd=bbb,x",
+                 "kv": 'k1:v1\tk2:"va\tl:ue"\tk3:"do""q"'}),
+            (1, {"csv": bad}),
+        ],
+        ["i", FIELDS],
+    )
+    out = compile_pipeline(cfg).apply(ev)
+    assert not python_nodes(_executed_plan(out))
+    rows = {r["i"]: dict(r[FIELDS]) for r in out.collect()}
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest().upper()
+
+    assert rows[0] == {
+        "time": "2013-10-31 21:03:49",
+        "method": "POST",
+        "url": "PutData?Category=YunOs'AccountOpLog",
+        "request_time": "0.024",
+        "pi": "3.141590",
+        "pw": f"pwd={md5('aaa')},pwd={md5('bbb')},x",
+        "k1": "v1",
+        "k2": "va\tl:ue",
+        "k3": 'do"q',
+    }
+    assert rows[1] == {"rawLog": bad}
 
 
 def test_registry_rate_limit_geoip_cloudmeta_log2metric(spark, tmp_path):

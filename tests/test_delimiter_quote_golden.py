@@ -4,7 +4,7 @@ quoting fails the parse (rawLog kept), well-formed doubled quotes unescape."""
 
 from loongcollector_spark.operators.base import FIELDS, to_events
 from loongcollector_spark.operators.common import ParserOptions
-from loongcollector_spark.operators.parse import DelimiterParserArrow
+from loongcollector_spark.operators.parse import DelimiterParser
 
 KEYS = ["time", "method", "url", "request_time"]
 OPTS = dict(keep_fail=True, renamed_source_key="rawLog")
@@ -62,7 +62,7 @@ def test_double_quote_reference_golden(spark):
             [(i, c) for i, (c, _) in enumerate(CASES)], ["i", "content"]
         )
     )
-    out = DelimiterParserArrow(",", KEYS, ParserOptions(**OPTS)).apply(df)
+    out = DelimiterParser(",", KEYS, ParserOptions(**OPTS), quote="'").apply(df)
     got = {r["i"]: dict(r[FIELDS]) for r in out.collect()}
     for i, (line, expect) in enumerate(CASES):
         if expect is None:
@@ -75,7 +75,7 @@ def test_strict_quote_discard_unmatch(spark):
     df = to_events(
         spark.createDataFrame([(0, "a,'bad'x,c"), (1, "a,b,c,d")], ["i", "content"])
     )
-    out = DelimiterParserArrow(",", KEYS).apply(df)
+    out = DelimiterParser(",", KEYS, quote="'").apply(df)
     got = {r["i"]: dict(r[FIELDS]) for r in out.collect()}
     assert set(got) == {1}
     assert got[1]["time"] == "a"
@@ -85,8 +85,6 @@ def test_key_overwritten_reference_golden(spark):
     """TestProcessKeyOverwritten: parsed keys win over the keep-succeed
     re-added source (renamed rawLog) and over the legacy __raw_log__ copy;
     failed rows keep both raw copies."""
-    from loongcollector_spark.operators.parse import DelimiterParser
-
     opts = ParserOptions(
         keep_fail=True, keep_succeed=True, coping_raw_log=True,
         renamed_source_key="rawLog",
@@ -114,8 +112,6 @@ def test_upload_raw_log_reference_golden(spark):
     """TestUploadRawLog: on success keep_succeed re-adds the raw line under
     rawLog and __raw_log__ is NOT added (CopingRawLog is failure-only); on
     failure both copies appear."""
-    from loongcollector_spark.operators.parse import DelimiterParser
-
     opts = ParserOptions(
         keep_fail=True, keep_succeed=True, coping_raw_log=True,
         renamed_source_key="rawLog",

@@ -1,9 +1,10 @@
 """Flagship end-to-end behaviors: the one parse path against the per-source
 (branched) parser operators and the JVM decode, per-sink resumable writes,
-the write's rebalance splitting a hot sink, Arrow desensitize."""
+the write's rebalance splitting a hot sink, desensitize masking."""
 
 import importlib.util
 import os
+import re
 from collections import Counter
 from functools import reduce
 from pathlib import Path
@@ -17,7 +18,7 @@ from loongcollector_spark import flagship
 from loongcollector_spark.aggregate import sink_aggregates
 from loongcollector_spark.operators.base import FIELDS, to_events
 from loongcollector_spark.operators.enrich import BroadcastLookup
-from loongcollector_spark.operators.transforms import Desensitize, DesensitizeArrow
+from loongcollector_spark.operators.transforms import Desensitize
 from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
 from loongcollector_spark.routing import RouteCondition, Router
 from loongcollector_spark.synth import ROUTE_RULES, sequences_df, source_lookup_df
@@ -253,7 +254,7 @@ def test_desensitize_arrow_md5_all_occurrences(spark):
     ev = to_events(
         spark.createDataFrame([(0, line)], ["i", "content"])
     )
-    out = DesensitizeArrow(
+    out = Desensitize(
         source_key="content", method="md5", prefix_pattern="id=",
         content_pattern=r"\d+", replacing_all=True,
     ).apply(ev)
@@ -271,7 +272,7 @@ def test_desensitize_arrow_matches_jvm_const(spark):
         content_pattern=r"\w+", replacing_string="***", replacing_all=True,
     )
     a = {r["i"]: r[FIELDS]["content"] for r in Desensitize(**kw).apply(ev).collect()}
-    b = {r["i"]: r[FIELDS]["content"] for r in DesensitizeArrow(**kw).apply(ev).collect()}
+    b = {i: re.sub(r"(pass=)(?:\w+)", r"\g<1>***", line) for i, line in rows}
     assert a == b
 
 

@@ -59,6 +59,14 @@ def test_delimiter_overflow_extend(spark):
     }
 
 
+def test_delimiter_overflow_extend_has_no_column_bound(spark):
+    # every overflow column keeps its __column{i}__ key, however many there are
+    line = "\t".join(f"v{i}" for i in range(14))
+    out = DelimiterParser("\t", ["a", "b"]).apply(_events(spark, [line]))
+    want = {"a": "v0", "b": "v1", **{f"__column{i}__": f"v{i}" for i in range(2, 14)}}
+    assert _fields(out)[0] == want
+
+
 def test_delimiter_overflow_keep(spark):
     # KEEP: raw remainder (incl. leading separator) in __column{n}__
     # (TestExtend 'not Extend' golden: __column3__ = '@@2@@3')
@@ -109,7 +117,7 @@ def test_json_scalar_stringification(spark):
     assert _fields(out)[0] == {
         "url": "POST /PutData HTTP/1.1",
         "status": "200",
-        "latency": "0.024",
+        "latency": "0.024000",  # C++ std::to_string(double)
         "ok": "true",
         "nil": "",
         "nested": '{"a":1}',

@@ -96,3 +96,12 @@ def test_partial_match_mode(spark):
     f = _fields(out)
     assert f[0] == {"id": "42"}
     assert 1 not in f  # discard-unmatch default still applies
+
+
+def test_full_match_rejects_trailing_newline(spark):
+    """Java's ``$`` also matches before a final newline; the full match ends
+    at ``\\z``, as boost::regex_match does, so "abc\\n" fails the parse."""
+    out = RegexParser(r"(\w+)", ["w"], ParserOptions(keep_fail=True)).apply(
+        _events(spark, ["abc", "abc\n"])
+    )
+    assert _fields(out) == {0: {"w": "abc"}, 1: {"content": "abc\n"}}

@@ -83,13 +83,15 @@ def test_expand_grok_literal_text_passthrough(s):
 
 def test_csv_parser_matches_go_csv_fsm_on_generated_inputs(spark):
     """Property check: CsvParser's validity-regex + field-count machinery
-    must agree with the strict quote FSM (_split_quoted_strict — the same
+    must agree with the strict quote FSM (split_quoted_strict — the same
     grammar Go encoding/csv accepts) on ~400 adversarial generated lines
     over {letters, comma, quote, space}."""
     import random
 
     from loongcollector_spark.operators.base import FIELDS, to_events
-    from loongcollector_spark.operators.parse import CsvParser, _split_quoted_strict
+    from test_quote_grammar import split_quoted_strict
+
+    from loongcollector_spark.operators.parse import CsvParser
 
     rng = random.Random(42)
     alphabet = ['a', 'b', ',', '"', ' ', '""', '","', 'x,y']
@@ -109,7 +111,7 @@ def test_csv_parser_matches_go_csv_fsm_on_generated_inputs(spark):
     got = {r["i"]: dict(r[FIELDS]) for r in out.collect()}
 
     for i, line in enumerate(lines):
-        cols = _split_quoted_strict(line, ",", '"')
+        cols = split_quoted_strict(line, ",", '"')
         if cols is None:
             expect = {"content": line}  # Go csv error → source kept
         else:

@@ -25,6 +25,12 @@ def test_filter_regex_include_exclude(spark):
     assert sorted(r["i"] for r in out2.collect()) == [1, 2]  # missing key passes exclude
 
 
+def test_filter_regex_full_match_rejects_trailing_newline(spark):
+    df = _frame(spark, {"m": "GET"}, {"m": "GET\n"})
+    assert [r["i"] for r in FilterRegex(include={"m": "GET"}).apply(df).collect()] == [0]
+    assert [r["i"] for r in FilterRegex(exclude={"m": "GET"}).apply(df).collect()] == [1]
+
+
 def test_filter_key_regex(spark):
     df = _frame(spark, {"user_id": "1"}, {"other": "2"})
     out = FilterKeyRegex(include=[r"user_.*"]).apply(df)

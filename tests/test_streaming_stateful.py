@@ -46,30 +46,27 @@ def test_kv_splitter_arrow_quote_aware(spark):
     import pyspark.sql.functions as F
 
     from loongcollector_spark.operators.base import FIELDS, to_events
-    from loongcollector_spark.operators.transforms import KeyValueSplitterArrow
+    from loongcollector_spark.operators.transforms import KeyValueSplitter
 
     line = 'k1:v1\tk2:"va\tl:ue"\tk3:"do""q"'
     ev = to_events(spark.createDataFrame([(0, line)], ["i", "content"]))
-    out = KeyValueSplitterArrow(delimiter="\t", separator=":").apply(ev)
+    out = KeyValueSplitter(delimiter="\t", separator=":", quote='"').apply(ev)
     f = dict(out.collect()[0][FIELDS])
     assert f == {"k1": "v1", "k2": "va\tl:ue", "k3": 'do"q'}
 
 
 def test_kv_splitter_arrow_matches_plain_when_unquoted(spark):
     from loongcollector_spark.operators.base import FIELDS, to_events
-    from loongcollector_spark.operators.transforms import (
-        KeyValueSplitter,
-        KeyValueSplitterArrow,
-    )
+    from loongcollector_spark.operators.transforms import KeyValueSplitter
 
     rows = [(i, f"a:{i}\tb:x{i}\tnosep{i}") for i in range(10)]
     ev = to_events(spark.createDataFrame(rows, ["i", "content"]))
     plain = {r["i"]: dict(r[FIELDS]) for r in KeyValueSplitter().apply(ev).collect()}
-    arrow = {
+    quoted = {
         r["i"]: dict(r[FIELDS])
-        for r in KeyValueSplitterArrow(quote="\x00").apply(ev).collect()
+        for r in KeyValueSplitter(quote="\x00").apply(ev).collect()
     }
-    assert plain == arrow
+    assert plain == quoted
 
 
 def test_timestamp_parser_epoch(spark):
