@@ -13,9 +13,10 @@ from dataclasses import dataclass
 from typing import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from .routing import SINK_COL
+from .session import per_jvm
 
 PACK_ID_COL = "__pack_id__"
 
@@ -54,22 +55,19 @@ def context_ordered(df: DataFrame, part_cols: Sequence[str], order_col: str) -> 
     return with_lineage(out)
 
 
-def sink_aggregates(
-    routed: DataFrame,
-    n_tok_col: str = "n_tok",
-    bytes_col: str | None = None,
-    sink_col: str = SINK_COL,
-) -> DataFrame:
-    """Per-sink aggregate counts: events, token total, byte total. Partial
-    (map-side) aggregation is automatic for these folds; one shuffle on the
-    (tiny-cardinality) sink key."""
-    aggs = [
-        F.count(F.lit(1)).alias("events"),
-        F.sum(F.col(n_tok_col)).alias("tokens_total"),
-    ]
-    if bytes_col:
-        aggs.append(F.sum(F.length(F.col(bytes_col))).alias("bytes_total"))
-    return routed.groupBy(sink_col).agg(*aggs).orderBy(sink_col)
+@per_jvm
+def _sink_folds() -> tuple[Column, list[Column]]:
+    """The sink key and the per-sink folds: event count, token total."""
+    folds = [F.count(F.lit(1)).alias("events"), F.sum("n_tok").alias("tokens_total")]
+    return F.col(SINK_COL), folds
+
+
+def sink_aggregates(routed: DataFrame) -> DataFrame:
+    """Per-sink aggregate counts: events, token total (sum of ``n_tok``).
+    Partial (map-side) aggregation is automatic for these folds; one shuffle
+    on the (tiny-cardinality) sink key."""
+    key, folds = _sink_folds()
+    return routed.groupBy(key).agg(*folds).orderBy(key)
 
 
 @dataclass

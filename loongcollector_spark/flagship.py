@@ -19,13 +19,27 @@ those same partitions once. The routed frame has no exchange of its own: the
 aggregates fold map-side into one tiny sink-key shuffle, and the write
 rebalances by sink, the key it partitions its output by, with AQE sizing and
 splitting the partitions of a hot sink. The lookup join is broadcast (no
-shuffle).
+shuffle), from a LocalRelation: the broadcast reads the rows on the driver
+and runs no Spark stage of its own.
+
+Built once per JVM, as the reference builds its pipeline once and then runs
+it on every group (CollectionPipeline::Init, then Process): the Columns that
+depend on no input (the parse CASE, the keep-filter and merged ``fields`` of
+``ParserOptions.columns``, the router's matched sinks, the per-sink folds).
+They are unresolved expressions, bound by name to each new DataFrame, and
+they belong to the JVM rather than to a session (``session.per_jvm``), so a
+driver that runs many jobs pays the ~2,000 py4j round trips of building them
+once. The DataFrame itself is built anew for every job and never cached: a
+reused DataFrame or QueryExecution would let AQE reuse its materialised
+shuffle stages, and the job would stop scanning and parsing its input.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from .aggregate import sink_aggregates
 from .operators.base import FIELDS, to_events
@@ -33,6 +47,7 @@ from .operators.common import ParserOptions
 from .operators.enrich import BroadcastLookup
 from .operators.parse import DelimiterParser, JsonParser, RegexParser
 from .routing import RouteCondition, Router
+from .session import per_jvm
 from .synth import ROUTE_RULES, sequences_df, source_lookup_df
 from .tokens import decode_tokens_arrow
 
@@ -63,6 +78,9 @@ PARSERS = {
     "app-json": JsonParser(),
     "csvlog": DelimiterParser("\t", CSV_KEYS),
 }
+ROUTER = Router(
+    [RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES]
+)
 
 
 def replicated_sequences(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
@@ -81,17 +99,19 @@ def replicated_sequences(spark: SparkSession, sf_dir: str, factor: int) -> DataF
     )
 
 
-def parsed_events_from(seq: DataFrame) -> DataFrame:
-    """Parse a sequences frame into the unified event frame (doc_id, source,
-    n_tok, fields): one Arrow decode, then one projection that dispatches on
-    ``source`` to the parser for that format. Rows of any other source are
-    discarded before the decode."""
-    # filter before the python stage (a filter does not push through it), so
-    # rows no parser takes are neither shuffled nor decoded
-    seq = seq.filter(F.col("source").isin(list(PARSERS)))
-    # drop the token arrays INSIDE the python stage: a .drop after it would
-    # ship the dominant payload Python→JVM just to discard it
-    ev = to_events(decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True))
+@dataclass(frozen=True)
+class _Columns:
+    """The flagship's Columns that depend on no input: unresolved
+    expressions, bound by name to each DataFrame they are applied to."""
+
+    sources: Column  # the filter to PARSERS' sources
+    keep: Column  # finalize's keep-filter
+    fields: Column  # finalize's merged fields map
+    matched: Column  # the router's matched sinks
+
+
+@per_jvm
+def _columns() -> _Columns:
     src = F.element_at(F.col(FIELDS), F.lit("content"))
     success = new_map = None
     for source, parser in PARSERS.items():
@@ -99,7 +119,28 @@ def parsed_events_from(seq: DataFrame) -> DataFrame:
         hit = F.col("source") == source
         success = F.when(hit, ok) if success is None else success.when(hit, ok)
         new_map = F.when(hit, parsed) if new_map is None else new_map.when(hit, parsed)
-    return ParserOptions().finalize(ev, success.otherwise(False), new_map, src)
+    keep, fields = ParserOptions().columns(success.otherwise(False), new_map, src)
+    return _Columns(
+        sources=F.col("source").isin(list(PARSERS)),
+        keep=keep,
+        fields=fields,
+        matched=ROUTER.matched(),
+    )
+
+
+def parsed_events_from(seq: DataFrame) -> DataFrame:
+    """Parse a sequences frame into the unified event frame (doc_id, source,
+    n_tok, fields): one Arrow decode, then one projection that dispatches on
+    ``source`` to the parser for that format. Rows of any other source are
+    discarded before the decode."""
+    c = _columns()
+    # filter before the python stage (a filter does not push through it), so
+    # rows no parser takes are neither shuffled nor decoded
+    seq = seq.filter(c.sources)
+    # drop the token arrays INSIDE the python stage: a .drop after it would
+    # ship the dominant payload Python→JVM just to discard it
+    ev = to_events(decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True))
+    return ev.filter(c.keep).withColumn(FIELDS, c.fields)
 
 
 def enriched_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
@@ -111,10 +152,7 @@ def enriched_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
 def routed_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
     """Fan-out: sink_a ⟵ env=prod, sink_b ⟵ team_tag=team-b, sink_default ⟵ all
     (multi-match copy semantics, Router.cpp:60-80)."""
-    rules = [
-        RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES
-    ]
-    return Router(rules).apply(enriched_from(spark, seq))
+    return ROUTER.apply(enriched_from(spark, seq), _columns().matched)
 
 
 def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,9 +160,7 @@ def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pipeline_aggregates_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
-    return sink_aggregates(routed_from(spark, seq)).select(
-        "sink", "events", F.col("tokens_total").cast("long").alias("tokens_total")
-    )
+    return sink_aggregates(routed_from(spark, seq))
 
 
 def pipeline_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:

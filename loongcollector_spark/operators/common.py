@@ -56,6 +56,17 @@ class ParserOptions:
         drop failed rows. ``new_map`` holds the parsed key→value pairs (only
         meaningful where ``success``); ``src`` is the source value (defaults
         to fields[source_key])."""
+        keep, fields = self.columns(success, new_map, src)
+        if keep is not None:
+            df = df.filter(keep)
+        return df.withColumn(FIELDS, fields)
+
+    def columns(
+        self, success: Column, new_map: Column, src: Column | None = None
+    ) -> tuple[Column | None, Column]:
+        """The truth table as Columns: ``(keep, fields)``, the row filter
+        (None when every row is kept) and the merged ``fields`` map. They
+        depend on no DataFrame, so one build serves any number of frames."""
         if src is None:
             src = F.element_at(F.col(FIELDS), F.lit(self.source_key))
 
@@ -63,7 +74,7 @@ class ParserOptions:
         # event contents minus the consumed source key
         base = F.map_filter(F.col(FIELDS), lambda k, v: k != F.lit(self.source_key))
 
-        out = df
+        keep = None
         if not self.keep_fail:
             # ShouldEraseEvent (CommonParserOptions.cpp:100-117): drop failed
             # rows whose remaining contents are empty, ONLY the
@@ -83,7 +94,7 @@ class ParserOptions:
                 & F.map_contains_key(f, F.lit("_source_"))
             )
             erasable = (F.size(f) == 0) | only_offset | only_container
-            out = out.filter(success | ~erasable)
+            keep = success | ~erasable
 
         # LAST_WIN precedence (later wins): raw_log < renamed_source < parsed
         # < base. `success`/`src` are LET-BOUND with the parsed map: the merge
@@ -110,7 +121,7 @@ class ParserOptions:
             F.when(success, new_map).alias("nm"),
             src.alias("src"),
         )
-        return out.withColumn(FIELDS, flet(bound, merge))
+        return keep, flet(bound, merge)
 
 
 def flet(col: Column, fn) -> Column:

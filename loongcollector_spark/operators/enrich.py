@@ -127,8 +127,7 @@ class BroadcastLookup(Operator):
     select: list[str] | None = None  # dim columns to add (default: all non-key)
 
     def apply(self, df: DataFrame) -> DataFrame:
-        cols = self.select or [c for c in self.dim.columns if c != self.on]
-        dim = self.dim.select(self.on, *cols)
+        dim = self.dim if self.select is None else self.dim.select(self.on, *self.select)
         return df.join(broadcast(dim), on=self.on, how="left")
 
 

@@ -221,6 +221,9 @@ class JsonParser(Operator):
 
     # Jackson's text of a JSON double (ints never carry '.' or an exponent)
     _FLOAT_TEXT = r"^-?\d+(?:\.\d+(?:[eE][+-]?\d+)?|[eE][+-]?\d+)\z"
+    # rapidjson's default Parse rejects NaN/Infinity and single-quoted text,
+    # which Spark's JSON reader accepts unless told not to
+    _STRICT = {"allowNonNumericNumbers": "false", "allowSingleQuotes": "false"}
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
@@ -228,13 +231,13 @@ class JsonParser(Operator):
 
     def parse(self, src: Column) -> tuple[Column, Column]:
         """(success, parsed map) of the JSON object in the source value ``src``."""
-        m = F.from_json(src, "map<string,string>")
+        m = F.from_json(src, "map<string,string>", self._STRICT)
         # non-object JSON (arrays/scalars) and malformed input both yield NULL
         success = src.isNotNull() & m.isNotNull()
 
         def render(mm: Column) -> Column:
             floaty = F.exists(F.map_values(mm), lambda v: v.rlike(self._FLOAT_TEXT))
-            typed = F.when(floaty, F.from_json(src, "map<string,variant>"))
+            typed = F.when(floaty, F.from_json(src, "map<string,variant>", self._STRICT))
             return flet(
                 typed,
                 lambda vm: F.transform_values(
@@ -309,13 +312,13 @@ class TimestampParser(Operator):
             # internally, so an unbounded digit run would ANSI-overflow the
             # job instead of failing the line.
             ts = F.timestamp_seconds(
-                F.when(src.rlike(r"^\d{1,11}$"), src.try_cast("long"))
+                F.when(src.rlike(full_match(r"\d{1,11}")), src.try_cast("long"))
             )
         elif self.source_format == "epoch_auto":
             # processor_strptime %s: magnitude-dispatched s/ms/µs — the Go
             # plugin accepts 1451710799 / ...123 / ...123456 as the SAME
             # instant (strptime_test.go TestFormat rows 6-8)
-            iv = F.when(src.rlike(r"^\d+$"), src.try_cast("long"))
+            iv = F.when(src.rlike(full_match(r"\d+")), src.try_cast("long"))
             ts = (
                 F.when(iv < 100_000_000_000, F.timestamp_seconds(iv))
                 .when(iv < 100_000_000_000_000, F.timestamp_millis(iv))
@@ -323,7 +326,7 @@ class TimestampParser(Operator):
             )
         elif self.source_format == "epoch_milli":
             ts = F.timestamp_millis(
-                F.when(src.rlike(r"^\d{1,14}$"), src.try_cast("long"))
+                F.when(src.rlike(full_match(r"\d{1,14}")), src.try_cast("long"))
             )
         else:
             # try_: a malformed value fails the LINE (strptime error path),

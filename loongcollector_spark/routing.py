@@ -71,14 +71,21 @@ class Router(Operator):
     rules: Sequence[RouteCondition]
     drop_discarded_tags: bool = True
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def matched(self) -> Column:
+        """The sinks a row matches, in rule order (empty when none)."""
         matches = F.array(
             *[
                 F.when(r.predicate(), F.lit(r.sink)).otherwise(F.lit(None))
                 for r in self.rules
             ]
         )
-        matched = F.filter(matches, lambda s: s.isNotNull())
+        return F.filter(matches, lambda s: s.isNotNull())
+
+    def apply(self, df: DataFrame, matched: Column | None = None) -> DataFrame:
+        """``matched``: this router's ``matched()``, when the caller built it
+        once for many frames."""
+        if matched is None:
+            matched = self.matched()
         out = df.withColumn(SINK_COL, F.explode(matched))
         if self.drop_discarded_tags:
             for r in self.rules:

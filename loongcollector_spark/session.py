@@ -10,9 +10,14 @@ local testing:
 
 from __future__ import annotations
 
+import functools
 import os
+from typing import Callable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -67,3 +72,26 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def per_jvm(build: Callable[..., T]) -> Callable[..., T]:
+    """Memoise ``build(*args)`` (hashable args) for the life of the JVM.
+
+    For Columns and other py4j objects that depend on no DataFrame: they
+    belong to the JVM, not to a session, so every session of the process
+    reuses them. A new py4j gateway (the JVM was shut down and relaunched)
+    drops the memo, since the old objects died with the old JVM."""
+    memo: dict = {}
+    owner = None
+
+    @functools.wraps(build)
+    def get(*args):
+        nonlocal owner
+        if SparkContext._gateway is not owner:
+            memo.clear()
+            owner = SparkContext._gateway
+        if args not in memo:
+            memo[args] = build(*args)
+        return memo[args]
+
+    return get

@@ -128,9 +128,13 @@ ROUTE_RULES = [
 
 
 def source_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_COLS)
+    """The lookup as a LocalRelation, from the VALUES text the DuckDB oracle
+    joins: its broadcast is a driver-side LocalTableScan, where a
+    ``createDataFrame`` of the rows is an RDD scan that costs every job a
+    separate Spark stage."""
+    return spark.sql(f"SELECT * FROM {source_lookup_values_sql()}")
 
 
 def source_lookup_values_sql() -> str:
     rows = ", ".join(f"('{s}', '{t}', '{e}', '{r}')" for s, t, e, r in SOURCE_LOOKUP_ROWS)
-    return f"(VALUES {rows}) AS source_lookup(source, team_tag, env, route_key)"
+    return f"(VALUES {rows}) AS source_lookup({', '.join(SOURCE_LOOKUP_COLS)})"

@@ -3,8 +3,12 @@
 the write's rebalance splitting a hot sink, desensitize masking."""
 
 import importlib.util
+import json
 import os
 import re
+import subprocess
+import sys
+import threading
 from collections import Counter
 from functools import reduce
 from pathlib import Path
@@ -112,6 +116,106 @@ def test_fused_full_pipeline_matches_branched(spark, sf_dir):
     assert {r["sink"]: r["events"] for r in a} == {
         "sink_a": 850, "sink_b": 100, "sink_default": 950,
     }
+
+
+def test_second_build_makes_few_py4j_round_trips(spark, sf_dir, monkeypatch):
+    """The flagship's input-independent Columns are built once per JVM, so a
+    later build only chains the DataFrame operations: at most 150 py4j round
+    trips (about 2,100 when each build made its expressions anew)."""
+    seq = sequences_df(spark, sf_dir)
+    flagship.pipeline_aggregates_from(spark, seq)
+    client = spark.sparkContext._gateway._gateway_client
+    real, trips = client.send_command, []
+    caller = threading.get_ident()
+
+    def counted(command, *a, **k):
+        # py4j's finalizer thread frees dead objects in the background, one
+        # round trip each, off the build's path: count the building thread
+        if threading.get_ident() == caller:
+            trips.append(command)
+        return real(command, *a, **k)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    flagship.pipeline_aggregates_from(spark, seq)
+    assert len(trips) <= 150, "\n".join(t.replace("\n", " ") for t in trips)
+
+
+def _scans(df) -> list[tuple[int, int]]:
+    """(metric id, rows output) of each parquet scan of ``df``'s executed
+    plan; AQE keeps the scans inside its query stages."""
+    found = []
+
+    def walk(node):
+        if node.nodeName().startswith("Scan parquet"):
+            rows = node.metrics().apply("numOutputRows")
+            found.append((rows.id(), rows.value()))
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            walk(node.plan())
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan().executedPlan())
+    return found
+
+
+def test_each_job_scans_and_parses_its_whole_input(spark, sf_dir):
+    """Reusing the built Columns must not reuse a job: each build+collect
+    runs a new plan whose scan reads every input row (a cached or re-collected
+    DataFrame would show the first job's scan metric, or none) and gives the
+    pinned aggregates."""
+    n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    seq = sequences_df(spark, sf_dir)
+    seen = []
+    for _ in range(2):
+        df = flagship.pipeline_aggregates_from(spark, seq)
+        assert _sink_events(df) == {"sink_a": 850, "sink_b": 100, "sink_default": 950}
+        scans = _scans(df)
+        assert [rows for _, rows in scans] == [n], scans
+        seen.append(scans[0][0])
+    assert seen[0] != seen[1]
+
+
+_TWO_SESSIONS = """
+import json, sys
+from loongcollector_spark import flagship
+from loongcollector_spark.session import get_spark
+
+def events():
+    spark = get_spark("two-sessions", master="local[2]", shuffle_partitions=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    rows = flagship.pipeline_aggregates(spark, sys.argv[1]).collect()
+    return spark, {r["sink"]: r["events"] for r in rows}
+
+spark, first = events()
+cols = flagship._columns()
+spark.stop()
+spark, second = events()
+print(json.dumps({"first": first, "second": second, "reused": flagship._columns() is cols}))
+spark.stop()
+"""
+
+
+def test_memoised_columns_serve_a_new_session_in_the_same_jvm(sf_dir, tmp_path):
+    """A driver that stops its session and starts another in the same JVM
+    (as one spark-submit driver running several jobs does) reuses the built
+    Columns, with the same aggregates. Runs in its own driver process, so the
+    shared test session is not stopped."""
+    root = Path(__file__).resolve().parents[1]
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [str(root), os.environ.get("PYTHONPATH")])),
+        SPARK_DRIVER_MEM="1g",
+        SPARK_LOCAL_DIRS=str(tmp_path),
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", _TWO_SESSIONS, sf_dir],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    got = json.loads(done.stdout.strip().splitlines()[-1])
+    pinned = {"sink_a": 850, "sink_b": 100, "sink_default": 950}
+    assert got == {"first": pinned, "second": pinned, "reused": True}
 
 
 def test_flagship_sink_writes_match_routed_rows(spark, sf_dir, tmp_path):

@@ -82,6 +82,19 @@ def test_json_arrow_drop_on_fail(spark):
     assert len(rows) == 1 and dict(rows[0][FIELDS]) == {"k": "1"}
 
 
+def test_json_rejects_nan_infinity_and_single_quotes(spark):
+    """rapidjson's default Parse rejects NaN, Infinity and single-quoted
+    JSON, so each of these lines fails the parse (the source is kept under
+    keep_fail); a plain object beside them parses as before."""
+    bad = ['{"a":NaN}', '{"a":Infinity}', '{"a":-Infinity}', "{'a':1}"]
+    lines = [*bad, '{"a":1.5,"b":"x"}']
+    out = JsonParser(ParserOptions(keep_fail=True)).apply(_events(spark, lines))
+    got = {r["i"]: dict(r[FIELDS]) for r in out.collect()}
+    for i, raw in enumerate(bad):
+        assert got[i] == {"content": raw}, (raw, got[i])
+    assert got[len(bad)] == {"a": "1.500000", "b": "x"}
+
+
 def test_json_edge_inputs_both_paths(spark):
     """ProcessorParseJsonNativeUnittest edge matrix: top-level array /
     primitive / empty string fail (source kept); {} succeeds empty; unicode

@@ -36,6 +36,17 @@ def test_flagship_lookup_join_is_broadcast(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_flagship_lookup_is_a_local_relation(spark, sf_dir):
+    """The lookup is a LocalRelation: the broadcast reads a driver-side
+    LocalTableScan, so no RDD scan (a Spark stage of its own in every job)
+    sits under it."""
+    plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))
+    assert "ExistingRDD" not in plan
+    lines = plan.split("\n\n")[0].splitlines()
+    b = next(i for i, line in enumerate(lines) if "BroadcastExchange" in line)
+    assert "LocalTableScan" in lines[b + 1], lines
+
+
 def test_flagship_aggregate_is_partial(spark, sf_dir):
     """Two HashAggregate nodes around the exchange = map-side combine."""
     plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))

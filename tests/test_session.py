@@ -1,8 +1,9 @@
-"""Session factory defaults (no Spark)."""
+"""Session factory defaults and the per-JVM memo (no Spark)."""
 
 import pytest
+from pyspark import SparkContext
 
-from loongcollector_spark.session import default_driver_memory
+from loongcollector_spark.session import default_driver_memory, per_jvm
 
 
 @pytest.mark.parametrize(
@@ -25,3 +26,22 @@ def test_default_driver_memory_is_40pct_of_memtotal_capped(tmp_path, mem_total_k
 def test_default_driver_memory_reads_this_machine():
     heap = default_driver_memory()
     assert heap.endswith("g") and 1 <= int(heap[:-1]) <= 16
+
+
+def test_per_jvm_memo_lives_as_long_as_its_gateway(monkeypatch):
+    """One build per argument tuple while the py4j gateway stays; a new
+    gateway (the JVM was relaunched) rebuilds, as the old objects died."""
+    builds = []
+
+    @per_jvm
+    def build(key):
+        builds.append(key)
+        return object()
+
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    a = build("a")
+    assert build("a") is a and build("b") is not a
+    assert builds == ["a", "b"]
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert build("a") is not a
+    assert builds == ["a", "b", "a"]

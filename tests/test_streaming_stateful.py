@@ -1,6 +1,8 @@
 """Stateful streaming merge: partial records buffered in keyed state across
 micro-batch boundaries (the agent's cross-read partial-log buffer)."""
 
+import pytest
+
 from loongcollector_spark.streaming.pipeline import stateful_merge_by_flag
 
 
@@ -87,6 +89,25 @@ def test_timestamp_parser_epoch(spark):
     ev2 = to_events(spark.createDataFrame([(0, "1704450030123")], ["i", "content"]))
     out2 = TimestampParser("epoch_milli", ParserOptions(keep_fail=True)).apply(ev2)
     assert out2.collect()[0]["event_time"].year == 2024
+
+
+@pytest.mark.parametrize(
+    "fmt, value",
+    [("epoch", "1704450030"), ("epoch_auto", "1704450030"), ("epoch_milli", "1704450030123")],
+)
+def test_timestamp_epoch_rejects_trailing_newline(spark, fmt, value):
+    """Each epoch format full-matches its digits, so a value with a trailing
+    newline fails the line (java.util.regex ``$`` also matches before a
+    final line terminator)."""
+    from loongcollector_spark.operators.base import to_events
+    from loongcollector_spark.operators.common import ParserOptions
+    from loongcollector_spark.operators.parse import TimestampParser
+
+    ev = to_events(spark.createDataFrame([(0, value), (1, value + "\n")], ["i", "content"]))
+    out = TimestampParser(fmt, ParserOptions(keep_fail=True)).apply(ev)
+    rows = {r["i"]: r["event_time"] for r in out.collect()}
+    assert rows[0] is not None and rows[0].year == 2024
+    assert rows[1] is None
 
 
 def _run_stream_merge(spark, tmp_path, batches, **kw):
