@@ -63,11 +63,13 @@ def _sink_folds() -> tuple[Column, list[Column]]:
 
 
 def sink_aggregates(routed: DataFrame) -> DataFrame:
-    """Per-sink aggregate counts: events, token total (sum of ``n_tok``).
-    Partial (map-side) aggregation is automatic for these folds; one shuffle
-    on the (tiny-cardinality) sink key."""
+    """Per-sink aggregate counts: events, token total (sum of ``n_tok``),
+    sorted by sink. Partial (map-side) aggregation is automatic for these
+    folds; one shuffle on the (tiny-cardinality) sink key. The ≤k result
+    rows are sorted in one partition: a global ``orderBy`` would plan a
+    range-partition exchange, and the sampling job and stages it costs."""
     key, folds = _sink_folds()
-    return routed.groupBy(key).agg(*folds).orderBy(key)
+    return routed.groupBy(key).agg(*folds).coalesce(1).sortWithinPartitions(key)
 
 
 @dataclass

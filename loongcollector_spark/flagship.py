@@ -7,8 +7,10 @@ read sequences (doc_id, tokens, n_tok, source)
   → one CASE on ``source`` over the existing parsers (nginx regex / app-json /
     tab-delimited), discard-unmatch semantics; any other source is filtered
     out before the decode
-  → broadcast-join source lookup (team_tag, env, route_key)
-  → router fan-out (tag conditions, multi-match copy) via explode
+  → broadcast-join the source lookup (team_tag, env, route_key, sinks):
+    every route condition reads only lookup columns, so the router's matched
+    sinks are evaluated once per lookup row, at plan time, not per event
+  → router fan-out (multi-match copy) via explode of the joined ``sinks``
   → per-sink aggregates (events, tokens_total) + per-source drop counts, or
     the resumable per-sink write (plans/checkpoint.resumable_write)
 
@@ -19,8 +21,10 @@ those same partitions once. The routed frame has no exchange of its own: the
 aggregates fold map-side into one tiny sink-key shuffle, and the write
 rebalances by sink, the key it partitions its output by, with AQE sizing and
 splitting the partitions of a hot sink. The lookup join is broadcast (no
-shuffle), from a LocalRelation: the broadcast reads the rows on the driver
-and runs no Spark stage of its own.
+shuffle), from a LocalRelation: Catalyst folds the ``sinks`` projection
+into it, so the broadcast reads the rows on the driver and runs no Spark
+stage of its own. The join is inner, as the oracle's JOIN: a source with no
+lookup row reaches no sink (every PARSERS source has one).
 
 Built once per JVM, as the reference builds its pipeline once and then runs
 it on every group (CollectionPipeline::Init, then Process): the Columns that
@@ -44,7 +48,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from .aggregate import sink_aggregates
 from .operators.base import FIELDS, to_events
 from .operators.common import ParserOptions
-from .operators.enrich import BroadcastLookup
 from .operators.parse import DelimiterParser, JsonParser, RegexParser
 from .routing import RouteCondition, Router
 from .session import per_jvm
@@ -143,16 +146,14 @@ def parsed_events_from(seq: DataFrame) -> DataFrame:
     return ev.filter(c.keep).withColumn(FIELDS, c.fields)
 
 
-def enriched_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
-    ev = parsed_events_from(seq)
-    lookup = source_lookup_df(spark)
-    return BroadcastLookup(lookup, on="source").apply(ev)
-
-
 def routed_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
     """Fan-out: sink_a ⟵ env=prod, sink_b ⟵ team_tag=team-b, sink_default ⟵ all
-    (multi-match copy semantics, Router.cpp:60-80)."""
-    return ROUTER.apply(enriched_from(spark, seq), _columns().matched)
+    (multi-match copy semantics, Router.cpp:60-80). The conditions read only
+    lookup columns, so each source is routed once, on its lookup row
+    (Router.cpp routes a whole event group on its tags)."""
+    lookup = source_lookup_df(spark).withColumn("sinks", _columns().matched)
+    ev = parsed_events_from(seq).join(F.broadcast(lookup), "source")
+    return ROUTER.apply(ev, F.col("sinks")).drop("sinks")
 
 
 def routed(spark: SparkSession, sf_dir: str) -> DataFrame:

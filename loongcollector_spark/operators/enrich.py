@@ -116,21 +116,6 @@ class DictMap(Operator):
         return df.withColumn(FIELDS, merged)
 
 
-@dataclass
-class BroadcastLookup(Operator):
-    """Generalized lookup enrich: broadcast-hash-join the event frame against a
-    dim DataFrame on a top-level key column (the north-rule source/route_key
-    lookup rides this). Left join; missing rows keep NULLs (caller coalesces)."""
-
-    dim: DataFrame
-    on: str
-    select: list[str] | None = None  # dim columns to add (default: all non-key)
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        dim = self.dim if self.select is None else self.dim.select(self.on, *self.select)
-        return df.join(broadcast(dim), on=self.on, how="left")
-
-
 def ip_range_lookup(
     df: DataFrame, ranges: DataFrame, ip_col: str, spark: SparkSession | None = None
 ) -> DataFrame:

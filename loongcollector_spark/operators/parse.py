@@ -47,16 +47,14 @@ class RegexParser(Operator):
     (e.g. the token decode), Catalyst's CollapseProject inlines that
     expression into every call and lambda-bearing subtrees defeat codegen CSE.
     Instead we run the regex ONCE via ``regexp_replace`` emitting all groups
-    joined by an unprintable separator, then split — one matcher pass + one
-    split per row regardless of key count. ``group_sep`` (default ``\\x01``)
-    must not occur in matched text; pass ``group_sep=None`` to fall back to
-    per-group extraction."""
+    joined by the separator ``\\x01``, then split — one matcher pass + one
+    split per row regardless of key count. A row whose source holds the
+    separator itself takes per-group extraction instead."""
 
     regex: str
     keys: Sequence[str]
     options: ParserOptions = field(default_factory=ParserOptions)
     full_match: bool = True
-    group_sep: str | None = "\x01"
 
     def apply(self, df: DataFrame) -> DataFrame:
         src = _src(self.options)
@@ -69,26 +67,27 @@ class RegexParser(Operator):
             return src.isNotNull(), parsed_map({self.keys[0]: src})
         rx = full_match(self.regex) if self.full_match else self.regex
         success = src.isNotNull() & src.rlike(rx)
+        per_group = parsed_map(
+            {k: F.regexp_extract(src, rx, i + 1) for i, k in enumerate(self.keys)}
+        )
         # the single-matcher-pass trick rewrites the WHOLE string through the
         # anchored pattern — valid only in full-match mode (a partial match
         # would leave the unmatched prefix/suffix around the groups)
-        if self.group_sep is not None and self.full_match:
-            sep = self.group_sep
-            repl = sep.join(f"${i + 1}" for i in range(len(self.keys)))
-            arr = F.split(F.regexp_replace(src, rx, repl), sep, -1)
-            # let-bind the split: element_at references would otherwise
-            # re-inline the whole regexp_replace per key (k regex runs/row)
-            new_map = flet(
-                arr,
-                lambda a: parsed_map(
-                    {k: F.element_at(a, i + 1) for i, k in enumerate(self.keys)}
-                ),
-            )
-        else:
-            new_map = parsed_map(
-                {k: F.regexp_extract(src, rx, i + 1) for i, k in enumerate(self.keys)}
-            )
-        return success, new_map
+        if not self.full_match:
+            return success, per_group
+        sep = "\x01"
+        repl = sep.join(f"${i + 1}" for i in range(len(self.keys)))
+        arr = F.split(F.regexp_replace(src, rx, repl), sep, -1)
+        # let-bind the split: element_at references would otherwise
+        # re-inline the whole regexp_replace per key (k regex runs/row)
+        one_pass = flet(
+            arr,
+            lambda a: parsed_map(
+                {k: F.element_at(a, i + 1) for i, k in enumerate(self.keys)}
+            ),
+        )
+        # a group holding the separator would be split apart
+        return success, F.when(src.contains(sep), per_group).otherwise(one_pass)
 
 
 class OverflowTreatment:

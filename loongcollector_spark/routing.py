@@ -69,7 +69,6 @@ class Router(Operator):
     top-level tag columns the row-level analog of tag removal is NULL."""
 
     rules: Sequence[RouteCondition]
-    drop_discarded_tags: bool = True
 
     def matched(self) -> Column:
         """The sinks a row matches, in rule order (empty when none)."""
@@ -82,30 +81,31 @@ class Router(Operator):
         return F.filter(matches, lambda s: s.isNotNull())
 
     def apply(self, df: DataFrame, matched: Column | None = None) -> DataFrame:
-        """``matched``: this router's ``matched()``, when the caller built it
-        once for many frames."""
+        """``matched``: a column holding the sinks each row matches, as
+        ``matched()`` computes them (default ``matched()`` itself); for
+        example one evaluated once per row of a lookup the rows were joined
+        to."""
         if matched is None:
             matched = self.matched()
         out = df.withColumn(SINK_COL, F.explode(matched))
-        if self.drop_discarded_tags:
-            for r in self.rules:
-                if not (r.discard_tag and r.match_key):
-                    continue
-                on_this_sink = F.col(SINK_COL) == F.lit(r.sink)
-                if r.use_fields:
-                    out = out.withColumn(
-                        FIELDS,
-                        F.when(on_this_sink, fremove([r.match_key])).otherwise(
-                            F.col(FIELDS)
-                        ),
-                    )
-                else:
-                    out = out.withColumn(
-                        r.match_key,
-                        F.when(on_this_sink, F.lit(None)).otherwise(
-                            F.col(r.match_key)
-                        ),
-                    )
+        for r in self.rules:
+            if not (r.discard_tag and r.match_key):
+                continue
+            on_this_sink = F.col(SINK_COL) == F.lit(r.sink)
+            if r.use_fields:
+                out = out.withColumn(
+                    FIELDS,
+                    F.when(on_this_sink, fremove([r.match_key])).otherwise(
+                        F.col(FIELDS)
+                    ),
+                )
+            else:
+                out = out.withColumn(
+                    r.match_key,
+                    F.when(on_this_sink, F.lit(None)).otherwise(
+                        F.col(r.match_key)
+                    ),
+                )
         return out
 
 

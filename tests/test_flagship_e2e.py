@@ -21,11 +21,15 @@ from pyspark.sql import DataFrame
 from loongcollector_spark import flagship
 from loongcollector_spark.aggregate import sink_aggregates
 from loongcollector_spark.operators.base import FIELDS, to_events
-from loongcollector_spark.operators.enrich import BroadcastLookup
 from loongcollector_spark.operators.transforms import Desensitize
 from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
 from loongcollector_spark.routing import RouteCondition, Router
-from loongcollector_spark.synth import ROUTE_RULES, sequences_df, source_lookup_df
+from loongcollector_spark.synth import (
+    ROUTE_RULES,
+    SOURCE_LOOKUP_ROWS,
+    sequences_df,
+    source_lookup_df,
+)
 from loongcollector_spark.tokens import decode_tokens, decode_tokens_arrow
 
 
@@ -105,9 +109,10 @@ def test_fused_full_pipeline_matches_branched(spark, sf_dir):
     rules = [
         RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES
     ]
-    enriched = BroadcastLookup(source_lookup_df(spark), on="source").apply(
-        _per_source_reference(seq)
+    enriched = _per_source_reference(seq).join(
+        F.broadcast(source_lookup_df(spark)), "source", "left"
     )
+    # the per-event route: the rules evaluated on every enriched row
     branched = sink_aggregates(Router(rules).apply(enriched)).select(
         "sink", "events", F.col("tokens_total").cast("long").alias("tokens_total")
     )
@@ -116,6 +121,26 @@ def test_fused_full_pipeline_matches_branched(spark, sf_dir):
     assert {r["sink"]: r["events"] for r in a} == {
         "sink_a": 850, "sink_b": 100, "sink_default": 950,
     }
+
+
+def test_every_parsed_source_has_a_lookup_row():
+    """The flagship routes on the lookup's inner join, as the oracle does: a
+    parsed source without a lookup row would reach no sink."""
+    assert set(flagship.PARSERS) <= {row[0] for row in SOURCE_LOOKUP_ROWS}
+
+
+def test_nginx_line_holding_the_group_separator(spark):
+    """An nginx line whose user agent holds ``\\x01``, the separator of the
+    one-pass regex parse, keeps every group whole on the flagship parse."""
+    line = (
+        '10.0.0.1 - - [10/Oct/2023:13:55:36 +0000] "GET /a HTTP/1.1" 200 12 '
+        '"-" "Mozilla\x01/5.0 (X11)" "-"'
+    )
+    seq = _seq_of(spark, [("ua", line, "nginx")])
+    got = flagship.parsed_events_from(seq).collect()
+    groups = re.fullmatch(flagship.NGINX_REGEX, line).groups()
+    assert [dict(r[FIELDS]) for r in got] == [dict(zip(flagship.NGINX_KEYS, groups))]
+    assert got[0][FIELDS]["http_user_agent"] == "Mozilla\x01/5.0 (X11)"
 
 
 def test_second_build_makes_few_py4j_round_trips(spark, sf_dir, monkeypatch):

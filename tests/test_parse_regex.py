@@ -105,3 +105,13 @@ def test_full_match_rejects_trailing_newline(spark):
         _events(spark, ["abc", "abc\n"])
     )
     assert _fields(out) == {0: {"w": "abc"}, 1: {"content": "abc\n"}}
+
+
+def test_group_holding_the_separator_stays_whole(spark):
+    """The one-pass parse joins the groups with ``\\x01`` and splits them
+    again; a row whose groups hold ``\\x01`` itself is extracted per group,
+    so its values are not split apart."""
+    out = RegexParser(r"(\S+) (\S+)", ["k1", "k2"]).apply(
+        _events(spark, ["a\x01b c", "a b"])
+    )
+    assert _fields(out) == {0: {"k1": "a\x01b", "k2": "c"}, 1: {"k1": "a", "k2": "b"}}

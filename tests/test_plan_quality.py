@@ -47,6 +47,29 @@ def test_flagship_lookup_is_a_local_relation(spark, sf_dir):
     assert "LocalTableScan" in lines[b + 1], lines
 
 
+def test_flagship_routes_each_source_once(spark, sf_dir):
+    """Every route condition reads only lookup columns, so the matched sinks
+    are folded into the lookup's LocalTableScan at plan time: no route
+    predicate is evaluated per event, and the fan-out is one Generate."""
+    plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))
+    tree, details = plan.split("\n\n", 1)
+    assert "team-b" not in plan and "= prod" not in plan, plan
+    assert tree.count("Generate") == 1, tree
+    node = re.search(r"LocalTableScan \((\d+)\)", tree).group(1)
+    output = details.split(f"({node}) LocalTableScan", 1)[1].split("\n\n", 1)[0]
+    assert "sinks" in output, output
+
+
+def test_flagship_aggregate_has_no_range_sort(spark, sf_dir):
+    """The ≤k aggregate rows are sorted in one partition: no range-partition
+    exchange (and the sampling job it costs), and the rows still come back
+    sorted by sink."""
+    df = flagship.pipeline_aggregates(spark, sf_dir)
+    assert "rangepartitioning" not in _plan(df)
+    sinks = [r["sink"] for r in df.collect()]
+    assert sinks == sorted(sinks) and len(sinks) == 3, sinks
+
+
 def test_flagship_aggregate_is_partial(spark, sf_dir):
     """Two HashAggregate nodes around the exchange = map-side combine."""
     plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))

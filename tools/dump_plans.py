@@ -49,11 +49,15 @@ def main() -> None:
             "Exactly ONE parquet scan and ONE Python node, the Arrow decode "
             "(MapInArrow), for all three formats; the filter to the parsed sources sits "
             "below it; per-source parse is one CASE-dispatched "
-            "projection; BroadcastHashJoin for the lookup (never "
+            "projection; inner BroadcastHashJoin for the lookup (never "
             "SortMergeJoin), whose broadcast side is a LocalTableScan (no "
-            "Scan ExistingRDD, so no Spark stage of its own); explode fan-out "
-            "(no N-scan recompute); partial "
-            "HashAggregate pairs around a single tiny sink-key Exchange.",
+            "Scan ExistingRDD, so no Spark stage of its own) that already "
+            "carries each source's matched ``sinks``: the routes are folded "
+            "into the lookup at plan time, and no route predicate runs per "
+            "event; ONE Generate, the explode fan-out (no N-scan recompute); "
+            "partial HashAggregate pairs around a single tiny sink-key "
+            "Exchange; the ≤k result is sorted after a Coalesce to one "
+            "partition (no range Exchange, no global Sort).",
         ),
         (
             "dedup_minhash — shingle→minhash→LSH(capped)→Jaccard",
