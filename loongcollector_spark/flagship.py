@@ -22,9 +22,9 @@ aggregates fold map-side into one tiny sink-key shuffle, and the write
 rebalances by sink, the key it partitions its output by, with AQE sizing and
 splitting the partitions of a hot sink. The lookup join is broadcast (no
 shuffle), from a LocalRelation: Catalyst folds the ``sinks`` projection
-into it, so the broadcast reads the rows on the driver and runs no Spark
-stage of its own. The join is inner, as the oracle's JOIN: a source with no
-lookup row reaches no sink (every PARSERS source has one).
+into it: no RDD scan, though BroadcastExchange still runs the 4-row
+LocalTableScan as a small job before each main stage. The join is inner, as
+the oracle's JOIN: a source with no lookup row reaches no sink.
 
 Built once per JVM, as the reference builds its pipeline once and then runs
 it on every group (CollectionPipeline::Init, then Process): the Columns that
@@ -46,7 +46,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from .aggregate import sink_aggregates
-from .operators.base import FIELDS, to_events
+from .operators.base import FIELDS
 from .operators.common import ParserOptions
 from .operators.parse import DelimiterParser, JsonParser, RegexParser
 from .routing import RouteCondition, Router
@@ -115,14 +115,15 @@ class _Columns:
 
 @per_jvm
 def _columns() -> _Columns:
-    src = F.element_at(F.col(FIELDS), F.lit("content"))
+    src = F.col("content")
     success = new_map = None
     for source, parser in PARSERS.items():
         ok, parsed = parser.parse(src)
         hit = F.col("source") == source
         success = F.when(hit, ok) if success is None else success.when(hit, ok)
         new_map = F.when(hit, parsed) if new_map is None else new_map.when(hit, parsed)
-    keep, fields = ParserOptions().columns(success.otherwise(False), new_map, src)
+    # the decoded line is the whole event: an empty base folds the erase check away
+    keep, fields = ParserOptions().columns(success.otherwise(False), new_map, src, F.expr("map()"))
     return _Columns(
         sources=F.col("source").isin(list(PARSERS)),
         keep=keep,
@@ -134,16 +135,17 @@ def _columns() -> _Columns:
 def parsed_events_from(seq: DataFrame) -> DataFrame:
     """Parse a sequences frame into the unified event frame (doc_id, source,
     n_tok, fields): one Arrow decode, then one projection that dispatches on
-    ``source`` to the parser for that format. Rows of any other source are
-    discarded before the decode."""
+    ``source`` to the parser for that format, over the bare ``content``.
+    Rows of any other source are discarded before the decode."""
     c = _columns()
     # filter before the python stage (a filter does not push through it), so
     # rows no parser takes are neither shuffled nor decoded
     seq = seq.filter(c.sources)
     # drop the token arrays INSIDE the python stage: a .drop after it would
     # ship the dominant payload Python→JVM just to discard it
-    ev = to_events(decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True))
-    return ev.filter(c.keep).withColumn(FIELDS, c.fields)
+    ev = decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True)
+    others = [name for name in ev.columns if name != "content"]
+    return ev.filter(c.keep).select(*others, c.fields.alias(FIELDS))
 
 
 def routed_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
@@ -161,7 +163,8 @@ def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pipeline_aggregates_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
-    return sink_aggregates(routed_from(spark, seq))
+    # only what the aggregates read: the Python stage cannot prune its inputs
+    return sink_aggregates(routed_from(spark, seq.select("tokens", "n_tok", "source")))
 
 
 def pipeline_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,7 +183,7 @@ def drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = sequences_df(spark, sf_dir)
     inputs = seq.groupBy("source").agg(F.count(F.lit(1)).alias("input_events"))
     parsed = (
-        parsed_events_from(seq)
+        parsed_events_from(seq.select("tokens", "source"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("parsed_events"))
     )

@@ -28,8 +28,6 @@ from typing import Iterable, Mapping
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from ..session import per_jvm
-
 FIELDS = "fields"
 
 _EMPTY_MAP = "map()"
@@ -67,12 +65,7 @@ def to_events(df: DataFrame, content_col: str = "content", source_key: str = "co
     """Wrap a raw-string column into the canonical event frame: all other
     columns preserved, plus ``fields = map(source_key -> content)``."""
     others = [c for c in df.columns if c != content_col]
-    return df.select(*others, _event_map(content_col, source_key))
-
-
-@per_jvm
-def _event_map(content_col: str, source_key: str) -> Column:
-    return F.create_map(F.lit(source_key), F.col(content_col)).alias(FIELDS)
+    return df.select(*others, F.create_map(F.lit(source_key), F.col(content_col)).alias(FIELDS))
 
 
 def project_fields(

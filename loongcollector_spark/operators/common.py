@@ -62,17 +62,19 @@ class ParserOptions:
         return df.withColumn(FIELDS, fields)
 
     def columns(
-        self, success: Column, new_map: Column, src: Column | None = None
+        self, success: Column, new_map: Column, src: Column | None = None, base: Column | None = None
     ) -> tuple[Column | None, Column]:
         """The truth table as Columns: ``(keep, fields)``, the row filter
         (None when every row is kept) and the merged ``fields`` map. They
-        depend on no DataFrame, so one build serves any number of frames."""
+        depend on no DataFrame, so one build serves any number of frames.
+        ``base``: the contents other than the source key (default ``fields``
+        without it); for a bare line, an empty map, and erasing folds to true."""
         if src is None:
             src = F.element_at(F.col(FIELDS), F.lit(self.source_key))
 
         empty = F.expr("map()")
-        # event contents minus the consumed source key
-        base = F.map_filter(F.col(FIELDS), lambda k, v: k != F.lit(self.source_key))
+        if base is None:
+            base = F.map_filter(F.col(FIELDS), lambda k, v: k != F.lit(self.source_key))
 
         keep = None
         if not self.keep_fail:

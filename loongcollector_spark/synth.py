@@ -129,9 +129,9 @@ ROUTE_RULES = [
 
 def source_lookup_df(spark: SparkSession) -> DataFrame:
     """The lookup as a LocalRelation, from the VALUES text the DuckDB oracle
-    joins: its broadcast is a driver-side LocalTableScan, where a
-    ``createDataFrame`` of the rows is an RDD scan that costs every job a
-    separate Spark stage."""
+    joins, not the RDD scan of a ``createDataFrame``. BroadcastExchange still
+    executes its LocalTableScan as a small Spark job (the rows parallelized,
+    one task per row up to the default parallelism) before every main stage."""
     return spark.sql(f"SELECT * FROM {source_lookup_values_sql()}")
 
 

@@ -3,6 +3,7 @@
 the write's rebalance splitting a hot sink, desensitize masking."""
 
 import importlib.util
+import itertools
 import json
 import os
 import re
@@ -16,11 +17,14 @@ from pathlib import Path
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import DataFrame
 
 from loongcollector_spark import flagship
 from loongcollector_spark.aggregate import sink_aggregates
-from loongcollector_spark.operators.base import FIELDS, to_events
+from loongcollector_spark.operators.base import FIELDS, fget, to_events
+from loongcollector_spark.operators.common import ParserOptions
 from loongcollector_spark.operators.transforms import Desensitize
 from loongcollector_spark.plans.checkpoint import Manifest, resumable_write
 from loongcollector_spark.routing import RouteCondition, Router
@@ -141,6 +145,92 @@ def test_nginx_line_holding_the_group_separator(spark):
     groups = re.fullmatch(flagship.NGINX_REGEX, line).groups()
     assert [dict(r[FIELDS]) for r in got] == [dict(zip(flagship.NGINX_KEYS, groups))]
     assert got[0][FIELDS]["http_user_agent"] == "Mozilla\x01/5.0 (X11)"
+
+
+# every combination of the truth table's four options
+_OPTION_GRID = [
+    ParserOptions(keep_fail=kf, keep_succeed=ks, renamed_source_key=rk, coping_raw_log=cr)
+    for kf, ks, rk, cr in itertools.product((False, True), (False, True), (None, "raw"), (False, True))
+]
+
+
+@pytest.fixture(scope="module")
+def fixture_lines(spark, sf_dir):
+    """The first four decoded fixture lines of each flagship source, plus a
+    malformed nginx line."""
+    seq = sequences_df(spark, sf_dir).orderBy("doc_id")
+    rows = seq.select("source", decode_tokens("tokens").alias("content")).collect()
+    by_source = {s: [r["content"] for r in rows if r["source"] == s] for s in flagship.PARSERS}
+    malformed = next(line for line in by_source["nginx"] if line.startswith("MALFORMED"))
+    return [line for lines in by_source.values() for line in lines[:4]] + [malformed]
+
+
+def _lines(fixture):
+    """Fixture lines, cut short (malformed), with a ``\x01`` spliced in, empty,
+    NULL, or short noise over the formats' delimiters."""
+    pick = st.sampled_from(fixture)
+    at = st.integers(0, 160)
+    cut = st.tuples(pick, at).map(lambda t: t[0][: t[1]])
+    sep = st.tuples(pick, at).map(lambda t: t[0][: t[1]] + "\x01" + t[0][t[1]:])
+    noise = st.text(alphabet='ab1 \t{}":,[]-\x01', max_size=20)
+    line = st.one_of(pick, cut, sep, noise, st.just(""), st.none())
+    return st.lists(line, min_size=1, max_size=10)
+
+
+def _parse_by_index(src):
+    """(success, parsed map) over ``src`` of the PARSERS parser numbered by
+    column ``p``: one CASE, as the flagship dispatches on ``source``."""
+    success = new_map = None
+    for n, parser in enumerate(flagship.PARSERS.values()):
+        ok, parsed = parser.parse(src)
+        hit = F.col("p") == n
+        success = F.when(hit, ok) if success is None else success.when(hit, ok)
+        new_map = F.when(hit, parsed) if new_map is None else new_map.when(hit, parsed)
+    return success.otherwise(False), new_map
+
+
+@pytest.fixture(scope="module")
+def bare_columns(spark):
+    """Per option combination, (kept, fields) of ``columns(..., base=<empty
+    map>)`` over a bare ``content`` column."""
+    content = F.col("content")
+    parsed, out = _parse_by_index(content), []
+    for k, opts in enumerate(_OPTION_GRID):
+        keep, fields = opts.columns(*parsed, content, base=F.expr("map()"))
+        kept = F.lit(True) if keep is None else F.coalesce(keep, F.lit(False))
+        out.append(F.struct(kept.alias("kept"), fields.alias(FIELDS)).alias(f"c{k}"))
+    return out
+
+
+@given(st.data())
+@settings(max_examples=5, deadline=None)
+def test_bare_line_columns_equal_finalize_over_events(spark, fixture_lines, bare_columns, data):
+    """``columns(..., base=<empty map>)`` over a bare ``content`` column, as
+    the flagship parses, keeps the same rows with the same ``fields`` as
+    ``finalize`` over ``to_events`` of the same lines, for every PARSERS
+    parser under every option combination."""
+    lines = data.draw(_lines(fixture_lines))
+    df = spark.createDataFrame(
+        [(i, p, line) for i, line in enumerate(lines) for p in range(len(flagship.PARSERS))],
+        "i int, p int, content string",
+    )
+    ev, src = to_events(df), fget("content")
+    parsed = _parse_by_index(src)
+    finalized = [
+        opts.finalize(ev, *parsed, src).select(F.lit(k).alias("k"), "i", "p", FIELDS)
+        for k, opts in enumerate(_OPTION_GRID)
+    ]
+    got = sorted(
+        (k, r["i"], r["p"], sorted(r[f"c{k}"][FIELDS].items()))
+        for r in df.select("i", "p", *bare_columns).collect()
+        for k in range(len(_OPTION_GRID))
+        if r[f"c{k}"]["kept"]
+    )
+    want = sorted(
+        (r["k"], r["i"], r["p"], sorted(r[FIELDS].items()))
+        for r in reduce(DataFrame.unionByName, finalized).collect()
+    )
+    assert got == want, lines
 
 
 def test_second_build_makes_few_py4j_round_trips(spark, sf_dir, monkeypatch):

@@ -316,6 +316,30 @@ def test_source_filter_below_python_stage(spark, sf_dir):
     assert "IN (nginx,app-json,csvlog)" in cond, cond
 
 
+def test_flagship_keep_filter_reads_the_bare_line(spark, sf_dir):
+    """The keep Filter above the Python stage reads the decoded ``content``
+    itself: no one-entry ``map(content, …)`` built per reference, no
+    ``element_at`` into it and no ShouldEraseEvent ``map_filter`` (a bare
+    line has no other contents)."""
+    tree, details = _plan(flagship.pipeline_aggregates(spark, sf_dir)).split("\n\n", 1)
+    lines = tree.splitlines()
+    py = next(i for i, line in enumerate(lines) if python_nodes(line))
+    node = re.search(r"Filter \((\d+)\)", lines[py - 1]).group(1)
+    cond = details.split(f"({node}) Filter", 1)[1].split("\n\n", 1)[0]
+    assert "RLIKE(content#" in cond, cond
+    for banned in ("map(", "map_filter", "element_at"):
+        assert banned not in cond, cond
+
+
+def test_aggregates_python_stage_reads_only_what_they_need(spark, sf_dir):
+    """A Python stage cannot prune its inputs, so the aggregates hand the
+    decode only ``tokens, n_tok, source``: no ``doc_id`` is sent to Python
+    and back to be dropped."""
+    plan = _plan(flagship.pipeline_aggregates(spark, sf_dir))
+    arrow = re.search(r"\(\d+\) MapInArrow\nInput \[\d+\]: \[([^\]]*)\]", plan).group(1)
+    assert re.sub(r"#\d+L?", "", arrow).split(", ") == ["tokens", "n_tok", "source"], arrow
+
+
 def test_gopher_repetition_builds_grams_once(spark, sf_dir):
     """The words split and each gram array must be built ONCE per row (the
     CollapseProject re-inlining trap): one split(lower(..)), one concat_ws

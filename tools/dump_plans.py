@@ -6,6 +6,7 @@ Usage: python tools/dump_plans.py"""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -22,6 +23,15 @@ def _plan(df) -> str:
             "formatted"
         )
     )
+
+
+def _renumber(text: str) -> str:
+    """``text`` with its ``#<n>`` expression ids and ``plan_id=<n>`` numbered
+    from 0 by first appearance: independent of earlier sections' plans."""
+    for pattern in (r"(?<=[\w)]#)\d+", r"(?<=plan_id=)\d+"):
+        ids: dict[str, int] = {}
+        text = re.sub(pattern, lambda m: str(ids.setdefault(m.group(), len(ids))), text)
+    return text
 
 
 def _cut(text: str) -> str:
@@ -48,10 +58,12 @@ def main() -> None:
             flagship.pipeline_aggregates(spark, SF),
             "Exactly ONE parquet scan and ONE Python node, the Arrow decode "
             "(MapInArrow), for all three formats; the filter to the parsed sources sits "
-            "below it; per-source parse is one CASE-dispatched "
-            "projection; inner BroadcastHashJoin for the lookup (never "
+            "below it, and it takes only tokens, n_tok and source; per-source "
+            "parse is one CASE-dispatched filter and projection over the "
+            "decoded ``content`` itself (no one-entry map, no erase check); "
+            "inner BroadcastHashJoin for the lookup (never "
             "SortMergeJoin), whose broadcast side is a LocalTableScan (no "
-            "Scan ExistingRDD, so no Spark stage of its own) that already "
+            "Scan ExistingRDD; the broadcast still runs it as a small job) that already "
             "carries each source's matched ``sinks``: the routes are folded "
             "into the lookup at plan time, and no route predicate runs per "
             "event; ONE Generate, the explode fan-out (no N-scan recompute); "
@@ -245,7 +257,7 @@ def main() -> None:
     for title, df, invariant in sections:
         out.append(f"\n## {title}\n")
         out.append(f"**Invariant**: {invariant}\n")
-        out.append("```\n" + _cut(_plan(df).strip()) + "\n```\n")
+        out.append("```\n" + _cut(_renumber(_plan(df).strip())) + "\n```\n")
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(path, "w") as fh:
