@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary`` columns
-with typed metadata, processed by Arrow-batched ``mapInPandas`` stages.
+with typed metadata, processed by Arrow-batched ``mapInArrow`` stages
+(``operators.base.payload_rows``).
 
 Two tiers:
 - **REAL decode** for formats needing no external codecs: P6 PPM images and
@@ -16,17 +17,11 @@ Two tiers:
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField
+
+from ..operators.base import payload_rows
 
 # metadata columns a multimodal table carries next to the blob
 MEDIA_META_SCHEMA = "struct<kind:string,width:int,height:int,sample_rate:int>"
@@ -61,29 +56,19 @@ def _decode_stub(payload: bytes) -> tuple[int, int, int]:
 
 def extract_media_features(df: DataFrame, media_col: str = "media") -> DataFrame:
     """Arrow-batched feature extraction over the binary column. One
-    ``mapInPandas`` pass; per-batch numpy/bytes work, no per-row Spark round
-    trips. Output adds (n_bytes, first_byte, checksum)."""
-    base_fields = list(df.schema.fields)
-    schema = StructType(
-        base_fields
-        + [
+    ``mapInArrow`` pass (``payload_rows``), no per-row Spark round trips.
+    Output adds (n_bytes, first_byte, checksum)."""
+    return payload_rows(
+        df,
+        [media_col],
+        df.columns,
+        [
             StructField("n_bytes", LongType()),
             StructField("first_byte", IntegerType()),
             StructField("checksum", IntegerType()),
-        ]
+        ],
+        lambda r: [_decode_stub(r[media_col])],
     )
-    cols = [f.name for f in base_fields]
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_decode_stub(b) for b in pdf[media_col]]
-            pdf = pdf[cols].copy()
-            pdf["n_bytes"] = [f[0] for f in feats]
-            pdf["first_byte"] = [f[1] for f in feats]
-            pdf["checksum"] = [f[2] for f in feats]
-            yield pdf
-
-    return df.mapInPandas(mapper, schema=schema)
 
 
 # --- REAL decoders (pure stdlib/numpy — no external codecs needed) ----------
@@ -158,46 +143,50 @@ def attach_real_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     oracle can predict every decoded feature in closed form)."""
     from pyspark.sql.types import BinaryType, StringType
 
-    base_fields = [df.schema[id_col]]
-    schema = StructType(
-        base_fields
-        + [StructField("media", BinaryType()), StructField("kind", StringType())]
+    def rows_of(r: dict) -> list[tuple]:
+        i = r[id_col]
+        if i % 3 == 0:
+            wav = make_wav(8000 + (i % 4) * 1000, 64 + i % 32 * 2, 100 + i % 100)
+            return [(wav, "audio")]
+        ppm = make_ppm(8 + i % 16, 4 + i % 8, i * 3 % 256, i * 5 % 256, i * 7 % 256)
+        return [(ppm, "image")]
+
+    return payload_rows(
+        df,
+        [id_col],
+        [id_col],
+        [StructField("media", BinaryType()), StructField("kind", StringType())],
+        rows_of,
     )
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            media, kinds = [], []
-            for i in ids:
-                if i % 3 == 0:
-                    media.append(
-                        make_wav(8000 + (i % 4) * 1000, 64 + i % 32 * 2, 100 + i % 100)
-                    )
-                    kinds.append("audio")
-                else:
-                    media.append(
-                        make_ppm(
-                            8 + i % 16, 4 + i % 8,
-                            i * 3 % 256, i * 5 % 256, i * 7 % 256,
-                        )
-                    )
-                    kinds.append("image")
-            yield pd.DataFrame({id_col: ids, "media": media, "kind": kinds})
-
-    return df.select(id_col).mapInPandas(mapper, schema=schema)
 
 
 def decode_media_features(df: DataFrame, media_col: str = "media") -> DataFrame:
     """REAL decode + feature extraction over the binary column, dispatched on
     magic bytes: P6 PPM → (width, height, mean_r/g/b), RIFF WAV →
     (sample_rate, n_samples, rms); anything else → nulls with
-    media_format='unknown'. One Arrow mapInPandas pass."""
+    media_format='unknown'. One Arrow ``mapInArrow`` pass."""
     from pyspark.sql.types import DoubleType, StringType
 
-    base_fields = list(df.schema.fields)
-    schema = StructType(
-        base_fields
-        + [
+    def rows_of(r: dict) -> list[tuple]:
+        import numpy as np
+
+        b = r[media_col] or b""
+        if b.startswith(PPM_MAGIC):
+            w, h, pix = decode_ppm(b)
+            m = pix.reshape(-1, 3).mean(axis=0)
+            return [("ppm", w, h, round(float(m[0]), 4), round(float(m[1]), 4),
+                     round(float(m[2]), 4), None, None, None)]
+        if b.startswith(WAV_MAGIC):
+            rate, samples = decode_wav(b)
+            rms = float(np.sqrt(np.mean(samples.astype(np.float64) ** 2)))
+            return [("wav", None, None, None, None, None, rate, len(samples), round(rms, 4))]
+        return [("unknown",) + (None,) * 8]
+
+    return payload_rows(
+        df,
+        [media_col],
+        df.columns,
+        [
             StructField("media_format", StringType()),
             StructField("width", IntegerType()),
             StructField("height", IntegerType()),
@@ -207,39 +196,6 @@ def decode_media_features(df: DataFrame, media_col: str = "media") -> DataFrame:
             StructField("sample_rate", IntegerType()),
             StructField("n_samples", LongType()),
             StructField("rms", DoubleType()),
-        ]
+        ],
+        rows_of,
     )
-    cols = [f.name for f in base_fields]
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for b in pdf[media_col]:
-                b = bytes(b) if b is not None else b""
-                if b.startswith(PPM_MAGIC):
-                    w, h, pix = decode_ppm(b)
-                    m = pix.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        ("ppm", w, h, round(float(m[0]), 4), round(float(m[1]), 4),
-                         round(float(m[2]), 4), None, None, None)
-                    )
-                elif b.startswith(WAV_MAGIC):
-                    rate, samples = decode_wav(b)
-                    rms = float(np.sqrt(np.mean(samples.astype(np.float64) ** 2)))
-                    rows.append(
-                        ("wav", None, None, None, None, None, rate,
-                         len(samples), round(rms, 4))
-                    )
-                else:
-                    rows.append(("unknown",) + (None,) * 8)
-            out = pdf[cols].copy()
-            for i, name in enumerate(
-                ["media_format", "width", "height", "mean_r", "mean_g", "mean_b",
-                 "sample_rate", "n_samples", "rms"]
-            ):
-                out[name] = [r[i] for r in rows]
-            yield out
-
-    return df.mapInPandas(mapper, schema=schema)

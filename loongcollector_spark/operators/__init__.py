@@ -1,4 +1,4 @@
-from .base import FIELDS, Operator, fget, fhas, fset_map, to_events, project_fields
+from .base import FIELDS, Operator, fget, fhas, to_events, project_fields
 from .common import ParserOptions, RAW_LOG_KEY
 
 __all__ = [
@@ -6,7 +6,6 @@ __all__ = [
     "Operator",
     "fget",
     "fhas",
-    "fset_map",
     "to_events",
     "project_fields",
     "ParserOptions",

@@ -12,7 +12,9 @@ Spark mapping (SURVEY.md §1.4): one DataFrame row per event with
 
 All operators are Column-expression compilers over the ``fields`` map: they run
 JVM-side under whole-stage codegen (map_concat / map_filter / element_at are
-all codegen-able); nothing row-at-a-time in Python.
+all codegen-able); nothing row-at-a-time in Python. The one exception is
+``payload_rows``, the shared stage of the binary payload decoders, whose
+wire formats have no Column-expression decode.
 
 The session must set ``spark.sql.mapKeyDedupPolicy=LAST_WIN`` (session.py):
 ``map_concat(a, b)`` then means "b overwrites a", which gives us both
@@ -23,14 +25,13 @@ semantics (ProcessorParseRegexNative.cpp:176-184 AddLog never overwrites).
 from __future__ import annotations
 
 from abc import ABC, abstractmethod
-from typing import Iterable, Mapping
+from typing import Callable, Iterable, Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import StructField, StructType
 
 FIELDS = "fields"
-
-_EMPTY_MAP = "map()"
 
 
 def fget(key: str, fields: str = FIELDS) -> Column:
@@ -42,23 +43,60 @@ def fhas(key: str, fields: str = FIELDS) -> Column:
     return F.map_contains_key(F.col(fields), F.lit(key))
 
 
-def fset_map(pairs: Mapping[str, Column]) -> Column:
-    """Build a map<string,string> literal-keyed from column values."""
-    if not pairs:
-        return F.expr(_EMPTY_MAP)
-    args: list[Column] = []
-    for k, v in pairs.items():
-        args.append(F.lit(k))
-        args.append(v.cast("string"))
-    return F.create_map(*args)
-
-
 def fremove(keys: Iterable[str], fields: str = FIELDS) -> Column:
     ks = list(keys)
     if not ks:
         return F.col(fields)
     arr = F.array(*[F.lit(k) for k in ks])
     return F.map_filter(F.col(fields), lambda k, v: ~F.array_contains(arr, k))
+
+
+def payload_rows(
+    df: DataFrame,
+    cols: list[str],
+    passthrough: list[str],
+    out_fields: list[StructField],
+    rows_of: Callable[[dict], list[tuple]],
+) -> DataFrame:
+    """The one Python stage of the per-row payload decoders (binary protobuf,
+    profile and media ingest): ONE ``mapInArrow`` pass over ``passthrough +
+    cols``, output schema = the passthrough fields, then ``out_fields``.
+
+    ``rows_of(row)`` sees each input row as a dict of ``cols`` (Arrow's own
+    Python values: nulls are ``None``, ints exact, maps are (key, value)
+    lists) and returns that row's output tuples, one per ``out_fields``
+    layout; ``[]`` drops the line (the reference drops a payload that fails
+    to decode, never the job — ProcessorParseFromPBNative.cpp:96-104).
+    Passthrough columns are repeated onto every tuple of their row as the
+    batch's own Arrow values (``take``), never through Python.
+
+    ``rows_of`` is pickled to the workers: it must not refer to a DataFrame
+    (not even ``df.columns``) — copy what it needs into locals first."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols, passthrough = list(cols), list(passthrough)
+    for c in passthrough + cols:
+        if c not in df.columns:
+            raise ValueError(f"missing column {c}")
+    out = StructType(list(out_fields))
+    schema = StructType([df.schema[c] for c in passthrough] + out.fields)
+    types = to_arrow_schema(out).types
+
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            idx, rows = [], []
+            for i, row in enumerate(batch.select(cols).to_pylist()):
+                for t in rows_of(row):
+                    idx.append(i)
+                    rows.append(t)
+            kept = batch.select(passthrough).take(pa.array(idx, pa.int64()))
+            values = list(zip(*rows)) or [()] * len(types)
+            outs = [pa.array(v, type=t) for v, t in zip(values, types)]
+            yield pa.RecordBatch.from_arrays(kept.columns + outs, names=schema.names)
+
+    read = passthrough + [c for c in cols if c not in passthrough]
+    return df.select(*read).mapInArrow(mapper, schema)
 
 
 def to_events(df: DataFrame, content_col: str = "content", source_key: str = "content") -> DataFrame:

@@ -46,21 +46,26 @@ Documented divergences:
 - profileID falls back to a deterministic md5-of-chunk uuid instead of
   uuid4 (same policy as the pprof/groups decoders).
 
-Execution shape: ONE Arrow-batched mapInPandas pass per chunk row, zero
-shuffle.
+Execution shape: ONE Arrow ``mapInArrow`` pass (``base.payload_rows``), one
+chunk per row, zero shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .base import payload_rows
 from .pb import PBError, _fields, _len_field, _varint_field, read_varint
-from .pprof_profile import MASK64, detect_profile_kind, fmt_position_and_name, marshal_labels
+from .pprof_profile import (
+    MASK64,
+    PROFILE_LOG_FIELDS,
+    detect_profile_kind,
+    fmt_position_and_name,
+    marshal_labels,
+)
 from .xxh import xxh64
 
 # parser.go:40-48
@@ -357,23 +362,6 @@ _EVENT_T = (
     "frames:array<struct<type:string,method:string>>>>"
 )
 
-_OUT_FIELDS = [
-    ("time_sec", LongType()),
-    ("time_ns", LongType()),
-    ("name", StringType()),
-    ("stack", StringType()),
-    ("stackID", StringType()),
-    ("language", StringType()),
-    ("dataType", StringType()),
-    ("durationNs", LongType()),
-    ("profileID", StringType()),
-    ("labels", StringType()),
-    ("units", StringType()),
-    ("valueTypes", StringType()),
-    ("aggTypes", StringType()),
-    ("type", StringType()),
-    ("val", StringType()),
-]
 
 
 class JfrChunkParser:
@@ -381,7 +369,7 @@ class JfrChunkParser:
     ``events`` array column (schema ``_EVENT_T``), an optional binary
     ``labels_pb`` LabelsSnapshot column and optional ``spy_name``/
     ``sample_rate``/``start_ns``/``end_ns``/``meta_tags``/``extra_tags``
-    meta columns. One mapInPandas pass; a chunk whose labels snapshot fails
+    meta columns. One ``mapInArrow`` pass; a chunk whose labels snapshot fails
     to decode drops that row, never the job."""
 
     def __init__(self, events_col: str = "events", passthrough: list[str] | None = None):
@@ -389,10 +377,7 @@ class JfrChunkParser:
         self.passthrough = passthrough or []
 
     def apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-
         events_col = self.events_col
-        passthrough = list(self.passthrough)
         opt = [
             c
             for c in (
@@ -401,61 +386,26 @@ class JfrChunkParser:
             )
             if c in df.columns
         ]
-        base = [df.schema[c] for c in passthrough]
-        schema = StructType(base + [StructField(n, t, True) for n, t in _OUT_FIELDS])
-        names = [f.name for f in schema.fields]
 
-        def mapper(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    evs = r[events_col]
-                    if evs is None:
-                        continue
-                    kw = {}
-                    if "spy_name" in opt and r["spy_name"] is not None:
-                        kw["spy_name"] = str(r["spy_name"])
-                    if "extra_tags" in opt and r["extra_tags"] is not None:
-                        kw["extra_tags"] = dict(r["extra_tags"])
-                    if "meta_tags" in opt and r["meta_tags"] is not None:
-                        kw["meta_tags"] = dict(r["meta_tags"])
-                    for c in ("sample_rate", "start_ns", "end_ns"):
-                        if c in opt and r[c] is not None and not pd.isna(r[c]):
-                            kw[c] = int(r[c])
-                    try:
-                        if "labels_pb" in opt and r["labels_pb"] is not None:
-                            kw["labels_snapshot"] = decode_labels_snapshot(
-                                bytes(r["labels_pb"])
-                            )
-                        logs = jfr_chunk_logs(
-                            [
-                                {
-                                    "kind": e["kind"],
-                                    "context_id": e["context_id"],
-                                    "state": e["state"],
-                                    "name": e["name"],
-                                    "value": e["value"],
-                                    "tlab_size": e["tlab_size"],
-                                    "alloc_size": e["alloc_size"],
-                                    "duration": e["duration"],
-                                    "frames": [
-                                        {"type": f["type"], "method": f["method"]}
-                                        for f in e["frames"]
-                                    ]
-                                    if e["frames"] is not None
-                                    else None,
-                                }
-                                for e in evs
-                            ],
-                            **kw,
-                        )
-                    except (PBError, ValueError, TypeError, KeyError):
-                        continue  # fail the line, never the job
-                    keep = tuple(r[c] for c in passthrough)
-                    for log in logs:
-                        rows.append(keep + tuple(log[n] for n, _t in _OUT_FIELDS))
-                yield pd.DataFrame(rows, columns=names)
+        def rows_of(r: dict) -> list[tuple]:
+            evs = r[events_col]
+            if evs is None:
+                return []
+            kw = {}
+            if r.get("spy_name") is not None:
+                kw["spy_name"] = r["spy_name"]
+            for c in ("extra_tags", "meta_tags"):
+                if r.get(c) is not None:
+                    kw[c] = dict(r[c])
+            for c in ("sample_rate", "start_ns", "end_ns"):
+                if r.get(c) is not None:
+                    kw[c] = int(r[c])
+            try:
+                if r.get("labels_pb") is not None:
+                    kw["labels_snapshot"] = decode_labels_snapshot(r["labels_pb"])
+                logs = jfr_chunk_logs(evs, **kw)
+            except (PBError, ValueError, TypeError, KeyError):
+                return []  # fail the line, never the job
+            return [tuple(log[f.name] for f in PROFILE_LOG_FIELDS) for log in logs]
 
-        return df.select(*(passthrough + [events_col] + opt)).mapInPandas(
-            mapper, schema=schema
-        )
+        return payload_rows(df, [events_col] + opt, self.passthrough, PROFILE_LOG_FIELDS, rows_of)

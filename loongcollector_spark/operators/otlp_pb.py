@@ -8,10 +8,10 @@ SLS-log conversion as the JSON path; undecodable payloads drop the event.
 
 Spark-first design: decode the wire bytes to the OTLP/JSON representation
 (hex-encoded ids, uint64s as strings — the standard proto3-JSON mapping used
-by protojson) in ONE Arrow ``mapInPandas`` pass, then reuse the EXISTING
-column-expression parsers (operators/otel.py OtelTraceParser /
-OtelMetricParser) unchanged. The conversion and the field-map logic live
-once; protobuf and JSON inputs cannot drift apart.
+by protojson) in ONE Arrow ``mapInArrow`` pass (``base.payload_rows``), then
+reuse the EXISTING column-expression parsers (operators/otel.py
+OtelTraceParser / OtelMetricParser) unchanged. The conversion and the
+field-map logic live once; protobuf and JSON inputs cannot drift apart.
 
 Field numbers transcribed from the public opentelemetry-proto schema
 (trace/v1/trace.proto, metrics/v1/metrics.proto, common/v1/common.proto).
@@ -23,12 +23,10 @@ from __future__ import annotations
 
 import json
 import struct
-from typing import Iterator
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .base import FIELDS
+from .base import FIELDS, payload_rows
 from .pb import PBError, _fields, _s, read_varint
 
 _WT_VARINT, _WT_I64, _WT_LEN, _WT_I32 = 0, 1, 2, 5
@@ -469,50 +467,36 @@ class OtelPbToJson:
     def apply(self, df: DataFrame) -> DataFrame:
         import base64
 
-        import pandas as pd
-
         decode = {
             "trace": decode_traces,
             "metric": decode_metrics,
             "log": decode_logs,
         }[self.signal]
         src_key, enc = self.source_key, self.binary_encoding
-        schema = df.schema
 
-        def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                keep_rows = []
-                for idx, fmap in pdf[FIELDS].items():
-                    raw = (fmap or {}).get(src_key)
-                    if raw is None:
-                        continue
-                    try:
-                        if enc == "hex":
-                            payload = bytes.fromhex(raw)
-                        elif enc == "base64":
-                            payload = base64.b64decode(raw)
-                        else:
-                            payload = raw.encode("latin1")
-                    except ValueError:
-                        continue
-                    d = decode(payload)
-                    if d is None:
-                        continue
-                    out = dict(fmap)
-                    out[src_key] = json.dumps(d, separators=(",", ":"))
-                    keep_rows.append((idx, out))
-                if not keep_rows:
-                    # preserve original dtypes: assigning [] would retype the
-                    # map column to float64 and break the Arrow writer
-                    yield pdf.iloc[0:0]
-                    continue
-                sub = pdf.loc[[i for i, _ in keep_rows]].copy()
-                sub[FIELDS] = pd.Series(
-                    [m for _, m in keep_rows], index=sub.index, dtype=object
-                )
-                yield sub
+        def rows_of(r: dict) -> list[tuple]:
+            fmap = dict(r[FIELDS] or ())
+            raw = fmap.get(src_key)
+            if raw is None:
+                return []
+            try:
+                if enc == "hex":
+                    payload = bytes.fromhex(raw)
+                elif enc == "base64":
+                    payload = base64.b64decode(raw)
+                else:
+                    payload = raw.encode("latin1")
+            except ValueError:
+                return []
+            d = decode(payload)
+            if d is None:
+                return []
+            fmap[src_key] = json.dumps(d, separators=(",", ":"))
+            return [(fmap,)]
 
-        return df.mapInPandas(mapper, schema=schema)
+        carried = [c for c in df.columns if c != FIELDS]
+        out = payload_rows(df, [FIELDS], carried, [df.schema[FIELDS]], rows_of)
+        return out.select(*df.columns)
 
 
 # --- fixture encoders (tests + oracle queries build wire bytes with these;

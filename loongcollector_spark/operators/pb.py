@@ -29,10 +29,10 @@ Reference semantics (studied, not ported):
 
 Spark-first design: the decoder is pure Python (proto3 wire format is three
 primitives — varint, fixed, length-delimited — no protobuf runtime needed)
-and runs inside ONE Arrow ``mapInPandas`` pass over a binary payload column,
-exploding each group into typed event rows. This is an ingestion-boundary
-operator: one linear decode pass, partition-parallel, no shuffle — at 100 TB
-the parallelism is the payload partition count. The matching encoder feeds
+and runs inside ONE Arrow ``mapInArrow`` pass (``base.payload_rows``) over a
+binary payload column, exploding each group into typed event rows. This is an
+ingestion-boundary operator: one linear decode pass, partition-parallel, no
+shuffle — at 100 TB the parallelism is the payload partition count. The matching encoder feeds
 fixtures and roundtrip tests; unit goldens pin BOTH directions against
 hand-assembled wire bytes so encode/decode cannot drift together.
 """
@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .base import payload_rows
 
 # ---------------------------------------------------------------------------
 # proto3 wire primitives
@@ -474,64 +476,50 @@ class ParseFromPB:
         self.passthrough = passthrough or []
 
     def apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-
         payload_col = self.payload_col
-        passthrough = list(self.passthrough)
-        for c in [payload_col] + passthrough:
-            if c not in df.columns:
-                raise ValueError(f"missing column {c}")
-        base = [df.schema[c] for c in passthrough]
-        schema = StructType(base + list(GROUP_EVENT_SCHEMA.fields))
-        names = [f.name for f in schema.fields]
 
-        def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    raw = r[payload_col]
-                    g = decode_event_group(bytes(raw)) if raw is not None else None
-                    if g is None:  # NULL/garbage payload: drop the line
-                        continue
-                    keep = tuple(r[c] for c in passthrough)
-                    for ev in g["events"]:
-                        sec, ns = _split_ns(ev["ts"])
-                        if g["type"] == "log":
-                            rows.append(
-                                keep
-                                + ("log", g["tags"], sec, ns, ev["contents"],
-                                   ev["level"], ev["file_offset"], ev["raw_size"])
-                                + (None,) * 15
-                            )
-                        elif g["type"] == "metric":
-                            rows.append(
-                                keep
-                                + ("metric", g["tags"], sec, ns)
-                                + (None,) * 4
-                                + (ev["name"], ev["value"], ev["tags"])
-                                + (None,) * 12
-                            )
-                        else:
-                            rows.append(
-                                keep
-                                + ("trace", g["tags"], sec, ns)
-                                + (None,) * 7
-                                + (
-                                    ev["trace_id"], ev["span_id"],
-                                    ev["parent_span_id"], ev["name"], ev["kind"],
-                                    ev["start_ns"], ev["end_ns"], ev["tags"],
-                                    [(e["ts"], e["name"], e["tags"]) for e in ev["events"]],
-                                    [
-                                        (l["trace_id"], l["span_id"], l["trace_state"], l["tags"])
-                                        for l in ev["links"]
-                                    ],
-                                    ev["status"], ev["scope_tags"],
-                                )
-                            )
-                yield pd.DataFrame(rows, columns=names)
+        def rows_of(r: dict) -> list[tuple]:
+            raw = r[payload_col]
+            g = decode_event_group(raw) if raw is not None else None
+            if g is None:  # NULL/garbage payload: drop the line
+                return []
+            rows = []
+            for ev in g["events"]:
+                sec, ns = _split_ns(ev["ts"])
+                if g["type"] == "log":
+                    rows.append(
+                        ("log", g["tags"], sec, ns, ev["contents"],
+                         ev["level"], ev["file_offset"], ev["raw_size"])
+                        + (None,) * 15
+                    )
+                elif g["type"] == "metric":
+                    rows.append(
+                        ("metric", g["tags"], sec, ns)
+                        + (None,) * 4
+                        + (ev["name"], ev["value"], ev["tags"])
+                        + (None,) * 12
+                    )
+                else:
+                    rows.append(
+                        ("trace", g["tags"], sec, ns)
+                        + (None,) * 7
+                        + (
+                            ev["trace_id"], ev["span_id"],
+                            ev["parent_span_id"], ev["name"], ev["kind"],
+                            ev["start_ns"], ev["end_ns"], ev["tags"],
+                            [(e["ts"], e["name"], e["tags"]) for e in ev["events"]],
+                            [
+                                (l["trace_id"], l["span_id"], l["trace_state"], l["tags"])
+                                for l in ev["links"]
+                            ],
+                            ev["status"], ev["scope_tags"],
+                        )
+                    )
+            return rows
 
-        out = df.select(*(passthrough + [payload_col])).mapInPandas(mapper, schema=schema)
-        return out
+        return payload_rows(
+            df, [payload_col], self.passthrough, GROUP_EVENT_SCHEMA.fields, rows_of
+        )
 
 
 def encode_groups_df(
@@ -664,6 +652,17 @@ def encode_sls_log_group(
     return out
 
 
+_SLS_FIELDS = [
+    StructField("time", LongType()),
+    StructField("time_ns", LongType()),
+    StructField("contents", _TAGMAP),
+    StructField("category", StringType()),
+    StructField("topic", StringType()),
+    StructField("source", StringType()),
+    StructField("group_tags", _TAGMAP),
+]
+
+
 class ParseSlsLogGroup:
     """Explode a binary LogGroup payload column into log rows (time, time_ns,
     contents map + group topic/source/category/tags). A payload failing
@@ -674,47 +673,17 @@ class ParseSlsLogGroup:
         self.passthrough = passthrough or []
 
     def apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
+        payload_col = self.payload_col
 
-        payload_col, passthrough = self.payload_col, list(self.passthrough)
-        base = [df.schema[c] for c in passthrough]
-        schema = StructType(
-            base
-            + [
-                StructField("time", LongType()),
-                StructField("time_ns", LongType()),
-                StructField("contents", _TAGMAP),
-                StructField("category", StringType()),
-                StructField("topic", StringType()),
-                StructField("source", StringType()),
-                StructField("group_tags", _TAGMAP),
+        def rows_of(r: dict) -> list[tuple]:
+            raw = r[payload_col]
+            g = decode_sls_log_group(raw) if raw is not None else None
+            if g is None:  # NULL/garbage payload: drop the line
+                return []
+            return [
+                (log["time"], log["time_ns"], log["contents"], g["category"],
+                 g["topic"], g["source"], g["tags"])
+                for log in g["logs"]
             ]
-        )
-        names = [f.name for f in schema.fields]
 
-        def mapper(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    raw = r[payload_col]
-                    g = decode_sls_log_group(bytes(raw)) if raw is not None else None
-                    if g is None:  # NULL/garbage payload: drop the line
-                        continue
-                    keep = tuple(r[c] for c in passthrough)
-                    for log in g["logs"]:
-                        rows.append(
-                            keep
-                            + (
-                                log["time"],
-                                log["time_ns"],
-                                log["contents"],
-                                g["category"],
-                                g["topic"],
-                                g["source"],
-                                g["tags"],
-                            )
-                        )
-                yield pd.DataFrame(rows, columns=names)
-
-        cols = [c for c in ([payload_col] + passthrough) if c in df.columns]
-        return df.select(*cols).mapInPandas(mapper, schema)
+        return payload_rows(df, [payload_col], self.passthrough, _SLS_FIELDS, rows_of)

@@ -63,8 +63,8 @@ Documented divergences:
   of the payload here.
 - A payload that fails gunzip/decode drops that row, never the job.
 
-Execution shape: ONE Arrow-batched mapInPandas pass (decode + aggregate
-per row are local to the row), zero shuffle.
+Execution shape: ONE Arrow ``mapInArrow`` pass (``base.payload_rows``;
+decode + aggregate per row are local to the row), zero shuffle.
 """
 
 from __future__ import annotations
@@ -72,16 +72,11 @@ from __future__ import annotations
 import gzip
 import hashlib
 import json
-from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField
 
+from .base import payload_rows
 from .pb import PBError, _fields, _len_field, _varint_field, read_varint
 from .xxh import xxh64
 
@@ -482,27 +477,28 @@ def extract_profile_logs(
     return rows
 
 
-_OUT_FIELDS = [
-    ("time_sec", LongType()),
-    ("time_ns", LongType()),
-    ("name", StringType()),
-    ("stack", StringType()),
-    ("stackID", StringType()),
-    ("language", StringType()),
-    ("dataType", StringType()),
-    ("durationNs", LongType()),
-    ("profileID", StringType()),
-    ("labels", StringType()),
-    ("units", StringType()),
-    ("valueTypes", StringType()),
-    ("aggTypes", StringType()),
-    ("type", StringType()),
-    ("val", StringType()),
+# the profile-log row both profile decoders emit (pprof here, jfr.JfrChunkParser)
+PROFILE_LOG_FIELDS = [
+    StructField("time_sec", LongType()),
+    StructField("time_ns", LongType()),
+    StructField("name", StringType()),
+    StructField("stack", StringType()),
+    StructField("stackID", StringType()),
+    StructField("language", StringType()),
+    StructField("dataType", StringType()),
+    StructField("durationNs", LongType()),
+    StructField("profileID", StringType()),
+    StructField("labels", StringType()),
+    StructField("units", StringType()),
+    StructField("valueTypes", StringType()),
+    StructField("aggTypes", StringType()),
+    StructField("type", StringType()),
+    StructField("val", StringType()),
 ]
 
 
 class PprofProfileParser:
-    """Format=pprof ingestion as one mapInPandas pass. Input columns:
+    """Format=pprof ingestion as one ``mapInArrow`` pass. Input columns:
     ``payload`` (binary, optionally gzipped), optional ``spy_name``,
     ``sample_rate``, ``start_ns``, ``end_ns``, ``meta_tags``/``extra_tags``
     (map<string,string>); missing columns take the reference defaults.
@@ -513,59 +509,42 @@ class PprofProfileParser:
         self.passthrough = passthrough or []
 
     def apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-
         payload_col = self.payload_col
-        passthrough = list(self.passthrough)
         opt = [
             c
             for c in ("spy_name", "sample_rate", "start_ns", "end_ns", "meta_tags",
                       "extra_tags", "prev_payload", "content_type")
             if c in df.columns
         ]
-        base = [df.schema[c] for c in passthrough]
-        schema = StructType(base + [StructField(n, t, True) for n, t in _OUT_FIELDS])
-        names = [f.name for f in schema.fields]
 
-        def mapper(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    raw = r[payload_col]
-                    if raw is None:
-                        continue
-                    kw = {}
-                    if "spy_name" in opt and r["spy_name"] is not None:
-                        kw["spy_name"] = str(r["spy_name"])
-                    for c in ("sample_rate", "start_ns", "end_ns"):
-                        if c in opt and r[c] is not None and not pd.isna(r[c]):
-                            kw[c] = int(r[c])
-                    for c in ("meta_tags", "extra_tags"):
-                        if c in opt and r[c] is not None:
-                            kw[c] = dict(r[c])
-                    if "prev_payload" in opt and r["prev_payload"] is not None:
-                        kw["prev_payload"] = bytes(r["prev_payload"])
-                    try:
-                        payload = bytes(raw)
-                        if "content_type" in opt and r["content_type"]:
-                            payload, prev, cfg = parse_push_body(
-                                payload, str(r["content_type"])
-                            )
-                            if prev is not None:
-                                kw["prev_payload"] = prev
-                            if cfg is not None:
-                                kw["sample_types"] = cfg
-                        logs = extract_profile_logs(payload, **kw)
-                    except (PBError, ValueError, OSError, TypeError, EOFError):
-                        continue  # fail the line, never the job
-                    keep = tuple(r[c] for c in passthrough)
-                    for log in logs:
-                        rows.append(keep + tuple(log[n] for n, _t in _OUT_FIELDS))
-                yield pd.DataFrame(rows, columns=names)
+        def rows_of(r: dict) -> list[tuple]:
+            payload = r[payload_col]
+            if payload is None:
+                return []
+            kw = {}
+            if r.get("spy_name") is not None:
+                kw["spy_name"] = r["spy_name"]
+            for c in ("sample_rate", "start_ns", "end_ns"):
+                if r.get(c) is not None:
+                    kw[c] = int(r[c])
+            for c in ("meta_tags", "extra_tags"):
+                if r.get(c) is not None:
+                    kw[c] = dict(r[c])
+            if r.get("prev_payload") is not None:
+                kw["prev_payload"] = r["prev_payload"]
+            try:
+                if r.get("content_type"):
+                    payload, prev, cfg = parse_push_body(payload, r["content_type"])
+                    if prev is not None:
+                        kw["prev_payload"] = prev
+                    if cfg is not None:
+                        kw["sample_types"] = cfg
+                logs = extract_profile_logs(payload, **kw)
+            except (PBError, ValueError, OSError, TypeError, EOFError):
+                return []  # fail the line, never the job
+            return [tuple(log[f.name] for f in PROFILE_LOG_FIELDS) for log in logs]
 
-        return df.select(*(passthrough + [payload_col] + opt)).mapInPandas(
-            mapper, schema=schema
-        )
+        return payload_rows(df, [payload_col] + opt, self.passthrough, PROFILE_LOG_FIELDS, rows_of)
 
 
 # ---------------------------------------------------------------------------

@@ -30,8 +30,8 @@ length, then literal (tag&3==0) and copy (1/2/4-byte offset) elements.
 fixtures without the C library; ``snappy_decompress`` handles the full
 format including overlapping copies.
 
-Spark-first: decode runs in ONE Arrow ``mapInPandas`` pass over the binary
-payload column — an ingestion-boundary operator, linear and
+Spark-first: decode runs in ONE Arrow ``mapInArrow`` pass (``base.payload_rows``)
+over the binary payload column — an ingestion-boundary operator, linear and
 partition-parallel, no shuffle; downstream everything is Column expressions.
 """
 
@@ -39,11 +39,11 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .base import payload_rows
 from .gofmt import fmt_go_g  # exact strconv.FormatFloat(v,'g',-1,64)
 from .pb import PBError, _fields, _len_field, read_varint, write_varint
 
@@ -263,32 +263,22 @@ class PromRemoteWriteDecoder:
         self.passthrough = passthrough or []
 
     def apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
+        payload_col = self.payload_col
 
-        payload_col, passthrough = self.payload_col, list(self.passthrough)
-        base = [df.schema[c] for c in passthrough]
-        schema = StructType(base + _OUT_FIELDS)
-        names = [f.name for f in schema.fields]
+        def rows_of(r: dict) -> list[tuple]:
+            raw = r[payload_col]
+            if raw is None:  # NULL payload: fail the line, not the job
+                return []
+            try:
+                evs = remote_write_to_rows(raw)
+            except (SnappyError, PBError, ValueError, TypeError):
+                return []
+            return [
+                (name, lbl, tn, val, int(tn[:10]) if len(tn) == 19 else 0)
+                for name, lbl, tn, val in evs
+            ]
 
-        def mapper(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    raw = r[payload_col]
-                    if raw is None:  # NULL payload: fail the line, not the job
-                        continue
-                    try:
-                        evs = remote_write_to_rows(bytes(raw))
-                    except (SnappyError, PBError, ValueError, TypeError):
-                        continue
-                    keep = tuple(r[c] for c in passthrough)
-                    for name, lbl, tn, val in evs:
-                        sec = int(tn[:10]) if len(tn) == 19 else 0
-                        rows.append(keep + (name, lbl, tn, val, sec))
-                yield pd.DataFrame(rows, columns=names)
-
-        cols = [c for c in ([payload_col] + passthrough) if c in df.columns]
-        return df.select(*cols).mapInPandas(mapper, schema)
+        return payload_rows(df, [payload_col], self.passthrough, _OUT_FIELDS, rows_of)
 
 
 # ---------------------------------------------------------------------------

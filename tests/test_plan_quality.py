@@ -565,7 +565,7 @@ def test_semdedup_pairwise_is_cell_scoped(spark, sf_dir):
 def test_r4b_decoder_plans_narrow(spark, sf_dir):
     """redis INFO / wineventlog / ES bulk / pprof / jfr plan shapes:
     the scan-shaped ones are pure projections (no Exchange/Join); the
-    binary profile decoders are ONE MapInPandas pass with no shuffle below
+    binary profile decoders are ONE MapInArrow pass with no shuffle below
     it; the ES bulk frame has exactly ONE Exchange (the sink-key partial
     agg pair)."""
     from loongcollector_spark.queries import (
@@ -588,13 +588,38 @@ def test_r4b_decoder_plans_narrow(spark, sf_dir):
         plan = _plan(q(spark, sf_dir))
         assert "Exchange" not in plan
         assert "Join" not in plan
-        assert sorted(python_nodes(plan)) == sorted(["MapInPandas"] * 2 + fixture)
+        assert sorted(python_nodes(plan)) == sorted(["MapInArrow"] * 2 + fixture)
 
     plan = _plan(q_flusher_es_bulk(spark, sf_dir))
     # one shuffle node (tree + detail header = 2 mentions), partial-agg pair
     assert plan.count("Exchange") <= 2
     assert plan.count("ObjectHashAggregate") == 4
     assert "Join" not in plan
+
+
+def test_payload_decoders_run_one_arrow_stage(spark, sf_dir):
+    """Every per-row payload decoder runs as ``base.payload_rows``' MapInArrow,
+    never a pandas stage (which rounds int64 columns holding a null)."""
+    from loongcollector_spark.dataops.queries import (
+        q_multimodal_decode,
+        q_multimodal_features,
+    )
+    from loongcollector_spark.queries import (
+        q_jfr_profile,
+        q_otel_pb_trace,
+        q_parse_from_pb,
+        q_pprof_profile,
+        q_prom_remote_write,
+        q_sls_group_decode,
+    )
+
+    for q in (
+        q_parse_from_pb, q_sls_group_decode, q_prom_remote_write, q_otel_pb_trace,
+        q_pprof_profile, q_jfr_profile, q_multimodal_features, q_multimodal_decode,
+    ):
+        nodes = python_nodes(_plan(q(spark, sf_dir)))
+        assert "MapInArrow" in nodes, q.__name__
+        assert "MapInPandas" not in nodes, q.__name__
 
 
 def test_r4c_host_collector_plans(spark, sf_dir):

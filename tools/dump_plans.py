@@ -192,7 +192,7 @@ def main() -> None:
         (
             "pprof_profile — pprof wire decode → per-stack profile logs",
             QUERIES["pprof_profile"](spark, SF),
-            "one Arrow-batched MapInPandas decode pass (per-payload "
+            "one Arrow-batched MapInArrow decode pass (per-payload "
             "aggregation is row-local); no Exchange, no Join below it.",
         ),
         (
