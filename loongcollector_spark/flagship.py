@@ -1,12 +1,16 @@
 """The flagship end-to-end job (SURVEY.md §7 minimum slice):
 
 read sequences (doc_id, tokens, n_tok, source)
-  → one Arrow decode tokens→content over the rows of the three formats
+  → one Arrow stage over the rows of the three formats
     (tokens.decode_tokens_arrow: a mapInArrow over the token list buffers,
-    the job's only Python stage, no pandas and no per-row Python)
-  → one CASE on ``source`` over the existing parsers (nginx regex / app-json /
-    tab-delimited), discard-unmatch semantics; any other source is filtered
-    out before the decode
+    the job's only Python stage, no pandas and no per-row Python): it decodes
+    tokens→content and full-matches the nginx lines with RE2
+    (``NGINX_RE2``, pyarrow.compute), returning their match flag, and on the
+    write path their 11 groups as a map, in place of the lines
+  → one CASE on ``source``: nginx reads the stage's flag and groups, app-json
+    and tab-delimited run their JVM parsers over the returned ``content``;
+    discard-unmatch semantics; any other source is filtered out before the
+    decode
   → broadcast-join the source lookup (team_tag, env, route_key, sinks):
     every route condition reads only lookup columns, so the router's matched
     sinks are evaluated once per lookup row, at plan time, not per event
@@ -48,11 +52,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from .aggregate import sink_aggregates
 from .operators.base import FIELDS
 from .operators.common import ParserOptions
-from .operators.parse import DelimiterParser, JsonParser, RegexParser
+from .operators.parse import DelimiterParser, JsonParser, RegexParser, re2_pattern
 from .routing import RouteCondition, Router
 from .session import per_jvm
 from .synth import ROUTE_RULES, sequences_df, source_lookup_df
-from .tokens import decode_tokens_arrow
+from .tokens import REGEX_GROUPS, REGEX_OK, LineRegex, decode_tokens_arrow
 
 # nginx access-log regex — the reference's own example pipeline
 # (example_config/data_pipelines/nginx-regex.yaml)
@@ -81,6 +85,9 @@ PARSERS = {
     "app-json": JsonParser(),
     "csvlog": DelimiterParser("\t", CSV_KEYS),
 }
+# the nginx lines are parsed in the decode stage, by RE2 on the translation of
+# PARSERS["nginx"]'s pattern (a pattern it cannot translate fails the import)
+NGINX_RE2 = LineRegex("nginx", re2_pattern(NGINX_REGEX, NGINX_KEYS), tuple(NGINX_KEYS))
 ROUTER = Router(
     [RouteCondition(r["sink"], r["match_key"], r["match_value"]) for r in ROUTE_RULES]
 )
@@ -118,7 +125,10 @@ def _columns() -> _Columns:
     src = F.col("content")
     success = new_map = None
     for source, parser in PARSERS.items():
-        ok, parsed = parser.parse(src)
+        if source == NGINX_RE2.source:
+            ok, parsed = F.col(REGEX_OK), F.col(REGEX_GROUPS)
+        else:
+            ok, parsed = parser.parse(src)
         hit = F.col("source") == source
         success = F.when(hit, ok) if success is None else success.when(hit, ok)
         new_map = F.when(hit, parsed) if new_map is None else new_map.when(hit, parsed)
@@ -132,29 +142,36 @@ def _columns() -> _Columns:
     )
 
 
-def parsed_events_from(seq: DataFrame) -> DataFrame:
+def parsed_events_from(seq: DataFrame, fields: bool = True) -> DataFrame:
     """Parse a sequences frame into the unified event frame (doc_id, source,
-    n_tok, fields): one Arrow decode, then one projection that dispatches on
-    ``source`` to the parser for that format, over the bare ``content``.
-    Rows of any other source are discarded before the decode."""
+    n_tok, fields): one Arrow stage that decodes and parses the nginx lines,
+    then one projection that dispatches on ``source`` to the stage's nginx
+    result or to the JVM parser for that format, over the bare ``content``.
+    Rows of any other source are discarded before the decode.
+    ``fields=False``: the parsed rows without ``fields``, and the stage
+    builds no nginx groups (the output of a Python stage cannot be pruned)."""
     c = _columns()
     # filter before the python stage (a filter does not push through it), so
     # rows no parser takes are neither shuffled nor decoded
     seq = seq.filter(c.sources)
     # drop the token arrays INSIDE the python stage: a .drop after it would
     # ship the dominant payload Python→JVM just to discard it
-    ev = decode_tokens_arrow(seq, "tokens", "content", drop_tokens=True)
-    others = [name for name in ev.columns if name != "content"]
-    return ev.filter(c.keep).select(*others, c.fields.alias(FIELDS))
+    ev = decode_tokens_arrow(
+        seq, "tokens", "content", drop_tokens=True, regex=NGINX_RE2, groups=fields
+    )
+    others = [name for name in seq.columns if name != "tokens"]
+    kept = ev.filter(c.keep)
+    return kept.select(*others, c.fields.alias(FIELDS)) if fields else kept.select(*others)
 
 
-def routed_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
+def routed_from(spark: SparkSession, seq: DataFrame, fields: bool = True) -> DataFrame:
     """Fan-out: sink_a ⟵ env=prod, sink_b ⟵ team_tag=team-b, sink_default ⟵ all
     (multi-match copy semantics, Router.cpp:60-80). The conditions read only
     lookup columns, so each source is routed once, on its lookup row
-    (Router.cpp routes a whole event group on its tags)."""
+    (Router.cpp routes a whole event group on its tags). ``fields=False``:
+    the routed rows carry no ``fields`` (see ``parsed_events_from``)."""
     lookup = source_lookup_df(spark).withColumn("sinks", _columns().matched)
-    ev = parsed_events_from(seq).join(F.broadcast(lookup), "source")
+    ev = parsed_events_from(seq, fields).join(F.broadcast(lookup), "source")
     return ROUTER.apply(ev, F.col("sinks")).drop("sinks")
 
 
@@ -164,7 +181,10 @@ def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pipeline_aggregates_from(spark: SparkSession, seq: DataFrame) -> DataFrame:
     # only what the aggregates read: the Python stage cannot prune its inputs
-    return sink_aggregates(routed_from(spark, seq.select("tokens", "n_tok", "source")))
+    # or outputs, so it gets three columns and builds no nginx groups
+    return sink_aggregates(
+        routed_from(spark, seq.select("tokens", "n_tok", "source"), fields=False)
+    )
 
 
 def pipeline_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,7 +203,7 @@ def drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = sequences_df(spark, sf_dir)
     inputs = seq.groupBy("source").agg(F.count(F.lit(1)).alias("input_events"))
     parsed = (
-        parsed_events_from(seq.select("tokens", "source"))
+        parsed_events_from(seq.select("tokens", "source"), fields=False)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("parsed_events"))
     )

@@ -22,6 +22,8 @@ import re
 from dataclasses import dataclass, field
 from typing import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -32,6 +34,135 @@ from .grok_patterns import DEFAULT_PATTERNS, load_pattern_dir
 
 def _src(options: ParserOptions) -> Column:
     return F.element_at(F.col(FIELDS), F.lit(options.source_key))
+
+
+# java.util.regex's \s set (RE2's \s lacks \x0B) and its `.`, which excludes
+# every line terminator (RE2's `.` excludes only \n)
+_JAVA_SPACE = r"\t\n\x0B\f\r "
+_JAVA_DOT = r"[^\n\r\x{85}\x{2028}\x{2029}]"
+_QUANTIFIER = re.compile(r"[*+?]|\{\d+(?:,\d*)?\}")
+_GROUP_NAME = re.compile(r"[A-Za-z_]\w*")
+
+
+def re2_pattern(java_rx: str, names: Sequence[str] | None = None) -> str:
+    """``java_rx`` for RE2, full-match anchored as ``^(?:…)\\z``: the same
+    lines match and the groups capture the same text, since RE2 picks
+    submatches in a backtracking engine's priority order. With ``names``, the
+    capture groups become ``(?P<name>…)`` in order, the form
+    ``pyarrow.compute.extract_regex`` reads; there must be one per group.
+
+    Only a subset of java.util.regex is accepted: literals, escaped
+    punctuation, ``\\d \\D \\w \\W \\s \\S \\t \\n \\r \\f``, ``.``, classes
+    (``\\d \\w \\s`` inside them), capturing and ``(?:`` groups, alternation,
+    greedy and lazy quantifiers. Three constructs are rewritten: ``\\s`` and
+    ``\\S`` spell out Java's set, which holds ``\\x0B``, and ``.`` excludes
+    Java's line terminators. Anything else raises ``ValueError``:
+    backreferences, lookaround, possessive quantifiers, atomic groups, inline
+    flags, ``\\S \\D \\W`` inside a class, POSIX or Unicode classes, nested
+    classes, anchors and the other escapes."""
+    out: list[str] = []
+    groups = 0
+    i, n = 0, len(java_rx)
+
+    def reject(what: str) -> ValueError:
+        return ValueError(f"re2_pattern: {what} at offset {i} of {java_rx!r}")
+
+    def escape(ch: str, in_class: bool) -> str:
+        if ch in "sS" and not (in_class and ch == "S"):
+            return _JAVA_SPACE if in_class else f"[{'^' if ch == 'S' else ''}{_JAVA_SPACE}]"
+        if ch in "dw" or (ch in "DW" and not in_class) or ch in "tnrf":
+            return "\\" + ch
+        if ch in "SDW":
+            raise reject(f"negated shorthand \\{ch} inside a class")
+        if ch.isdigit() or ch == "k":
+            raise reject("backreference")
+        if ch in "pP":
+            raise reject("Unicode or POSIX class")
+        if ch.isascii() and not ch.isalnum():
+            return "\\" + ch
+        raise reject(f"unsupported escape \\{ch}")
+
+    while i < n:
+        c = java_rx[i]
+        if c == "\\" and i + 1 < n:
+            out.append(escape(java_rx[i + 1], in_class=False))
+            i += 2
+            continue
+        if c == "[":
+            j = i + 1 + (java_rx[i + 1 : i + 2] == "^")
+            body = [java_rx[i:j]]
+            if java_rx[j : j + 1] == "]":
+                raise reject("class opening with ']'")
+            while j < n and java_rx[j] != "]":
+                if java_rx[j] == "\\" and j + 1 < n:
+                    body.append(escape(java_rx[j + 1], in_class=True))
+                    shorthand = java_rx[j + 1] in "dws"
+                    if shorthand and (
+                        (len(body) > 3 and body[-2] == "-")
+                        or (java_rx[j + 2 : j + 3] == "-" and java_rx[j + 3 : j + 4] != "]")
+                    ):
+                        raise reject("range bound that is a shorthand class")
+                    j += 2
+                    continue
+                if java_rx[j] == "[":
+                    raise reject("nested or POSIX class")
+                if java_rx.startswith("&&", j):
+                    raise reject("class intersection")
+                body.append(java_rx[j])
+                j += 1
+            if j == n:
+                raise reject("unclosed class")
+            out.append("".join(body) + "]")
+            i = j + 1
+            continue
+        if c == "(":
+            if java_rx.startswith("(?:", i):
+                out.append("(?:")
+                i += 3
+                continue
+            if java_rx.startswith(("(?=", "(?!", "(?<=", "(?<!"), i):
+                raise reject("lookaround")
+            if java_rx.startswith("(?>", i):
+                raise reject("atomic group")
+            if java_rx.startswith("(?<", i):
+                raise reject("named group")
+            if java_rx.startswith("(?", i):
+                raise reject("inline flags")
+            if names is not None:
+                if groups >= len(names):
+                    raise reject(f"more groups than the {len(names)} names")
+                if not _GROUP_NAME.fullmatch(names[groups]):
+                    raise reject(f"group name {names[groups]!r} is not an identifier")
+                out.append(f"(?P<{names[groups]}>")
+            else:
+                out.append("(")
+            groups += 1
+            i += 1
+            continue
+        m = _QUANTIFIER.match(java_rx, i)
+        if m:
+            out.append(m.group())
+            i = m.end()
+            if java_rx[i : i + 1] == "+":
+                raise reject("possessive quantifier")
+            if java_rx[i : i + 1] == "?":
+                out.append("?")
+                i += 1
+            continue
+        if c in "^$":
+            raise reject(f"anchor {c!r}")
+        if c == "{":
+            raise reject("'{' outside a quantifier")
+        out.append(_JAVA_DOT if c == "." else c)
+        i += 1
+    if names is not None and groups != len(names):
+        raise ValueError(f"re2_pattern: {groups} groups for {len(names)} names in {java_rx!r}")
+    pattern = f"^(?:{''.join(out)})\\z"
+    try:
+        pc.match_substring_regex(pa.array([""], pa.string()), pattern)
+    except pa.ArrowInvalid as e:
+        raise ValueError(f"re2_pattern: RE2 rejects {pattern!r}: {e}") from None
+    return pattern
 
 
 @dataclass

@@ -9,6 +9,7 @@ Spark side exactly (the driver hash-compares by sorted column name).
 from __future__ import annotations
 
 from .flagship import CSV_KEYS, NGINX_KEYS, NGINX_REGEX
+from .operators.parse import re2_pattern
 from .synth import sequences_cte, source_lookup_values_sql
 
 
@@ -20,7 +21,9 @@ def _q(s: str) -> str:
 
 SEQ = f"WITH seq AS ({sequences_cte('events')})"
 
-NGINX_ANCHORED = f"^(?:{NGINX_REGEX})$"
+# RE2 (DuckDB) reads \s and `.` unlike java.util.regex: the translation keeps
+# Java's sets, so the oracle accepts exactly the lines RegexParser accepts
+NGINX_ANCHORED = re2_pattern(NGINX_REGEX)
 _RX = _q(NGINX_ANCHORED)
 
 # DuckDB's positional regexp_extract caps at group 9; the named-list form

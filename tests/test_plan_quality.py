@@ -317,18 +317,57 @@ def test_source_filter_below_python_stage(spark, sf_dir):
 
 
 def test_flagship_keep_filter_reads_the_bare_line(spark, sf_dir):
-    """The keep Filter above the Python stage reads the decoded ``content``
-    itself: no one-entry ``map(content, …)`` built per reference, no
-    ``element_at`` into it and no ShouldEraseEvent ``map_filter`` (a bare
-    line has no other contents)."""
+    """The keep Filter above the Python stage reads the stage's nginx match
+    flag, and the JSON and CSV branches read the decoded ``content`` itself:
+    no one-entry ``map(content, …)`` built per reference, no ``element_at``
+    into it and no ShouldEraseEvent ``map_filter`` (a bare line has no other
+    contents)."""
     tree, details = _plan(flagship.pipeline_aggregates(spark, sf_dir)).split("\n\n", 1)
     lines = tree.splitlines()
     py = next(i for i, line in enumerate(lines) if python_nodes(line))
     node = re.search(r"Filter \((\d+)\)", lines[py - 1]).group(1)
     cond = details.split(f"({node}) Filter", 1)[1].split("\n\n", 1)[0]
-    assert "RLIKE(content#" in cond, cond
+    assert re.search(r"WHEN \(source#\d+ = nginx\) THEN regex_ok#\d+ WHEN", cond), cond
+    for source in ("app-json", "csvlog"):
+        branch = cond.split(f"= {source}) THEN", 1)[1].split(" WHEN ", 1)[0]
+        assert "content#" in branch, cond
     for banned in ("map(", "map_filter", "element_at"):
         assert banned not in cond, cond
+
+
+def test_flagship_runs_no_jvm_nginx_regex(spark, sf_dir):
+    """The nginx lines are matched and their groups extracted by RE2 inside
+    the Python stage: neither flagship plan (the aggregates, or the routed
+    rows the write takes) holds the nginx pattern, and the aggregates run no
+    JVM regex function at all (the write's JSON ``fields`` still renders
+    numbers with one). Each keeps one Python node with the keep Filter
+    directly above it, where perfbench finds the parse layer."""
+    aggregates = _plan(flagship.pipeline_aggregates(spark, sf_dir))
+    for banned in ("RLIKE", "regexp_replace", "regexp_extract"):
+        assert banned not in aggregates, banned
+    for plan in (aggregates, _plan(flagship.routed(spark, sf_dir))):
+        assert flagship.NGINX_REGEX not in plan
+        lines = plan.split("\n\n")[0].splitlines()
+        assert python_nodes("\n".join(lines)) == ["MapInArrow"], plan
+        py = next(i for i, line in enumerate(lines) if python_nodes(line))
+        assert re.search(r"\+- Filter \(\d+\)$", lines[py - 1]), lines
+
+
+def _arrow_output(plan: str) -> list[str]:
+    """The column names the plan's MapInArrow node outputs."""
+    out = re.search(r"\(\d+\) MapInArrow\n.*\nArguments: .*?, \[([^\]]*)\], ", plan).group(1)
+    return re.sub(r"#\d+L?", "", out).split(", ")
+
+
+def test_aggregates_python_stage_builds_no_groups_map(spark, sf_dir):
+    """A Python stage's output cannot be pruned, so the aggregates ask it for
+    the nginx match flag only: it outputs no map column. The routed rows the
+    write takes carry the groups map."""
+    assert _arrow_output(_plan(flagship.pipeline_aggregates(spark, sf_dir))) == [
+        "n_tok", "source", "content", "regex_ok",
+    ]
+    routed = _arrow_output(_plan(flagship.routed(spark, sf_dir)))
+    assert routed[-2:] == ["regex_ok", "regex_groups"], routed
 
 
 def test_aggregates_python_stage_reads_only_what_they_need(spark, sf_dir):

@@ -56,11 +56,16 @@ def main() -> None:
         (
             "pipeline_e2e — parse→enrich→route→aggregate",
             flagship.pipeline_aggregates(spark, SF),
-            "Exactly ONE parquet scan and ONE Python node, the Arrow decode "
-            "(MapInArrow), for all three formats; the filter to the parsed sources sits "
+            "Exactly ONE parquet scan and ONE Python node, the Arrow stage "
+            "(MapInArrow), for all three formats: it decodes the tokens and "
+            "full-matches the nginx lines with RE2, and returns their match "
+            "flag (``regex_ok``; no groups map for the aggregates) in place "
+            "of their ``content``; the filter to the parsed sources sits "
             "below it, and it takes only tokens, n_tok and source; per-source "
-            "parse is one CASE-dispatched filter and projection over the "
-            "decoded ``content`` itself (no one-entry map, no erase check); "
+            "parse is one CASE-dispatched filter directly above it: nginx "
+            "reads ``regex_ok``, JSON and CSV parse the decoded ``content`` "
+            "itself (no one-entry map, no erase check, and no JVM regex of "
+            "the nginx pattern anywhere); "
             "inner BroadcastHashJoin for the lookup (never "
             "SortMergeJoin), whose broadcast side is a LocalTableScan (no "
             "Scan ExistingRDD; the broadcast still runs it as a small job) that already "
