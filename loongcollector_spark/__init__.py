@@ -3,7 +3,7 @@ pipeline semantics of wangkaibo34/loongcollector (parse → enrich → route →
 
 Built Spark-first: declarative DataFrame plans, Catalyst optimization, broadcast
 joins for lookup enrich, explode-based fan-out routing, explicit repartitioning for
-skew, and Arrow-vectorized pandas UDFs only where built-ins can't express semantics.
+skew, and Arrow stages only where built-ins can't express semantics.
 
 Reference semantics citations point into /root/reference (read-only checkout).
 """

@@ -32,8 +32,8 @@ the oracle's JOIN: a source with no lookup row reaches no sink.
 
 Built once per JVM, as the reference builds its pipeline once and then runs
 it on every group (CollectionPipeline::Init, then Process): the Columns that
-depend on no input (the parse CASE, the keep-filter and merged ``fields`` of
-``ParserOptions.columns``, the router's matched sinks, the per-sink folds).
+depend on no input (the parse CASE, whose success is the keep-filter and
+whose map is ``fields``, the router's matched sinks, the per-sink folds).
 They are unresolved expressions, bound by name to each new DataFrame, and
 they belong to the JVM rather than to a session (``session.per_jvm``), so a
 driver that runs many jobs pays the ~2,000 py4j round trips of building them
@@ -51,7 +51,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from .aggregate import sink_aggregates
 from .operators.base import FIELDS
-from .operators.common import ParserOptions
 from .operators.parse import DelimiterParser, JsonParser, RegexParser, re2_pattern
 from .routing import RouteCondition, Router
 from .session import per_jvm
@@ -115,8 +114,8 @@ class _Columns:
     expressions, bound by name to each DataFrame they are applied to."""
 
     sources: Column  # the filter to PARSERS' sources
-    keep: Column  # finalize's keep-filter
-    fields: Column  # finalize's merged fields map
+    keep: Column  # the parse succeeded
+    fields: Column  # the parsed map
     matched: Column  # the router's matched sinks
 
 
@@ -132,12 +131,13 @@ def _columns() -> _Columns:
         hit = F.col("source") == source
         success = F.when(hit, ok) if success is None else success.when(hit, ok)
         new_map = F.when(hit, parsed) if new_map is None else new_map.when(hit, parsed)
-    # the decoded line is the whole event: an empty base folds the erase check away
-    keep, fields = ParserOptions().columns(success.otherwise(False), new_map, src, F.expr("map()"))
+    # the decoded line is the whole event, parsed with default ParserOptions:
+    # no other contents to keep on a failure, no source kept on a success,
+    # so finalize keeps exactly the parsed rows and their fields are the parse
     return _Columns(
         sources=F.col("source").isin(list(PARSERS)),
-        keep=keep,
-        fields=fields,
+        keep=success.otherwise(False),
+        fields=new_map,
         matched=ROUTER.matched(),
     )
 

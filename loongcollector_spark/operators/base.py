@@ -12,9 +12,10 @@ Spark mapping (SURVEY.md §1.4): one DataFrame row per event with
 
 All operators are Column-expression compilers over the ``fields`` map: they run
 JVM-side under whole-stage codegen (map_concat / map_filter / element_at are
-all codegen-able); nothing row-at-a-time in Python. The one exception is
-``payload_rows``, the shared stage of the binary payload decoders, whose
-wire formats have no Column-expression decode.
+all codegen-able); nothing row-at-a-time in Python. The exceptions are
+``payload_rows`` and ``group_rows``, the shared Arrow stages of the binary
+payload decoders and wire packers, whose formats have no Column-expression
+codec.
 
 The session must set ``spark.sql.mapKeyDedupPolicy=LAST_WIN`` (session.py):
 ``map_concat(a, b)`` then means "b overwrites a", which gives us both
@@ -51,6 +52,30 @@ def fremove(keys: Iterable[str], fields: str = FIELDS) -> Column:
     return F.map_filter(F.col(fields), lambda k, v: ~F.array_contains(arr, k))
 
 
+def _require(df: DataFrame, cols: list[str]) -> None:
+    """A missing input column is an error when the plan is built, not inside
+    a Python worker."""
+    for c in cols:
+        if c not in df.columns:
+            raise ValueError(f"missing column {c}")
+
+
+def _rows(data, cols: list[str]) -> list[dict]:
+    """The rows of an Arrow RecordBatch or Table as dicts of ``cols``, in
+    Arrow's own Python values: nulls are ``None``, ints exact, maps are
+    (key, value) lists."""
+    return data.select(cols).to_pylist()
+
+
+def _arrays(rows: list[tuple], types: list) -> list:
+    """The columns of ``rows`` (tuples, possibly none) as Arrow arrays of
+    ``types``, each written against the Arrow type of its Spark field."""
+    import pyarrow as pa
+
+    values = list(zip(*rows)) or [()] * len(types)
+    return [pa.array(v, type=t) for v, t in zip(values, types)]
+
+
 def payload_rows(
     df: DataFrame,
     cols: list[str],
@@ -59,14 +84,14 @@ def payload_rows(
     rows_of: Callable[[dict], list[tuple]],
 ) -> DataFrame:
     """The one Python stage of the per-row payload decoders (binary protobuf,
-    profile and media ingest): ONE ``mapInArrow`` pass over ``passthrough +
-    cols``, output schema = the passthrough fields, then ``out_fields``.
+    profile and media ingest) and fixture encoders: ONE ``mapInArrow`` pass
+    over ``passthrough + cols``, output schema = the passthrough fields, then
+    ``out_fields``.
 
-    ``rows_of(row)`` sees each input row as a dict of ``cols`` (Arrow's own
-    Python values: nulls are ``None``, ints exact, maps are (key, value)
-    lists) and returns that row's output tuples, one per ``out_fields``
-    layout; ``[]`` drops the line (the reference drops a payload that fails
-    to decode, never the job — ProcessorParseFromPBNative.cpp:96-104).
+    ``rows_of(row)`` sees each input row as a dict of ``cols`` (``_rows``)
+    and returns that row's output tuples, one per ``out_fields`` layout;
+    ``[]`` drops the line (the reference drops a payload that fails to
+    decode, never the job — ProcessorParseFromPBNative.cpp:96-104).
     Passthrough columns are repeated onto every tuple of their row as the
     batch's own Arrow values (``take``), never through Python.
 
@@ -76,9 +101,8 @@ def payload_rows(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     cols, passthrough = list(cols), list(passthrough)
-    for c in passthrough + cols:
-        if c not in df.columns:
-            raise ValueError(f"missing column {c}")
+    read = list(dict.fromkeys(passthrough + cols))
+    _require(df, read)
     out = StructType(list(out_fields))
     schema = StructType([df.schema[c] for c in passthrough] + out.fields)
     types = to_arrow_schema(out).types
@@ -86,17 +110,55 @@ def payload_rows(
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             idx, rows = [], []
-            for i, row in enumerate(batch.select(cols).to_pylist()):
+            for i, row in enumerate(_rows(batch, cols)):
                 for t in rows_of(row):
                     idx.append(i)
                     rows.append(t)
             kept = batch.select(passthrough).take(pa.array(idx, pa.int64()))
-            values = list(zip(*rows)) or [()] * len(types)
-            outs = [pa.array(v, type=t) for v, t in zip(values, types)]
+            outs = _arrays(rows, types)
             yield pa.RecordBatch.from_arrays(kept.columns + outs, names=schema.names)
 
-    read = passthrough + [c for c in cols if c not in passthrough]
     return df.select(*read).mapInArrow(mapper, schema)
+
+
+def group_rows(
+    df: DataFrame,
+    keys: list[str],
+    cols: list[str],
+    out_fields: list[StructField],
+    pack: Callable[[list[dict]], list[tuple]],
+    order: str | None = None,
+) -> DataFrame:
+    """The one Python stage of the grouped wire packers (a sink batch, a
+    fixture request): ONE ``groupBy(*keys).applyInArrow`` over ``keys + cols``,
+    output schema = the key fields, then ``out_fields``.
+
+    ``pack(rows)`` sees one group's rows as dicts of ``cols`` (``_rows``,
+    as ``payload_rows`` gives them), sorted by the column ``order`` when it
+    is given, and returns the group's output tuples, one per ``out_fields``
+    layout. The group's key values are prepended to every tuple, and every
+    array is written against the Arrow type of its Spark field
+    (``applyInArrow`` rejects an int64 array under an ``int`` field).
+
+    ``pack`` is pickled to the workers, as ``payload_rows``' ``rows_of`` is."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    keys, cols = list(keys), list(cols)
+    read = list(dict.fromkeys(keys + cols + ([order] if order else [])))
+    _require(df, read)
+    schema = StructType([df.schema[k] for k in keys] + list(out_fields))
+    types = to_arrow_schema(schema).types
+
+    # no type hints: applyInArrow reads them to choose its calling form
+    def packer(key, table):
+        if order:
+            table = table.sort_by(order)
+        head = tuple(k.as_py() for k in key)
+        rows = [head + tuple(t) for t in pack(_rows(table, cols))]
+        return pa.Table.from_arrays(_arrays(rows, types), names=schema.names)
+
+    return df.select(*read).groupBy(*keys).applyInArrow(packer, schema)
 
 
 def to_events(df: DataFrame, content_col: str = "content", source_key: str = "content") -> DataFrame:

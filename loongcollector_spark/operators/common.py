@@ -56,27 +56,12 @@ class ParserOptions:
         drop failed rows. ``new_map`` holds the parsed key→value pairs (only
         meaningful where ``success``); ``src`` is the source value (defaults
         to fields[source_key])."""
-        keep, fields = self.columns(success, new_map, src)
-        if keep is not None:
-            df = df.filter(keep)
-        return df.withColumn(FIELDS, fields)
-
-    def columns(
-        self, success: Column, new_map: Column, src: Column | None = None, base: Column | None = None
-    ) -> tuple[Column | None, Column]:
-        """The truth table as Columns: ``(keep, fields)``, the row filter
-        (None when every row is kept) and the merged ``fields`` map. They
-        depend on no DataFrame, so one build serves any number of frames.
-        ``base``: the contents other than the source key (default ``fields``
-        without it); for a bare line, an empty map, and erasing folds to true."""
         if src is None:
             src = F.element_at(F.col(FIELDS), F.lit(self.source_key))
 
         empty = F.expr("map()")
-        if base is None:
-            base = F.map_filter(F.col(FIELDS), lambda k, v: k != F.lit(self.source_key))
+        base = F.map_filter(F.col(FIELDS), lambda k, v: k != F.lit(self.source_key))
 
-        keep = None
         if not self.keep_fail:
             # ShouldEraseEvent (CommonParserOptions.cpp:100-117): drop failed
             # rows whose remaining contents are empty, ONLY the
@@ -96,7 +81,7 @@ class ParserOptions:
                 & F.map_contains_key(f, F.lit("_source_"))
             )
             erasable = (F.size(f) == 0) | only_offset | only_container
-            keep = success | ~erasable
+            df = df.filter(success | ~erasable)
 
         # LAST_WIN precedence (later wins): raw_log < renamed_source < parsed
         # < base. `success`/`src` are LET-BOUND with the parsed map: the merge
@@ -123,7 +108,7 @@ class ParserOptions:
             F.when(success, new_map).alias("nm"),
             src.alias("src"),
         )
-        return keep, flet(bound, merge)
+        return df.withColumn(FIELDS, flet(bound, merge))
 
 
 def flet(col: Column, fn) -> Column:

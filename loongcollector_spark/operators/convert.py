@@ -40,8 +40,9 @@ from typing import Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import BinaryType, StructField
 
-from .base import FIELDS, Operator
+from .base import FIELDS, Operator, group_rows
 
 # converter.go:79-98 — agent tag names → public names.
 TAG_CONVERSION: dict[str, str] = {
@@ -586,6 +587,15 @@ def es_bulk_sink_frames(
     )
 
 
+def _sink_frames(aux: DataFrame, group_cols: list[str], pack, order_col: str | None) -> DataFrame:
+    """The OTLP directions' one ``group_rows`` stage: one wire payload per
+    sink group of ``aux``, its rows in ``__ord__`` order when ``order_col``
+    is given."""
+    cols = [c for c in aux.columns if c not in group_cols]
+    payload = [StructField("payload", BinaryType())]
+    return group_rows(aux, group_cols, cols, payload, pack, "__ord__" if order_col else None)
+
+
 def otlp_logs_sink_frames(
     df: DataFrame,
     group_cols: list[str],
@@ -611,16 +621,13 @@ def otlp_logs_sink_frames(
     dead code, reproduced by omission).
 
     Spark shape: contents/tags split stays Column-tier (LogGroupMaps);
-    groupBy(sink).applyInPandas packs wire bytes with the otlp_pb encoders —
-    one shuffle on the sink key, the same treatment as
+    one Arrow stage per sink group (``_sink_frames``) packs wire bytes with
+    the otlp_pb encoders — one shuffle on the sink key, the same treatment as
     PromRemoteWriteEncoder / loki_sink_frame. Roundtrip-pinned against
     otlp_pb.decode_logs (flusher_otlp query). Divergences: ObservedTimestamp
     (wall-clock in the reference, nondeterministic there) is omitted;
     attribute wire order is sorted-by-key here vs Go's random map iteration
     (both collapse to the same sorted view on decode)."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
     from . import otlp_pb as W
 
     lg = LogGroupMaps(
@@ -655,40 +662,31 @@ def otlp_logs_sink_frames(
         ).alias("__gtags__"),
         F.col(ts_sec_col).cast("long").alias("__ts__"),
     )
-    schema = StructType(
-        [df.schema[c] for c in group_cols] + [StructField("payload", BinaryType())]
-    )
-
-    def packer(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if order_col:
-            pdf = pdf.sort_values("__ord__")
-        r0 = pdf.iloc[0]
-        res_attrs = []
-        for key, val in (("source", r0["__src__"]), ("topic", r0["__topic__"]),
-                         ("machine_uuid", r0["__uuid__"])):
-            if val:  # the != "" gates at otlp.go:47-57
-                res_attrs.append(W.encode_attr(key, val))
-        for t in (r0["__gtags__"] if r0["__gtags__"] is not None else []):
-            res_attrs.append(W.encode_attr(t["key"], t["value"]))
+    def pack(rows: list[dict]) -> list[tuple]:
+        r0 = rows[0]
+        res_attrs = [
+            W.encode_attr(key, r0[c])
+            for key, c in (("source", "__src__"), ("topic", "__topic__"),
+                           ("machine_uuid", "__uuid__"))
+            if r0[c]  # the != "" gates at otlp.go:47-57
+        ]
+        res_attrs += [W.encode_attr(t["key"], t["value"]) for t in r0["__gtags__"]]
         records = []
-        for _, r in pdf.iterrows():
-            cont = dict(r["__contents__"] or {})
+        for r in rows:
+            cont = dict(r["__contents__"] or ())
             merged = {k: v for k, v in cont.items() if k not in ("content", "level")}
-            merged.update(dict(r["__tags__"] or {}))
+            merged.update(r["__tags__"] or ())
             records.append(
                 W.encode_log_record_pb(
-                    int(r["__ts__"]) * 1_000_000_000,
+                    r["__ts__"] * 1_000_000_000,
                     severity_text=cont.get("level", ""),
-                    body=cont["content"] if "content" in cont else None,
+                    body=cont.get("content"),
                     attrs=[W.encode_attr(k, merged[k]) for k in sorted(merged)],
                 )
             )
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        return pd.DataFrame(
-            {**keys, "payload": [W.encode_logs_data(records, resource_attrs=res_attrs)]}
-        )
+        return [(W.encode_logs_data(records, resource_attrs=res_attrs),)]
 
-    return aux.groupBy(*group_cols).applyInPandas(packer, schema=schema)
+    return _sink_frames(aux, group_cols, pack, order_col)
 
 
 def otlp_metrics_sink_frames(
@@ -709,11 +707,8 @@ def otlp_metrics_sink_frames(
     into ONE MetricsData wire payload per sink group (group meta →
     resource attributes, setAttributes :150). Untyped metrics are skipped
     (:246-247). Same Spark shape as the logs direction: one
-    groupBy(sink).applyInPandas shuffle, wire packing in Python, everything
+    ``_sink_frames`` shuffle on the sink key, wire packing in Python, everything
     upstream Column-tier. Roundtrip-pinned against otlp_pb.decode_metrics."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
     from . import otlp_pb as W
 
     rt_entries = [
@@ -737,24 +732,14 @@ def otlp_metrics_sink_frames(
             else F.expr("CAST(array() AS array<struct<key:string,value:string>>)")
         ).alias("__rtags__"),
     )
-    schema = StructType(
-        [df.schema[c] for c in group_cols] + [StructField("payload", BinaryType())]
-    )
-
-    def packer(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if order_col:
-            pdf = pdf.sort_values("__ord__")
-        rt = pdf.iloc[0]["__rtags__"]
-        res_attrs = [
-            W.encode_attr(t["key"], t["value"])
-            for t in (rt if rt is not None else [])
-        ]
+    def pack(rows: list[dict]) -> list[tuple]:
+        res_attrs = [W.encode_attr(t["key"], t["value"]) for t in rows[0]["__rtags__"]]
         metrics = []
-        for _, r in pdf.iterrows():
-            tags = dict(r["__tags__"] or {})
+        for r in rows:
+            tags = dict(r["__tags__"] or ())
             dp = W.encode_number_dp(
-                int(r["__ts__"]),
-                as_double=float(r["__val__"]),
+                r["__ts__"],
+                as_double=r["__val__"],
                 attrs=[W.encode_attr(k, tags[k]) for k in sorted(tags)],
             )
             if r["__type__"] == "gauge":
@@ -765,12 +750,9 @@ def otlp_metrics_sink_frames(
                     W.encode_sum_metric(r["__name__"], [dp], False, temporality=1)
                 )
             # untyped: skipped (otlp.go:246-247)
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        return pd.DataFrame(
-            {**keys, "payload": [W.encode_metrics_data(metrics, res_attrs)]}
-        )
+        return [(W.encode_metrics_data(metrics, res_attrs),)]
 
-    return aux.groupBy(*group_cols).applyInPandas(packer, schema=schema)
+    return _sink_frames(aux, group_cols, pack, order_col)
 
 
 def otlp_traces_sink_frames(
@@ -796,11 +778,8 @@ def otlp_traces_sink_frames(
     span rows → one TracesData wire payload per sink group. Hex trace/span/
     parent ids decode to bytes; a malformed or wrong-length id becomes the
     EMPTY id exactly like convertTraceID/convertSpanID (:498-532, the error
-    branch leaves the zero id). Same one-shuffle applyInPandas shape as the
+    branch leaves the zero id). Same one-shuffle ``_sink_frames`` shape as the
     logs/metrics directions; roundtrip-pinned against otlp_pb.decode_traces."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
     from . import otlp_pb as W
 
     rt_entries = [
@@ -829,10 +808,6 @@ def otlp_traces_sink_frames(
             else F.expr("CAST(array() AS array<struct<key:string,value:string>>)")
         ).alias("__rtags__"),
     )
-    schema = StructType(
-        [df.schema[c] for c in group_cols] + [StructField("payload", BinaryType())]
-    )
-
     def hex_id(s, width: int) -> bytes:
         """convertTraceID/convertSpanID: bad hex or wrong length → empty id."""
         try:
@@ -841,42 +816,28 @@ def otlp_traces_sink_frames(
             return b""
         return b if len(b) == width else b""
 
-    def packer(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if order_col:
-            pdf = pdf.sort_values("__ord__")
-        rt = pdf.iloc[0]["__rtags__"]
-        res_attrs = [
-            W.encode_attr(t["key"], t["value"])
-            for t in (rt if rt is not None else [])
-        ]
+    def pack(rows: list[dict]) -> list[tuple]:
+        res_attrs = [W.encode_attr(t["key"], t["value"]) for t in rows[0]["__rtags__"]]
         spans = []
-        for _, r in pdf.iterrows():
-            tags = dict(r["__tags__"] or {})
+        for r in rows:
+            tags = dict(r["__tags__"] or ())
             spans.append(
                 W.encode_span_pb(
                     hex_id(r["__tid__"], 16),
                     hex_id(r["__sid__"], 8),
                     r["__name__"] or "",
-                    int(r["__kind__"] or 0),
-                    int(r["__start__"] or 0),
-                    int(r["__end__"] or 0),
+                    r["__kind__"] or 0,
+                    r["__start__"] or 0,
+                    r["__end__"] or 0,
                     attrs=[W.encode_attr(k, tags[k]) for k in sorted(tags)],
-                    status_code=int(r["__status__"] or 0),
+                    status_code=r["__status__"] or 0,
                     parent_span_id=hex_id(r["__pid__"], 8),
                     status_message=r["__smsg__"] or "",
                 )
             )
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        return pd.DataFrame(
-            {
-                **keys,
-                "payload": [
-                    W.encode_traces_data(res_attrs, scope_name, scope_version, spans)
-                ],
-            }
-        )
+        return [(W.encode_traces_data(res_attrs, scope_name, scope_version, spans),)]
 
-    return aux.groupBy(*group_cols).applyInPandas(packer, schema=schema)
+    return _sink_frames(aux, group_cols, pack, order_col)
 
 
 def _canonical_mime_key(k: str) -> str:

@@ -55,7 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .base import payload_rows
+from .base import group_rows, payload_rows
 
 # ---------------------------------------------------------------------------
 # proto3 wire primitives
@@ -530,28 +530,18 @@ def encode_groups_df(
     tag_cols: dict[str, str] | None = None,
 ) -> DataFrame:
     """Fixture helper: pack rows into one PipelineEventGroup payload per
-    ``group_col`` value via applyInPandas. ``build_event(row) -> bytes`` is
-    one of the encode_*_event builders partially applied; ``tag_cols`` maps
-    tag name -> column whose (constant-within-group) value becomes the tag."""
-    import pandas as pd
-
+    ``group_col`` value (``base.group_rows``). ``build_event(row) -> bytes`` is
+    one of the encode_*_event builders partially applied, over the row as a
+    dict of ``df``'s columns; ``tag_cols`` maps tag name -> column whose
+    (constant-within-group) value becomes the tag."""
     tag_cols = tag_cols or {}
-    schema = StructType(
-        [
-            StructField(group_col, df.schema[group_col].dataType),
-            StructField("payload", BinaryType()),
-        ]
-    )
 
-    def packer(pdf: pd.DataFrame) -> pd.DataFrame:
-        gval = pdf[group_col].iloc[0]
-        tags = {k: str(pdf[c].iloc[0]) for k, c in tag_cols.items()}
-        bodies = [build_event(r) for r in pdf.itertuples(index=False)]
-        return pd.DataFrame(
-            {group_col: [gval], "payload": [encode_event_group(etype, bodies, tags)]}
-        )
+    def pack(rows: list[dict]) -> list[tuple]:
+        tags = {k: str(rows[0][c]) for k, c in tag_cols.items()}
+        return [(encode_event_group(etype, [build_event(r) for r in rows], tags),)]
 
-    return df.groupBy(group_col).applyInPandas(packer, schema=schema)
+    payload = [StructField("payload", BinaryType())]
+    return group_rows(df, [group_col], df.columns, payload, pack)
 
 
 # --- sls_logs.proto (service_http_server Format=sls) -------------------------

@@ -41,9 +41,9 @@ import math
 import struct
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import BinaryType, IntegerType, LongType, StringType, StructField
 
-from .base import payload_rows
+from .base import group_rows, payload_rows
 from .gofmt import fmt_go_g  # exact strconv.FormatFloat(v,'g',-1,64)
 from .pb import PBError, _fields, _len_field, read_varint, write_varint
 
@@ -335,29 +335,13 @@ class PromRemoteWriteEncoder:
         self.series_limit = series_limit
 
     def apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.types import BinaryType, IntegerType
-
-        gcols = list(self.group_cols)
-        ncol, tcol = self.name_col, self.tags_col
-        vcol, tscol, ocol = self.value_col, self.ts_ns_col, self.order_col
+        cols = [self.name_col, self.tags_col, self.value_col, self.ts_ns_col]
         limit = self.series_limit
-        schema = StructType(
-            [df.schema[c] for c in gcols]
-            + [StructField("batch_no", IntegerType()), StructField("payload", BinaryType())]
-        )
 
-        def packer(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            if ocol:
-                pdf = pdf.sort_values(ocol)
-            evs = [
-                (r[ncol], dict(r[tcol] or {}), float(r[vcol]), int(r[tscol]))
-                for _, r in pdf.iterrows()
-            ]
-            payloads = metrics_to_write_requests(evs, limit)
-            keys = {c: [pdf[c].iloc[0]] * len(payloads) for c in gcols}
-            return pd.DataFrame(
-                {**keys, "batch_no": range(len(payloads)), "payload": payloads}
-            )
+        def pack(rows: list[dict]) -> list[tuple]:
+            name, tags, value, ts_ns = cols
+            evs = [(r[name], dict(r[tags] or ()), r[value], r[ts_ns]) for r in rows]
+            return list(enumerate(metrics_to_write_requests(evs, limit)))
 
-        return df.groupBy(*gcols).applyInPandas(packer, schema=schema)
+        out = [StructField("batch_no", IntegerType()), StructField("payload", BinaryType())]
+        return group_rows(df, self.group_cols, cols, out, pack, order=self.order_col)

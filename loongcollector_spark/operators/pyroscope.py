@@ -67,8 +67,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Mapping
 
-import pandas as pd
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -378,15 +376,16 @@ def _xxh64_go_udf(col: Column) -> Column:
     """Arrow-batched parity tier: canonical xxHash64 seed 0 (= cespare/xxhash,
     raw/profile.go:95) of the UTF-8 stacktrace bytes, hex lowercase. Python in
     the row path — parity/golden use only."""
-    import pandas as pd  # noqa: F811 — re-import for the executor pickle
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     from .xxh import xxh64_hex
 
-    @pandas_udf("string")
-    def _h(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda x: None if x is None else xxh64_hex(x.encode("utf-8"))
+    def _h(s):  # no type hints: an untyped arrow_udf is a scalar one
+        import pyarrow as pa
+
+        return pa.array(
+            [None if x is None else xxh64_hex(x.encode("utf-8")) for x in s.to_pylist()],
+            pa.string(),
         )
 
-    return _h(col)
+    return arrow_udf(_h, "string")(col)

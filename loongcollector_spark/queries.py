@@ -6,9 +6,10 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import BinaryType, StringType, StructField
 
 from . import flagship, oracles
-from .operators.base import FIELDS, fget, to_events
+from .operators.base import FIELDS, fget, group_rows, payload_rows, to_events
 from .operators.common import RAW_LOG_KEY, ParserOptions
 from .operators.enrich import DictMap
 from .operators.filters import FilterNative, FilterRegex, RateLimit
@@ -1645,7 +1646,7 @@ ORACLES["parse_grok"] = _grok_oracle()
 # ---------------------------------------------------------------------------
 # processor_parse_from_pb_native (SURVEY §2 #21): LoongSuite PB wire decode.
 # The oracle cannot build protobuf bytes in SQL, so the query proves the
-# wire ROUND TRIP over real bytes (encode in an applyInPandas fixture stage,
+# wire ROUND TRIP over real bytes (encode in a group_rows fixture stage,
 # decode with the operator under test) and the oracle computes the expected
 # decoded rows directly from `events`; byte-level decode correctness against
 # hand-assembled wire bytes is pinned separately in tests/test_pb.py.
@@ -1664,17 +1665,17 @@ def q_parse_from_pb(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 32).alias("group_no"),
     )
 
-    def build(r) -> bytes:
+    def build(r: dict) -> bytes:
         return encode_log_event(
-            ts=_PB_TS_BASE + int(r.event_id) * 1_000_003,
+            ts=_PB_TS_BASE + r["event_id"] * 1_000_003,
             contents={
-                "event_type": r.event_type,
-                "user_id": str(r.user_id),
-                "props": r.props,
+                "event_type": r["event_type"],
+                "user_id": str(r["user_id"]),
+                "props": r["props"],
             },
-            level=r.event_type,
-            file_offset=int(r.event_id),
-            raw_size=len(r.props),
+            level=r["event_type"],
+            file_offset=r["event_id"],
+            raw_size=len(r["props"]),
         )
 
     payloads = encode_groups_df(ev, "group_no", build, etype="log", tag_cols={"g": "group_no"})
@@ -1722,26 +1723,27 @@ def q_parse_from_pb_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 16).alias("group_no"),
     )
 
-    def build_metric(r) -> bytes:
+    def build_metric(r: dict) -> bytes:
         return encode_metric_event(
-            ts=_PB_TS_BASE + int(r.event_id) * 999_983,
-            name="m_" + r.event_type,
-            value=float(r.value),
-            tags={"u": str(r.user_id)},
+            ts=_PB_TS_BASE + r["event_id"] * 999_983,
+            name="m_" + r["event_type"],
+            value=r["value"],
+            tags={"u": str(r["user_id"])},
         )
 
-    def build_span(r) -> bytes:
-        ts = _PB_TS_BASE + int(r.event_id) * 999_983
+    def build_span(r: dict) -> bytes:
+        eid = r["event_id"]
+        ts = _PB_TS_BASE + eid * 999_983
         return encode_span_event(
             ts=ts,
-            trace_id=f"tr-{r.event_id}",
-            span_id=f"sp-{r.event_id}",
-            name=r.event_type,
-            kind=int(r.event_id) % 6,
+            trace_id=f"tr-{eid}",
+            span_id=f"sp-{eid}",
+            name=r["event_type"],
+            kind=eid % 6,
             start_ns=ts,
-            end_ns=ts + int(r.user_id),
-            tags={"u": str(r.user_id)},
-            status=int(r.event_id) % 3,
+            end_ns=ts + r["user_id"],
+            tags={"u": str(r["user_id"])},
+            status=eid % 3,
         )
 
     metrics = encode_groups_df(
@@ -1857,52 +1859,60 @@ QUERIES["telemetry_agg"] = q_telemetry_agg
 ORACLES["telemetry_agg"] = oracle_telemetry_agg()
 
 
-def _otel_pb_payload_udf(signal: str):
-    """pandas UDF: build the OTLP wire bytes (hex) for the q_otel_trace /
-    q_otel_metric fixture values — same numbers, protobuf wire instead of
-    JSON text, so the Format=protobuf path reuses those queries' oracles."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+def _otel_pb_events(ev: DataFrame, signal: str) -> DataFrame:
+    """Fixture event frame (doc_id, fields) whose ``content`` is the OTLP
+    wire bytes, hex (``OtelPbToJson``'s default encoding), of the q_otel_trace
+    / q_otel_metric / q_otel_log fixture values: same numbers, protobuf wire
+    instead of JSON text, so the Format=protobuf path reuses those queries'
+    oracles. One ``payload_rows`` Arrow stage."""
+    import hashlib
 
     from .operators import otlp_pb as W
 
-    @pandas_udf("string")
-    def build(doc_id, event_id, event_type, user_id):
-        import hashlib
+    def rows_of(r: dict) -> list[tuple]:
+        d, e, t, u = r["doc_id"], r["event_id"], r["event_type"], r["user_id"]
+        if signal == "trace":
+            tid = bytes.fromhex(hashlib.md5(d.encode()).hexdigest())
+            sid = bytes.fromhex(hashlib.md5((d + "s").encode()).hexdigest()[:16])
+            start = 1663904182000000000 + e * 1000
+            end = start + (e % 100 + 1) * 1000000
+            sp = W.encode_span_pb(
+                tid, sid, f"op-{t}", e % 5 + 1, start, end,
+                attrs=[W.encode_attr("http.status", 200 + u % 5 * 100)],
+                status_code=e % 3,
+            )
+            payload = W.encode_traces_data(
+                [W.encode_attr("host.name", f"h{u % 5}"),
+                 W.encode_attr("service.name", t)],
+                "io.otel", "1.0", [sp],
+            )
+        elif signal == "metric":
+            ts = 1663904182000000000 + e * 1000
+            gauge_dp = W.encode_number_dp(
+                ts, as_double=e % 97 + 0.5, attrs=[W.encode_attr("etype", t)]
+            )
+            sum_dp = W.encode_number_dp(ts, as_int=e % 1000)
+            payload = W.encode_metrics_data(
+                [W.encode_gauge_metric("evt_value", [gauge_dp]),
+                 W.encode_sum_metric("evt_total", [sum_dp], True)],
+                [W.encode_attr("host.name", f"h{u % 5}")],
+            )
+        else:
+            rec = W.encode_log_record_pb(
+                _OTEL_LOG_TS_BASE + e * 1000,
+                severity_number=e % 25,
+                severity_text=t,
+                body=f"msg-{t}",
+                attrs=[W.encode_attr("attr1", e % 100), W.encode_attr("attr2", e % 2 == 0)],
+            )
+            payload = W.encode_logs_data(
+                [rec], resource_attrs=[W.encode_attr("serviceName", f"svc-{u % 5}")]
+            )
+        return [(payload.hex(),)]
 
-        out = []
-        for d, e, t, u in zip(doc_id, event_id, event_type, user_id):
-            e, u = int(e), int(u)
-            if signal == "trace":
-                tid = bytes.fromhex(hashlib.md5(d.encode()).hexdigest())
-                sid = bytes.fromhex(hashlib.md5((d + "s").encode()).hexdigest()[:16])
-                start = 1663904182000000000 + e * 1000
-                end = start + (e % 100 + 1) * 1000000
-                sp = W.encode_span_pb(
-                    tid, sid, f"op-{t}", e % 5 + 1, start, end,
-                    attrs=[W.encode_attr("http.status", 200 + u % 5 * 100)],
-                    status_code=e % 3,
-                )
-                payload = W.encode_traces_data(
-                    [W.encode_attr("host.name", f"h{u % 5}"),
-                     W.encode_attr("service.name", t)],
-                    "io.otel", "1.0", [sp],
-                )
-            else:
-                ts = 1663904182000000000 + e * 1000
-                gauge_dp = W.encode_number_dp(
-                    ts, as_double=e % 97 + 0.5, attrs=[W.encode_attr("etype", t)]
-                )
-                sum_dp = W.encode_number_dp(ts, as_int=e % 1000)
-                payload = W.encode_metrics_data(
-                    [W.encode_gauge_metric("evt_value", [gauge_dp]),
-                     W.encode_sum_metric("evt_total", [sum_dp], True)],
-                    [W.encode_attr("host.name", f"h{u % 5}")],
-                )
-            out.append(payload.hex())
-        return pd.Series(out)
-
-    return build
+    cols = ["doc_id", "event_id", "event_type", "user_id"]
+    content = [StructField("content", StringType())]
+    return to_events(payload_rows(ev, cols, ["doc_id"], content, rows_of))
 
 
 def q_otel_pb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1913,14 +1923,7 @@ def q_otel_pb_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.otel import OtelTraceParser
     from .operators.otlp_pb import OtelPbToJson
 
-    ev = _events_raw(spark, sf_dir)
-    build = _otel_pb_payload_udf("trace")
-    df = to_events(
-        ev.select(
-            "doc_id",
-            build("doc_id", "event_id", "event_type", "user_id").alias("content"),
-        )
-    )
+    df = _otel_pb_events(_events_raw(spark, sf_dir), "trace")
     out = OtelTraceParser().apply(OtelPbToJson("trace").apply(df))
     return out.select(
         "doc_id",
@@ -1938,14 +1941,7 @@ def q_otel_pb_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.otel import OtelMetricParser
     from .operators.otlp_pb import OtelPbToJson
 
-    ev = _events_raw(spark, sf_dir)
-    build = _otel_pb_payload_udf("metric")
-    df = to_events(
-        ev.select(
-            "doc_id",
-            build("doc_id", "event_id", "event_type", "user_id").alias("content"),
-        )
-    )
+    df = _otel_pb_events(_events_raw(spark, sf_dir), "metric")
     out = OtelMetricParser().apply(OtelPbToJson("metric").apply(df))
     return out.select(
         "doc_id",
@@ -2335,9 +2331,6 @@ def q_prom_remote_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     renders __STALE_NAN__."""
     import struct as _struct
 
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
-
     from .operators.prom_rw import (
         STALE_NAN_BITS,
         PromRemoteWriteDecoder,
@@ -2350,14 +2343,10 @@ def q_prom_remote_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stale = _struct.unpack("<d", _struct.pack("<Q", STALE_NAN_BITS))[0]
 
-    out_schema = StructType(
-        [StructField("req_no", IntegerType()), StructField("payload", BinaryType())]
-    )
-
-    def packer(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(rows: list[dict]) -> list[tuple]:
         series = []
-        for r in pdf.itertuples(index=False):
-            eid, uid = int(r.event_id), int(r.user_id)
+        for r in rows:
+            eid, uid = r["event_id"], r["user_id"]
             val = stale if eid % 97 == 0 else eid + 0.25
             series.append(
                 {
@@ -2369,10 +2358,10 @@ def q_prom_remote_write(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "samples": [(val, 1434055562000 + eid % 1000)],
                 }
             )
-        payload = snappy_compress(encode_write_request(series))
-        return pd.DataFrame({"req_no": [pdf["req_no"].iloc[0]], "payload": [payload]})
+        return [(snappy_compress(encode_write_request(series)),)]
 
-    reqs = ev.groupBy("req_no").applyInPandas(packer, schema=out_schema)
+    payload = [StructField("payload", BinaryType())]
+    reqs = group_rows(ev, ["req_no"], ["event_id", "user_id"], payload, pack)
     out = PromRemoteWriteDecoder("payload", passthrough=["req_no"]).apply(reqs)
     return out.select(
         F.col("req_no").cast("int").alias("req_no"),
@@ -2463,36 +2452,10 @@ FROM events"""
 def q_otel_pb_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same fixture over the LogsData WIRE bytes (logs.proto) through
     the Python wire decode (otlp_pb.py) — the Format=protobuf path; shares oracle_otel_log."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from .operators import otlp_pb as W
     from .operators.otel import OtelLogParser
-
-    @pandas_udf("string")
-    def build(doc_id, event_id, event_type, user_id):
-        out = []
-        for _d, e, t, u in zip(doc_id, event_id, event_type, user_id):
-            e, u = int(e), int(u)
-            rec = W.encode_log_record_pb(
-                _OTEL_LOG_TS_BASE + e * 1000,
-                severity_number=e % 25,
-                severity_text=t,
-                body=f"msg-{t}",
-                attrs=[W.encode_attr("attr1", e % 100), W.encode_attr("attr2", e % 2 == 0)],
-            )
-            payload = W.encode_logs_data(
-                [rec], resource_attrs=[W.encode_attr("serviceName", f"svc-{u % 5}")]
-            )
-            out.append(payload.hex())
-        return pd.Series(out)
-
-    ev = _events_raw(spark, sf_dir)
-    df = to_events(
-        ev.select("doc_id", build("doc_id", "event_id", "event_type", "user_id").alias("content"))
-    )
     from .operators.otlp_pb import OtelPbToJson
 
+    df = _otel_pb_events(_events_raw(spark, sf_dir), "log")
     return _otel_log_cols(OtelLogParser().apply(OtelPbToJson("log").apply(df)))
 
 
@@ -2634,36 +2597,30 @@ def q_sls_group_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     one serialized sls_logs.proto LogGroup per request → log rows with group
     topic/source/tags inherited; proto2 required-field failures reject the
     whole request."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
-
     from .operators.pb import ParseSlsLogGroup, encode_sls_log, encode_sls_log_group
 
     ev = _events_raw(spark, sf_dir).withColumn(
         "req_no", (F.col("event_id") % 16).cast("int")
     )
-    out_schema = StructType(
-        [StructField("req_no", IntegerType()), StructField("payload", BinaryType())]
-    )
 
-    def packer(pdf: pd.DataFrame) -> pd.DataFrame:
-        logs = []
-        for r in pdf.sort_values("event_id").itertuples(index=False):
-            eid, uid = int(r.event_id), int(r.user_id)
-            logs.append(
-                encode_sls_log(
-                    1434055562 + eid % 86400,
-                    {"etype": r.event_type, "uid": str(uid)},
-                    time_ns=(eid % 1000) * 1_000_000,
-                )
+    def pack(rows: list[dict]) -> list[tuple]:
+        logs = [
+            encode_sls_log(
+                1434055562 + r["event_id"] % 86400,
+                {"etype": r["event_type"], "uid": str(r["user_id"])},
+                time_ns=(r["event_id"] % 1000) * 1_000_000,
             )
-        req = int(pdf["req_no"].iloc[0])
+            for r in rows
+        ]
+        req = rows[0]["req_no"]
         payload = encode_sls_log_group(
             logs, topic=f"top{req % 3}", source="10.9.8.7", tags={"env": f"e{req % 2}"}
         )
-        return pd.DataFrame({"req_no": [req], "payload": [payload]})
+        return [(payload,)]
 
-    reqs = ev.groupBy("req_no").applyInPandas(packer, schema=out_schema)
+    cols = ["req_no", "event_id", "event_type", "user_id"]
+    payload = [StructField("payload", BinaryType())]
+    reqs = group_rows(ev, ["req_no"], cols, payload, pack, order="event_id")
     out = ParseSlsLogGroup("payload", ["req_no"]).apply(reqs)
     return out.select(
         F.col("req_no").cast("int").alias("req_no"),
@@ -4010,38 +3967,31 @@ QUERIES["wineventlog"] = q_wineventlog
 ORACLES["wineventlog"] = oracle_wineventlog()
 
 
-def _pprof_payload_udf():
-    """pandas UDF (fixture-synthesis tier, same policy as _otel_pb_payload_udf):
-    build pprof wire payloads (hex) for q_pprof_profile's fixture values."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+def _pprof_payloads(ev: DataFrame) -> DataFrame:
+    """q_pprof_profile's fixture: (doc_id, user_id, payload) with the pprof
+    wire bytes built per event in one ``payload_rows`` Arrow stage."""
     from .operators.pprof_profile import PprofBuilder
 
-    @pandas_udf("string")
-    def build(event_id):
-        out = []
-        for e in event_id:
-            e = int(e)
-            b = PprofBuilder()
-            b.sample_type("samples", "count")
-            leaf = b.location([b.function(f"fn{e % 5}", "a.go")])
-            root = b.location([b.function("base", "b.go")])
-            b.sample([leaf, root], [e % 20 + 1])
-            if e % 3 == 0:
-                b.sample([root], [e % 7 + 1])
-            out.append(
-                b.build(
-                    time_nanos=1_700_000_000_000_000_000 + e * 1_000_000,
-                    duration_nanos=5_000_000,
-                    period=10_000_000,
-                    period_type=("cpu", "nanoseconds"),
-                    gzipped=e % 2 == 0,
-                ).hex()
-            )
-        return pd.Series(out)
+    def rows_of(r: dict) -> list[tuple]:
+        e = r["event_id"]
+        b = PprofBuilder()
+        b.sample_type("samples", "count")
+        leaf = b.location([b.function(f"fn{e % 5}", "a.go")])
+        root = b.location([b.function("base", "b.go")])
+        b.sample([leaf, root], [e % 20 + 1])
+        if e % 3 == 0:
+            b.sample([root], [e % 7 + 1])
+        payload = b.build(
+            time_nanos=1_700_000_000_000_000_000 + e * 1_000_000,
+            duration_nanos=5_000_000,
+            period=10_000_000,
+            period_type=("cpu", "nanoseconds"),
+            gzipped=e % 2 == 0,
+        )
+        return [(payload,)]
 
-    return build
+    payload = [StructField("payload", BinaryType())]
+    return payload_rows(ev, ["event_id"], ["doc_id", "user_id"], payload, rows_of)
 
 
 def q_pprof_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4051,10 +4001,9 @@ def q_pprof_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     label marshal with _sample_rate_, profile TimeNanos timestamps."""
     from .operators.pprof_profile import PprofProfileParser
 
-    ev = _events_raw(spark, sf_dir)
-    frame = ev.select(
+    frame = _pprof_payloads(_events_raw(spark, sf_dir)).select(
         "doc_id",
-        F.unhex(_pprof_payload_udf()(F.col("event_id"))).alias("payload"),
+        "payload",
         F.lit("go").alias("spy_name"),
         F.lit(100).cast("long").alias("sample_rate"),
         F.create_map(

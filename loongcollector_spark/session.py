@@ -5,7 +5,7 @@ local testing:
 - AQE on (runtime coalesce + skew-join splitting),
 - LAST_WIN map-key dedup (our event `fields` map uses map_concat for set/overwrite
   semantics mirroring LogEvent SetContent, reference core/models/LogEvent.h:64-128),
-- Arrow enabled for pandas UDF stages.
+- Arrow enabled for pandas conversions (``toPandas``, ``createDataFrame``).
 """
 
 from __future__ import annotations

@@ -3,7 +3,6 @@
 the write's rebalance splitting a hot sink, desensitize masking."""
 
 import importlib.util
-import itertools
 import json
 import os
 import re
@@ -34,7 +33,12 @@ from loongcollector_spark.synth import (
     sequences_df,
     source_lookup_df,
 )
-from loongcollector_spark.tokens import decode_tokens, decode_tokens_arrow
+from loongcollector_spark.tokens import (
+    REGEX_GROUPS,
+    REGEX_OK,
+    decode_tokens,
+    decode_tokens_arrow,
+)
 
 
 def _per_source_reference(seq, arrow=False):
@@ -147,13 +151,6 @@ def test_nginx_line_holding_the_group_separator(spark):
     assert got[0][FIELDS]["http_user_agent"] == "Mozilla\x01/5.0 (X11)"
 
 
-# every combination of the truth table's four options
-_OPTION_GRID = [
-    ParserOptions(keep_fail=kf, keep_succeed=ks, renamed_source_key=rk, coping_raw_log=cr)
-    for kf, ks, rk, cr in itertools.product((False, True), (False, True), (None, "raw"), (False, True))
-]
-
-
 @pytest.fixture(scope="module")
 def fixture_lines(spark, sf_dir):
     """The first four decoded fixture lines of each flagship source, plus a
@@ -177,60 +174,43 @@ def _lines(fixture):
     return st.lists(line, min_size=1, max_size=10)
 
 
-def _parse_by_index(src):
-    """(success, parsed map) over ``src`` of the PARSERS parser numbered by
-    column ``p``: one CASE, as the flagship dispatches on ``source``."""
+def _parse_by_source(src):
+    """(success, parsed map) over ``src`` of the PARSERS parser of each row's
+    ``source``: one CASE, as the flagship dispatches."""
     success = new_map = None
-    for n, parser in enumerate(flagship.PARSERS.values()):
+    for source, parser in flagship.PARSERS.items():
         ok, parsed = parser.parse(src)
-        hit = F.col("p") == n
+        hit = F.col("source") == source
         success = F.when(hit, ok) if success is None else success.when(hit, ok)
         new_map = F.when(hit, parsed) if new_map is None else new_map.when(hit, parsed)
     return success.otherwise(False), new_map
 
 
-@pytest.fixture(scope="module")
-def bare_columns(spark):
-    """Per option combination, (kept, fields) of ``columns(..., base=<empty
-    map>)`` over a bare ``content`` column."""
-    content = F.col("content")
-    parsed, out = _parse_by_index(content), []
-    for k, opts in enumerate(_OPTION_GRID):
-        keep, fields = opts.columns(*parsed, content, base=F.expr("map()"))
-        kept = F.lit(True) if keep is None else F.coalesce(keep, F.lit(False))
-        out.append(F.struct(kept.alias("kept"), fields.alias(FIELDS)).alias(f"c{k}"))
-    return out
-
-
 @given(st.data())
 @settings(max_examples=5, deadline=None)
-def test_bare_line_columns_equal_finalize_over_events(spark, fixture_lines, bare_columns, data):
-    """``columns(..., base=<empty map>)`` over a bare ``content`` column, as
-    the flagship parses, keeps the same rows with the same ``fields`` as
-    ``finalize`` over ``to_events`` of the same lines, for every PARSERS
-    parser under every option combination."""
+def test_bare_line_columns_equal_finalize_over_events(spark, fixture_lines, data):
+    """The flagship's keep filter and ``fields`` (``flagship._columns()``) over
+    a bare ``content`` column keep the same rows with the same ``fields`` as
+    default ``ParserOptions().finalize`` over ``to_events`` of the same lines,
+    for every PARSERS source. The nginx rows read the decode stage's match
+    columns, filled here by the JVM regex parser (RE2 parity:
+    tests/test_re2_parse.py)."""
     lines = data.draw(_lines(fixture_lines))
     df = spark.createDataFrame(
-        [(i, p, line) for i, line in enumerate(lines) for p in range(len(flagship.PARSERS))],
-        "i int, p int, content string",
+        [(i, s, line) for i, line in enumerate(lines) for s in flagship.PARSERS],
+        "i int, source string, content string",
     )
-    ev, src = to_events(df), fget("content")
-    parsed = _parse_by_index(src)
-    finalized = [
-        opts.finalize(ev, *parsed, src).select(F.lit(k).alias("k"), "i", "p", FIELDS)
-        for k, opts in enumerate(_OPTION_GRID)
+    ok, groups = flagship.PARSERS["nginx"].parse(F.col("content"))
+    stage = df.select("*", ok.alias(REGEX_OK), F.when(ok, groups).alias(REGEX_GROUPS))
+    c = flagship._columns()
+    got = stage.filter(c.keep).select("i", "source", c.fields.alias(FIELDS))
+    src = fget("content")
+    want = ParserOptions().finalize(to_events(df), *_parse_by_source(src), src)
+    rows = [
+        sorted((r["i"], r["source"], sorted(r[FIELDS].items())) for r in out.collect())
+        for out in (got, want.select("i", "source", FIELDS))
     ]
-    got = sorted(
-        (k, r["i"], r["p"], sorted(r[f"c{k}"][FIELDS].items()))
-        for r in df.select("i", "p", *bare_columns).collect()
-        for k in range(len(_OPTION_GRID))
-        if r[f"c{k}"]["kept"]
-    )
-    want = sorted(
-        (r["k"], r["i"], r["p"], sorted(r[FIELDS].items()))
-        for r in reduce(DataFrame.unionByName, finalized).collect()
-    )
-    assert got == want, lines
+    assert rows[0] == rows[1], lines
 
 
 def test_second_build_makes_few_py4j_round_trips(spark, sf_dir, monkeypatch):

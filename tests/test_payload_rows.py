@@ -1,11 +1,19 @@
-"""``operators.base.payload_rows`` — the one Arrow stage of the per-row payload
-decoders. Every decoder on it must carry a bigint exactly when another row of
-the same Arrow batch is null (a pandas stage turns such an int64 column into
-float64 and rounds values above 2**53), and must reject a missing input column
-when the plan is built, not inside a Python worker."""
+"""``operators.base.payload_rows`` and ``group_rows`` — the one Arrow stage of
+the per-row payload decoders and of the grouped wire packers. Every decoder
+and packer on them must carry a bigint exactly when another row of the same
+Arrow batch or group holds a null (a pandas stage turns such an int64 column
+into float64 and rounds values above 2**53), and must reject a missing input
+column when the plan is built, not inside a Python worker."""
 
 from __future__ import annotations
 
+import json
+import re
+from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pytest
 
 from loongcollector_spark.dataops.multimodal import (
@@ -13,9 +21,17 @@ from loongcollector_spark.dataops.multimodal import (
     extract_media_features,
     make_ppm,
 )
+from loongcollector_spark.operators.base import FIELDS, group_rows, to_events
+from loongcollector_spark.operators.convert import (
+    otlp_logs_sink_frames,
+    otlp_metrics_sink_frames,
+    otlp_traces_sink_frames,
+)
 from loongcollector_spark.operators.jfr import _EVENT_T, JfrChunkParser
 from loongcollector_spark.operators.otlp_pb import (
     OtelPbToJson,
+    decode_metrics,
+    decode_traces,
     encode_span_pb,
     encode_traces_data,
 )
@@ -23,6 +39,7 @@ from loongcollector_spark.operators.pb import (
     ParseFromPB,
     ParseSlsLogGroup,
     encode_event_group,
+    encode_groups_df,
     encode_log_event,
     encode_sls_log,
     encode_sls_log_group,
@@ -34,9 +51,11 @@ from loongcollector_spark.operators.pprof_profile import (
 )
 from loongcollector_spark.operators.prom_rw import (
     PromRemoteWriteDecoder,
+    PromRemoteWriteEncoder,
     encode_write_request,
     snappy_compress,
 )
+from loongcollector_spark.queries import q_prom_remote_write, q_sls_group_decode
 
 BIG = 1_700_000_000_123_456_789  # > 2**53: float64 cannot hold it
 
@@ -132,3 +151,137 @@ def test_missing_payload_column_is_a_plan_time_error(spark, decoder):
     df = spark.createDataFrame([(1,)], "big long")
     with pytest.raises(ValueError, match="missing column nope"):
         decoder("nope").apply(df)
+
+
+# --- grouped packers: each packs one group holding BIG next to a null and
+# decodes its payload with its query's decoder; (got, want) read BIG back
+
+
+def _encode_groups_df(spark, tmp_path):
+    df = spark.createDataFrame([(1, BIG), (1, None)], "g int, ts long")
+    payloads = encode_groups_df(df, "g", lambda r: encode_log_event(r["ts"] or 0, {"m": "x"}))
+    out = ParseFromPB("payload").apply(payloads).collect()
+    return sorted(r.ts_sec * 10**9 + r.ts_ns for r in out), [0, BIG]
+
+
+def _prom_rw_encoder(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("s", "m", {"h": "1"}, 1.0, BIG), ("s", "m", None, 2.0, BIG)],
+        "sink string, metric_name string, tags map<string,string>, value double, ts_ns long",
+    )
+    enc = PromRemoteWriteEncoder(["sink"]).apply(df)
+    out = PromRemoteWriteDecoder("payload", passthrough=["sink"]).apply(enc).collect()
+    return [r["__time_nano__"] for r in out], [f"{BIG // 10**6}000000"] * 2
+
+
+def _otlp_logs(spark, tmp_path):
+    # the only int64 that leaves the packer is the group key
+    df = spark.createDataFrame(
+        [(BIG, 1, {"content": "a"}), (BIG, 2, None)],
+        f"g long, ts_sec long, {FIELDS} map<string,string>",
+    )
+    enc = otlp_logs_sink_frames(df, ["g"])
+    hexed = to_events(enc.select("g", F.lower(F.hex("payload")).alias("content")))
+    out = OtelPbToJson("log").apply(hexed).collect()
+    records = json.loads(out[0][FIELDS]["content"])["resourceLogs"][0]["scopeLogs"][0]
+    return (out[0].g, len(records["logRecords"])), (BIG, 2)
+
+
+def _otlp_metrics(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("s", "m", "gauge", {"k": "v"}, 1.0, BIG), ("s", "m", "gauge", None, 2.0, BIG)],
+        "sink string, metric_name string, metric_type string,"
+        "tags map<string,string>, value double, ts_ns long",
+    )
+    payload = otlp_metrics_sink_frames(df, ["sink"]).collect()[0].payload
+    metrics = decode_metrics(bytes(payload))["resourceMetrics"][0]["scopeMetrics"][0]["metrics"]
+    return [m["gauge"]["dataPoints"][0]["timeUnixNano"] for m in metrics], [str(BIG)] * 2
+
+
+def _otlp_traces(spark, tmp_path):
+    ids = ("ab" * 16, "cd" * 8, "")
+    df = spark.createDataFrame(
+        [("s", 1, *ids, "op", 1, BIG, BIG + 1, {}, 0), ("s", 2, *ids, "op", 1, None, None, None, 0)],
+        "sink string, i long, trace_id string, span_id string, parent_span_id string,"
+        "span_name string, kind int, start_ns long, end_ns long,"
+        "tags map<string,string>, status_code int",
+    )
+    payload = otlp_traces_sink_frames(df, ["sink"], order_col="i").collect()[0].payload
+    spans = decode_traces(bytes(payload))["resourceSpans"][0]["scopeSpans"][0]["spans"]
+    got = [(s["startTimeUnixNano"], s["endTimeUnixNano"]) for s in spans]
+    return got, [(str(BIG), str(BIG + 1)), ("0", "0")]
+
+
+def _events_dir(tmp_path, event_ids, event_types, user_ids) -> str:
+    """An sf dir whose ``events`` table holds only the given rows."""
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(event_ids, pa.int64()),
+            "event_type": pa.array(event_types, pa.string()),
+            "user_id": pa.array(user_ids, pa.int64()),
+        }),
+        tmp_path / "events.parquet",
+    )
+    return str(tmp_path)
+
+
+def _q_prom_remote_write(spark, tmp_path):
+    # one request (event_id % 16): the packer reads event_id and user_id, so
+    # the null is the group's unread event_type
+    sf = _events_dir(tmp_path, [BIG, BIG + 16], [None, "b"], [3, 4])
+    out = q_prom_remote_write(spark, sf).collect()
+    return sorted(r.time_nano for r in out), [
+        f"{1434055562000 + e % 1000}000000" for e in (BIG, BIG + 16)
+    ]
+
+
+def _q_sls_group_decode(spark, tmp_path):
+    sf = _events_dir(tmp_path, [BIG, BIG + 16], ["a", "b"], [None, 4])
+    out = q_sls_group_decode(spark, sf).collect()
+    got = sorted((r.time, r.time_ns, r.uid) for r in out)
+    return got, [
+        (1434055562 + e % 86400, e % 1000 * 1_000_000, u)
+        for e, u in ((BIG, "None"), (BIG + 16, "4"))
+    ]
+
+
+GROUP_CASES = {
+    f.__name__.lstrip("_"): f
+    for f in (
+        _encode_groups_df, _prom_rw_encoder, _otlp_logs, _otlp_metrics, _otlp_traces,
+        _q_prom_remote_write, _q_sls_group_decode,
+    )
+}
+
+
+@pytest.mark.parametrize("case", sorted(GROUP_CASES))
+def test_grouped_bigint_exact_next_to_a_null(spark, tmp_path, case):
+    got, want = GROUP_CASES[case](spark, tmp_path)
+    assert got == want
+
+
+def test_group_rows_missing_column_is_a_plan_time_error(spark):
+    df = spark.createDataFrame([(1,)], "big long")
+    with pytest.raises(ValueError, match="missing column nope"):
+        group_rows(df, ["big"], ["nope"], [], lambda rows: [])
+    with pytest.raises(ValueError, match="missing column nope"):
+        group_rows(df, ["big"], ["big"], [], lambda rows: [], order="nope")
+
+
+PACKAGE = Path(__file__).resolve().parent.parent / "loongcollector_spark"
+
+
+def test_only_the_stateful_streaming_stages_use_pandas():
+    """Every stateless Python stage is an Arrow one. pandas is left to the
+    three ``applyInPandasWithState`` functions of streaming/pipeline.py:
+    Spark's one Arrow stateful API, ``transformWithState``, has another
+    operator model."""
+    banned = re.compile(r"\bimport pandas\b|\bfrom pandas\b|applyInPandas|pandas_udf")
+    hits = [
+        f"{path.relative_to(PACKAGE)}:{n}: {line.strip()}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "streaming" / "pipeline.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, "\n".join(hits)

@@ -11,8 +11,12 @@ from loongcollector_spark import flagship
 from loongcollector_spark.synth import sequences_df
 
 
-# plan-node names of a Python stage (the set perfbench/eventlog.PYTHON_NODES reads)
-PYTHON_NODES = ("MapInPandas", "MapInArrow", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+# plan-node names of a Python stage: perfbench/eventlog.PYTHON_NODES' per-row
+# and map stages, plus the grouped ones
+PYTHON_NODES = (
+    "MapInPandas", "MapInArrow", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython",
+    "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+)
 
 
 def python_nodes(plan: str) -> list[str]:
@@ -353,6 +357,17 @@ def test_flagship_runs_no_jvm_nginx_regex(spark, sf_dir):
         assert re.search(r"\+- Filter \(\d+\)$", lines[py - 1]), lines
 
 
+def test_flagship_write_parses_each_line_once(spark, sf_dir):
+    """The routed rows the write takes parse each app-json and CSV line once
+    in the keep Filter and once more for ``fields``: at most 3 ``from_json(``
+    (the Filter's success; the Project's map and its variant re-parse) and 2
+    ``split(content`` (5 and 4 when ``fields`` was the truth table's merge,
+    which re-ran the success CASE inside the Project)."""
+    plan = _plan(flagship.routed(spark, sf_dir))
+    assert plan.count("from_json(") <= 3, plan
+    assert plan.count("split(content") <= 2, plan
+
+
 def _arrow_output(plan: str) -> list[str]:
     """The column names the plan's MapInArrow node outputs."""
     out = re.search(r"\(\d+\) MapInArrow\n.*\nArguments: .*?, \[([^\]]*)\], ", plan).group(1)
@@ -622,8 +637,8 @@ def test_r4b_decoder_plans_narrow(spark, sf_dir):
         assert not python_nodes(plan)
 
     # one decode pass (tree node + its detail header = 2 mentions); the pprof
-    # fixture builds its payloads in one pandas UDF (ArrowEvalPython)
-    for q, fixture in ((q_pprof_profile, ["ArrowEvalPython"] * 2), (q_jfr_profile, [])):
+    # fixture builds its payloads in one more MapInArrow (``payload_rows``)
+    for q, fixture in ((q_pprof_profile, ["MapInArrow"] * 2), (q_jfr_profile, [])):
         plan = _plan(q(spark, sf_dir))
         assert "Exchange" not in plan
         assert "Join" not in plan
@@ -659,6 +674,29 @@ def test_payload_decoders_run_one_arrow_stage(spark, sf_dir):
         nodes = python_nodes(_plan(q(spark, sf_dir)))
         assert "MapInArrow" in nodes, q.__name__
         assert "MapInPandas" not in nodes, q.__name__
+
+
+def test_group_packers_run_one_arrow_stage(spark, sf_dir):
+    """Every grouped wire packer runs as ``base.group_rows``' one
+    FlatMapGroupsInArrow: no pandas stage (which rounds int64 columns holding
+    a null) and no per-row UDF, fixture or packer."""
+    from loongcollector_spark.queries import (
+        q_flusher_otlp,
+        q_flusher_otlp_metric,
+        q_flusher_otlp_trace,
+        q_parse_from_pb,
+        q_prom_remote_write,
+        q_prom_rw_encode,
+        q_sls_group_decode,
+    )
+
+    for q in (
+        q_parse_from_pb, q_prom_rw_encode, q_flusher_otlp, q_flusher_otlp_metric,
+        q_flusher_otlp_trace, q_prom_remote_write, q_sls_group_decode,
+    ):
+        nodes = python_nodes(_plan(q(spark, sf_dir)))
+        assert "FlatMapGroupsInArrow" in nodes, q.__name__
+        assert not {"FlatMapGroupsInPandas", "ArrowEvalPython"} & set(nodes), q.__name__
 
 
 def test_r4c_host_collector_plans(spark, sf_dir):

@@ -198,7 +198,8 @@ def main() -> None:
             "pprof_profile — pprof wire decode → per-stack profile logs",
             QUERIES["pprof_profile"](spark, SF),
             "one Arrow-batched MapInArrow decode pass (per-payload "
-            "aggregation is row-local); no Exchange, no Join below it.",
+            "aggregation is row-local) over the payloads the fixture builds "
+            "in one more MapInArrow; no Exchange, no Join below it.",
         ),
         (
             "flusher_es_bulk — per-sink NDJSON bulk bodies",
