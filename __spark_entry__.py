@@ -28,4 +28,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in ORACLES.items() if v is not None}
+    return dict(ORACLES)

@@ -8,6 +8,9 @@ doc_id+10000000 for doc_id%7==0, near-dup mutations (first two words
 dropped) at doc_id+10000000 for doc_id%5==0, scaled embedding copies at
 vec_id+10000000 for vec_id%50==0. The offset exceeds every real id at any
 scale factor (collision with genuine ids at sf0.1 was a real bug).
+
+Every ``q_<name>`` here is paired with the ``oracle_<name>`` next to it by
+``loongcollector_spark.queries._registry``.
 """
 
 from __future__ import annotations
@@ -908,57 +911,6 @@ FROM g LEFT JOIN hits h ON g.doc_id = h.doc_id
 WHERE g.doc_id % 29 <> 0"""
 
 
-DATAOPS_QUERIES = {
-    "gopher_repetition": q_gopher_repetition,
-    "decontaminate": q_decontaminate,
-    "multimodal_decode": q_multimodal_decode,
-    "embed_ivf_kmeans": q_embed_ivf_kmeans,
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash": q_dedup_minhash,
-    "dedup_minhash_hot": q_dedup_minhash_hot,
-    "dedup_simhash": q_dedup_simhash,
-    "ngram_jaccard": q_ngram_jaccard,
-    "embed_topk": q_embed_topk,
-    "embed_ann_lsh": q_embed_ann_lsh,
-    "embed_near_dup": q_embed_near_dup,
-    "langid": q_langid,
-    "quality": q_quality,
-    "token_stats": q_token_stats,
-    "fingerprint": q_fingerprint,
-    "multimodal_features": q_multimodal_features,
-    "embed_ivf": q_embed_ivf,
-    "curation_pipeline": q_curation_pipeline,
-    "dedup_clusters": q_dedup_clusters,
-    "sample_by_hash": q_sample_by_hash,
-    "token_packing": q_token_packing,
-}
-
-DATAOPS_ORACLES = {
-    "gopher_repetition": oracle_gopher_repetition(),
-    "decontaminate": oracle_decontaminate(),
-    "multimodal_decode": oracle_multimodal_decode(),
-    "embed_ivf": oracle_embed_ivf(),
-    "embed_ivf_kmeans": oracle_embed_ivf_kmeans(),
-    "curation_pipeline": oracle_curation_pipeline(),
-    "dedup_clusters": oracle_dedup_clusters(),
-    "sample_by_hash": oracle_sample_by_hash(),
-    "token_packing": oracle_token_packing(),
-    "dedup_exact": oracle_dedup_exact(),
-    "dedup_minhash": oracle_dedup_minhash(),
-    "dedup_minhash_hot": oracle_dedup_minhash_hot(),
-    "dedup_simhash": oracle_dedup_simhash(),
-    "ngram_jaccard": oracle_ngram_jaccard(),
-    "embed_topk": oracle_embed_topk(),
-    "embed_ann_lsh": oracle_embed_ann_lsh(),
-    "embed_near_dup": oracle_embed_near_dup(),
-    "langid": oracle_langid(),
-    "quality": oracle_quality(),
-    "token_stats": oracle_token_stats(),
-    "fingerprint": oracle_fingerprint(),
-    "multimodal_features": oracle_multimodal_features(),
-}
-
-
 def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher page-quality rules (Rae et al. 2021 table A1 — public method):
     word-count bounds, mean word length, symbol ratio, bullet/ellipsis line
@@ -1055,12 +1007,6 @@ FROM c"""
     )
 
 
-DATAOPS_QUERIES["gopher_quality"] = q_gopher_quality
-DATAOPS_QUERIES["c4_clean"] = q_c4_clean
-DATAOPS_ORACLES["gopher_quality"] = oracle_gopher_quality()
-DATAOPS_ORACLES["c4_clean"] = oracle_c4_clean()
-
-
 _BOILER = [
     "Alpha boilerplate sentence one.",
     "Beta boilerplate sentence two.",
@@ -1111,10 +1057,6 @@ SELECT doc_id,
 FROM b"""
 
 
-DATAOPS_QUERIES["c4_span_dedup"] = q_c4_span_dedup
-DATAOPS_ORACLES["c4_span_dedup"] = oracle_c4_span_dedup()
-
-
 def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic pretraining mixture sampling: per-source weights
     (down-sample src0-4 to 0.3, keep src5-9, up-sample src10-14 to 2.5
@@ -1145,10 +1087,6 @@ x AS (SELECT doc_id, source, CAST(e AS INT) AS epoch
   FROM n, unnest(range(0, copies)) AS t(e) WHERE copies >= 1)
 SELECT source, epoch, count(*) AS docs, min(doc_id) AS first_doc
 FROM x GROUP BY source, epoch"""
-
-
-DATAOPS_QUERIES["mixture_sample"] = q_mixture_sample
-DATAOPS_ORACLES["mixture_sample"] = oracle_mixture_sample()
 
 
 # ---------------------------------------------------------------------------
@@ -1241,12 +1179,6 @@ def oracle_url_dedup() -> str:
   FROM d
 )
 SELECT cu AS canonical_url, doc_id FROM r WHERE rn = 1"""
-
-
-DATAOPS_QUERIES["pii_redact"] = q_pii_redact
-DATAOPS_QUERIES["url_dedup"] = q_url_dedup
-DATAOPS_ORACLES["pii_redact"] = oracle_pii_redact()
-DATAOPS_ORACLES["url_dedup"] = oracle_url_dedup()
 
 
 def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1359,12 +1291,6 @@ def oracle_semdedup(k: int = 8, iters: int = 2, dim: int = 64) -> str:
         "CAST(CASE WHEN dups.vec_id IS NULL THEN 1 ELSE 0 END AS INT) AS keep "
         "FROM cells LEFT JOIN dups ON cells.vec_id = dups.vec_id"
     )
-
-
-DATAOPS_QUERIES["line_dedup"] = q_line_dedup
-DATAOPS_QUERIES["semdedup"] = q_semdedup
-DATAOPS_ORACLES["line_dedup"] = oracle_line_dedup()
-DATAOPS_ORACLES["semdedup"] = oracle_semdedup()
 
 
 def q_semdedup_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1486,9 +1412,3 @@ scored AS (
 )
 SELECT qid, vec_id, cos FROM scored
 QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) <= 5"""
-
-
-DATAOPS_QUERIES["semdedup_hot"] = q_semdedup_hot
-DATAOPS_QUERIES["embed_ivf_probe"] = q_embed_ivf_probe
-DATAOPS_ORACLES["semdedup_hot"] = oracle_semdedup_hot()
-DATAOPS_ORACLES["embed_ivf_probe"] = oracle_embed_ivf_probe()

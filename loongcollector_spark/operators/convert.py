@@ -377,7 +377,7 @@ class InfluxMetricSerializer(Operator):
     out_col: str = "line"
 
     def apply(self, df: DataFrame) -> DataFrame:
-        from .influx import _fmt_g
+        from .gofmt import go_g
 
         name = F.coalesce(F.col("__name__"), F.lit(""))
         fieldname = F.coalesce(F.col("__field__") if "__field__" in df.columns else F.lit(None), F.lit(""))
@@ -423,7 +423,7 @@ class InfluxMetricSerializer(Operator):
             F.when(vtype == "string", F.concat(F.lit('"'), _esc_string_field(value), F.lit('"')))
             .when(vtype == "bool", F.when(value.isin(*_BOOL_TRUE), F.lit("true")).when(value.isin(*_BOOL_FALSE), F.lit("false")))
             .when(vtype == "int", F.when(as_long.isNotNull(), F.concat(as_long.cast("string"), F.lit("i"))))
-            .otherwise(F.when(float_ok, _fmt_g(as_double)))
+            .otherwise(F.when(float_ok, go_g(as_double)))
         )
 
         ts_ok = (ts == "") | ts.rlike("^[+-]?[0-9]+$") & ts.try_cast("bigint").isNotNull()
@@ -660,7 +660,8 @@ def otlp_logs_sink_frames(
             if gt_entries
             else F.expr("CAST(array() AS array<struct<key:string,value:string>>)")
         ).alias("__gtags__"),
-        F.col(ts_sec_col).cast("long").alias("__ts__"),
+        # null → 0, the proto3 default: the packed record has no timestamp
+        F.coalesce(F.col(ts_sec_col).cast("long"), F.lit(0)).alias("__ts__"),
     )
     def pack(rows: list[dict]) -> list[tuple]:
         r0 = rows[0]
@@ -725,7 +726,8 @@ def otlp_metrics_sink_frames(
         F.col(type_col).alias("__type__"),
         F.col(tags_col).alias("__tags__"),
         F.col(value_col).cast("double").alias("__val__"),
-        F.col(ts_ns_col).cast("long").alias("__ts__"),
+        # null → 0, the proto3 default: the packed data point has no timestamp
+        F.coalesce(F.col(ts_ns_col).cast("long"), F.lit(0)).alias("__ts__"),
         (
             F.array(*rt_entries)
             if rt_entries

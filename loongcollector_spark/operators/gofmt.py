@@ -64,7 +64,8 @@ def fmt_go_g(v: float) -> str:
 
 
 def go_g(d: Column) -> Column:
-    """Column tier of :func:`fmt_go_g` — pure JVM expressions, no UDF."""
+    """Column tier of :func:`fmt_go_g` — pure JVM expressions, no UDF; NULL
+    renders as NULL."""
     from .common import flet
 
     a = F.abs(d)
@@ -117,8 +118,10 @@ def go_g(d: Column) -> Column:
 
     body = flet(sci, render)
     sign = F.when(d.cast("string").startswith("-"), F.lit("-")).otherwise(F.lit(""))
+    # NULL first: the ladder's format_string renders NULL as the text 'null'
     return (
-        F.when(F.isnan(d), F.lit("NaN"))
+        F.when(d.isNull(), F.lit(None).cast("string"))
+        .when(F.isnan(d), F.lit("NaN"))
         .when(d == F.lit(float("inf")), F.lit("+Inf"))
         .when(d == F.lit(float("-inf")), F.lit("-Inf"))
         .when(d == 0, F.concat(sign, F.lit("0")))

@@ -36,8 +36,8 @@ from typing import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .convert import json_quote
 from .gofmt import go_g
-from .otel import _json_str
 from .skywalking import _ent, go_map_json
 
 HOST = "HOST"
@@ -134,12 +134,12 @@ class HostMetaConverter:
                 _obj(
                     ("cache_size", _jnum(F.coalesce(c.getField("cache_size"), F.lit(0)))),
                     ("core_count", _jnum(F.coalesce(c.getField("core_count"), F.lit(0)))),
-                    ("family", _json_str(F.coalesce(c.getField("family"), F.lit("")))),
+                    ("family", json_quote(F.coalesce(c.getField("family"), F.lit("")))),
                     ("mhz", go_g(F.coalesce(c.getField("mhz"), F.lit(0.0)))),
-                    ("model", _json_str(F.coalesce(c.getField("model"), F.lit("")))),
-                    ("model_name", _json_str(F.coalesce(c.getField("model_name"), F.lit("")))),
+                    ("model", json_quote(F.coalesce(c.getField("model"), F.lit("")))),
+                    ("model_name", json_quote(F.coalesce(c.getField("model_name"), F.lit("")))),
                     ("processor_count", _jnum(F.coalesce(c.getField("processor_count"), F.lit(0)))),
-                    ("vendor_id", _json_str(F.coalesce(c.getField("vendor_id"), F.lit("")))),
+                    ("vendor_id", json_quote(F.coalesce(c.getField("vendor_id"), F.lit("")))),
                 ),
             ))
         if self.disk:
@@ -153,10 +153,10 @@ class HostMetaConverter:
                             "opts:string,fstype:string,mount_point:string>>)"
                         )),
                         lambda p: _obj(
-                            ("device", _json_str(F.coalesce(p.getField("device"), F.lit("")))),
-                            ("fstype", _json_str(F.coalesce(p.getField("fstype"), F.lit("")))),
-                            ("mount_point", _json_str(F.coalesce(p.getField("mount_point"), F.lit("")))),
-                            ("opts", _json_str(F.coalesce(p.getField("opts"), F.lit("")))),
+                            ("device", json_quote(F.coalesce(p.getField("device"), F.lit("")))),
+                            ("fstype", json_quote(F.coalesce(p.getField("fstype"), F.lit("")))),
+                            ("mount_point", json_quote(F.coalesce(p.getField("mount_point"), F.lit("")))),
+                            ("opts", json_quote(F.coalesce(p.getField("opts"), F.lit("")))),
                         ),
                     ),
                     ",",
@@ -230,15 +230,15 @@ class HostMetaConverter:
             ),
         ).otherwise(cmd)
         attributes_json = _obj(
-            ("command", _json_str(fmt_cmd)),
-            ("exe", _json_str(exe)),
-            ("name", _json_str(F.coalesce(F.col("comm"), F.lit("")))),
+            ("command", json_quote(fmt_cmd)),
+            ("exe", json_quote(exe)),
+            ("name", json_quote(F.coalesce(F.col("comm"), F.lit("")))),
             ("pid", _jnum(pid)),
             ("ppid", _jnum(F.coalesce(F.col("ppid"), F.lit(0)))),
         )
         parents_json = F.concat(
             F.lit("["),
-            _json_str(
+            json_quote(
                 F.concat(
                     F.lit(HOST + ":"),
                     _host_id(),

@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator
 from .common import flet
+from .gofmt import go_g
 
 _SEP = "\x01"
 
@@ -93,13 +94,6 @@ _MAX_F64 = 1.7976931348623157e308
 
 def _unescape(c: Column) -> Column:
     return F.regexp_replace(c, r"\\(.)", "$1")
-
-
-def _fmt_g(d: Column) -> Column:
-    """Exact Go strconv.FormatFloat(v,'g',-1,64) — see gofmt.go_g."""
-    from .gofmt import go_g
-
-    return go_g(d)
 
 
 def normalize_time_nano_col(ts: Column) -> Column:
@@ -233,7 +227,7 @@ class InfluxDecoder(Operator):
             .when(is_int | is_uint, F.expr("substring(__f__.v, 1, length(__f__.v) - 1)"))
             .when(is_true, "1")
             .when(is_false, "0")
-            .otherwise(_fmt_g(as_double))
+            .otherwise(go_g(as_double))
         )
         name = F.when(
             F.col("__f__.k") == "value", F.col("__pt__.measurement")

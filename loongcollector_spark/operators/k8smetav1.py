@@ -58,7 +58,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast
 
-from .otel import _json_str
+from .convert import json_quote
 from .skywalking import _ent
 
 _ENT_T = "array<struct<k:string,v:string>>"
@@ -80,13 +80,13 @@ def _sorted_obj(entries: Column) -> Column:
     """array<struct<k, v-rendered-json>> → '{"k":v,...}' byte-sorted keys."""
     rendered = F.transform(
         F.array_sort(F.filter(entries, lambda e: e.isNotNull())),
-        lambda e: F.concat(_json_str(e.getField("k")), F.lit(":"), e.getField("v")),
+        lambda e: F.concat(json_quote(e.getField("k")), F.lit(":"), e.getField("v")),
     )
     return F.concat(F.lit("{"), F.array_join(rendered, ","), F.lit("}"))
 
 
 def _js(v: Column) -> Column:
-    return _json_str(v)
+    return json_quote(v)
 
 
 def _jn(v: Column) -> Column:
@@ -120,7 +120,7 @@ def _parents_json(parr: Column) -> Column:
     ).otherwise(
         F.concat(
             F.lit("["),
-            F.array_join(F.transform(parr, lambda p: _json_str(p)), ","),
+            F.array_join(F.transform(parr, lambda p: json_quote(p)), ","),
             F.lit("]"),
         )
     )

@@ -26,7 +26,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from .base import Operator
-from .skywalking import _metric_rows_to_events, _sw_label_str
+from .otel import labels_str
+from .skywalking import _metric_rows_to_events
 
 RESULTS_SCHEMA_HINT = (
     "ts_ms long, valid boolean, type string, "
@@ -54,7 +55,7 @@ class NetPingMetrics(Operator):
     type ∈ ping/tcping/httping/dns) → metric-log events."""
 
     def apply(self, df: DataFrame) -> DataFrame:
-        lbl = _sw_label_str(F.col("label"))
+        lbl = labels_str(F.col("label"))
         t = F.col("type")
         n = lambda suffix: F.concat(t, F.lit(suffix))  # noqa: E731
         empty = F.expr(f"cast(array() as {_ROW_T})")
@@ -98,7 +99,7 @@ class NetPingMetrics(Operator):
         cert = F.when(
             (t == "httping") & F.coalesce(F.col("has_https_cert"), F.lit(False)),
             F.array(
-                _r(n("_cert_ttl_days"), _sw_label_str(F.col("cert_label")),
+                _r(n("_cert_ttl_days"), labels_str(F.col("cert_label")),
                    F.col("cert_ttl_day"))
             ).cast(_ROW_T),
         ).otherwise(empty)

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator
 from .common import flet
+from .convert import json_quote
+from .gofmt import go_g
 
 _ATTR = (
     "array<struct<key:string,value:struct<stringValue:string,intValue:string,"
@@ -69,18 +71,12 @@ _KIND_ENUM = {
 _HEX_ID_RX = "^([0-9a-fA-F]{2})*$"
 
 
-def _json_str(c: Column) -> Column:
-    """JSON-escape + quote a string via to_json(array(x)) → strip brackets."""
-    arr = F.to_json(F.array(c))
-    return arr.substr(F.lit(2), F.length(arr) - 2)
-
-
 def _attr_value_json(v: Column) -> Column:
     """OTLP any-value → the JSON text Go's marshal of AsRaw() emits
     (OTLP/JSON carries int64 as a STRING; AsRaw turns it back into a bare
     number)."""
     return (
-        F.when(v.getField("stringValue").isNotNull(), _json_str(v.getField("stringValue")))
+        F.when(v.getField("stringValue").isNotNull(), json_quote(v.getField("stringValue")))
         .when(v.getField("boolValue").isNotNull(), v.getField("boolValue").cast("string"))
         .when(v.getField("intValue").isNotNull(), v.getField("intValue"))
         .when(v.getField("doubleValue").isNotNull(), v.getField("doubleValue").cast("string"))
@@ -98,7 +94,7 @@ def attrs_to_json(attrs: Column, exclude: tuple[str, ...] = ()) -> Column:
     rendered = F.transform(
         F.array_sort(base),
         lambda e: F.concat(
-            _json_str(e.getField("key")), F.lit(":"), _attr_value_json(e.getField("value"))
+            json_quote(e.getField("key")), F.lit(":"), _attr_value_json(e.getField("value"))
         ),
     )
     return F.concat(F.lit("{"), F.array_join(rendered, ","), F.lit("}"))
@@ -122,7 +118,7 @@ def _events_json(events: Column) -> Column:
             F.lit('{"attribute":'),
             attrs_to_json(e.getField("attributes")),
             F.lit(',"name":'),
-            _json_str(F.coalesce(e.getField("name"), F.lit(""))),
+            json_quote(F.coalesce(e.getField("name"), F.lit(""))),
             F.lit(',"time":'),
             F.coalesce(e.getField("timeUnixNano"), F.lit("0")),
             F.lit("}"),
@@ -140,9 +136,9 @@ def _links_json(links: Column) -> Column:
             F.lit('{"attribute":'),
             attrs_to_json(l.getField("attributes")),
             F.lit(',"spanID":'),
-            _json_str(F.lower(F.coalesce(l.getField("spanId"), F.lit("")))),
+            json_quote(F.lower(F.coalesce(l.getField("spanId"), F.lit("")))),
             F.lit(',"traceID":'),
-            _json_str(F.lower(F.coalesce(l.getField("traceId"), F.lit("")))),
+            json_quote(F.lower(F.coalesce(l.getField("traceId"), F.lit("")))),
             F.lit("}"),
         ),
     )
@@ -352,25 +348,13 @@ OTLP_METRIC_SCHEMA = (
 _ROW = "struct<nm:string,lb:string,t:string,v:double>"
 
 
-def go_float_g(v: Column) -> Column:
-    """Approximate strconv.FormatFloat(v,'g',-1,64) for the practical range:
-    whole numbers render without the trailing '.0' Spark's cast adds."""
-    as_long = v.try_cast("long")
-    return F.when(
-        v.isNull(), F.lit("")
-    ).when(
-        (as_long.isNotNull()) & (as_long.cast("double") == v) & (F.abs(v) < 1e15),
-        as_long.cast("string"),
-    ).otherwise(v.cast("string"))
-
-
 def _attr_value_text(v: Column) -> Column:
     """anyValueToString (otlp_metric_parser.go:26-46) for the scalar kinds."""
     return (
         F.when(v.getField("stringValue").isNotNull(), v.getField("stringValue"))
         .when(v.getField("boolValue").isNotNull(), v.getField("boolValue").cast("string"))
         .when(v.getField("intValue").isNotNull(), v.getField("intValue"))
-        .when(v.getField("doubleValue").isNotNull(), go_float_g(v.getField("doubleValue")))
+        .when(v.getField("doubleValue").isNotNull(), go_g(v.getField("doubleValue")))
         .otherwise(F.lit(""))
     )
 
@@ -415,9 +399,8 @@ class OtelMetricParser(Operator):
     go:247-266: name+_exemplars, traceId/spanId hex labels when non-empty,
     filteredAttributes appended, value asDouble|asInt|0, exemplar's own
     timestamp; the sum exemplars inherit the ismonotonic label because
-    sum2Logs appends it before the exemplar loop). Float text uses the
-    Go-'g' approximation of go_float_g (shortest-repr parity holds for
-    |v| in [1e-3, 1e7) — keep synthetic bucket bounds in that range)."""
+    sum2Logs appends it before the exemplar loop). Float text is Go's
+    strconv 'g' rendering (gofmt.go_g)."""
 
     source_key: str = "content"
     format: str = "json"
@@ -574,7 +557,7 @@ class OtelMetricParser(Operator):
                         lambda acc, x: acc + F.coalesce(x.try_cast("double"), F.lit(0.0)),
                     )
                     le = F.when(
-                        j <= n_bounds, go_float_g(F.try_element_at(bounds, j))
+                        j <= n_bounds, go_g(F.try_element_at(bounds, j))
                     ).otherwise(F.lit("+Inf"))
                     ents = F.concat(
                         rlb,
@@ -651,13 +634,13 @@ class OtelMetricParser(Operator):
                         upper = lower * base
                         if positive:
                             key = F.concat(
-                                F.lit("("), go_float_g(lower), F.lit(","),
-                                go_float_g(upper), F.lit("]"),
+                                F.lit("("), go_g(lower), F.lit(","),
+                                go_g(upper), F.lit("]"),
                             )
                         else:
                             key = F.concat(
-                                F.lit("["), go_float_g(-upper), F.lit(","),
-                                go_float_g(-lower), F.lit(")"),
+                                F.lit("["), go_g(-upper), F.lit(","),
+                                go_g(-lower), F.lit(")"),
                             )
                         cnt = F.coalesce(
                             F.element_at(counts, i).try_cast("double"), F.lit(0.0)
@@ -719,6 +702,7 @@ class OtelMetricParser(Operator):
             def summary_rows_for(dp: Column) -> Column:
                 t = dp.getField("timeUnixNano")
                 lb = dp_labels(dp)
+                # an absent quantile or value is the proto3 default 0
                 quants = F.coalesce(
                     dp.getField("quantileValues"),
                     F.expr("CAST(array() AS array<struct<quantile:double,value:double>>)"),
@@ -734,13 +718,13 @@ class OtelMetricParser(Operator):
                                 F.array(
                                     F.struct(
                                         F.lit("quantile").alias("k"),
-                                        go_float_g(q.getField("quantile")).alias("v"),
+                                        go_g(F.coalesce(q.getField("quantile"), F.lit(0.0))).alias("v"),
                                     )
                                 ),
                             )
                         ),
                         t,
-                        q.getField("value"),
+                        F.coalesce(q.getField("value"), F.lit(0.0)),
                     ),
                 )
                 return F.concat(
@@ -774,7 +758,7 @@ class OtelMetricParser(Operator):
             F.lit("__name__"), F.col("__row__.nm"),
             F.lit("__time_nano__"), F.coalesce(F.col("__row__.t"), F.lit("0")),
             F.lit("__labels__"), F.col("__row__.lb"),
-            F.lit("__value__"), go_float_g(F.col("__row__.v")),
+            F.lit("__value__"), go_g(F.col("__row__.v")),
         )
         return rows.select(*keep, fields_map.alias(FIELDS))
 

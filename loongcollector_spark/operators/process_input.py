@@ -40,7 +40,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from .base import Operator
-from .skywalking import _metric_rows_to_events, _sw_label_str
+from .otel import labels_str
+from .skywalking import _metric_rows_to_events
 
 USER_HZ = 100.0
 
@@ -162,7 +163,7 @@ class ProcessMetrics(Operator):
             df = df.where(keep)
 
         comm = F.substring(F.col("comm"), 1, self.max_label_length)
-        lbl = _sw_label_str(
+        lbl = labels_str(
             F.array(
                 F.struct(F.lit("hostname").alias("k"), F.col("hostname").alias("v")),
                 F.struct(F.lit("ip").alias("k"), F.col("ip").alias("v")),

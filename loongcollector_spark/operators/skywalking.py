@@ -39,9 +39,10 @@ from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator, fget
 from .common import flet
+from .convert import json_quote
 from .gofmt import go_g
 from .influx import normalize_time_nano_col
-from .otel import _json_str
+from .otel import labels_str
 
 # map to open telemetry (segment_analyze.go:46-59)
 OT_RESOURCE_MAPPING = {
@@ -106,7 +107,7 @@ def go_map_json(entries: Column) -> Column:
     rendered = F.transform(
         F.array_sort(_dedup_last(entries)),
         lambda e: F.concat(
-            _json_str(e.getField("k")), F.lit(":"), _json_str(e.getField("v"))
+            json_quote(e.getField("k")), F.lit(":"), json_quote(e.getField("v"))
         ),
     )
     return F.concat(F.lit("{"), F.array_join(rendered, ","), F.lit("}"))
@@ -124,6 +125,36 @@ def convert_resource_ot(properties: Column) -> Column:
             F.coalesce(F.element_at(mapping, p.getField("key")), p.getField("key")),
             p.getField("value"),
         ),
+    )
+
+
+def span_tag_entries(tag: Column) -> Column:
+    """One span tag → its attribute entries: OT_SPAN_TAGS_MAPPING renames,
+    mq.topic / mq.queue add the messaging destination pair (v2 and v3
+    alike)."""
+    k, v = tag.getField("key"), tag.getField("value")
+    mapped = F.element_at(
+        F.create_map(*[F.lit(x) for kv in OT_SPAN_TAGS_MAPPING.items() for x in kv]), k
+    )
+    return (
+        F.when(mapped.isNotNull(), F.array(_ent(mapped, v)))
+        .when(
+            k == "mq.topic",
+            F.array(
+                _ent("messaging.destination_kind", F.lit("topic")),
+                _ent("messaging.destination", v),
+                _ent(k, v),
+            ),
+        )
+        .when(
+            k == "mq.queue",
+            F.array(
+                _ent("messaging.destination_kind", F.lit("queue")),
+                _ent("messaging.destination", v),
+                _ent(k, v),
+            ),
+        )
+        .otherwise(F.array(_ent(k, v)))
     )
 
 
@@ -312,34 +343,6 @@ class SkywalkingSegmentParser(Operator):
                 ),
             ).otherwise(F.array(_ent("net.peer.ip", F.element_at(hostport, 1))))
         )
-        tag_mapping = F.create_map(
-            *[F.lit(x) for kv in OT_SPAN_TAGS_MAPPING.items() for x in kv]
-        )
-
-        def tag_entries(tag: Column) -> Column:
-            k, v = tag.getField("key"), tag.getField("value")
-            mapped = F.element_at(tag_mapping, k)
-            return (
-                F.when(mapped.isNotNull(), F.array(_ent(mapped, v)))
-                .when(
-                    k == "mq.topic",
-                    F.array(
-                        _ent("messaging.destination_kind", F.lit("topic")),
-                        _ent("messaging.destination", v),
-                        _ent(k, v),
-                    ),
-                )
-                .when(
-                    k == "mq.queue",
-                    F.array(
-                        _ent("messaging.destination_kind", F.lit("queue")),
-                        _ent("messaging.destination", v),
-                        _ent(k, v),
-                    ),
-                )
-                .otherwise(F.array(_ent(k, v)))
-            )
-
         comp_map = (
             F.create_map(
                 *[
@@ -381,7 +384,7 @@ class SkywalkingSegmentParser(Operator):
         )
         attribute_json = go_map_json(
             F.concat(
-                peer_entries, F.flatten(F.transform(tags, tag_entries)), tail_entries
+                peer_entries, F.flatten(F.transform(tags, span_tag_entries)), tail_entries
             )
         )
 
@@ -474,6 +477,22 @@ def _row(name: str, labels: Column, value: Column) -> Column:
     )
 
 
+def jvm_memory_rows(base: Column, m: Column) -> Column:
+    """One JVM Memory message → its four skywalking_jvm_memory_* rows,
+    labelled ``base`` plus the heap/nonheap ``type`` (v2 and v3 alike)."""
+    lb = F.concat(
+        base,
+        F.lit("|type#$#"),
+        F.when(F.coalesce(m.getField("isHeap"), F.lit(False)), "heap").otherwise("nonheap"),
+    )
+    return F.array(
+        _row("skywalking_jvm_memory_committed", lb, F.coalesce(m.getField("committed"), F.lit(0))),
+        _row("skywalking_jvm_memory_init", lb, F.coalesce(m.getField("init"), F.lit(0))),
+        _row("skywalking_jvm_memory_max", lb, F.coalesce(m.getField("max"), F.lit(0))),
+        _row("skywalking_jvm_memory_used", lb, F.coalesce(m.getField("used"), F.lit(0))),
+    )
+
+
 @dataclass
 class SkywalkingJvmMetricParser(Operator):
     """JVMMetricCollection protojson → skywalking_jvm_* metric logs in the
@@ -499,21 +518,6 @@ class SkywalkingJvmMetricParser(Operator):
         base = F.concat(
             F.lit("service#$#"), svc, F.lit("|serviceInstance#$#"), inst
         )
-
-        def mem_rows(m: Column) -> Column:
-            lb = F.concat(
-                base,
-                F.lit("|type#$#"),
-                F.when(F.coalesce(m.getField("isHeap"), F.lit(False)), "heap").otherwise(
-                    "nonheap"
-                ),
-            )
-            return F.array(
-                _row("skywalking_jvm_memory_committed", lb, F.coalesce(m.getField("committed"), F.lit(0))),
-                _row("skywalking_jvm_memory_init", lb, F.coalesce(m.getField("init"), F.lit(0))),
-                _row("skywalking_jvm_memory_max", lb, F.coalesce(m.getField("max"), F.lit(0))),
-                _row("skywalking_jvm_memory_used", lb, F.coalesce(m.getField("used"), F.lit(0))),
-            )
 
         def pool_rows(p: Column) -> Column:
             lb = F.concat(
@@ -550,7 +554,7 @@ class SkywalkingJvmMetricParser(Operator):
                     F.coalesce(mt.getField("cpu").getField("usagePercent"), F.lit(0.0)),
                 )
             ),
-            F.coalesce(F.flatten(F.transform(mt.getField("memory"), mem_rows)), empty),
+            F.coalesce(F.flatten(F.transform(mt.getField("memory"), lambda m: jvm_memory_rows(base, m))), empty),
             F.coalesce(F.flatten(F.transform(mt.getField("memoryPool"), pool_rows)), empty),
             F.coalesce(F.flatten(F.transform(mt.getField("gc"), gc_rows)), empty),
             F.array(
@@ -645,17 +649,6 @@ LOGGING_SCHEMA = (
 )
 
 
-def _sw_label_str(entries: Column) -> Column:
-    """MetricLabels.String(): sort by key, 'k#$#v' joined with '|'."""
-    return F.array_join(
-        F.transform(
-            F.array_sort(entries),
-            lambda e: F.concat(e.getField("k"), F.lit("#$#"), e.getField("v")),
-        ),
-        "|",
-    )
-
-
 @dataclass
 class SkywalkingMeterParser(Operator):
     """MeterData protojson → metric logs (meter_handle.go:81-128
@@ -703,7 +696,7 @@ class SkywalkingMeterParser(Operator):
             F.array(
                 F.struct(
                     F.coalesce(sv.getField("name"), F.lit("")).alias("name"),
-                    _sw_label_str(
+                    labels_str(
                         F.concat(lbl_entries(sv.getField("labels")), base)
                     ).alias("labels"),
                     F.coalesce(sv.getField("value"), F.lit(0.0)).alias("value"),
@@ -732,7 +725,7 @@ class SkywalkingMeterParser(Operator):
         def le_row(le_txt: Column, count: Column) -> Column:
             return F.struct(
                 F.concat(hname, F.lit("_bucket")).alias("name"),
-                _sw_label_str(F.concat(hlabels, F.array(_ent("le", le_txt)))).alias(
+                labels_str(F.concat(hlabels, F.array(_ent("le", le_txt)))).alias(
                     "labels"
                 ),
                 count.cast("double").alias("value"),
@@ -767,12 +760,12 @@ class SkywalkingMeterParser(Operator):
                 F.array(
                     F.struct(
                         F.concat(hname, F.lit("_count")).alias("name"),
-                        _sw_label_str(hlabels).alias("labels"),
+                        labels_str(hlabels).alias("labels"),
                         total.cast("double").alias("value"),
                     ),
                     F.struct(
                         F.concat(hname, F.lit("_sum")).alias("name"),
-                        _sw_label_str(hlabels).alias("labels"),
+                        labels_str(hlabels).alias("labels"),
                         hsum.alias("value"),
                     ),
                 ),

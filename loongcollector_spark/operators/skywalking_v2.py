@@ -51,12 +51,13 @@ from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator, fget
 from .skywalking import (
-    OT_SPAN_TAGS_MAPPING,
     _empty_ent,
     _ent,
     _metric_rows_to_events,
     _row,
     go_map_json,
+    jvm_memory_rows,
+    span_tag_entries,
 )
 
 #: getTraceID sentinel (trace_segment_report_handle.go:262-285)
@@ -423,34 +424,6 @@ class SkywalkingV2SegmentParser(Operator):
                 ),
             ).otherwise(F.array(_ent("net.peer.ip", F.element_at(hostport, 1))))
         )
-        tag_mapping = F.create_map(
-            *[F.lit(x) for kv in OT_SPAN_TAGS_MAPPING.items() for x in kv]
-        )
-
-        def tag_entries(tag: Column) -> Column:
-            k, v = tag.getField("key"), tag.getField("value")
-            mapped = F.element_at(tag_mapping, k)
-            return (
-                F.when(mapped.isNotNull(), F.array(_ent(mapped, v)))
-                .when(
-                    k == "mq.topic",
-                    F.array(
-                        _ent("messaging.destination_kind", F.lit("topic")),
-                        _ent("messaging.destination", v),
-                        _ent(k, v),
-                    ),
-                )
-                .when(
-                    k == "mq.queue",
-                    F.array(
-                        _ent("messaging.destination_kind", F.lit("queue")),
-                        _ent("messaging.destination", v),
-                        _ent(k, v),
-                    ),
-                )
-                .otherwise(F.array(_ent(k, v)))
-            )
-
         comp_map = (
             F.create_map(
                 *[
@@ -501,7 +474,7 @@ class SkywalkingV2SegmentParser(Operator):
             tail_entries = mq_entries
         attribute_json = go_map_json(
             F.concat(
-                peer_entries, F.flatten(F.transform(tags, tag_entries)), tail_entries
+                peer_entries, F.flatten(F.transform(tags, span_tag_entries)), tail_entries
             )
         )
 
@@ -576,21 +549,6 @@ class SkywalkingV2JvmMetricParser(Operator):
             F.lit("|serviceInstance#$#"), F.col("__uuid__"),
         )
 
-        def mem_rows(m: Column) -> Column:
-            lb = F.concat(
-                base,
-                F.lit("|type#$#"),
-                F.when(
-                    F.coalesce(m.getField("isHeap"), F.lit(False)), "heap"
-                ).otherwise("nonheap"),
-            )
-            return F.array(
-                _row("skywalking_jvm_memory_committed", lb, F.coalesce(m.getField("committed"), F.lit(0))),
-                _row("skywalking_jvm_memory_init", lb, F.coalesce(m.getField("init"), F.lit(0))),
-                _row("skywalking_jvm_memory_max", lb, F.coalesce(m.getField("max"), F.lit(0))),
-                _row("skywalking_jvm_memory_used", lb, F.coalesce(m.getField("used"), F.lit(0))),
-            )
-
         def pool_rows(p: Column) -> Column:
             lb = F.concat(
                 base,
@@ -633,7 +591,7 @@ class SkywalkingV2JvmMetricParser(Operator):
                     F.coalesce(mt.getField("cpu").getField("usagePercent"), F.lit(0.0)),
                 )
             ),
-            F.coalesce(F.flatten(F.transform(mt.getField("memory"), mem_rows)), empty),
+            F.coalesce(F.flatten(F.transform(mt.getField("memory"), lambda m: jvm_memory_rows(base, m))), empty),
             F.coalesce(F.flatten(F.transform(mt.getField("memoryPool"), pool_rows)), empty),
             F.coalesce(F.flatten(F.transform(mt.getField("gc"), gc_rows)), empty),
         )

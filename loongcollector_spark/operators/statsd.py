@@ -27,7 +27,8 @@ from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator
 from .common import flet
-from .influx import _FLOAT_RX, _MAX_F64, _fmt_g
+from .gofmt import go_g
+from .influx import _FLOAT_RX, _MAX_F64
 from .prom_rw import normalize_time_nano
 
 _SEP = "\x01"
@@ -89,7 +90,7 @@ class StatsdDecoder(Operator):
             return F.struct(
                 val.isNotNull().alias("ok"),
                 name.alias("name"),
-                F.when(val.isNotNull(), _fmt_g(val)).alias("value"),
+                F.when(val.isNotNull(), go_g(val)).alias("value"),
                 labels.alias("labels"),
             )
 

@@ -48,7 +48,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from .base import Operator
-from .skywalking import _metric_rows_to_events, _sw_label_str
+from .otel import labels_str
+from .skywalking import _metric_rows_to_events
 
 SNAPSHOT_SCHEMA_HINT = (
     "hostname string, ip string, ts_ms long, "
@@ -114,10 +115,10 @@ class SystemV2Metrics(Operator):
                 for k, v in self.labels.items()
             ],
         )
-        common = _sw_label_str(common_entries)
+        common = labels_str(common_entries)
 
         def with_label(k: str, v: Column) -> Column:
-            return _sw_label_str(
+            return labels_str(
                 F.concat(
                     common_entries,
                     F.array(F.struct(F.lit(k).alias("k"), v.alias("v"))),
@@ -217,7 +218,7 @@ class SystemV2Metrics(Operator):
                 lambda mt: ~mt.getField("fs_type").rlike(self.exclude_disk_fs_type)
                 & ~unescape(mt.getField("path")).rlike(self.exclude_disk_path),
             )
-            mlabels = lambda mt: _sw_label_str(  # noqa: E731
+            mlabels = lambda mt: labels_str(  # noqa: E731
                 F.concat(
                     common_entries,
                     F.array(

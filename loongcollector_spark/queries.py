@@ -1,14 +1,20 @@
 """Driver-checked queries: Spark-side callables (spark, sf_dir) -> DataFrame,
-each exercising engine operators, paired 1:1 with oracles.py DuckDB SQL.
+each exercising engine operators. ``_registry`` at the end pairs every
+``q_<name>`` here, in ``dataops.queries`` and in ``queries_r5`` with the
+DuckDB SQL of its ``oracle_<name>()`` into ``QUERIES`` and ``ORACLES``.
 """
 
 from __future__ import annotations
+
+import sys
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BinaryType, StringType, StructField
 
-from . import flagship, oracles
+from . import flagship, oracles, queries_r5
+from .dataops import queries as dataops_queries
 from .operators.base import FIELDS, fget, group_rows, payload_rows, to_events
 from .operators.common import RAW_LOG_KEY, ParserOptions
 from .operators.enrich import DictMap
@@ -40,6 +46,9 @@ def _nginx_events(spark, sf_dir, **opts) -> DataFrame:
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_existing(spark)
     return flagship.pipeline_aggregates(spark, sf_dir)
+
+
+oracle_pipeline_e2e = oracles.oracle_pipeline_aggregates
 
 
 def q_routed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1184,6 +1193,9 @@ SELECT doc_id,
 FROM ev"""
 
 
+oracle_otel_pb_trace = oracle_otel_pj_trace = oracle_otel_trace
+
+
 def q_otel_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """processor_otel_metric Format=json: one gauge + one monotonic-sum data
     point per payload → SLS metric log rows (__name__/__labels__/
@@ -1239,6 +1251,9 @@ SELECT doc_id, 'evt_total' AS name,
   CAST(1663904182000000000 + event_id * 1000 AS VARCHAR) AS time_nano,
   CAST(event_id % 1000 AS VARCHAR) AS value
 FROM ev"""
+
+
+oracle_otel_pb_metric = oracle_otel_pj_metric = oracle_otel_metric
 
 
 def q_otel_metric_exp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,113 +1525,7 @@ SELECT 'metric_sink' AS sink, n AS events, v AS value_total FROM m
 ORDER BY sink"""
 
 
-QUERIES = {
-    "pipeline_e2e": q_pipeline_e2e,
-    "prom_relabel": q_prom_relabel,
-    "prom_text_parse": q_prom_text_parse,
-    "otel_trace": q_otel_trace,
-    "otel_metric": q_otel_metric,
-    "otel_metric_exp": q_otel_metric_exp,
-    "gotime": q_gotime,
-    "field_ops": q_field_ops,
-    "route_event_type": q_route_event_type,
-    "routed_rows": q_routed_rows,
-    "drop_counts": q_drop_counts,
-    "parse_regex_discard": q_parse_regex_discard,
-    "parse_regex_keep": q_parse_regex_keep,
-    "parse_json": q_parse_json,
-    "parse_delimiter": q_parse_delimiter,
-    "parse_grok": q_parse_grok,
-    "dict_map": q_dict_map,
-    "filter_expression": q_filter_expression,
-    "desensitize_const": q_desensitize_const,
-    "desensitize_md5": q_desensitize_md5,
-    "kv_split": q_kv_split,
-    "rate_limit": q_rate_limit,
-    "transform_chain": q_transform_chain,
-    "split_lines": q_split_lines,
-    "multiline_records": q_multiline_records,
-    "parse_apsara": q_parse_apsara,
-    "json_expand": q_json_expand,
-    "parse_csv": q_parse_csv,
-    "container_log": q_container_log,
-    "log_to_metric": q_log_to_metric,
-    "shardhash": q_shardhash,
-    "content_value_group": q_content_value_group,
-    "regex_router": q_regex_router,
-    "pipeline_from_config": q_pipeline_from_config,
-    "parse_timestamp": q_parse_timestamp,
-    "transform_chain2": q_transform_chain2,
-    "filter_key_regex": q_filter_key_regex,
-    "rate_limit_windowed": q_rate_limit_windowed,
-    "token_roundtrip": q_token_roundtrip,
-    "spl_pipeline": q_spl_pipeline,
-    "spl_lookup_apsara": q_spl_lookup_apsara,
-    "parse_syslog": q_parse_syslog,
-    "influx_decode": q_influx_decode,
-    "statsd_decode": q_statsd_decode,
-    "pyroscope_decode": q_pyroscope_decode,
-    "geoip_range": q_geoip_range,
-    "geoip_fields": q_geoip_fields,
-}
-
-ORACLES = {
-    "pipeline_e2e": oracles.oracle_pipeline_aggregates(),
-    "prom_relabel": oracle_prom_relabel(),
-    "prom_text_parse": oracle_prom_text_parse(),
-    "otel_trace": oracle_otel_trace(),
-    "otel_metric": oracle_otel_metric(),
-    "otel_metric_exp": oracle_otel_metric_exp(),
-    "gotime": oracle_gotime(),
-    "field_ops": oracle_field_ops(),
-    "route_event_type": oracle_route_event_type(),
-    "routed_rows": oracles.oracle_routed_rows(),
-    "drop_counts": oracles.oracle_drop_counts(),
-    "parse_regex_discard": oracles.oracle_parse_regex_discard(),
-    "parse_regex_keep": oracles.oracle_parse_regex_keep(),
-    "parse_json": oracles.oracle_parse_json(),
-    "parse_delimiter": oracles.oracle_parse_delimiter(),
-    "parse_grok": None,  # filled below (needs the expanded grok regex)
-    "dict_map": oracles.oracle_dict_map(),
-    "filter_expression": oracles.oracle_filter_expression(),
-    "desensitize_const": oracles.oracle_desensitize_const(),
-    "desensitize_md5": oracles.oracle_desensitize_md5(),
-    "kv_split": oracles.oracle_kv_split(),
-    "rate_limit": oracles.oracle_rate_limit(),
-    "transform_chain": oracles.oracle_transform_chain(),
-    "split_lines": oracles.oracle_split_lines(),
-    "multiline_records": oracles.oracle_multiline_records(),
-    "parse_apsara": oracles.oracle_parse_apsara(),
-    "json_expand": oracles.oracle_json_expand(),
-    "parse_csv": oracles.oracle_parse_csv(),
-    "container_log": oracles.oracle_container_log(),
-    "log_to_metric": oracles.oracle_log_to_metric(),
-    "shardhash": oracles.oracle_shardhash(),
-    "content_value_group": oracles.oracle_content_value_group(),
-    "regex_router": oracles.oracle_regex_router(),
-    "pipeline_from_config": oracles.oracle_pipeline_from_config(),
-    "parse_timestamp": oracles.oracle_parse_timestamp(),
-    "transform_chain2": oracles.oracle_transform_chain2(),
-    "filter_key_regex": oracles.oracle_filter_key_regex(),
-    "rate_limit_windowed": oracles.oracle_rate_limit_windowed(),
-    "token_roundtrip": oracles.oracle_token_roundtrip(),
-    "spl_pipeline": oracles.oracle_spl_pipeline(),
-    "spl_lookup_apsara": oracle_spl_lookup_apsara(),
-    "parse_syslog": oracle_parse_syslog(),
-    "influx_decode": oracle_influx_decode(),
-    "statsd_decode": oracle_statsd_decode(),
-    "pyroscope_decode": oracle_pyroscope_decode(),
-    "geoip_range": oracles.oracle_geoip_range(),
-    "geoip_fields": oracle_geoip_fields(),
-}
-
-from .dataops.queries import DATAOPS_ORACLES, DATAOPS_QUERIES  # noqa: E402
-
-QUERIES.update(DATAOPS_QUERIES)
-ORACLES.update(DATAOPS_ORACLES)
-
-
-def _grok_oracle() -> str:
+def oracle_parse_grok() -> str:
     import re
 
     from .operators.parse import expand_grok
@@ -1638,9 +1547,6 @@ g AS (
   FROM seq
 )
 SELECT doc_id, {cols} FROM g"""
-
-
-ORACLES["parse_grok"] = _grok_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1791,12 +1697,6 @@ SELECT 'trace' AS __event_type__,
 FROM events WHERE event_type <> 'error'"""
 
 
-QUERIES["parse_from_pb"] = q_parse_from_pb
-QUERIES["parse_from_pb_mixed"] = q_parse_from_pb_mixed
-ORACLES["parse_from_pb"] = oracle_parse_from_pb()
-ORACLES["parse_from_pb_mixed"] = oracle_parse_from_pb_mixed()
-
-
 def q_telemetry_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aggregator_opentelemetry + aggregator_skywalking routing/batching:
     otel routes on content arity (<=5 metrics / >=19 traces / else logs,
@@ -1853,10 +1753,6 @@ SELECT event_id, n, otel_store,
   CAST((row_number() OVER (PARTITION BY otel_store ORDER BY event_id) - 1) // 64 AS VARCHAR) AS otel_batch,
   sky_store
 FROM r"""
-
-
-QUERIES["telemetry_agg"] = q_telemetry_agg
-ORACLES["telemetry_agg"] = oracle_telemetry_agg()
 
 
 def _otel_pb_events(ev: DataFrame, signal: str) -> DataFrame:
@@ -1950,12 +1846,6 @@ def q_otel_pb_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         fget("__time_nano__").alias("time_nano"),
         fget("__value__").alias("value"),
     )
-
-
-QUERIES["otel_pb_trace"] = q_otel_pb_trace
-QUERIES["otel_pb_metric"] = q_otel_pb_metric
-ORACLES["otel_pb_trace"] = oracle_otel_trace()
-ORACLES["otel_pb_metric"] = oracle_otel_metric()
 
 
 def q_otel_pj_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2081,12 +1971,6 @@ def q_otel_pj_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         fget("__time_nano__").alias("time_nano"),
         fget("__value__").alias("value"),
     )
-
-
-QUERIES["otel_pj_trace"] = q_otel_pj_trace
-QUERIES["otel_pj_metric"] = q_otel_pj_metric
-ORACLES["otel_pj_trace"] = oracle_otel_trace()
-ORACLES["otel_pj_metric"] = oracle_otel_metric()
 
 
 # --- flusher-side protocol converters (pkg/protocol/converter) ---------------
@@ -2265,18 +2149,6 @@ SELECT sink, string_agg(u, chr(10) ORDER BY doc_id) || chr(10) AS body
 FROM unit GROUP BY sink"""
 
 
-QUERIES["flusher_es_bulk"] = q_flusher_es_bulk
-ORACLES["flusher_es_bulk"] = oracle_flusher_es_bulk()
-
-
-QUERIES["flusher_custom_single"] = q_flusher_custom_single
-QUERIES["flusher_jsonline"] = q_flusher_jsonline
-QUERIES["flusher_influx_line"] = q_flusher_influx_line
-ORACLES["flusher_custom_single"] = oracle_flusher_custom_single()
-ORACLES["flusher_jsonline"] = oracle_flusher_jsonline()
-ORACLES["flusher_influx_line"] = oracle_flusher_influx_line()
-
-
 def q_kafka_dynamic_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """flusher_kafka_v2 dynamic-topic routing (flusher_kafka_v2.go:232-245,
     317-356 + pkg/fmtstr): per-event topic from a ``%{content.x}/%{tag.y}``
@@ -2317,10 +2189,6 @@ def oracle_kafka_dynamic_topic() -> str:
 )
 SELECT topic, partition_key, count(*) AS events, min(doc_id) AS first_doc
 FROM f GROUP BY topic, partition_key"""
-
-
-QUERIES["kafka_dynamic_topic"] = q_kafka_dynamic_topic
-ORACLES["kafka_dynamic_topic"] = oracle_kafka_dynamic_topic()
 
 
 def q_prom_remote_write(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2384,10 +2252,6 @@ def oracle_prom_remote_write() -> str:
 FROM events"""
 
 
-QUERIES["prom_remote_write"] = q_prom_remote_write
-ORACLES["prom_remote_write"] = oracle_prom_remote_write()
-
-
 # --- OTLP logs ----------------------------------------------------------------
 
 _OTEL_LOG_TS_BASE = 1663904182000000000
@@ -2449,6 +2313,9 @@ def oracle_otel_log() -> str:
 FROM events"""
 
 
+oracle_otel_pb_log = oracle_otel_pj_log = oracle_otel_log
+
+
 def q_otel_pb_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same fixture over the LogsData WIRE bytes (logs.proto) through
     the Python wire decode (otlp_pb.py) — the Format=protobuf path; shares oracle_otel_log."""
@@ -2457,12 +2324,6 @@ def q_otel_pb_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = _otel_pb_events(_events_raw(spark, sf_dir), "log")
     return _otel_log_cols(OtelLogParser().apply(OtelPbToJson("log").apply(df)))
-
-
-QUERIES["otel_log"] = q_otel_log
-QUERIES["otel_pb_log"] = q_otel_pb_log
-ORACLES["otel_log"] = oracle_otel_log()
-ORACLES["otel_pb_log"] = oracle_otel_log()
 
 
 def q_spl_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2493,10 +2354,6 @@ def oracle_spl_expand() -> str:
 SELECT doc_id, t1 AS tag FROM e
 UNION ALL
 SELECT doc_id, t2 AS tag FROM e"""
-
-
-QUERIES["spl_expand"] = q_spl_expand
-ORACLES["spl_expand"] = oracle_spl_expand()
 
 
 def q_prom_rw_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2549,10 +2406,6 @@ def oracle_prom_rw_encode() -> str:
 FROM events"""
 
 
-QUERIES["prom_rw_encode"] = q_prom_rw_encode
-ORACLES["prom_rw_encode"] = oracle_prom_rw_encode()
-
-
 def q_flusher_loki(spark: SparkSession, sf_dir: str) -> DataFrame:
     """flusher_loki (flusher_loki.go:152-227): custom_single line + label
     set per event — DynamicLabels resolved content./tag. with prefix trim,
@@ -2586,10 +2439,6 @@ def oracle_flusher_loki() -> str:
     || CASE WHEN event_id % 2 = 0 THEN ',"log.topic":"web"' ELSE '' END
     || '},"time":' || (1700000000 + event_id % 86400) || '}' AS line
 FROM events"""
-
-
-QUERIES["flusher_loki"] = q_flusher_loki
-ORACLES["flusher_loki"] = oracle_flusher_loki()
 
 
 def q_sls_group_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2646,10 +2495,6 @@ def oracle_sls_group_decode() -> str:
 FROM events"""
 
 
-QUERIES["sls_group_decode"] = q_sls_group_decode
-ORACLES["sls_group_decode"] = oracle_sls_group_decode()
-
-
 def q_otel_pj_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTLP logs Format=protojson: the payload is one ResourceLogs object
     (wrapped like the trace/metric protojson paths) with an enum-NAME
@@ -2690,10 +2535,6 @@ def q_otel_pj_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = to_events(ev.select("doc_id", payload.alias("content")))
     return _otel_log_cols(OtelLogParser(format="protojson").apply(df))
-
-
-QUERIES["otel_pj_log"] = q_otel_pj_log
-ORACLES["otel_pj_log"] = oracle_otel_log()
 
 
 # --- SkyWalking v3 (plugins/input/skywalkingv3) -------------------------------
@@ -3025,14 +2866,6 @@ def oracle_skywalking_clr_metric() -> str:
 SELECT doc_id, name, time_nano, labels, value, ts_sec FROM rows"""
 
 
-QUERIES["skywalking_segment"] = q_skywalking_segment
-QUERIES["skywalking_jvm_metric"] = q_skywalking_jvm_metric
-QUERIES["skywalking_clr_metric"] = q_skywalking_clr_metric
-ORACLES["skywalking_segment"] = oracle_skywalking_segment()
-ORACLES["skywalking_jvm_metric"] = oracle_skywalking_jvm_metric()
-ORACLES["skywalking_clr_metric"] = oracle_skywalking_clr_metric()
-
-
 def q_flusher_otlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """flusher_otlp v1 (plugins/flusher/opentelemetry): per-sink-group OTLP
     LogsData payloads packed from event frames, roundtrip-pinned through the
@@ -3118,10 +2951,6 @@ SELECT 'sink-' || sk AS sink,
     '}' AS resources,
   cast(ts AS bigint) AS ts_sec
 FROM ev"""
-
-
-QUERIES["flusher_otlp"] = q_flusher_otlp
-ORACLES["flusher_otlp"] = oracle_flusher_otlp()
 
 
 # --- service_canal (plugins/input/canal) ---------------------------------------
@@ -3279,12 +3108,6 @@ SELECT doc_id,
 FROM ev"""
 
 
-QUERIES["canal_row_events"] = q_canal_row_events
-QUERIES["canal_pack_values"] = q_canal_pack_values
-ORACLES["canal_row_events"] = oracle_canal_row_events()
-ORACLES["canal_pack_values"] = oracle_canal_pack_values()
-
-
 def q_spl_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPL multi-stage pipe expressing the flagship per-sink counts
     end-to-end: parse → broadcast lookup enrich → windowed multi-aggregate
@@ -3332,10 +3155,6 @@ SELECT sink, cast(w AS bigint) AS window,
        count(*) AS events,
        cast(sum(bytes) AS double) AS bytes_total
 FROM ev GROUP BY sink, w"""
-
-
-QUERIES["spl_time_stats"] = q_spl_time_stats
-ORACLES["spl_time_stats"] = oracle_spl_time_stats()
 
 
 def q_skywalking_meter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3484,12 +3303,6 @@ SELECT doc_id,
 FROM ev"""
 
 
-QUERIES["skywalking_meter"] = q_skywalking_meter
-QUERIES["skywalking_logging"] = q_skywalking_logging
-ORACLES["skywalking_meter"] = oracle_skywalking_meter()
-ORACLES["skywalking_logging"] = oracle_skywalking_logging()
-
-
 def q_skywalking_browser_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SkyWalking browser error logs (logging_handle.go:153-173
     convertBrowserErrorLog) — incl. the reference's rune renderings of
@@ -3553,10 +3366,6 @@ SELECT doc_id,
   CASE WHEN eid % 2 = 0 THEN 'true' ELSE 'false' END AS firstReportedError,
   cast((1663904182000 + eid) // 1000 AS varchar) AS ts_sec
 FROM ev"""
-
-
-QUERIES["skywalking_browser_error"] = q_skywalking_browser_error
-ORACLES["skywalking_browser_error"] = oracle_skywalking_browser_error()
 
 
 def q_flusher_otlp_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3623,10 +3432,6 @@ SELECT sink, name,
 FROM ev WHERE eid % 2 = 1"""
 
 
-QUERIES["flusher_otlp_metric"] = q_flusher_otlp_metric
-ORACLES["flusher_otlp_metric"] = oracle_flusher_otlp_metric()
-
-
 def q_skywalking_resources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SkyWalking management handler (ReportInstanceProperties →
     ResourcePropertiesCache, management_handle.go:105-115): a stream of
@@ -3685,10 +3490,6 @@ SELECT et AS service, 'inst-' || ut AS serviceInstance,
   '"telemetry.sdk.language":"java"}' AS resource,
   'h-' || ut || '-' || (me % 4) AS host
 FROM latest"""
-
-
-QUERIES["skywalking_resources"] = q_skywalking_resources
-ORACLES["skywalking_resources"] = oracle_skywalking_resources()
 
 
 def q_flusher_otlp_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3777,10 +3578,6 @@ SELECT sink,
 FROM ev"""
 
 
-QUERIES["flusher_otlp_trace"] = q_flusher_otlp_trace
-ORACLES["flusher_otlp_trace"] = oracle_flusher_otlp_trace()
-
-
 def q_nginx_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """metric_nginx_status (plugins/input/nginx/input_nginx.go:114-190):
     stub_status body parse + _server_/_port_ URL tags (explicit port wins,
@@ -3826,10 +3623,6 @@ def oracle_nginx_status() -> str:
   CASE WHEN event_id % 2 = 0 THEN '8080'
        WHEN event_id % 3 = 0 THEN '443' ELSE '80' END AS port
 FROM events"""
-
-
-QUERIES["nginx_status"] = q_nginx_status
-ORACLES["nginx_status"] = oracle_nginx_status()
 
 
 def q_redis_info(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3890,10 +3683,6 @@ def oracle_redis_info() -> str:
   'redis-' || (user_id % 5) AS server,
   CASE WHEN event_id % 2 = 0 THEN '7000' ELSE '6379' END AS port
 FROM events"""
-
-
-QUERIES["redis_info"] = q_redis_info
-ORACLES["redis_info"] = oracle_redis_info()
 
 
 def q_wineventlog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3961,10 +3750,6 @@ FROM events
 WHERE (4600 + event_id % 300) = 4624
    OR ((4600 + event_id % 300) BETWEEN 4700 AND 4800
        AND (4600 + event_id % 300) <> 4735)"""
-
-
-QUERIES["wineventlog"] = q_wineventlog
-ORACLES["wineventlog"] = oracle_wineventlog()
 
 
 def _pprof_payloads(ev: DataFrame) -> DataFrame:
@@ -4045,10 +3830,6 @@ SELECT doc_id, 'base b.go', '', '{root_id}',
   cast(1700000000 + e // 1000 AS bigint),
   '{{"_sample_rate_":"100","app":"ap' || (u % 3) || '"}}'
 FROM base WHERE e % 3 = 0"""
-
-
-QUERIES["pprof_profile"] = q_pprof_profile
-ORACLES["pprof_profile"] = oracle_pprof_profile()
 
 
 def q_jfr_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4158,10 +3939,6 @@ SELECT doc_id, 'Alloc.a', '', '{alloc_id}',
 FROM base WHERE e % 5 = 0"""
 
 
-QUERIES["jfr_profile"] = q_jfr_profile
-ORACLES["jfr_profile"] = oracle_jfr_profile()
-
-
 def q_k8smetav1_pods(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kubernetesmetav1 pods (kubernetes_collect_core.go:51-95 +
     addPodParents): restart roll-up, workload regexes, container.N attrs,
@@ -4244,10 +4021,6 @@ def oracle_k8smetav1_pods() -> str:
          THEN ',"Service:s-ns' || (event_id % 2) || ':svc"' ELSE '' END
     || ']' AS parents
 FROM events"""
-
-
-QUERIES["k8smetav1_pods"] = q_k8smetav1_pods
-ORACLES["k8smetav1_pods"] = oracle_k8smetav1_pods()
 
 
 def q_k8smetav1_workloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4341,10 +4114,6 @@ SELECT doc_id, 'cj-' || e, 'CronJob',
   || CASE WHEN e % 4 = 2 THEN 'true' ELSE 'false' END || '}}',
   '{{}}', '[]'
 FROM base WHERE e % 3 = 2"""
-
-
-QUERIES["k8smetav1_workloads"] = q_k8smetav1_workloads
-ORACLES["k8smetav1_workloads"] = oracle_k8smetav1_workloads()
 
 
 def q_systemv2_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4477,10 +4246,6 @@ SELECT hostname, ts_ms, 'protocol_tcp_retran_util', base, '5', tn
 FROM b WHERE pe IS NOT NULL"""
 
 
-QUERIES["systemv2_metrics"] = q_systemv2_metrics
-ORACLES["systemv2_metrics"] = oracle_systemv2_metrics()
-
-
 def q_command_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     """input_command stdout conversion (input_command.go:207-231): literal
     LineSplitSep split, content + script_md5 fields."""
@@ -4512,10 +4277,6 @@ UNION ALL
 SELECT doc_id, 'metric.b=' || (e % 7), '{md5}' FROM base
 UNION ALL
 SELECT doc_id, 'tail', '{md5}' FROM base WHERE e % 3 = 0"""
-
-
-QUERIES["command_output"] = q_command_output
-ORACLES["command_output"] = oracle_command_output()
 
 
 def q_netping_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4621,10 +4382,6 @@ SELECT ts_ms, 'dns_resolve_failed', lbl,
   CASE WHEN e % 2 = 0 THEN '0' ELSE '1' END FROM b WHERE e % 4 = 3"""
 
 
-QUERIES["netping_metrics"] = q_netping_metrics
-ORACLES["netping_metrics"] = oracle_netping_metrics()
-
-
 def q_process_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """metric_process_v2 (plugins/input/process/input_process.go:86-273):
     second-observation gating, jiffy-delta cpu rates (100·Δ/userHZ/Δt),
@@ -4722,10 +4479,6 @@ UNION ALL
 SELECT hostname, ts_ms, pid, 'process_mem_data', lbl, '3' FROM b"""
 
 
-QUERIES["process_metrics"] = q_process_metrics
-ORACLES["process_metrics"] = oracle_process_metrics()
-
-
 def q_snmp_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """service_snmp PDU variable emission (input_snmp.go:536-563 +
     Asn1BER2String :275-323): OctetString bytes-as-text vs big-int decimal
@@ -4766,10 +4519,6 @@ def oracle_snmp_variables() -> str:
   CASE WHEN event_id % 7 = 1 THEN 'txt-' || (event_id % 5)
        ELSE cast(event_id * 3 + 1 AS varchar) END AS content
 FROM events"""
-
-
-QUERIES["snmp_variables"] = q_snmp_variables
-ORACLES["snmp_variables"] = oracle_snmp_variables()
 
 
 def _k8s_cfg():
@@ -4893,10 +4642,6 @@ def oracle_k8s_pod_entities() -> str:
   FROM base WHERE k % 2 = 0
 )
 SELECT * FROM pod UNION ALL SELECT * FROM main UNION ALL SELECT * FROM side"""
-
-
-QUERIES["k8s_pod_entities"] = q_k8s_pod_entities
-ORACLES["k8s_pod_entities"] = oracle_k8s_pod_entities()
 
 
 def q_k8s_workload_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5041,10 +4786,6 @@ SELECT doc_id,
 FROM named"""
 
 
-QUERIES["k8s_workload_entities"] = q_k8s_workload_entities
-ORACLES["k8s_workload_entities"] = oracle_k8s_workload_entities()
-
-
 def q_k8s_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """service_kubernetes_meta link path (meta_collector_core.go:317-400
     processXYLink family + meta_collector.go:205-222/430-448 cluster links):
@@ -5143,10 +4884,6 @@ def oracle_k8s_links() -> str:
   FROM base WHERE m = 0
 )
 SELECT * FROM pairs UNION ALL SELECT * FROM cluster"""
-
-
-QUERIES["k8s_links"] = q_k8s_links
-ORACLES["k8s_links"] = oracle_k8s_links()
 
 
 # --- SkyWalking v2 (plugins/input/skywalkingv2) -------------------------------
@@ -5343,10 +5080,6 @@ SELECT doc_id,
 FROM ids"""
 
 
-QUERIES["skywalking_v2_segment"] = q_skywalking_v2_segment
-ORACLES["skywalking_v2_segment"] = oracle_skywalking_v2_segment()
-
-
 def q_skywalking_v2_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SkyWalking v2 JVM metrics (jvm_metric_handle.go toMetricStoreFormat):
     JVMMetrics protojson + instance registry → 11 skywalking_jvm_* metric
@@ -5440,10 +5173,6 @@ def oracle_skywalking_v2_jvm() -> str:
     hp || '|phrase#$#' || phrase2 || sp, cast(eid % 19 AS varchar), ts_sec FROM ev
 )
 SELECT doc_id, name, time_nano, labels, value, ts_sec FROM rows"""
-
-
-QUERIES["skywalking_v2_jvm"] = q_skywalking_v2_jvm
-ORACLES["skywalking_v2_jvm"] = oracle_skywalking_v2_jvm()
 
 
 # --- metric_meta_host (plugins/input/hostmeta) ---------------------------------
@@ -5577,10 +5306,6 @@ def oracle_hostmeta_nodes() -> str:
 SELECT * FROM hosts UNION ALL SELECT * FROM procs"""
 
 
-QUERIES["hostmeta_nodes"] = q_hostmeta_nodes
-ORACLES["hostmeta_nodes"] = oracle_hostmeta_nodes()
-
-
 # --- flusher_http (plugins/flusher/http) ---------------------------------------
 
 
@@ -5611,10 +5336,6 @@ def oracle_flusher_http() -> str:
     '"},"tags":{"host.ip":"","log.file.path":"/var/log/app.log"},"time":' ||
     (1700000000 + event_id % 86400) || '}' AS body
 FROM events"""
-
-
-QUERIES["flusher_http"] = q_flusher_http
-ORACLES["flusher_http"] = oracle_flusher_http()
 
 
 # --- input_mysql / rdb incremental collect (plugins/input/mysql, rdb) ----------
@@ -5662,10 +5383,26 @@ FROM events WHERE event_id > 100
 ORDER BY event_id LIMIT 500"""
 
 
-QUERIES["rdb_incremental"] = q_rdb_incremental
-ORACLES["rdb_incremental"] = oracle_rdb_incremental()
+# --- registry ------------------------------------------------------------------
 
-from .queries_r5 import R5_ORACLES, R5_QUERIES  # noqa: E402
 
-QUERIES.update(R5_QUERIES)
-ORACLES.update(R5_ORACLES)
+def _registry() -> tuple[dict[str, Callable], dict[str, str]]:
+    """Every ``q_<name>`` defined in this module, ``dataops.queries`` or
+    ``queries_r5``, registered under ``<name>`` with the SQL of its
+    ``oracle_<name>()``, looked up in the query's own module and then in
+    ``oracles``. A query without an oracle fails the import."""
+    found: dict[str, Callable] = {}
+    sql: dict[str, str] = {}
+    for mod in (sys.modules[__name__], dataops_queries, queries_r5):
+        for attr, fn in vars(mod).items():
+            if not (attr.startswith("q_") and callable(fn) and fn.__module__ == mod.__name__):
+                continue
+            name = attr[2:]
+            oracle = getattr(mod, f"oracle_{name}", None) or getattr(oracles, f"oracle_{name}", None)
+            if oracle is None:
+                raise ImportError(f"{mod.__name__}.{attr} has no oracle_{name}")
+            found[name], sql[name] = fn, oracle()
+    return found, sql
+
+
+QUERIES, ORACLES = _registry()

@@ -4,7 +4,8 @@ fields_with_condition, appender, merge-multiline BY_FLAG, aggregator_context,
 raw converter, gpu metrics, kafka input wiring, metric-input factory.
 
 Each query synthesizes its fixture deterministically from the events table
-(same convention as queries.py) and pairs 1:1 with a DuckDB oracle.
+(same convention as queries.py). Every ``q_<name>`` here is paired with the
+``oracle_<name>`` next to it by ``queries._registry``.
 """
 
 from __future__ import annotations
@@ -509,37 +510,6 @@ def oracle_metric_input_factory() -> str:
 SELECT * FROM gpu UNION ALL SELECT * FROM redis"""
 
 
-R5_QUERIES = {
-    "encrypt_roundtrip": q_encrypt_roundtrip,
-    "drop_keys": q_drop_keys,
-    "pick_key": q_pick_key,
-    "drop_last_key": q_drop_last_key,
-    "fields_with_condition": q_fields_with_condition,
-    "appender_labels": q_appender_labels,
-    "merge_by_flag": q_merge_by_flag,
-    "context_order": q_context_order,
-    "flusher_raw": q_flusher_raw,
-    "gpu_metrics": q_gpu_metrics,
-    "kafka_input_wiring": q_kafka_input_wiring,
-    "metric_input_factory": q_metric_input_factory,
-}
-
-R5_ORACLES = {
-    "encrypt_roundtrip": oracle_encrypt_roundtrip(),
-    "drop_keys": oracle_drop_keys(),
-    "pick_key": oracle_pick_key(),
-    "drop_last_key": oracle_drop_last_key(),
-    "fields_with_condition": oracle_fields_with_condition(),
-    "appender_labels": oracle_appender_labels(),
-    "merge_by_flag": oracle_merge_by_flag(),
-    "context_order": oracle_context_order(),
-    "flusher_raw": oracle_flusher_raw(),
-    "gpu_metrics": oracle_gpu_metrics(),
-    "kafka_input_wiring": oracle_kafka_input_wiring(),
-    "metric_input_factory": oracle_metric_input_factory(),
-}
-
-
 # --- ext_groupinfo_filter -------------------------------------------------------
 
 
@@ -690,19 +660,3 @@ def oracle_journal_fields() -> str:
   CAST(event_id * 7 AS VARCHAR) AS monotonic,
   (1700000000000000 + event_id) * 1000 AS event_time_ns
 FROM events"""
-
-
-R5_QUERIES.update(
-    {
-        "group_info_filter": q_group_info_filter,
-        "docker_events": q_docker_events,
-        "journal_fields": q_journal_fields,
-    }
-)
-R5_ORACLES.update(
-    {
-        "group_info_filter": oracle_group_info_filter(),
-        "docker_events": oracle_docker_events(),
-        "journal_fields": oracle_journal_fields(),
-    }
-)

@@ -97,3 +97,13 @@ def test_go_g_column_fuzz_matches_python(spark, seed):
     )
     mism = [(r["v"], r["g"], fmt_go_g(r["v"])) for r in rows if r["g"] != fmt_go_g(r["v"])]
     assert not mism, f"{len(mism)} mismatches, first: {mism[:5]}"
+
+
+def test_go_g_column_null_is_null(spark):
+    rows = (
+        spark.createDataFrame([(0, None), (1, 1.5)], "i int, v double")
+        .select("i", go_g(F.col("v")).alias("g"))
+        .orderBy("i")
+        .collect()
+    )
+    assert [r["g"] for r in rows] == [None, "1.5"]

@@ -187,7 +187,8 @@ def test_influx_serialize_decode_roundtrip_generated(spark):
     import pyspark.sql.functions as F
 
     from loongcollector_spark.operators.convert import InfluxMetricSerializer
-    from loongcollector_spark.operators.influx import InfluxDecoder, _fmt_g
+    from loongcollector_spark.operators.gofmt import go_g
+    from loongcollector_spark.operators.influx import InfluxDecoder
 
     rng = random.Random(7)
     name_alpha = "aB9_,. -"
@@ -250,7 +251,7 @@ def test_influx_serialize_decode_roundtrip_generated(spark):
     canon = {
         r["i"]: r["c"]
         for r in inp.filter(F.col("i").isin(float_ids))
-        .select("i", _fmt_g(F.col("__value__").cast("double")).alias("c"))
+        .select("i", go_g(F.col("__value__").cast("double")).alias("c"))
         .collect()
     }
     for e in expected:

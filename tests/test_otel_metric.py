@@ -120,6 +120,9 @@ def test_summary_quantiles(spark):
                             "quantileValues": [
                                 {"quantile": 0.5, "value": 1.1},
                                 {"quantile": 0.99, "value": 3.3},
+                                # absent fields read as the proto3 default 0
+                                {"value": 2.2},
+                                {"quantile": 0.9},
                             ],
                         }
                     ]
@@ -133,7 +136,9 @@ def test_summary_quantiles(spark):
     assert by_key[("rt_count", base)]["__value__"] == "10"
     assert by_key[("rt", f"{base}|quantile#$#0.5")]["__value__"] == "1.1"
     assert by_key[("rt", f"{base}|quantile#$#0.99")]["__value__"] == "3.3"
-    assert len(rows) == 4
+    assert by_key[("rt", f"{base}|quantile#$#0")]["__value__"] == "2.2"
+    assert by_key[("rt", f"{base}|quantile#$#0.9")]["__value__"] == "0"
+    assert len(rows) == 6
 
 
 def test_exponential_histogram_golden(spark):
@@ -256,3 +261,29 @@ def test_gauge_sum_histogram_exemplars(spark):
     ]
     assert s_ex["__value__"] == "5" and s_ex["__time_nano__"] == "4"
     assert len(rows) == 4
+
+
+def test_double_attribute_label_is_go_g(spark):
+    """anyValueToString renders a double attribute with strconv 'g':
+    1234567.5 is "1.2345675e+06" (exponent form from decimal exponent 6)."""
+    payload = _payload(
+        [
+            {
+                "name": "temp",
+                "gauge": {
+                    "dataPoints": [
+                        {
+                            "attributes": [
+                                {"key": "ratio", "value": {"doubleValue": 1234567.5}}
+                            ],
+                            "timeUnixNano": "1663904182348000000",
+                            "asDouble": 1.0,
+                        }
+                    ]
+                },
+            }
+        ]
+    )
+    by_key, rows = _parse(spark, payload)
+    assert len(rows) == 1
+    assert ("temp", "host.name#$#web-1|ratio#$#1.2345675e+06") in by_key

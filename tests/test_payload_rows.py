@@ -30,6 +30,7 @@ from loongcollector_spark.operators.convert import (
 from loongcollector_spark.operators.jfr import _EVENT_T, JfrChunkParser
 from loongcollector_spark.operators.otlp_pb import (
     OtelPbToJson,
+    decode_logs,
     decode_metrics,
     decode_traces,
     encode_span_pb,
@@ -257,6 +258,53 @@ GROUP_CASES = {
 @pytest.mark.parametrize("case", sorted(GROUP_CASES))
 def test_grouped_bigint_exact_next_to_a_null(spark, tmp_path, case):
     got, want = GROUP_CASES[case](spark, tmp_path)
+    assert got == want
+
+
+# --- a null timestamp packs as the proto3 default: the field is absent and
+# the decoder reads 0; the other row of the group keeps its exact time
+
+TS_NS = 1_434_055_562_123_000_000
+
+
+def _metric_rows(spark):
+    return spark.createDataFrame(
+        [("s", "m", "gauge", {"h": "1"}, 1.0, TS_NS), ("s", "m", "gauge", {}, 2.0, None)],
+        "sink string, metric_name string, metric_type string,"
+        "tags map<string,string>, value double, ts_ns long",
+    )
+
+
+def _prom_null_ts(spark):
+    enc = PromRemoteWriteEncoder(["sink"]).apply(_metric_rows(spark))
+    out = PromRemoteWriteDecoder("payload").apply(enc).collect()
+    got = {r["__value__"]: r["__time_nano__"] for r in out}
+    return got, {"1": str(TS_NS), "2": "0"}
+
+
+def _otlp_logs_null_ts(spark):
+    df = spark.createDataFrame(
+        [("s", TS_NS // 10**9, {"content": "a"}), ("s", None, {"content": "b"})],
+        f"sink string, ts_sec long, {FIELDS} map<string,string>",
+    )
+    payload = otlp_logs_sink_frames(df, ["sink"]).collect()[0].payload
+    records = decode_logs(bytes(payload))["resourceLogs"][0]["scopeLogs"][0]["logRecords"]
+    got = {r["body"]["stringValue"]: r["timeUnixNano"] for r in records}
+    return got, {"a": str(TS_NS // 10**9 * 10**9), "b": "0"}
+
+
+def _otlp_metrics_null_ts(spark):
+    payload = otlp_metrics_sink_frames(_metric_rows(spark), ["sink"]).collect()[0].payload
+    metrics = decode_metrics(bytes(payload))["resourceMetrics"][0]["scopeMetrics"][0]["metrics"]
+    dps = [m["gauge"]["dataPoints"][0] for m in metrics]
+    got = {dp["asDouble"]: dp["timeUnixNano"] for dp in dps}
+    return got, {1.0: str(TS_NS), 2.0: "0"}
+
+
+@pytest.mark.parametrize("pack", [_prom_null_ts, _otlp_logs_null_ts, _otlp_metrics_null_ts],
+                         ids=lambda f: f.__name__.strip("_"))
+def test_null_timestamp_packs_as_zero(spark, pack):
+    got, want = pack(spark)
     assert got == want
 
 

@@ -60,7 +60,7 @@ def test_statsd_decode_roundtrip_generated(spark):
 
     import pyspark.sql.functions as F
 
-    from loongcollector_spark.operators.influx import _fmt_g
+    from loongcollector_spark.operators.gofmt import go_g
 
     rng = random.Random(11)
     name_alpha = "aB9_./-"
@@ -109,7 +109,7 @@ def test_statsd_decode_roundtrip_generated(spark):
     # by the influx goldens)
     raws = spark.createDataFrame(
         [(e["i"], e["raw"]) for e in expected], ["i", "raw"]
-    ).select("i", _fmt_g(F.col("raw").cast("double")).alias("c"))
+    ).select("i", go_g(F.col("raw").cast("double")).alias("c"))
     canon = {r["i"]: r["c"] for r in raws.collect()}
 
     for e in expected:

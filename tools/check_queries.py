@@ -54,12 +54,8 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
             continue
-        sql = ORACLES.get(name)
-        if sql is None:
-            print(f"SKIP {name}: no oracle (rows={len(sdf)})")
-            continue
         try:
-            odf = con.execute(sql).df()
+            odf = con.execute(ORACLES[name]).df()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}")
             failures += 1

@@ -26,11 +26,18 @@ def _plan(df) -> str:
 
 
 def _renumber(text: str) -> str:
-    """``text`` with its ``#<n>`` expression ids and ``plan_id=<n>`` numbered
-    from 0 by first appearance: independent of earlier sections' plans."""
+    """``text`` with its ``#<n>`` expression ids, ``plan_id=<n>`` and the
+    numbers of the lambda variables (``lambda x_13``; pyspark counts them
+    per process) numbered from 0 by first appearance: independent of
+    earlier sections' plans."""
     for pattern in (r"(?<=[\w)]#)\d+", r"(?<=plan_id=)\d+"):
         ids: dict[str, int] = {}
         text = re.sub(pattern, lambda m: str(ids.setdefault(m.group(), len(ids))), text)
+    names = dict.fromkeys(re.findall(r"\blambda (\w+_\d+)\b", text))
+    if names:
+        new = {n: f"{n.rsplit('_', 1)[0]}_{i}" for i, n in enumerate(names)}
+        bound = r"\b(?:" + "|".join(map(re.escape, names)) + r")\b"
+        text = re.sub(bound, lambda m: new[m.group()], text)
     return text
 
 
