@@ -93,24 +93,10 @@ def _any_value(buf: bytes) -> dict:
             ]
             out = {"arrayValue": {"values": vals}}
         elif fno == 6 and wt == _WT_LEN:
-            out = {"kvlistValue": {"values": _key_values(v)}}
+            out = {"kvlistValue": {"values": _attrs_of(v, 1)}}
         elif fno == 7 and wt == _WT_LEN:
             out = {"bytesValue": _hex(v)}
     return out
-
-
-def _key_values(buf: bytes) -> list[dict]:
-    kvs = []
-    for fno, wt, v in _fields(buf):
-        if fno == 1 and wt == _WT_LEN:
-            kv: dict = {"key": "", "value": {}}
-            for f2, w2, v2 in _fields(v):
-                if f2 == 1 and w2 == _WT_LEN:
-                    kv["key"] = _s(v2)
-                elif f2 == 2 and w2 == _WT_LEN:
-                    kv["value"] = _any_value(v2)
-            kvs.append(kv)
-    return kvs
 
 
 def _attrs_of(buf: bytes, fno_attrs: int) -> list[dict]:
@@ -530,10 +516,12 @@ def _dbl(fno: int, val: float) -> bytes:
 
 
 def encode_attr(key: str, value) -> bytes:
+    """KeyValue; a ``None`` value (a null in a sink frame's string map)
+    reads as the string ""."""
     from .pb import write_varint
 
-    if isinstance(value, str):
-        av = _ld(1, value.encode())
+    if value is None or isinstance(value, str):
+        av = _ld(1, (value or "").encode())
     elif isinstance(value, bool):
         av = _k(2, 0) + bytes([int(value)])
     elif isinstance(value, int):
@@ -603,18 +591,23 @@ def encode_metrics_data(metrics: list[bytes], resource_attrs: list[bytes] = ()) 
     return _ld(1, rm)
 
 
-def encode_gauge_metric(name: str, dps: list[bytes]) -> bytes:
-    return _ld(1, name.encode()) + _ld(5, b"".join(_ld(1, d) for d in dps))
+def _metric_name(name: str | None) -> bytes:
+    """Metric.name=1; a null name is left out (proto3: the decoder reads "")."""
+    return b"" if name is None else _ld(1, name.encode())
+
+
+def encode_gauge_metric(name: str | None, dps: list[bytes]) -> bytes:
+    return _metric_name(name) + _ld(5, b"".join(_ld(1, d) for d in dps))
 
 
 def encode_sum_metric(
-    name: str, dps: list[bytes], is_monotonic: bool, temporality: int | None = None
+    name: str | None, dps: list[bytes], is_monotonic: bool, temporality: int | None = None
 ) -> bytes:
     body = b"".join(_ld(1, d) for d in dps)
     if temporality is not None:  # metrics.proto Sum.aggregation_temporality=2
         body += _vi(2, temporality)
     body += _vi(3, int(is_monotonic))
-    return _ld(1, name.encode()) + _ld(7, body)
+    return _metric_name(name) + _ld(7, body)
 
 
 # --- logs.proto --------------------------------------------------------------

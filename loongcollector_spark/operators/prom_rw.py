@@ -185,8 +185,8 @@ def decode_write_request(payload: bytes) -> list[dict]:
 
 
 def encode_write_request(series: list[dict]) -> bytes:
-    """Fixture encoder for the same message shape; a ``None`` sample
-    timestamp is left out (proto3: the decoder reads 0)."""
+    """Fixture encoder for the same message shape; a ``None`` sample value
+    or timestamp is left out (proto3: the decoder reads 0)."""
     out = bytearray()
     for s in series:
         ts_buf = bytearray()
@@ -194,7 +194,9 @@ def encode_write_request(series: list[dict]) -> bytes:
             lab = _len_field(1, k.encode()) + _len_field(2, v.encode())
             ts_buf += _len_field(1, lab)
         for value, ts in s["samples"]:
-            samp = write_varint((1 << 3) | 1) + struct.pack("<d", value)
+            samp = b""
+            if value is not None:
+                samp += write_varint((1 << 3) | 1) + struct.pack("<d", value)
             if ts is not None:
                 samp += write_varint(2 << 3) + write_varint(ts & ((1 << 64) - 1))
             ts_buf += _len_field(2, samp)
@@ -290,15 +292,17 @@ def metrics_to_write_requests(
     """pkg/protocol/encoder/prometheus (encoder_prometheus.go:63-103,
     utils.go:44-100): each metric event becomes one TimeSeries whose labels
     are the tag map plus ``__name__``, lexicographically sorted, EMPTY names/
-    values dropped (remote-write spec); the sample timestamp converts ns→ms
-    (a null one is left out of the sample, so it decodes as 0);
-    series batch into WriteRequests capped at ``series_limit``. Returns the
-    snappy-compressed marshaled payloads (the HTTP flusher adds headers)."""
+    values dropped (remote-write spec); the sample timestamp converts ns→ms;
+    series batch into WriteRequests capped at ``series_limit``. Nulls read
+    as the proto3 defaults: a null name or tag value as "" (so a null tag
+    drops with the empty ones), a null value or timestamp is left out of
+    the sample and decodes as 0. Returns the snappy-compressed marshaled
+    payloads (the HTTP flusher adds headers)."""
     out: list[bytes] = []
     batch: list[dict] = []
     for name, tags, value, ts_ns in events:
-        labels = [(k, v) for k, v in tags.items() if k != "" and v != ""]
-        labels.append(("__name__", name))
+        labels = [(k, v) for k, v in tags.items() if k and v]
+        labels.append(("__name__", name or ""))
         labels.sort(key=lambda kv: kv[0])
         ts_ms = None if ts_ns is None else ts_ns // 1_000_000
         batch.append({"labels": labels, "samples": [(value, ts_ms)]})

@@ -32,7 +32,7 @@ InstanceProperties arrive — receive-order state that has no table analog).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Mapping
+from typing import Callable, Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -158,6 +158,208 @@ def span_tag_entries(tag: Column) -> Column:
     )
 
 
+def _last_value(entries: Column, key: str) -> Column:
+    """The value of the last ``key`` entry, ``""`` if none (Go map put
+    order: later puts overwrite)."""
+    return F.aggregate(
+        entries,
+        F.lit(""),
+        lambda acc, e: F.when(e.getField("k") == key, e.getField("v")).otherwise(acc),
+    )
+
+
+def ot_span_fields(
+    sp: Column,
+    *,
+    refs_t: str,
+    name: Column,
+    trace_id: Column,
+    service: Column,
+    host: Column,
+    resource: Column,
+    span_id: Callable[[Column], Column],
+    ref_span_id: Callable[[Column], Column],
+    ref_trace_id: Callable[[Column], Column],
+    component_mapping: Mapping[int, str],
+    db_mapping: bool,
+) -> Column:
+    """One span → the OtSpan.ToLog map (ot_trace.go:69-163), shared by the
+    v2 and v3 parsers. The protocol-specific parts come in as arguments:
+    ``span_id`` renders a span id Column (the span's own and, for a span
+    without refs, its parentSpanId), ``ref_span_id`` / ``ref_trace_id``
+    render a ref struct of type ``refs_t`` as its parent span id / link
+    trace id, and ``db_mapping`` adds db.connection_string to Exit spans on
+    the Database layer (v3 and the v2 legacy handler; the v2 report
+    handler has none)."""
+    stype = F.coalesce(sp.getField("spanType"), F.lit("Entry"))
+    slayer = F.coalesce(sp.getField("spanLayer"), F.lit("Unknown"))
+    parent_id = F.coalesce(sp.getField("parentSpanId"), F.lit(0))
+    start_ms = F.coalesce(sp.getField("startTime"), F.lit(0))
+    end_ms = F.coalesce(sp.getField("endTime"), F.lit(0))
+    peer = F.coalesce(sp.getField("peer"), F.lit(""))
+    tags = F.coalesce(sp.getField("tags"), F.expr(f"CAST(array() AS {_KV})"))
+    logs = F.coalesce(
+        sp.getField("logs"),
+        F.expr(f"CAST(array() AS array<struct<time:long,data:{_KV}>>)"),
+    )
+    refs = F.coalesce(sp.getField("refs"), F.expr(f"CAST(array() AS array<{refs_t}>)"))
+
+    # kind switch (segment_analyze.go:73-89; MQ case first)
+    kind = (
+        F.when(
+            slayer == "MQ",
+            F.when(stype == "Entry", F.lit("consumer"))
+            .when(stype == "Exit", F.lit("producer"))
+            .otherwise(F.lit("")),
+        )
+        .when(stype == "Entry", F.lit("server"))
+        .when(stype == "Exit", F.lit("client"))
+        .when(stype == "Local", F.lit("internal"))
+        .otherwise(F.lit(""))
+    )
+
+    first_ref = F.try_element_at(refs, F.lit(1))
+    parent_span_id = F.when(F.size(refs) > 0, ref_span_id(first_ref)).otherwise(
+        F.when(parent_id < 0, F.lit("")).otherwise(span_id(parent_id))
+    )
+    # links: []*OtSpanRef marshal (ot_trace.go:62-67 field order;
+    # Attributes is always nil → "attributes":null)
+    links_json = F.to_json(
+        F.transform(
+            refs,
+            lambda r: F.struct(
+                ref_trace_id(r).alias("traceID"),
+                ref_span_id(r).alias("spanID"),
+                F.lit("").alias("traceState"),
+                F.lit(None).cast("string").alias("attributes"),
+            ),
+        ),
+        {"ignoreNullFields": "false"},
+    )
+
+    # logs: []map[string]string — "time" first, data k/v over it
+    # (segment_analyze.go:98-110)
+    logs_json = F.concat(
+        F.lit("["),
+        F.array_join(
+            F.transform(
+                logs,
+                lambda lg: go_map_json(
+                    F.concat(
+                        F.array(
+                            _ent(
+                                "time",
+                                F.coalesce(lg.getField("time"), F.lit(0)).cast(
+                                    "string"
+                                ),
+                            )
+                        ),
+                        F.transform(
+                            F.coalesce(
+                                lg.getField("data"), F.expr(f"CAST(array() AS {_KV})")
+                            ),
+                            lambda kv: _ent(kv.getField("key"), kv.getField("value")),
+                        ),
+                    )
+                ),
+            ),
+            ",",
+        ),
+        F.lit("]"),
+    )
+    # status message: last error.kind log value wins (:104-107)
+    status_msg = F.aggregate(
+        F.flatten(
+            F.transform(
+                logs,
+                lambda lg: F.coalesce(
+                    lg.getField("data"), F.expr(f"CAST(array() AS {_KV})")
+                ),
+            )
+        ),
+        F.lit(""),
+        lambda acc, kv: F.when(
+            (kv.getField("key") == "error.kind") & (F.length(kv.getField("value")) > 0),
+            kv.getField("value"),
+        ).otherwise(acc),
+    )
+
+    # attribute map: peer → tags → messaging/db tail (:127-163)
+    hostport = F.split(peer, ":")
+    peer_entries = F.when(F.length(peer) == 0, _empty_ent()).otherwise(
+        F.when(
+            F.size(hostport) == 2,
+            F.array(
+                _ent("net.peer.ip", F.element_at(hostport, 1)),
+                _ent("net.peer.port", F.element_at(hostport, 2)),
+            ),
+        ).otherwise(F.array(_ent("net.peer.ip", F.element_at(hostport, 1))))
+    )
+    msg_system = F.lit("MessagingSystem")
+    if component_mapping:
+        comp_map = F.create_map(
+            *[F.lit(x) for kv in component_mapping.items() for x in (str(kv[0]), kv[1])]
+        )
+        msg_system = F.coalesce(
+            F.element_at(comp_map, F.coalesce(sp.getField("componentId"), F.lit(0)).cast("string")),
+            msg_system,
+        )
+    db_entries = _empty_ent()
+    if db_mapping:
+        # mappingDatabaseTag: Exit spans on the Database layer with a peer
+        # and a db.type tag (a span has one layer, so it never meets MQ's)
+        db_type = F.try_element_at(
+            F.filter(tags, lambda t: t.getField("key") == "db.type"), F.lit(1)
+        ).getField("value")
+        db_entries = F.when(
+            (stype == "Exit")
+            & (slayer == "Database")
+            & (F.length(peer) > 0)
+            & db_type.isNotNull()
+            & (F.length(db_type) > 0),
+            F.array(
+                _ent(
+                    "db.connection_string",
+                    F.concat(F.lower(db_type), F.lit("://"), peer),
+                )
+            ),
+        ).otherwise(_empty_ent())
+    tail_entries = F.when(
+        slayer == "MQ", F.array(_ent("messaging.system", msg_system))
+    ).otherwise(db_entries)
+    attribute_json = go_map_json(
+        F.concat(
+            peer_entries, F.flatten(F.transform(tags, span_tag_entries)), tail_entries
+        )
+    )
+
+    end_us = end_ms * 1000
+    return F.create_map(
+        F.lit("links"), links_json,
+        F.lit("host"), host,
+        F.lit("service"), service,
+        F.lit("resource"), resource,
+        F.lit("name"), name,
+        F.lit("kind"), kind,
+        F.lit("traceID"), trace_id,
+        F.lit("spanID"), span_id(F.coalesce(sp.getField("spanId"), F.lit(0))),
+        F.lit("parentSpanID"), parent_span_id,
+        F.lit("logs"), logs_json,
+        F.lit("traceState"), F.lit(""),
+        F.lit("start"), (start_ms * 1000).cast("string"),
+        F.lit("end"), end_us.cast("string"),
+        F.lit("duration"), ((end_ms - start_ms) * 1000).cast("string"),
+        F.lit("attribute"), attribute_json,
+        F.lit("statusCode"),
+        F.when(
+            F.coalesce(sp.getField("isError"), F.lit(False)), F.lit("ERROR")
+        ).otherwise(F.lit("OK")),
+        F.lit("statusMessage"), status_msg,
+        # ToLog time: SetLogTimeWithNano(End µs → sec, ns-in-sec)
+        F.lit("__ts_sec__"), (end_us / F.lit(1000000)).cast("long").cast("string"),
+    )
+
+
 @dataclass
 class SkywalkingSegmentParser(Operator):
     """SegmentObject protojson in ``source_key`` → one event per span with
@@ -186,13 +388,32 @@ class SkywalkingSegmentParser(Operator):
                 F.explode("__seg__.spans").alias("__span__"),
             )
         )
+        sg, sp = F.col("__seg__"), F.col("__span__")
+        seg_id = F.coalesce(sg.getField("traceSegmentId"), F.lit(""))
         out = exploded.select(
             *passthrough,
             F.col("__seg__.service").alias("__service__"),
             F.coalesce(F.col("__seg__.serviceInstance"), F.lit("")).alias(
                 "__instance__"
             ),
-            self._span_fields(F.col("__seg__"), F.col("__span__")).alias(FIELDS),
+            ot_span_fields(
+                sp,
+                refs_t=_REF,
+                name=F.coalesce(sp.getField("operationName"), F.lit("")),
+                trace_id=F.coalesce(sg.getField("traceId"), F.lit("")),
+                service=F.coalesce(sg.getField("service"), F.lit("")),
+                host=F.lit(""),  # overwritten by the resource join
+                resource=F.lit("{}"),
+                span_id=lambda idc: F.concat(seg_id, F.lit("."), idc.cast("string")),
+                ref_span_id=lambda r: F.concat(
+                    F.coalesce(r.getField("parentTraceSegmentId"), F.lit("")),
+                    F.lit("."),
+                    F.coalesce(r.getField("parentSpanId"), F.lit(0)).cast("string"),
+                ),
+                ref_trace_id=lambda r: F.coalesce(r.getField("traceId"), F.lit("")),
+                component_mapping=self.component_mapping,
+                db_mapping=True,
+            ).alias(FIELDS),
         )
         if resources is not None:
             res = resources.select(
@@ -200,13 +421,7 @@ class SkywalkingSegmentParser(Operator):
                 F.coalesce(F.col("serviceInstance"), F.lit("")).alias("__instance__"),
                 flet(convert_resource_ot(F.col("properties")), lambda es: F.struct(
                     go_map_json(es).alias("json"),
-                    F.aggregate(
-                        es,
-                        F.lit(""),
-                        lambda acc, e: F.when(
-                            e.getField("k") == "host.name", e.getField("v")
-                        ).otherwise(acc),
-                    ).alias("host"),
+                    _last_value(es, "host.name").alias("host"),
                 )).alias("__res__"),
             )
             out = out.join(
@@ -226,193 +441,6 @@ class SkywalkingSegmentParser(Operator):
         else:
             out = out.select(*passthrough, FIELDS)
         return out
-
-    def _span_fields(self, seg: Column, sp: Column) -> Column:
-        stype = F.coalesce(sp.getField("spanType"), F.lit("Entry"))
-        slayer = F.coalesce(sp.getField("spanLayer"), F.lit("Unknown"))
-        seg_id = F.coalesce(seg.getField("traceSegmentId"), F.lit(""))
-        span_id = F.coalesce(sp.getField("spanId"), F.lit(0))
-        parent_id = F.coalesce(sp.getField("parentSpanId"), F.lit(0))
-        start_ms = F.coalesce(sp.getField("startTime"), F.lit(0))
-        end_ms = F.coalesce(sp.getField("endTime"), F.lit(0))
-        peer = F.coalesce(sp.getField("peer"), F.lit(""))
-        tags = F.coalesce(sp.getField("tags"), F.expr(f"CAST(array() AS {_KV})"))
-        logs = F.coalesce(
-            sp.getField("logs"),
-            F.expr(f"CAST(array() AS array<struct<time:long,data:{_KV}>>)"),
-        )
-        refs = F.coalesce(sp.getField("refs"), F.expr(f"CAST(array() AS array<{_REF}>)"))
-
-        # kind switch (segment_analyze.go:73-89; MQ case first)
-        kind = (
-            F.when(
-                slayer == "MQ",
-                F.when(stype == "Entry", F.lit("consumer"))
-                .when(stype == "Exit", F.lit("producer"))
-                .otherwise(F.lit("")),
-            )
-            .when(stype == "Entry", F.lit("server"))
-            .when(stype == "Exit", F.lit("client"))
-            .when(stype == "Local", F.lit("internal"))
-            .otherwise(F.lit(""))
-        )
-
-        def ref_span_id(r: Column) -> Column:
-            return F.concat(
-                F.coalesce(r.getField("parentTraceSegmentId"), F.lit("")),
-                F.lit("."),
-                F.coalesce(r.getField("parentSpanId"), F.lit(0)).cast("string"),
-            )
-
-        first_ref = F.try_element_at(refs, F.lit(1))
-        parent_span_id = F.when(F.size(refs) > 0, ref_span_id(first_ref)).otherwise(
-            F.when(parent_id < 0, F.lit("")).otherwise(
-                F.concat(seg_id, F.lit("."), parent_id.cast("string"))
-            )
-        )
-        # links: []*OtSpanRef marshal (ot_trace.go:62-67 field order;
-        # Attributes is always nil → "attributes":null)
-        links_json = F.to_json(
-            F.transform(
-                refs,
-                lambda r: F.struct(
-                    F.coalesce(r.getField("traceId"), F.lit("")).alias("traceID"),
-                    ref_span_id(r).alias("spanID"),
-                    F.lit("").alias("traceState"),
-                    F.lit(None).cast("string").alias("attributes"),
-                ),
-            ),
-            {"ignoreNullFields": "false"},
-        )
-
-        # logs: []map[string]string — "time" first, data k/v over it
-        # (segment_analyze.go:98-110)
-        logs_json = F.concat(
-            F.lit("["),
-            F.array_join(
-                F.transform(
-                    logs,
-                    lambda lg: go_map_json(
-                        F.concat(
-                            F.array(
-                                _ent(
-                                    "time",
-                                    F.coalesce(lg.getField("time"), F.lit(0)).cast(
-                                        "string"
-                                    ),
-                                )
-                            ),
-                            F.transform(
-                                F.coalesce(
-                                    lg.getField("data"), F.expr(f"CAST(array() AS {_KV})")
-                                ),
-                                lambda kv: _ent(kv.getField("key"), kv.getField("value")),
-                            ),
-                        )
-                    ),
-                ),
-                ",",
-            ),
-            F.lit("]"),
-        )
-        # status message: last error.kind log value wins (:104-107)
-        status_msg = F.aggregate(
-            F.flatten(
-                F.transform(
-                    logs,
-                    lambda lg: F.coalesce(
-                        lg.getField("data"), F.expr(f"CAST(array() AS {_KV})")
-                    ),
-                )
-            ),
-            F.lit(""),
-            lambda acc, kv: F.when(
-                (kv.getField("key") == "error.kind") & (F.length(kv.getField("value")) > 0),
-                kv.getField("value"),
-            ).otherwise(acc),
-        )
-
-        # attribute map: peer → tags → messaging/db tail (:127-163)
-        hostport = F.split(peer, ":")
-        peer_entries = F.when(F.length(peer) == 0, _empty_ent()).otherwise(
-            F.when(
-                F.size(hostport) == 2,
-                F.array(
-                    _ent("net.peer.ip", F.element_at(hostport, 1)),
-                    _ent("net.peer.port", F.element_at(hostport, 2)),
-                ),
-            ).otherwise(F.array(_ent("net.peer.ip", F.element_at(hostport, 1))))
-        )
-        comp_map = (
-            F.create_map(
-                *[
-                    F.lit(x)
-                    for kv in self.component_mapping.items()
-                    for x in (str(kv[0]), kv[1])
-                ]
-            )
-            if self.component_mapping
-            else None
-        )
-        msg_system = (
-            F.coalesce(
-                F.element_at(comp_map, F.coalesce(sp.getField("componentId"), F.lit(0)).cast("string")),
-                F.lit("MessagingSystem"),
-            )
-            if comp_map is not None
-            else F.lit("MessagingSystem")
-        )
-        db_type = F.try_element_at(
-            F.filter(tags, lambda t: t.getField("key") == "db.type"), F.lit(1)
-        ).getField("value")
-        tail_entries = F.when(
-            slayer == "MQ", F.array(_ent("messaging.system", msg_system))
-        ).otherwise(
-            F.when(
-                (stype == "Exit")
-                & (slayer == "Database")
-                & (F.length(peer) > 0)
-                & db_type.isNotNull()
-                & (F.length(db_type) > 0),
-                F.array(
-                    _ent(
-                        "db.connection_string",
-                        F.concat(F.lower(db_type), F.lit("://"), peer),
-                    )
-                ),
-            ).otherwise(_empty_ent())
-        )
-        attribute_json = go_map_json(
-            F.concat(
-                peer_entries, F.flatten(F.transform(tags, span_tag_entries)), tail_entries
-            )
-        )
-
-        end_us = end_ms * 1000
-        return F.create_map(
-            F.lit("links"), links_json,
-            F.lit("host"), F.lit(""),  # overwritten by the resource join
-            F.lit("service"), F.coalesce(seg.getField("service"), F.lit("")),
-            F.lit("resource"), F.lit("{}"),
-            F.lit("name"), F.coalesce(sp.getField("operationName"), F.lit("")),
-            F.lit("kind"), kind,
-            F.lit("traceID"), F.coalesce(seg.getField("traceId"), F.lit("")),
-            F.lit("spanID"), F.concat(seg_id, F.lit("."), span_id.cast("string")),
-            F.lit("parentSpanID"), parent_span_id,
-            F.lit("logs"), logs_json,
-            F.lit("traceState"), F.lit(""),
-            F.lit("start"), (start_ms * 1000).cast("string"),
-            F.lit("end"), end_us.cast("string"),
-            F.lit("duration"), ((end_ms - start_ms) * 1000).cast("string"),
-            F.lit("attribute"), attribute_json,
-            F.lit("statusCode"),
-            F.when(
-                F.coalesce(sp.getField("isError"), F.lit(False)), F.lit("ERROR")
-            ).otherwise(F.lit("OK")),
-            F.lit("statusMessage"), status_msg,
-            # ToLog time: SetLogTimeWithNano(End µs → sec, ns-in-sec)
-            F.lit("__ts_sec__"), (end_us / F.lit(1000000)).cast("long").cast("string"),
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -493,6 +521,24 @@ def jvm_memory_rows(base: Column, m: Column) -> Column:
     )
 
 
+def jvm_pool_rows(base: Column, p: Column, committed: str) -> Column:
+    """One JVM MemoryPool message → its four skywalking_jvm_memory_pool_*
+    rows, labelled ``base`` plus the pool ``type``. ``committed`` names the
+    committed-bytes field: v2's JVM.proto spells it "commited"
+    (JVM.pb.go:312)."""
+    lb = F.concat(
+        base,
+        F.lit("|type#$#"),
+        F.coalesce(p.getField("type"), F.lit("CODE_CACHE_USAGE")),
+    )
+    return F.array(
+        _row("skywalking_jvm_memory_pool_committed", lb, F.coalesce(p.getField(committed), F.lit(0))),
+        _row("skywalking_jvm_memory_pool_init", lb, F.coalesce(p.getField("init"), F.lit(0))),
+        _row("skywalking_jvm_memory_pool_max", lb, F.coalesce(p.getField("max"), F.lit(0))),
+        _row("skywalking_jvm_memory_pool_used", lb, F.coalesce(p.getField("used"), F.lit(0))),
+    )
+
+
 @dataclass
 class SkywalkingJvmMetricParser(Operator):
     """JVMMetricCollection protojson → skywalking_jvm_* metric logs in the
@@ -519,19 +565,6 @@ class SkywalkingJvmMetricParser(Operator):
             F.lit("service#$#"), svc, F.lit("|serviceInstance#$#"), inst
         )
 
-        def pool_rows(p: Column) -> Column:
-            lb = F.concat(
-                base,
-                F.lit("|type#$#"),
-                F.coalesce(p.getField("type"), F.lit("CODE_CACHE_USAGE")),
-            )
-            return F.array(
-                _row("skywalking_jvm_memory_pool_committed", lb, F.coalesce(p.getField("committed"), F.lit(0))),
-                _row("skywalking_jvm_memory_pool_init", lb, F.coalesce(p.getField("init"), F.lit(0))),
-                _row("skywalking_jvm_memory_pool_max", lb, F.coalesce(p.getField("max"), F.lit(0))),
-                _row("skywalking_jvm_memory_pool_used", lb, F.coalesce(p.getField("used"), F.lit(0))),
-            )
-
         def gc_rows(g: Column) -> Column:
             # phrase label sorts BEFORE service (MetricLabels sorts by key)
             lb = F.concat(
@@ -555,7 +588,7 @@ class SkywalkingJvmMetricParser(Operator):
                 )
             ),
             F.coalesce(F.flatten(F.transform(mt.getField("memory"), lambda m: jvm_memory_rows(base, m))), empty),
-            F.coalesce(F.flatten(F.transform(mt.getField("memoryPool"), pool_rows)), empty),
+            F.coalesce(F.flatten(F.transform(mt.getField("memoryPool"), lambda p: jvm_pool_rows(base, p, "committed"))), empty),
             F.coalesce(F.flatten(F.transform(mt.getField("gc"), gc_rows)), empty),
             F.array(
                 _row("skywalking_jvm_threads_live", base, F.coalesce(mt.getField("thread").getField("liveCount"), F.lit(0))),

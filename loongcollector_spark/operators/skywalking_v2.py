@@ -32,6 +32,12 @@ register-handle state. Everything below is pure Column expressions —
 JVM-side, whole-stage codegen, one Generate per parser, zero Python in the
 hot path.
 
+Only what is v2's own lives here: the UniqueId renders, the registry joins
+and the GC-label quirk. A span becomes its OtSpan map through v3's
+``skywalking.ot_span_fields`` (given the v2 span/ref id renders), and the
+memory and pool rows come from ``skywalking.jvm_memory_rows`` /
+``jvm_pool_rows``.
+
 Divergences (documented): a parentSpanId that points at a span id absent
 from the segment panics in the reference (recovered at the stream level,
 killing the remaining segment mid-flight) — receive-order state with no
@@ -51,13 +57,15 @@ from pyspark.sql import Column, DataFrame
 
 from .base import FIELDS, Operator, fget
 from .skywalking import (
-    _empty_ent,
+    _KV,
     _ent,
+    _last_value,
     _metric_rows_to_events,
     _row,
     go_map_json,
     jvm_memory_rows,
-    span_tag_entries,
+    jvm_pool_rows,
+    ot_span_fields,
 )
 
 #: getTraceID sentinel (trace_segment_report_handle.go:262-285)
@@ -73,7 +81,6 @@ V2_PROPERTY_MAPPING = {
 }
 
 _UID = "struct<idParts:array<bigint>>"
-_KV = "array<struct<key:string,value:string>>"
 _REF2 = (
     f"struct<refType:string,parentTraceSegmentId:{_UID},parentSpanId:long,"
     "parentServiceInstanceId:long,networkAddress:string,"
@@ -168,15 +175,6 @@ def _mapped_properties(properties: Column) -> Column:
         ),
     )
     return F.filter(mapped, lambda e: e.getField("k").isNotNull())
-
-
-def _last_value(entries: Column, key: str) -> Column:
-    """Last entry wins (Go map put order)."""
-    return F.aggregate(
-        entries,
-        F.lit(""),
-        lambda acc, e: F.when(e.getField("k") == key, e.getField("v")).otherwise(acc),
-    )
 
 
 @dataclass
@@ -281,29 +279,7 @@ class SkywalkingV2SegmentParser(Operator):
             ex = ex.where(op_id == 0)
             name = F.coalesce(sp.getField("operationName"), F.lit(""))
 
-        return ex.select(
-            *passthrough, self._span_fields(sp, name).alias(FIELDS)
-        )
-
-    def _span_fields(self, sp: Column, name: Column) -> Column:
-        legacy = self.mode == "legacy"
-        jaeger = F.col("__jaeger__")
-        seg_id = F.col("__seg_id__")
-        stype = F.coalesce(sp.getField("spanType"), F.lit("Entry"))
-        slayer = F.coalesce(sp.getField("spanLayer"), F.lit("Unknown"))
-        span_id = F.coalesce(sp.getField("spanId"), F.lit(0))
-        parent_id = F.coalesce(sp.getField("parentSpanId"), F.lit(0))
-        start_ms = F.coalesce(sp.getField("startTime"), F.lit(0))
-        end_ms = F.coalesce(sp.getField("endTime"), F.lit(0))
-        peer = F.coalesce(sp.getField("peer"), F.lit(""))
-        tags = F.coalesce(sp.getField("tags"), F.expr(f"CAST(array() AS {_KV})"))
-        logs = F.coalesce(
-            sp.getField("logs"),
-            F.expr(f"CAST(array() AS array<struct<time:long,data:{_KV}>>)"),
-        )
-        refs = F.coalesce(
-            sp.getField("refs"), F.expr(f"CAST(array() AS array<{_REF2}>)")
-        )
+        jaeger, seg_id = F.col("__jaeger__"), F.col("__seg_id__")
 
         def gen_span_id(idc: Column) -> Column:
             # generateSpanIDByJaeger: traceSegmentID[len-12:] + %04x(id)[0:4]
@@ -334,173 +310,24 @@ class SkywalkingV2SegmentParser(Operator):
                 ),
             ).otherwise(original)
 
-        kind = (
-            F.when(
-                slayer == "MQ",
-                F.when(stype == "Entry", F.lit("consumer"))
-                .when(stype == "Exit", F.lit("producer"))
-                .otherwise(F.lit("")),
-            )
-            .when(stype == "Entry", F.lit("server"))
-            .when(stype == "Exit", F.lit("client"))
-            .when(stype == "Local", F.lit("internal"))
-            .otherwise(F.lit(""))
-        )
-
-        first_ref = F.try_element_at(refs, F.lit(1))
-        parent_span_id = F.when(
-            F.size(refs) > 0, gen_parent_from_ref(first_ref)
-        ).otherwise(
-            F.when(parent_id < 0, F.lit("")).otherwise(gen_span_id(parent_id))
-        )
-        links_json = F.to_json(
-            F.transform(
-                refs,
-                lambda r: F.struct(
-                    F.col("__trace_id__").alias("traceID"),
-                    gen_parent_from_ref(r).alias("spanID"),
-                    F.lit("").alias("traceState"),
-                    F.lit(None).cast("string").alias("attributes"),
-                ),
-            ),
-            {"ignoreNullFields": "false"},
-        )
-
-        logs_json = F.concat(
-            F.lit("["),
-            F.array_join(
-                F.transform(
-                    logs,
-                    lambda lg: go_map_json(
-                        F.concat(
-                            F.array(
-                                _ent(
-                                    "time",
-                                    F.coalesce(lg.getField("time"), F.lit(0)).cast(
-                                        "string"
-                                    ),
-                                )
-                            ),
-                            F.transform(
-                                F.coalesce(
-                                    lg.getField("data"),
-                                    F.expr(f"CAST(array() AS {_KV})"),
-                                ),
-                                lambda kv: _ent(
-                                    kv.getField("key"), kv.getField("value")
-                                ),
-                            ),
-                        )
-                    ),
-                ),
-                ",",
-            ),
-            F.lit("]"),
-        )
-        status_msg = F.aggregate(
-            F.flatten(
-                F.transform(
-                    logs,
-                    lambda lg: F.coalesce(
-                        lg.getField("data"), F.expr(f"CAST(array() AS {_KV})")
-                    ),
-                )
-            ),
-            F.lit(""),
-            lambda acc, kv: F.when(
-                (kv.getField("key") == "error.kind")
-                & (F.length(kv.getField("value")) > 0),
-                kv.getField("value"),
-            ).otherwise(acc),
-        )
-
-        hostport = F.split(peer, ":")
-        peer_entries = F.when(F.length(peer) == 0, _empty_ent()).otherwise(
-            F.when(
-                F.size(hostport) == 2,
-                F.array(
-                    _ent("net.peer.ip", F.element_at(hostport, 1)),
-                    _ent("net.peer.port", F.element_at(hostport, 2)),
-                ),
-            ).otherwise(F.array(_ent("net.peer.ip", F.element_at(hostport, 1))))
-        )
-        comp_map = (
-            F.create_map(
-                *[
-                    F.lit(x)
-                    for kv in self.component_mapping.items()
-                    for x in (str(kv[0]), kv[1])
-                ]
-            )
-            if self.component_mapping
-            else None
-        )
-        msg_system = (
-            F.coalesce(
-                F.element_at(
-                    comp_map,
-                    F.coalesce(sp.getField("componentId"), F.lit(0)).cast("string"),
-                ),
-                F.lit("MessagingSystem"),
-            )
-            if comp_map is not None
-            else F.lit("MessagingSystem")
-        )
-        mq_entries = F.when(
-            slayer == "MQ", F.array(_ent("messaging.system", msg_system))
-        ).otherwise(_empty_ent())
-        if legacy:
-            # mappingDatabaseTag (trace_segment_handle.go:211-229): Exit spans
-            # on the Database layer with a peer and a db.type tag
-            db_type = F.try_element_at(
-                F.filter(tags, lambda t: t.getField("key") == "db.type"), F.lit(1)
-            ).getField("value")
-            db_entries = F.when(
-                (stype == "Exit")
-                & (slayer == "Database")
-                & (F.length(peer) > 0)
-                & db_type.isNotNull()
-                & (F.length(db_type) > 0),
-                F.array(
-                    _ent(
-                        "db.connection_string",
-                        F.concat(F.lower(db_type), F.lit("://"), peer),
-                    )
-                ),
-            ).otherwise(_empty_ent())
-            tail_entries = F.concat(mq_entries, db_entries)
-        else:
-            # the report handler never maps db.connection_string
-            tail_entries = mq_entries
-        attribute_json = go_map_json(
-            F.concat(
-                peer_entries, F.flatten(F.transform(tags, span_tag_entries)), tail_entries
-            )
-        )
-
-        end_us = end_ms * 1000
-        return F.create_map(
-            F.lit("links"), links_json,
-            F.lit("host"), F.col("__host__"),
-            F.lit("service"), F.col("__app__"),
-            F.lit("resource"), F.col("__res__"),
-            F.lit("name"), name,
-            F.lit("kind"), kind,
-            F.lit("traceID"), F.col("__trace_id__"),
-            F.lit("spanID"), gen_span_id(span_id),
-            F.lit("parentSpanID"), parent_span_id,
-            F.lit("logs"), logs_json,
-            F.lit("traceState"), F.lit(""),
-            F.lit("start"), (start_ms * 1000).cast("string"),
-            F.lit("end"), end_us.cast("string"),
-            F.lit("duration"), ((end_ms - start_ms) * 1000).cast("string"),
-            F.lit("attribute"), attribute_json,
-            F.lit("statusCode"),
-            F.when(
-                F.coalesce(sp.getField("isError"), F.lit(False)), F.lit("ERROR")
-            ).otherwise(F.lit("OK")),
-            F.lit("statusMessage"), status_msg,
-            F.lit("__ts_sec__"), (end_us / F.lit(1000000)).cast("long").cast("string"),
+        return ex.select(
+            *passthrough,
+            ot_span_fields(
+                sp,
+                refs_t=_REF2,
+                name=name,
+                trace_id=F.col("__trace_id__"),
+                service=F.col("__app__"),
+                host=F.col("__host__"),
+                resource=F.col("__res__"),
+                span_id=gen_span_id,
+                ref_span_id=gen_parent_from_ref,
+                ref_trace_id=lambda r: F.col("__trace_id__"),
+                component_mapping=self.component_mapping,
+                # only the legacy handler maps db.connection_string
+                # (trace_segment_handle.go:211-229)
+                db_mapping=legacy,
+            ).alias(FIELDS),
         )
 
 
@@ -549,19 +376,6 @@ class SkywalkingV2JvmMetricParser(Operator):
             F.lit("|serviceInstance#$#"), F.col("__uuid__"),
         )
 
-        def pool_rows(p: Column) -> Column:
-            lb = F.concat(
-                base,
-                F.lit("|type#$#"),
-                F.coalesce(p.getField("type"), F.lit("CODE_CACHE_USAGE")),
-            )
-            return F.array(
-                _row("skywalking_jvm_memory_pool_committed", lb, F.coalesce(p.getField("commited"), F.lit(0))),
-                _row("skywalking_jvm_memory_pool_init", lb, F.coalesce(p.getField("init"), F.lit(0))),
-                _row("skywalking_jvm_memory_pool_max", lb, F.coalesce(p.getField("max"), F.lit(0))),
-                _row("skywalking_jvm_memory_pool_used", lb, F.coalesce(p.getField("used"), F.lit(0))),
-            )
-
         def gc_rows(g: Column) -> Column:
             phrase_enum = F.coalesce(g.getField("phrase"), F.lit("NEW"))
             lb_time = F.concat(
@@ -592,7 +406,7 @@ class SkywalkingV2JvmMetricParser(Operator):
                 )
             ),
             F.coalesce(F.flatten(F.transform(mt.getField("memory"), lambda m: jvm_memory_rows(base, m))), empty),
-            F.coalesce(F.flatten(F.transform(mt.getField("memoryPool"), pool_rows)), empty),
+            F.coalesce(F.flatten(F.transform(mt.getField("memoryPool"), lambda p: jvm_pool_rows(base, p, "commited"))), empty),
             F.coalesce(F.flatten(F.transform(mt.getField("gc"), gc_rows)), empty),
         )
         return _metric_rows_to_events(

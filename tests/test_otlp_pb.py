@@ -152,6 +152,14 @@ class TestMetricWire:
         ][0]["metrics"][0]["summary"]["dataPoints"][0]
         assert dp["quantileValues"] == [{"quantile": 0.99, "value": 123.0}]
 
+    def test_null_metric_name_leaves_out_field_1(self):
+        # proto3 default: an absent name decodes as ""
+        dp = encode_number_dp(1, as_double=1.0)
+        assert encode_gauge_metric(None, [dp]) == ld(5, ld(1, dp))
+        md = encode_metrics_data([encode_gauge_metric(None, [dp])])
+        m = decode_metrics(md)["resourceMetrics"][0]["scopeMetrics"][0]["metrics"][0]
+        assert m["name"] == ""
+
     def test_sum_monotonic_flag(self):
         md = encode_metrics_data(
             [encode_sum_metric("t", [encode_number_dp(1, as_int=5)], True)]

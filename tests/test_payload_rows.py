@@ -308,6 +308,76 @@ def test_null_timestamp_packs_as_zero(spark, pack):
     assert got == want
 
 
+# --- a null name, tag value or value packs as its proto3 default too: a
+# null name or tag value reads as "" (a "" tag is dropped), a null value is
+# left out and decodes as 0; the other row of the group is untouched
+
+
+@pytest.mark.parametrize(
+    "row, want",
+    [
+        (("s", None, {"h": "1"}, 1.0, TS_NS), ("", "h#$#1", "1")),
+        (("s", "m", {"h": None, "k": "v"}, 1.0, TS_NS), ("m", "k#$#v", "1")),
+        (("s", "m", {"h": "1"}, None, TS_NS), ("m", "h#$#1", "0")),
+    ],
+    ids=["null_name", "null_tag_value", "null_value"],
+)
+def test_prom_null_packs_as_default(spark, row, want):
+    df = spark.createDataFrame(
+        [("s", "ok", {}, 2.0, TS_NS), row],
+        "sink string, metric_name string, tags map<string,string>, value double, ts_ns long",
+    )
+    enc = PromRemoteWriteEncoder(["sink"]).apply(df)
+    out = PromRemoteWriteDecoder("payload").apply(enc).collect()
+    got = sorted((r["__name__"], r["__labels__"], r["__value__"]) for r in out)
+    assert got == sorted([("ok", "", "2"), want])
+
+
+NULL_TAGS = {"h": None, "k": "v"}
+
+
+def _logs_attrs(spark):
+    df = spark.createDataFrame(
+        [("s", 1, {"content": "a", **NULL_TAGS})],
+        f"sink string, ts_sec long, {FIELDS} map<string,string>",
+    )
+    payload = otlp_logs_sink_frames(df, ["sink"]).collect()[0].payload
+    logs = decode_logs(bytes(payload))["resourceLogs"][0]["scopeLogs"][0]
+    return logs["logRecords"][0]["attributes"]
+
+
+def _metrics_attrs(spark):
+    df = spark.createDataFrame(
+        [("s", "m", "gauge", NULL_TAGS, 1.0, TS_NS)],
+        "sink string, metric_name string, metric_type string,"
+        "tags map<string,string>, value double, ts_ns long",
+    )
+    payload = otlp_metrics_sink_frames(df, ["sink"]).collect()[0].payload
+    metrics = decode_metrics(bytes(payload))["resourceMetrics"][0]["scopeMetrics"][0]["metrics"]
+    return metrics[0]["gauge"]["dataPoints"][0]["attributes"]
+
+
+def _traces_attrs(spark):
+    df = spark.createDataFrame(
+        [("s", "ab" * 16, "cd" * 8, "", "op", 1, 1, 2, NULL_TAGS, 0)],
+        "sink string, trace_id string, span_id string, parent_span_id string,"
+        "span_name string, kind int, start_ns long, end_ns long,"
+        "tags map<string,string>, status_code int",
+    )
+    payload = otlp_traces_sink_frames(df, ["sink"]).collect()[0].payload
+    spans = decode_traces(bytes(payload))["resourceSpans"][0]["scopeSpans"][0]["spans"]
+    return spans[0]["attributes"]
+
+
+@pytest.mark.parametrize("attrs", [_logs_attrs, _metrics_attrs, _traces_attrs],
+                         ids=lambda f: f.__name__.strip("_"))
+def test_otlp_null_tag_value_packs_as_empty(spark, attrs):
+    assert [a for a in attrs(spark) if a["key"] in NULL_TAGS] == [
+        {"key": "h", "value": {"stringValue": ""}},
+        {"key": "k", "value": {"stringValue": "v"}},
+    ]
+
+
 def test_group_rows_missing_column_is_a_plan_time_error(spark):
     df = spark.createDataFrame([(1,)], "big long")
     with pytest.raises(ValueError, match="missing column nope"):

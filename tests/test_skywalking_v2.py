@@ -284,3 +284,61 @@ def test_jvm_metrics_gc_phrase_quirk(spark):
         )
     )
     assert gone == []
+
+
+def test_legacy_span_matches_v3_span(spark):
+    """The v2 legacy handler and v3 render the same span to the same
+    OtSpan.ToLog map: all 17 keys and __ts_sec__."""
+    from loongcollector_spark.operators.skywalking import SkywalkingSegmentParser
+
+    trace_id = "1.2.3"
+    tags = [{"key": "db.type", "value": "MySQL"}, {"key": "mq.topic", "value": "t1"}]
+    logs = [{"time": 1663904182001, "data": [{"key": "error.kind", "value": "E"}]}]
+    mq = dict(BASE_SPAN, spanId=1, parentSpanId=0, spanType="Entry", spanLayer="MQ",
+              componentId=39, tags=tags, logs=logs)
+    db = dict(BASE_SPAN, spanId=2, parentSpanId=1, tags=tags, logs=logs)
+    v2_ref = {"parentTraceSegmentId": {"idParts": [9, 8]}, "parentSpanId": 3,
+              "parentServiceInstanceId": 12}
+    v3_ref = {"traceId": trace_id, "parentTraceSegmentId": "9.8", "parentSpanId": 3}
+    v2 = _upstream(
+        [[1, 2, 3]], [4, 5], [dict(s, refs=[v2_ref]) for s in (mq, db)],
+        key="applicationInstanceId",
+    )
+    v3 = {
+        "traceId": trace_id,
+        "traceSegmentId": "4.5",
+        "service": "app-a",
+        "serviceInstance": "inst-a",
+        "spans": [dict(s, refs=[v3_ref]) for s in (mq, db)],
+    }
+    props = [("host", "host-a"), ("os", "Linux"), ("language", "java")]
+    v2_keys = {"host": "host_name", "os": "os_name", "language": "language"}
+    v3_keys = {"host": "hostname", "os": "OS Name", "language": "language"}
+    instances = _instances(spark, [(11, "app-a", "uuid-a", [
+        {"key": v2_keys[k], "value": v} for k, v in props])])
+    resources = spark.createDataFrame(
+        [("app-a", "inst-a", [{"key": v3_keys[k], "value": v} for k, v in props])],
+        "service string, serviceInstance string, "
+        "properties array<struct<key:string,value:string>>",
+    )
+    mapping = {39: "kafka"}
+    got2 = _fields(
+        SkywalkingV2SegmentParser(mode="legacy", component_mapping=mapping).apply(
+            _events(spark, [v2]), instances
+        )
+    )
+    got3 = _fields(
+        SkywalkingSegmentParser(component_mapping=mapping).apply(
+            _events(spark, [v3]), resources=resources
+        )
+    )
+    by_id2 = {f["spanID"]: f for f in got2}
+    by_id3 = {f["spanID"]: f for f in got3}
+    assert sorted(by_id2) == sorted(by_id3) == ["4.5.1", "4.5.2"]
+    for sid in by_id3:
+        assert len(by_id3[sid]) == 18
+        assert by_id2[sid] == by_id3[sid]
+    assert json.loads(by_id3["4.5.2"]["attribute"])["db.connection_string"] == (
+        "mysql://10.1.2.3:3306"
+    )
+    assert json.loads(by_id3["4.5.1"]["attribute"])["messaging.system"] == "kafka"

@@ -35,7 +35,13 @@ def main() -> int:
     from loongcollector_spark.queries import ORACLES, QUERIES
     from loongcollector_spark.session import get_spark
 
-    spark = get_spark("check-queries", master="local[4]", shuffle_partitions=4)
+    # no console progress bars: they would run into the OK/FAIL lines
+    spark = get_spark(
+        "check-queries",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
